@@ -142,7 +142,10 @@ def main() -> None:
         return
 
     from opentelemetry_collector_contrib_spark.operators.route import FIXTURE_ROUTES, sink_frames
-    from opentelemetry_collector_contrib_spark.plans.lineage import write_sinks_resumable
+    from opentelemetry_collector_contrib_spark.plans.lineage import (
+        parquet_file_rows,
+        write_sinks_resumable,
+    )
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
         PipelineConfig,
         build_routed,
@@ -184,7 +187,7 @@ def main() -> None:
             _, quarantined = split_quarantine(routed, fixture_rules())
             sinks["quarantine"] = quarantined
         paths = write_sinks_resumable(routed, sinks, args.output, metrics=metrics)
-        counts = {name: spark.read.parquet(p).count() for name, p in paths.items()}
+        counts = {name: metrics.sink_rows[name] for name in paths}
         with metrics.time_stage("aggregates"):
             if args.config:
                 from opentelemetry_collector_contrib_spark.plans.config import (
@@ -223,7 +226,7 @@ def main() -> None:
                 )
             for name, adf in aggs.items():
                 adf.write.mode("overwrite").parquet(f"{args.output}/{name}")
-                counts[name] = adf.count()
+                counts[name] = sum(parquet_file_rows(f"{args.output}/{name}"))
         metrics.write(f"{args.output}/_metrics.json")
         print(json.dumps({"sinks": counts, "metrics": metrics.to_dict()}))
     finally:

@@ -7,13 +7,17 @@ internal/checkpoint/checkpoint.go:27,63) so a restart resumes at the last
 committed offset.
 
 Our unit of work is not a file offset but a (sink, output-file) cell:
-each sink write records one manifest row per written file —
-(run_id, sink, partition_id=file index, row_count, status, commit), counted
-from the written parquet itself (footer-level scan; never re-runs the
-upstream plan). A rerun loads the manifest and SKIPS sinks whose cells are
+each sink write records one manifest row per non-empty written file —
+(run_id, sink, partition_id=file index, row_count, status, commit). The
+row counts come from the written parquet files' footers, read on the
+driver with pyarrow: no Spark job, no data page, and never a re-run of the
+upstream plan. A rerun loads the manifest and SKIPS sinks whose cells are
 all committed — idempotent resume with no duplicate rows (the exporter
 sending-queue retry semantics, made transactional the way the reference
 can't be).
+
+Sinks, like the manifest, are local filesystem paths: the resume check is
+``os.path.exists`` and the footers are opened directly.
 
 In production the manifest is an Iceberg table and the commit id is the
 Iceberg snapshot id (atomic rename gives all-or-nothing per sink); in-sandbox
@@ -22,6 +26,7 @@ it is a JSON file with the same schema behind the same interface.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -53,9 +58,6 @@ class LineageManifest:
                     if cell.status == "committed":
                         self._cells[(cell.sink, cell.partition_id)] = cell
 
-    def committed_sinks(self) -> set[str]:
-        return {sink for (sink, _pid), c in self._cells.items()}
-
     def is_committed(self, sink: str) -> bool:
         return any(s == sink for (s, _pid) in self._cells)
 
@@ -77,6 +79,16 @@ class LineageManifest:
         os.replace(tmp, self.path)  # atomic commit (the Iceberg-snapshot stand-in)
 
 
+def parquet_file_rows(path: str) -> list[int]:
+    """Row count of each ``part-*.parquet`` file under the local directory
+    `path` (partition subdirectories included), in path order, read from
+    the file footers."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(glob.glob(os.path.join(path, "**", "part-*.parquet"), recursive=True))
+    return [pq.read_metadata(f).num_rows for f in parts]
+
+
 def write_sinks_resumable(
     routed,
     sinks: dict[str, "object"],
@@ -92,21 +104,24 @@ def write_sinks_resumable(
 ) -> dict[str, str]:
     """Fan-out write with idempotent resume.
 
-    Skips any sink already fully committed in the manifest; records
-    per-partition row counts (via a partition-id rollup — one cheap agg per
-    sink, no collect of data rows) after each successful atomic write.
-    When a PipelineMetrics is passed (plans/metrics.py), per-sink rows,
-    wall times, and resume decisions are recorded on it.
+    Skips any sink already fully committed in the manifest. After each
+    successful write it records one cell per non-empty written file, with
+    the row count read from that file's parquet footer on the driver
+    (``parquet_file_rows``; no Spark job, no collect of data rows). A sink
+    with no rows still commits: Spark writes one empty part file for it,
+    which becomes a single 0-row cell. `base_path` and `manifest_path`
+    are local filesystem paths. When a PipelineMetrics is passed
+    (plans/metrics.py), per-sink rows, wall times, and resume decisions
+    are recorded on it.
 
     Each sink write retries transient failures with exporterhelper's
     deterministic backoff (round 4: initial × multiplier^n capped at max —
     the same schedule as plans/sinks.retry_write); exhaustion re-raises,
     leaving the sink UNCOMMITTED in the manifest so the next run resumes
     exactly there — the manifest IS the persistent sending queue.
-    ``sleep``/``writer`` are injectable for tests.
+    ``sleep``/``writer`` are injectable for tests; a writer must leave
+    Spark's ``part-*.parquet`` files under the sink path.
     """
-    from pyspark.sql import functions as F
-
     do_sleep = sleep if sleep is not None else time.sleep
     do_write = writer or (lambda frame, p: frame.write.mode("overwrite").parquet(p))
     manifest = LineageManifest(manifest_path or os.path.join(base_path, "_lineage.json"))
@@ -133,14 +148,13 @@ def write_sinks_resumable(
                     raise  # uncommitted in manifest -> next run resumes here
                 do_sleep(interval)
                 interval = min(interval * backoff_multiplier, backoff_max_s)
-        # count from the WRITTEN files (footer-level scan of the output),
-        # not by re-running the upstream plan — a non-persisted caller would
-        # otherwise pay parse+enrich+route a second time per sink. The
-        # lineage cell unit becomes the output file, which is what resume
-        # actually protects.
-        back = out.sparkSession.read.parquet(path)
-        rows_per_file = back.groupBy(F.col("_metadata.file_path").alias("_f")).count().collect()
-        part_rows = [r["count"] for r in sorted(rows_per_file, key=lambda r: r["_f"])]
+        # count from the WRITTEN files' footers, not by re-running the
+        # upstream plan: the lineage cell unit is the output file, which is
+        # what resume actually protects. Spark's first task writes a file
+        # even when it has no rows; such a file gets no cell, unless the
+        # whole sink is empty and that one 0-row cell is its commit.
+        file_rows = parquet_file_rows(path)
+        part_rows = [n for n in file_rows if n] or file_rows[:1]
         manifest.record_sink(run_id, name, part_rows)
         if metrics is not None:
             metrics.stages[f"sink:{name}"] = round(time.time() - t0, 3)

@@ -20,9 +20,8 @@ from opentelemetry_collector_contrib_spark.operators.avro import (
     synthesize_avro_logs,
 )
 
-REF_SCHEMA = json.load(
-    open("/root/reference/extension/encoding/avrologencodingextension/testdata/schema1.avro")
-)
+# AVRO_LOG_SCHEMA is the reference's testdata/schema1.avro, field for field
+REF_SCHEMA = json.loads(AVRO_LOG_SCHEMA)
 # the exact native value extension_test.go:37 asserts
 REF_VALUE = {
     "timestamp": 1697187201488000000,

@@ -41,7 +41,9 @@ def test_per_turn_text_equality(spark, routed_t1, t1):
 
 def test_sink_writes_and_lineage_resume(spark, routed_t1, tmp_path):
     base = str(tmp_path / "sinks")
-    sinks = sink_frames(routed_t1, FIXTURE_ROUTES)
+    # "spread" is written as several files, so the manifest holds
+    # several cells for it
+    sinks = {**sink_frames(routed_t1, FIXTURE_ROUTES), "spread": routed_t1.repartition(3)}
     paths = write_sinks_resumable(routed_t1, sinks, base)
     counts1 = {name: spark.read.parquet(p).count() for name, p in paths.items()}
     # total of move sinks == input rows
@@ -50,8 +52,15 @@ def test_sink_writes_and_lineage_resume(spark, routed_t1, tmp_path):
 
     # manifest recorded all sinks
     m = LineageManifest(os.path.join(base, "_lineage.json"))
-    for s in ["errors", "tool_events", "general", "human_turns"]:
+    for s in ["errors", "tool_events", "general", "human_turns", "spread"]:
         assert m.is_committed(s)
+
+    # per-file cells equal a read-back count of each written file, in path order
+    assert len(m.cells_for("spread")) > 1
+    for name, p in paths.items():
+        per_file = spark.read.parquet(p).groupBy(F.col("_metadata.file_path").alias("_f")).count().collect()
+        oracle = [r["count"] for r in sorted(per_file, key=lambda r: r["_f"])]
+        assert [c.row_count for c in m.cells_for(name)] == oracle, name
 
     # rerun: all sinks skipped (idempotent resume), data unchanged
     paths2 = write_sinks_resumable(routed_t1, sinks, base)
@@ -81,10 +90,12 @@ def test_metrics_recording(spark, routed_t1, tmp_path):
     base = str(tmp_path / "m_sinks")
     m1 = PipelineMetrics(run_id=uuid.uuid4().hex)
     m1.input_rows = routed_t1.count()
-    sinks = sink_frames(routed_t1, FIXTURE_ROUTES)
+    # an empty sink still commits, so the rerun resumes it too
+    sinks = {**sink_frames(routed_t1, FIXTURE_ROUTES), "empty": routed_t1.filter(F.lit(False))}
     write_sinks_resumable(routed_t1, sinks, base, metrics=m1)
     d = m1.to_dict()
     assert d["sink_rows"]["errors"] + d["sink_rows"]["tool_events"] + d["sink_rows"]["general"] == m1.input_rows
+    assert d["sink_rows"]["empty"] == 0
     assert all(v > 0 for k, v in m1.stages.items() if k.startswith("sink:"))
     assert d["resumed_sinks"] == []
 

@@ -163,15 +163,58 @@ def test_vpc_flow_defaults_and_unset_markers(spark):
     assert s["fl_version"] is None and s["fl_action"] is None
 
 
+# Stands in for the reference's elb-access-log/testdata/alb_al_valid_logs.log
+# (awslogsencodingextension/internal/unmarshaler): lines in the public ALB
+# access-log format (the HTTPS example of the ALB access-log documentation),
+# one from an IPv6 client, and one with the classification,
+# classification_reason and conn_trace_id fields newer ALB versions append.
+_ALB_TAIL = (
+    ' "GET https://www.example.com:443/ HTTP/1.1" "curl/7.46.0" ECDHE-RSA-AES128-GCM-SHA256 TLSv1.2'
+    " arn:aws:elasticloadbalancing:us-east-2:123456789012:targetgroup/my-targets/73e2d6bc24d8a067"
+    ' "Root=1-58337281-1d84f3d73c47ec4e58577259" "www.example.com"'
+    ' "arn:aws:acm:us-east-2:123456789012:certificate/12345678-1234-1234-1234-123456789012"'
+    ' 1 2018-07-02T22:22:48.364000Z "authenticate,forward" "-" "-" "10.0.0.1:80" "200"'
+)
+ALB_VALID_LOGS = [
+    "https 2018-07-02T22:23:00.186641Z app/my-loadbalancer/50dc6c495c0c9188"
+    " 192.168.131.39:2817 10.0.0.1:80 0.086 0.048 0.037 200 200 0 57" + _ALB_TAIL,
+    "https 2018-07-02T22:23:01.186641Z app/my-loadbalancer/50dc6c495c0c9188"
+    " [fe80::202:b3ff:fe1e:8329]:443 10.0.0.1:80 0.086 0.048 0.037 200 200 0 57" + _ALB_TAIL,
+    "https 2018-07-02T22:23:02.186641Z app/my-loadbalancer/50dc6c495c0c9188"
+    " 192.168.131.40:2818 10.0.0.1:80 0.086 0.048 0.037 200 200 0 57" + _ALB_TAIL
+    + ' "-" "-" TID_1234abcd5678ef90',
+]
+
+# Stands in for the reference's s3-access-log/testdata/valid_s3_access_log.log
+# (awslogsencodingextension/internal/unmarshaler): the server access-log
+# examples of the S3 documentation, with the fields newer S3 versions append.
+_S3_OWNER = "79a59df900b949e55d96a1e698fbacedfd6e09d98eacf8f8d5218e7cd47ef2be"
+S3_VALID_ACCESS_LOG = [
+    f"{_S3_OWNER} amzn-s3-demo-bucket1 [06/Feb/2019:00:00:38 +0000] 192.0.2.3 {_S3_OWNER} 3E57427F3EXAMPLE"
+    ' REST.GET.VERSIONING - "GET /amzn-s3-demo-bucket1?versioning HTTP/1.1" 200 - 113 - 7 - "-"'
+    ' "S3Console/0.4" - s9lzHYrFp76ZVxRcpX9+5cjAnEH2ROuNkd2BHfIa6UkFVdtjf5mKR3/eTPFvsiP/XV/VLi31234='
+    " SigV4 ECDHE-RSA-AES128-GCM-SHA256 AuthHeader amzn-s3-demo-bucket1.s3.us-west-1.amazonaws.com"
+    " TLSV1.2 arn:aws:s3:us-west-1:123456789012:accesspoint/example-AP Yes",
+    f"{_S3_OWNER} amzn-s3-demo-bucket1 [06/Feb/2019:00:00:38 +0000] 192.0.2.3 {_S3_OWNER} 891CE47D2EXAMPLE"
+    ' REST.GET.LOGGING_STATUS - "GET /amzn-s3-demo-bucket1?logging HTTP/1.1" 200 - 242 - 11 - "-"'
+    ' "S3Console/0.4" - 9vKBE6vMhrNiWHZmb2L0mXOcqPGzQOI5XLnCtZNPxev+Hf+7tpT6sxDwDty4LHBUOZJG96N1234='
+    " SigV4 ECDHE-RSA-AES128-GCM-SHA256 AuthHeader amzn-s3-demo-bucket1.s3.us-west-1.amazonaws.com"
+    " TLSV1.2 - -",
+    f"{_S3_OWNER} amzn-s3-demo-bucket1 [06/Feb/2019:00:00:38 +0000] 192.0.2.3 {_S3_OWNER} A1206F460EXAMPLE"
+    ' REST.GET.BUCKETPOLICY - "GET /amzn-s3-demo-bucket1?policy HTTP/1.1" 404 NoSuchBucketPolicy 297 - 38 -'
+    ' "-" "S3Console/0.4" - BNaBsXZQQDbssi6xMBdBU2sLt+Yf5kZDmeBUP35sFoKa3sLLeMC78iwEIWxs99CRUrbS4n11234='
+    " SigV4 ECDHE-RSA-AES128-GCM-SHA256 AuthHeader amzn-s3-demo-bucket1.s3.us-west-1.amazonaws.com"
+    " TLSV1.2 - Yes",
+]
+
+
 def test_alb_access_log_reference_fixture(spark):
     """Parse the reference's own alb_al_valid_logs.log fixture lines
     (elb-access-log/testdata) — including the IPv6 client and the
     3-extra-trailing-fields variant newer ALB versions append."""
     from opentelemetry_collector_contrib_spark.operators.parse import parse_alb_access_log
 
-    path = ("/root/reference/extension/encoding/awslogsencodingextension/internal/"
-            "unmarshaler/elb-access-log/testdata/alb_al_valid_logs.log")
-    lines = [(ln,) for ln in open(path).read().splitlines()]
+    lines = [(ln,) for ln in ALB_VALID_LOGS]
     lines.append(("http 2023-04-01T12:00:00Z alb",))  # alb_al_insufficient_fields.log
     df = spark.createDataFrame(lines, "body string")
     rows = parse_alb_access_log(df, "body").collect()
@@ -217,9 +260,7 @@ def test_cloudtrail_records_parse(spark):
 def test_s3_access_log_reference_fixture(spark):
     from opentelemetry_collector_contrib_spark.operators.parse import parse_s3_access_log
 
-    path = ("/root/reference/extension/encoding/awslogsencodingextension/internal/"
-            "unmarshaler/s3-access-log/testdata/valid_s3_access_log.log")
-    lines = [(ln,) for ln in open(path).read().splitlines() if ln.strip()]
+    lines = [(ln,) for ln in S3_VALID_ACCESS_LOG]
     lines.append(("too short line",))
     df = spark.createDataFrame(lines, "body string")
     rows = parse_s3_access_log(df, "body").collect()
