@@ -21,8 +21,19 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="sf dir / transcript table location")
     ap.add_argument("--output", required=True, help="sink base path")
-    ap.add_argument("--vectorized", action="store_true", help="use the pandas-UDF parse bank")
-    ap.add_argument("--repartition-conv", type=int, default=None, help="explicit conv_id hash partitions pre-agg")
+    ap.add_argument(
+        "--vectorized",
+        action="store_true",
+        help="use the pandas-UDF parse bank (sets the spec's parse.bank, "
+        "with or without --config)",
+    )
+    ap.add_argument(
+        "--repartition-conv",
+        type=int,
+        default=None,
+        help="explicit conv_id hash partitions before the order window (sets "
+        "the spec's order.partitions, with or without --config)",
+    )
     ap.add_argument(
         "--qa-gate",
         action="store_true",
@@ -141,40 +152,42 @@ def main() -> None:
         print(json.dumps({"mode": "streaming", "sinks": counts}))
         return
 
-    from opentelemetry_collector_contrib_spark.operators.route import FIXTURE_ROUTES, sink_frames
+    import uuid
+
+    from opentelemetry_collector_contrib_spark.operators.route import sink_frames
+    from opentelemetry_collector_contrib_spark.plans.config import (
+        build_aggregates,
+        build_pipeline,
+        build_tail_sampling,
+        route_table_from_spec,
+    )
     from opentelemetry_collector_contrib_spark.plans.lineage import (
         parquet_file_rows,
         write_sinks_resumable,
     )
+    from opentelemetry_collector_contrib_spark.plans.metrics import PipelineMetrics
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
-        PipelineConfig,
-        build_routed,
+        fixture_spec,
+        load_transcripts,
         pipeline_aggregates,
     )
 
-    import uuid
-
-    from opentelemetry_collector_contrib_spark.plans.metrics import PipelineMetrics
+    if args.config:
+        with open(args.config) as f:
+            spec = json.load(f)
+    else:
+        spec = fixture_spec(args.input)
+    if args.vectorized:
+        spec.setdefault("parse", {})["bank"] = "vectorized"
+    if args.repartition_conv is not None:
+        spec.setdefault("order", {})["partitions"] = args.repartition_conv
 
     metrics = PipelineMetrics(run_id=uuid.uuid4().hex)
-    cfg = PipelineConfig(vectorized_parse=args.vectorized, repartition_conv=args.repartition_conv)
     with metrics.time_stage("build_and_persist"):
-        if args.config:
-            from opentelemetry_collector_contrib_spark.plans.config import build_pipeline
-
-            with open(args.config) as f:
-                spec = json.load(f)
-            routed = build_pipeline(spark, spec).persist()
-        else:
-            routed = build_routed(spark, args.input, cfg).persist()
+        routed = build_pipeline(spark, spec).persist()
         metrics.input_rows = routed.count()
     try:
-        if args.config:
-            from opentelemetry_collector_contrib_spark.plans.config import route_table_from_spec
-
-            table = route_table_from_spec(spec)
-        else:
-            table = cfg.routes
+        table = route_table_from_spec(spec)
         # a config with no routes section has no route_id column — the whole
         # stream is one sink, the single-exporter topology
         sinks = sink_frames(routed, table) if table is not None else {"all": routed}
@@ -189,24 +202,15 @@ def main() -> None:
         paths = write_sinks_resumable(routed, sinks, args.output, metrics=metrics)
         counts = {name: metrics.sink_rows[name] for name in paths}
         with metrics.time_stage("aggregates"):
-            if args.config:
-                from opentelemetry_collector_contrib_spark.plans.config import (
-                    build_aggregates,
-                    build_tail_sampling,
-                )
-
-                aggs = build_aggregates(routed, spec)
-                verdicts = build_tail_sampling(routed, spec)
-                if verdicts is not None:
-                    aggs["tail_sampling_verdicts"] = verdicts
-            else:
-                aggs = pipeline_aggregates(routed)
+            # the fixture's agg_per_tool (a count and a cost sum) is not a
+            # group_by_attrs rollup, so it keeps its own builder
+            aggs = build_aggregates(routed, spec) if args.config else pipeline_aggregates(routed)
+            verdicts = build_tail_sampling(routed, spec)
+            if verdicts is not None:
+                aggs["tail_sampling_verdicts"] = verdicts
             if args.qa_gate:
                 from opentelemetry_collector_contrib_spark.operators.conv_qa import (
                     transcript_curation_gate,
-                )
-                from opentelemetry_collector_contrib_spark.plans.pipeline import (
-                    load_transcripts,
                 )
 
                 aggs["conv_qa_gate"] = transcript_curation_gate(

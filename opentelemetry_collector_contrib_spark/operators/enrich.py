@@ -32,14 +32,20 @@ def lookup(
     return out
 
 
+# The fixture dims' default_value fills, shared by enrich_transcripts and
+# the fixture spec's enrich section (plans/pipeline.fixture_spec)
+TOOL_DEFAULTS = {"tool_category": "Unknown", "tool_cost_weight": 0.0}
+ROLE_DEFAULTS = {"role_group": "unknown", "severity_default": "info"}
+
+
 def enrich_transcripts(df: DataFrame, tool_dim: DataFrame, role_dim: DataFrame) -> DataFrame:
     """The fixture pipeline's enrich stage: two broadcast lookups.
 
     tool_dim deliberately misses one tool ('calc') → default 'Unknown'
     category, 0.0 cost (left-join default_value coverage).
     """
-    out = lookup(df, tool_dim, "tool", {"tool_category": "Unknown", "tool_cost_weight": 0.0})
-    out = lookup(out, role_dim, "role", {"role_group": "unknown", "severity_default": "info"})
+    out = lookup(df, tool_dim, "tool", TOOL_DEFAULTS)
+    out = lookup(out, role_dim, "role", ROLE_DEFAULTS)
     return out
 
 

@@ -363,14 +363,19 @@ def _render_any_col(v):
 
 
 def _attrs_csv_col(attrs):
-    """Sorted k=render(v) CSV of a repeated-KeyValue column (NULL render
-    → empty string, empty list → NULL), matching _attrs_csv."""
-    rendered = F.transform(
+    """k=render(v) CSV of a repeated-KeyValue column sorted by (key,
+    rendered value) (NULL render → empty string, empty list → NULL),
+    matching _attrs_csv. Sorting the joined "k=v" strings instead would put
+    "a.b=…" before "a=…" ('.' < '='), unlike the walk's key order."""
+    pairs = F.transform(
         attrs,
-        lambda kv: F.concat(kv["key"], F.lit("="), F.coalesce(_render_any_col(kv["value"]), F.lit(""))),
+        lambda kv: F.struct(
+            kv["key"].alias("k"),
+            F.coalesce(_render_any_col(kv["value"]), F.lit("")).alias("v"),
+        ),
     )
-    joined = F.array_join(F.array_sort(rendered), ",")
-    return F.when(F.size(attrs) > 0, joined)
+    rendered = F.transform(F.array_sort(pairs), lambda p: F.concat(p["k"], F.lit("="), p["v"]))
+    return F.when(F.size(attrs) > 0, F.array_join(rendered, ","))
 
 
 def parse_otlp_pb_logs_jvm(df: DataFrame, source: str = "payload") -> DataFrame:

@@ -24,6 +24,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ottl_compiler import parse_condition
+
 
 @dataclass
 class Route:
@@ -78,35 +80,6 @@ def sink_frames(routed: DataFrame, table: RouteTable) -> dict[str, DataFrame]:
     return sinks
 
 
-def write_sinks(
-    routed: DataFrame,
-    table: RouteTable,
-    base_path: str,
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
-) -> dict[str, str]:
-    """Fan-out write: persist the routed frame once, then one job per sink.
-
-    At cluster scale you'd prefer a single partitionBy('route_id') write for
-    the move-routes (one job, one shuffle-free write) — exposed via
-    write_sinks_partitioned — but per-sink writes match the reference's
-    exporter-per-pipeline layout and let each sink choose its own layout.
-    """
-    routed = routed.persist()
-    try:
-        paths: dict[str, str] = {}
-        for name, df in sink_frames(routed, table).items():
-            path = f"{base_path}/{name}"
-            w = df.drop(*[c for c in df.columns if c.startswith("copy_")]).write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.format(fmt).save(path)
-            paths[name] = path
-        return paths
-    finally:
-        routed.unpersist()
-
-
 def round_robin_routes(df: DataFrame, n_pipelines: int) -> DataFrame:
     """roundrobinconnector (connector/roundrobinconnector/connector.go:
     67-78): every incoming BATCH goes wholly to one downstream pipeline,
@@ -136,7 +109,7 @@ def round_robin_frames(df: DataFrame, n_pipelines: int) -> list[DataFrame]:
 
 
 def write_sinks_partitioned(routed: DataFrame, base_path: str) -> str:
-    """Single-job variant: all move-route sinks in one write partitioned by
+    """Single-job sink write: all move-route sinks in one write partitioned by
     route_id (Hive layout `route_id=<sink>/`). At 100 TB this is the path:
     one pass, no persist, dynamic partition overwrite."""
     path = f"{base_path}/routed"
@@ -150,18 +123,31 @@ def write_sinks_partitioned(routed: DataFrame, base_path: str) -> str:
 
 
 # The fixture route table (FIXTURES.md §4, mirrors
-# connector/routingconnector/testdata/config/logs.yaml):
+# connector/routingconnector/testdata/config/logs.yaml), written once as
+# the spec's OTTL routes section:
 #   1. parsed status == 'err'                  → errors      (move)
 #   2. tool != 'none' AND role == 'assistant'  → tool_events (move)
 #   3. role_group == 'human'                   → human_turns (copy)
 #   default                                    → general
+FIXTURE_ROUTE_SPEC = {
+    "default": "general",
+    "table": [
+        {"name": "errors", "condition": 'status == "err"', "mode": "move"},
+        {"name": "tool_events", "condition": 'tool != "none" and role == "assistant"', "mode": "move"},
+        {"name": "human_turns", "condition": 'role_group == "human"', "mode": "copy"},
+    ],
+}
+
+
+# FIXTURE_ROUTE_SPEC as a RouteTable, for callers that route without a spec
+# (the streaming twin)
 FIXTURE_ROUTES = RouteTable(
     routes=[
-        Route("errors", "status = 'err'", "move"),
-        Route("tool_events", "tool <> 'none' AND role = 'assistant'", "move"),
-        Route("human_turns", "role_group = 'human'", "copy"),
+        # compiled when applied: a Column cannot be built at import time
+        Route(r["name"], lambda df, src=r["condition"]: parse_condition(src), r["mode"])
+        for r in FIXTURE_ROUTE_SPEC["table"]
     ],
-    default="general",
+    default=FIXTURE_ROUTE_SPEC["default"],
 )
 
 

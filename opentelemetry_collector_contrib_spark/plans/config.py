@@ -21,7 +21,8 @@ Spec shape (all sections optional except source):
       "routes":  {"default": "general",
                   "table": [{"name": "errors", "condition": "status == \\"err\\"",
                              "mode": "move"}]},
-      "order":   {"enabled": True},
+      "order":   {"enabled": True,                      # stable turn-order window
+                  "partitions": 8},                      # optional: repartition(n, conv_id) first
       "sample":  {"kind": "adaptive", "keys": ["pattern_id"],
                   "target_per_key": 500},                # or probabilistic[_portable]/mod
       "tail_sampling": {"policies": [{"name": "errs", "type": "status_code",
@@ -109,6 +110,13 @@ def _validate_sections(spec: dict[str, Any]) -> None:
         for r in rules:
             if not r.get("reason") or not r.get("when"):
                 raise ValueError("each dlq rule needs 'reason' and 'when'")
+    order = spec.get("order")
+    if order is not None:
+        if not isinstance(order, dict):
+            raise ValueError("order must be a mapping")
+        n = order.get("partitions")
+        if n is not None and (isinstance(n, bool) or not isinstance(n, int) or n < 1):
+            raise ValueError(f"order.partitions must be a positive int, got {n!r}")
     routes = spec.get("routes", {})
     if routes:
         if not isinstance(routes, dict):
@@ -214,8 +222,6 @@ def _validate_sections(spec: dict[str, Any]) -> None:
 def build_pipeline(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     """Compile the spec into the routed DataFrame (pre-sink). One
     projection per stage; Catalyst fuses them."""
-    from ..operators.parse import parse_native, parse_vectorized
-
     validate_spec(spec)
 
     src = spec["source"]
@@ -244,21 +250,27 @@ def build_pipeline(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         if failed and contract.get("mode", "fail") == "fail":
             raise ValueError(f"data contract failed: {failed}")
 
-    if spec.get("stanza_operators"):
-        # a filelog `operators:` list IS the parse stage (the receiver runs
-        # it on raw entries before any processor)
-        from .stanza_chain import apply_stanza_operators
-
-        df = apply_stanza_operators(df, spec["stanza_operators"])
-    else:
-        bank = spec.get("parse", {}).get("bank", "native")
-        df = parse_vectorized(df) if bank == "vectorized" else parse_native(df)
+    df = _parse_stage(df, spec)
     if spec.get("stanza_operators_post"):
         # logstransformprocessor-style ops: run AFTER the parse stage
         from .stanza_chain import apply_stanza_operators
 
         df = apply_stanza_operators(df, spec["stanza_operators_post"])
     return _apply_sections(spark, df, spec)
+
+
+def _parse_stage(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
+    """The receiver's parse stage: a filelog `operators:` list when the spec
+    has one (the receiver runs it on raw entries before any processor),
+    else the parse.bank regex bank."""
+    if spec.get("stanza_operators"):
+        from .stanza_chain import apply_stanza_operators
+
+        return apply_stanza_operators(df, spec["stanza_operators"])
+    from ..operators.parse import parse_native, parse_vectorized
+
+    bank = spec.get("parse", {}).get("bank", "native")
+    return parse_vectorized(df) if bank == "vectorized" else parse_native(df)
 
 
 def _apply_sections(spark: SparkSession, df: DataFrame, spec: dict[str, Any]) -> DataFrame:
@@ -324,7 +336,15 @@ def _apply_sections(spark: SparkSession, df: DataFrame, spec: dict[str, Any]) ->
                 df, sample["keys"], sample["target_per_key"], sample.get("tiebreak_cols")
             )
 
-    if spec.get("order", {}).get("enabled", True):
+    order = spec.get("order", {})
+    if order.get("partitions"):
+        # explicit conv_id hash partitioning: the order window and every
+        # downstream per-conv operator reuse it instead of adding their own
+        # exchanges
+        from pyspark.sql import functions as F
+
+        df = df.repartition(order["partitions"], F.col("conv_id"))
+    if order.get("enabled", True):
         df = stable_order(df)
     return df
 
@@ -400,7 +420,7 @@ def build_aggregates(df: DataFrame, spec: dict[str, Any]) -> dict[str, DataFrame
 # Spark actions on different sinks re-evaluate shared ancestry — when
 # several heavy sinks hang off one pipeline, persist that frame first
 # (job.py's sink fan-out does exactly this) or write once partitioned by
-# route (operators/route.py write_sinks_single_job).
+# route (operators/route.py write_sinks_partitioned).
 
 _CONNECTOR_TYPES = {"forward", "count", "sum"}
 
@@ -478,7 +498,6 @@ def build_service(spark: SparkSession, service: dict[str, Any]) -> dict[str, Any
     {"pipelines": {name: terminal DataFrame}, "sinks": {sink_name: DataFrame}}.
     Cycles fail loudly (the collector also rejects cyclic service graphs)."""
     from ..operators.aggregate import count_connector, sum_connector
-    from ..operators.parse import parse_native, parse_vectorized
 
     validate_service(service)
     pipelines = service["pipelines"]
@@ -507,15 +526,7 @@ def build_service(spark: SparkSession, service: dict[str, Any]) -> dict[str, Any
                 connector_fed = True
             else:
                 raw = spark.read.parquet(r["path"]) if "path" in r else spark.read.table(r["table"])
-                if spec.get("stanza_operators"):
-                    # same contract as build_pipeline: the operators list
-                    # IS the parse stage for source receivers
-                    from .stanza_chain import apply_stanza_operators
-
-                    parts.append(apply_stanza_operators(raw, spec["stanza_operators"]))
-                else:
-                    bank = spec.get("parse", {}).get("bank", "native")
-                    parts.append(parse_vectorized(raw) if bank == "vectorized" else parse_native(raw))
+                parts.append(_parse_stage(raw, spec))
         df = parts[0]
         for extra in parts[1:]:
             df = df.unionByName(extra, allowMissingColumns=True)

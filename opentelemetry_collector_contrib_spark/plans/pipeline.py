@@ -1,35 +1,35 @@
-"""The flagship pipeline: parse → enrich → route → aggregate.
+"""The flagship pipeline: parse → enrich → route → order → aggregate.
 
 This is the Spark re-expression of the collector's receiver → processor →
-exporter topology (SURVEY.md §3.1): the YAML-config DAG the reference builds
-at startup becomes a declarative DataFrame plan; Catalyst is the optimizer
-the reference lacks; the per-pipeline goroutines become executor tasks; the
-channels become (exactly one) shuffle.
+exporter topology (SURVEY.md §3.1). The fixture pipeline is data: a spec
+(fixture_spec) compiled by config.build_pipeline, the same compiler every
+--config pipeline goes through; Catalyst is the optimizer the reference
+lacks, and the per-pipeline goroutines become executor tasks.
 
-Plan shape at scale (the 100 TB story):
+Plan shape:
   scan (parquet/Iceberg, pruned to 6 columns, predicate pushdown)
    → parse projection (whole-stage codegen, zero shuffle)
    → 2 broadcast joins (zero shuffle)
    → route projection (zero shuffle)
-   → [sinks: filter+write, no extra compute — routed frame persisted once]
-   → per-conv aggregates: ONE shuffle on conv_id (AQE-coalesced, skew-split;
-     salted two-phase for monster convs)
+   → stable turn order: ONE exchange on conv_id for the row_number window
+     (order.partitions makes it an explicit repartition(n, conv_id))
+   → [sinks: filter+write off the persisted routed frame]
+   → aggregates (pipeline_aggregates): groupBy rollups
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+import copy
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import ensure_dims, ensure_tier, tier_for_sf_dir
 from ..operators import aggregate as agg_ops
-from ..operators.enrich import enrich_transcripts
-from ..operators.order import stable_order
-from ..operators.parse import parse_native, parse_vectorized
-from ..operators.route import FIXTURE_ROUTES, RouteTable, apply_routes, sink_frames
+from ..operators.enrich import ROLE_DEFAULTS, TOOL_DEFAULTS
+from ..operators.route import FIXTURE_ROUTE_SPEC
+from .config import build_pipeline
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,36 +40,27 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_dims(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+def fixture_spec(sf_dir: str) -> dict[str, Any]:
+    """The fixture pipeline as a config spec (plans/config.py schema):
+    native parse, the two dim lookups of enrich_transcripts, the fixture
+    route table in OTTL, stable turn order."""
     tool_path, role_path = ensure_dims()
-    return spark.read.parquet(tool_path), spark.read.parquet(role_path)
+    return {
+        "source": {"path": ensure_tier(tier_for_sf_dir(sf_dir))},
+        "parse": {"bank": "native"},
+        "enrich": [
+            {"dim_path": tool_path, "key": "tool", "defaults": dict(TOOL_DEFAULTS)},
+            {"dim_path": role_path, "key": "role", "defaults": dict(ROLE_DEFAULTS)},
+        ],
+        "routes": copy.deepcopy(FIXTURE_ROUTE_SPEC),
+        "order": {"enabled": True},
+    }
 
 
-@dataclass
-class PipelineConfig:
-    routes: RouteTable = field(default_factory=lambda: FIXTURE_ROUTES)
-    vectorized_parse: bool = False   # pandas-UDF bank vs native Catalyst bank
-    with_stable_order: bool = True
-    repartition_conv: int | None = None  # explicit hash repartition pre-agg
-
-
-def build_routed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig | None = None) -> DataFrame:
-    """scan → parse → enrich → route; returns the routed frame (pre-sink)."""
-    cfg = cfg or PipelineConfig()
-    df = load_transcripts(spark, sf_dir)
-    parse = parse_vectorized if cfg.vectorized_parse else parse_native
-    parsed = parse(df)
-    tool_dim, role_dim = load_dims(spark)
-    enriched = enrich_transcripts(parsed, tool_dim, role_dim)
-    routed = apply_routes(enriched, cfg.routes)
-    if cfg.repartition_conv:
-        # explicit conv_id hash partitioning (north-rule requirement): the
-        # window and every downstream per-conv operator then reuse this
-        # partitioning instead of inserting their own exchanges
-        routed = routed.repartition(cfg.repartition_conv, F.col("conv_id"))
-    if cfg.with_stable_order:
-        routed = stable_order(routed)
-    return routed
+def build_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """scan → parse → enrich → route → order; returns the routed frame
+    (pre-sink)."""
+    return build_pipeline(spark, fixture_spec(sf_dir))
 
 
 def pipeline_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
@@ -83,38 +74,3 @@ def pipeline_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
         )
     )
     return {"agg_per_conv": per_conv, "agg_per_tool": per_tool}
-
-
-def run_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str | None = None,
-    cfg: PipelineConfig | None = None,
-) -> dict[str, int]:
-    """End-to-end run incl. sink writes; returns per-sink row counts (the
-    testbed sent==received correctness gate, testbed/testbed/validator.go:68)."""
-    cfg = cfg or PipelineConfig()
-    routed = build_routed(spark, sf_dir, cfg).persist()
-    try:
-        counts: dict[str, int] = {}
-        sinks = sink_frames(routed, cfg.routes)
-        for name, sdf in sinks.items():
-            if out_dir:
-                sdf.drop(*[c for c in sdf.columns if c.startswith("copy_")]).write.mode("overwrite").parquet(
-                    os.path.join(out_dir, name)
-                )
-                counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
-            else:
-                counts[name] = sdf.count()
-        for name, adf in pipeline_aggregates(routed).items():
-            if out_dir:
-                adf.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-                # count what LANDED, like the sink path above: validates
-                # the write and avoids re-running the whole aggregation a
-                # second time just to count it (round-5 review)
-                counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
-            else:
-                counts[name] = adf.count()
-        return counts
-    finally:
-        routed.unpersist()

@@ -569,6 +569,17 @@ def q_stanza_chain(spark, sf_dir):
     )
 
 
+def _fixture_move_routes() -> dict:
+    """The fixture route table's move routes (FIXTURE_ROUTE_SPEC without
+    its copy route)."""
+    from ..operators.route import FIXTURE_ROUTE_SPEC
+
+    return {
+        "default": FIXTURE_ROUTE_SPEC["default"],
+        "table": [r for r in FIXTURE_ROUTE_SPEC["table"] if r["mode"] == "move"],
+    }
+
+
 def q_collector_service(spark, sf_dir):
     """service::pipelines DAG end-to-end: a logs pipeline routes parsed
     transcripts and exports to TWO connectors (count + sum), each feeding
@@ -583,16 +594,7 @@ def q_collector_service(spark, sf_dir):
             "logs/in": {
                 "receivers": [{"path": src}],
                 "spec": {
-                    "routes": {
-                        "default": "general",
-                        "table": [
-                            {"name": "errors", "condition": 'status == "err"'},
-                            {
-                                "name": "tool_events",
-                                "condition": 'tool != "none" and role == "assistant"',
-                            },
-                        ],
-                    },
+                    "routes": _fixture_move_routes(),
                     "order": {"enabled": False},
                 },
                 "exporters": ["count/routes", "sum/latency"],
@@ -627,16 +629,7 @@ def q_collector_service_forward(spark, sf_dir):
             "logs/in": {
                 "receivers": [{"path": ensure_tier(tier_for_sf_dir(sf_dir))}],
                 "spec": {
-                    "routes": {
-                        "default": "general",
-                        "table": [
-                            {"name": "errors", "condition": 'status == "err"'},
-                            {
-                                "name": "tool_events",
-                                "condition": 'tool != "none" and role == "assistant"',
-                            },
-                        ],
-                    },
+                    "routes": _fixture_move_routes(),
                     "order": {"enabled": False},
                 },
                 "exporters": ["fwd"],

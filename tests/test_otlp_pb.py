@@ -383,6 +383,46 @@ def test_jvm_probe_and_auto_fallback(spark):
         assert jvm == walk
 
 
+def test_attrs_csv_col_sorts_by_key_like_the_walk(spark):
+    """The JVM path's attrs CSV must order entries like the Python walk:
+    by key, then rendered value. Sorting the joined "k=v" strings put
+    http.method.original before http.method ('.' < '='). The attribute
+    array is built with F.array(F.struct(...)) in spark-protobuf's decoded
+    KeyValue shape, so no jar is needed."""
+    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
+        _attrs_csv,
+        _attrs_csv_col,
+    )
+
+    def kv(key, s=None, i=None, b=None):
+        return F.struct(
+            F.lit(key).alias("key"),
+            F.struct(
+                F.lit(s).cast("string").alias("string_value"),
+                F.lit(b).cast("boolean").alias("bool_value"),
+                F.lit(i).cast("long").alias("int_value"),
+                F.lit(None).cast("double").alias("double_value"),
+                F.lit(None).cast("binary").alias("bytes_value"),
+            ).alias("value"),
+        )
+
+    attrs = F.array(
+        kv("http.method.original", s="get"),
+        kv("http.method", s="GET"),
+        kv("dup", i=2),
+        kv("dup", s="10"),
+        kv("a", b=True),
+        kv("ab", s="x"),
+    )
+    got = spark.range(1).select(_attrs_csv_col(attrs).alias("csv")).first()["csv"]
+    want = _attrs_csv([
+        ("http.method.original", "get"), ("http.method", "GET"),
+        ("dup", 2), ("dup", "10"), ("a", True), ("ab", "x"),
+    ])
+    assert want == "a=true,ab=x,dup=10,dup=2,http.method=GET,http.method.original=get"
+    assert got == want
+
+
 def test_logs_descriptor_set_structure_roundtrip():
     """The hand-encoded FileDescriptorSet must be structurally sound: our
     own wire reader walks it back and the message/field inventory must

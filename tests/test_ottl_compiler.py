@@ -194,6 +194,25 @@ def test_config_validation():
     with pytest.raises(ValueError):
         validate_spec({"source": {"path": "x"}, "bogus_section": {}})
 
+
+def test_order_partitions_validation():
+    """order.partitions must be a positive int; a bool is not an int here."""
+    for bad in (0, -2, "4", True, 2.0):
+        with pytest.raises(ValueError, match="order.partitions"):
+            validate_spec({"source": {"path": "x"}, "order": {"partitions": bad}})
+    validate_spec({"source": {"path": "x"}, "order": {"partitions": 4}})
+
+
+def test_order_partitions_repartitions_on_conv_id(spark):
+    """order.partitions repartitions the routed frame on conv_id into
+    exactly n partitions ahead of the order window."""
+    from opentelemetry_collector_contrib_spark.fixtures import ensure_tier
+
+    spec = {"source": {"path": ensure_tier("t1")}, "order": {"enabled": True, "partitions": 3}}
+    routed = build_pipeline(spark, spec)
+    assert routed.rdd.getNumPartitions() == 3
+    assert routed.filter(F.col("turn_rn") != F.col("turn_idx") + 1).count() == 0
+
 def test_config_sample_and_tail_sampling(spark):
     from opentelemetry_collector_contrib_spark.fixtures import dims_dir, ensure_dims, ensure_tier
     from opentelemetry_collector_contrib_spark.plans.config import build_pipeline, build_tail_sampling

@@ -39,6 +39,30 @@ def test_per_turn_text_equality(spark, routed_t1, t1):
     assert joined.count() == t1.count()
 
 
+def test_fixture_spec_matches_hand_built_chain(spark, routed_t1, t1, dims):
+    """build_routed compiles fixture_spec through config.build_pipeline. The
+    oracle is the hand-assembled chain it replaced: native parse, the two
+    enrich lookups, the SQL-string route table, stable order."""
+    from opentelemetry_collector_contrib_spark.operators.enrich import enrich_transcripts
+    from opentelemetry_collector_contrib_spark.operators.order import stable_order
+    from opentelemetry_collector_contrib_spark.operators.parse import parse_native
+    from opentelemetry_collector_contrib_spark.operators.route import Route, RouteTable, apply_routes
+
+    sql_routes = RouteTable(
+        routes=[
+            Route("errors", "status = 'err'", "move"),
+            Route("tool_events", "tool <> 'none' AND role = 'assistant'", "move"),
+            Route("human_turns", "role_group = 'human'", "copy"),
+        ],
+        default="general",
+    )
+    oracle = stable_order(apply_routes(enrich_transcripts(parse_native(t1), *dims), sql_routes))
+    assert routed_t1.schema == oracle.schema
+    assert routed_t1.count() == t1.count()
+    assert routed_t1.exceptAll(oracle).count() == 0
+    assert oracle.exceptAll(routed_t1).count() == 0
+
+
 def test_sink_writes_and_lineage_resume(spark, routed_t1, tmp_path):
     base = str(tmp_path / "sinks")
     # "spread" is written as several files, so the manifest holds
