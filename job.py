@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 
 
 def main() -> None:
@@ -43,8 +44,9 @@ def main() -> None:
     ap.add_argument(
         "--dlq",
         action="store_true",
-        help="divert content-failure rows (plans/dlq.py fixture rules) to a "
-        "quarantine sink instead of passing them through",
+        help="move content-failure rows (plans/dlq.py FIXTURE_DLQ_RULES, "
+        "written into the spec's dlq.rules) to a quarantine sink: no route "
+        "sink, copy sinks included, receives them",
     )
     ap.add_argument(
         "--profile",
@@ -80,17 +82,25 @@ def main() -> None:
     ap.add_argument(
         "--streaming",
         action="store_true",
-        help="run the same parse→enrich→route pipeline as a Structured "
-        "Streaming availableNow drain (file-arrival micro-batches, "
-        "checkpointed idempotent fan-out via foreachBatch); per-sink row "
-        "counts match the batch run over the same input",
+        help="compile the same spec (fixture or --config, with --vectorized "
+        "and --dlq) as a Structured Streaming availableNow drain "
+        "(file-arrival micro-batches, checkpointed idempotent fan-out via "
+        "foreachBatch, no order window); per-sink row counts match the "
+        "batch run over the same input. --qa-gate, --profile and "
+        "--repartition-conv are batch-only",
     )
     args = ap.parse_args()
+    if args.streaming:
+        for flag, val in (
+            ("--qa-gate", args.qa_gate),
+            ("--profile", args.profile),
+            ("--repartition-conv", args.repartition_conv is not None),
+        ):
+            if val:
+                ap.error(f"{flag} is batch-only; it cannot be combined with --streaming")
 
     if args.plan_backfill:
         # metadata-only: listing + fingerprints, no SparkSession
-        import os
-
         from opentelemetry_collector_contrib_spark.plans.lineage import (
             BackfillLedger,
             input_fingerprint,
@@ -110,48 +120,6 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("otel-contrib-spark-pipeline").getOrCreate()
 
-    if args.streaming:
-        import os
-
-        from opentelemetry_collector_contrib_spark.fixtures import (
-            ensure_dims,
-            ensure_tier,
-            tier_for_sf_dir,
-        )
-        from opentelemetry_collector_contrib_spark.operators.enrich import (
-            enrich_transcripts,
-        )
-        from opentelemetry_collector_contrib_spark.operators.parse import (
-            parse_native,
-            parse_vectorized,
-        )
-        from opentelemetry_collector_contrib_spark.streaming.pipeline import (
-            streaming_route,
-            transcripts_stream,
-            write_stream_sinks,
-        )
-
-        # the file-stream source needs a directory/glob, not a single file
-        src_path = ensure_tier(tier_for_sf_dir(args.input))
-        if os.path.isfile(src_path):
-            src_path = os.path.join(os.path.dirname(src_path), "*.parquet")
-        tool_path, role_path = ensure_dims()
-        tool_dim = spark.read.parquet(tool_path)
-        role_dim = spark.read.parquet(role_path)
-        stream = transcripts_stream(spark, src_path)
-        parse = parse_vectorized if args.vectorized else parse_native
-        routed = streaming_route(enrich_transcripts(parse(stream), tool_dim, role_dim))
-        q = write_stream_sinks(routed, args.output, os.path.join(args.output, "_checkpoint"))
-        q.awaitTermination()
-        counts = {}
-        for name in sorted(os.listdir(args.output)):
-            p = os.path.join(args.output, name)
-            if name.startswith("_") or not os.path.isdir(p):
-                continue
-            counts[name] = spark.read.parquet(p).count()
-        print(json.dumps({"mode": "streaming", "sinks": counts}))
-        return
-
     import uuid
 
     from opentelemetry_collector_contrib_spark.operators.route import sink_frames
@@ -161,6 +129,7 @@ def main() -> None:
         build_tail_sampling,
         route_table_from_spec,
     )
+    from opentelemetry_collector_contrib_spark.plans.dlq import FIXTURE_DLQ_RULES
     from opentelemetry_collector_contrib_spark.plans.lineage import (
         parquet_file_rows,
         write_sinks_resumable,
@@ -171,6 +140,7 @@ def main() -> None:
         load_transcripts,
         pipeline_aggregates,
     )
+    from opentelemetry_collector_contrib_spark.streaming.pipeline import write_stream_sinks
 
     if args.config:
         with open(args.config) as f:
@@ -181,25 +151,33 @@ def main() -> None:
         spec.setdefault("parse", {})["bank"] = "vectorized"
     if args.repartition_conv is not None:
         spec.setdefault("order", {})["partitions"] = args.repartition_conv
+    if args.dlq:
+        spec["dlq"] = {"rules": FIXTURE_DLQ_RULES}
+    table = route_table_from_spec(spec)
 
     metrics = PipelineMetrics(run_id=uuid.uuid4().hex)
     with metrics.time_stage("build_and_persist"):
-        routed = build_pipeline(spark, spec).persist()
-        metrics.input_rows = routed.count()
+        routed = build_pipeline(spark, spec, streaming=args.streaming)
+        if not args.streaming:
+            routed = routed.persist()
+            metrics.input_rows = routed.count()
+    if args.streaming:
+        q = write_stream_sinks(
+            routed, args.output, os.path.join(args.output, "_checkpoint"), route_table=table
+        )
+        q.awaitTermination()
+        # footer counts; the recursive glob covers each sink's _batch=<id>/
+        counts = {
+            name: sum(parquet_file_rows(os.path.join(args.output, name)))
+            for name in sorted(os.listdir(args.output))
+            if not name.startswith("_") and os.path.isdir(os.path.join(args.output, name))
+        }
+        print(json.dumps({"mode": "streaming", "sinks": counts}))
+        return
     try:
-        table = route_table_from_spec(spec)
-        # a config with no routes section has no route_id column — the whole
-        # stream is one sink, the single-exporter topology
-        sinks = sink_frames(routed, table) if table is not None else {"all": routed}
-        if args.dlq:
-            from opentelemetry_collector_contrib_spark.plans.dlq import (
-                fixture_rules,
-                split_quarantine,
-            )
-
-            _, quarantined = split_quarantine(routed, fixture_rules())
-            sinks["quarantine"] = quarantined
-        paths = write_sinks_resumable(routed, sinks, args.output, metrics=metrics)
+        paths = write_sinks_resumable(
+            routed, sink_frames(routed, table), args.output, metrics=metrics
+        )
         counts = {name: metrics.sink_rows[name] for name in paths}
         with metrics.time_stage("aggregates"):
             # the fixture's agg_per_tool (a count and a cost sum) is not a

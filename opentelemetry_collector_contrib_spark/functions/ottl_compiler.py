@@ -19,10 +19,11 @@ Supported surface (the log-pipeline core):
   paths       attributes["k"] / resource["k"] → column k; body → text;
               bare identifiers → same-named column (override via path_map)
 
-Comparison semantics note: the reference returns false for incomparable
-types except != (pkg/ottl/compare.go:44-70); Spark yields NULL, which
-filters/when-chains treat as false — same observable behavior for
-conditions, so no shim is needed.
+Comparison semantics note: `x == nil` / `x != nil` compile to
+isNull()/isNotNull(), and `nil == nil` is true (pkg/ottl/compare.go:44-70);
+SQL `x = NULL` would be NULL on every row. Any other comparison against a
+NULL column yields NULL, which filters/when-chains treat as false; the
+reference's `!=` is true there instead, a difference not shimmed.
 """
 
 from __future__ import annotations
@@ -374,12 +375,25 @@ class _Parser:
                 self.i = save
         return self._comparison()
 
+    def _is_nil(self, start: int) -> bool:
+        """True when the value parsed from token `start` was the bare nil."""
+        return self.i == start + 1 and self.toks[start][0] == "nil"
+
     def _comparison(self) -> Column:
+        start = self.i
         left = self.value()
+        left_nil = self._is_nil(start)
         kind, op = self.peek()
         if kind == "op" and op in ("==", "!=", ">=", "<=", ">", "<"):
             self.next()
+            start = self.i
             right = self.value()
+            right_nil = self._is_nil(start)
+            if op in ("==", "!=") and (left_nil or right_nil):
+                if left_nil and right_nil:
+                    return F.lit(op == "==")
+                other = right if left_nil else left
+                return other.isNull() if op == "==" else other.isNotNull()
             return {
                 "==": left == right,
                 "!=": left != right,

@@ -68,9 +68,13 @@ def apply_routes(df: DataFrame, table: RouteTable) -> DataFrame:
     return out
 
 
-def sink_frames(routed: DataFrame, table: RouteTable) -> dict[str, DataFrame]:
+def sink_frames(routed: DataFrame, table: RouteTable | None) -> dict[str, DataFrame]:
     """One DataFrame per sink. Caller should .persist() `routed` first when
-    writing multiple sinks (one upstream computation, N cheap filters)."""
+    writing multiple sinks (one upstream computation, N cheap filters).
+    No table means no route_id column: the whole frame is the one sink
+    `all`, the single-exporter topology."""
+    if table is None:
+        return {"all": routed}
     sinks: dict[str, DataFrame] = {}
     for r in table.move_routes():
         sinks[r.name] = routed.filter(F.col("route_id") == r.name)
@@ -140,7 +144,6 @@ FIXTURE_ROUTE_SPEC = {
 
 
 # FIXTURE_ROUTE_SPEC as a RouteTable, for callers that route without a spec
-# (the streaming twin)
 FIXTURE_ROUTES = RouteTable(
     routes=[
         # compiled when applied: a Column cannot be built at import time

@@ -26,19 +26,6 @@ from pyspark.sql import functions as F
 from .dedup import cosine
 
 
-def _with_norm(df: DataFrame, vec_col: str, out: str = "_norm") -> DataFrame:
-    return df.withColumn(
-        out,
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-    )
-
-
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,

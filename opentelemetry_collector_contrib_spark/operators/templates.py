@@ -148,16 +148,6 @@ def annotate_templates(df: DataFrame, text_col: str = "text", out_col: str = "lo
 PARAM = "<*>"
 
 
-def _nav_token(tok: str) -> str:
-    """Tree-navigation form of a token: digits ⇒ wildcard (drain3's
-    add_seq_to_prefix_tree rule). ASCII digits ONLY — the distributed
-    leaf key uses Java's ``rlike(r"\\d")`` which is ASCII-scoped, so this
-    reference path must agree exactly (Python's ``str.isdigit()`` also
-    counts Unicode digits like '٢'/'²' and would route such tokens to a
-    different leaf than the Spark operator)."""
-    return PARAM if any(c in "0123456789" for c in tok) else tok
-
-
 def drain_fold(
     rows: list[tuple[str, str]], sim_th: float
 ) -> list[tuple[str, int, str]]:

@@ -18,6 +18,8 @@ Spec shape (all sections optional except source):
       "filter":  ["status == \\"drop_me\\""],           # OTTL drop conditions
       "enrich":  [{"dim_path": ".../tool_dim.parquet", "key": "tool",
                    "defaults": {"tool_category": "Unknown"}}],
+      "dlq":     {"rules": [{"reason": "no_text",       # OTTL, first match wins
+                             "when": "text == nil"}]},
       "routes":  {"default": "general",
                   "table": [{"name": "errors", "condition": "status == \\"err\\"",
                              "mode": "move"}]},
@@ -30,6 +32,15 @@ Spec shape (all sections optional except source):
                         "rate_limit_per_minute": 100},
       "aggregates": {"per_conv": {"keys": ["route_id", "conv_id"]}},
     }
+
+`dlq` compiles to an `error_reason` column (the first matching rule's
+reason, NULL for clean rows) and a `quarantine` move route ahead of every
+`routes` entry; quarantined rows are kept out of copy routes too, so a
+content failure never reaches a regular sink (plans/dlq.py).
+
+build_pipeline(..., streaming=True) compiles the same spec over a
+readStream of the source: no order window, and `contract` or
+`order.partitions` is refused.
 """
 
 from __future__ import annotations
@@ -219,10 +230,23 @@ def _validate_sections(spec: dict[str, Any]) -> None:
             parse_condition(p["condition"])
 
 
-def build_pipeline(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
+def build_pipeline(
+    spark: SparkSession, spec: dict[str, Any], streaming: bool = False
+) -> DataFrame:
     """Compile the spec into the routed DataFrame (pre-sink). One
-    projection per stage; Catalyst fuses them."""
+    projection per stage; Catalyst fuses them.
+
+    With `streaming`, the source is read as a stream and the result is a
+    streaming DataFrame with the same columns minus the order window's.
+    A stream can be neither collected nor totally ordered, so a
+    `contract` or `order.partitions` raises ValueError here."""
     validate_spec(spec)
+    if streaming:
+        if spec.get("contract"):
+            raise ValueError("contract needs the whole batch; a stream cannot be checked up front")
+        if (spec.get("order") or {}).get("partitions"):
+            raise ValueError("order.partitions feeds the order window; a stream has no total order")
+        spec = {**spec, "order": {"enabled": False}}
 
     src = spec["source"]
     if "wire_spool" in src:
@@ -230,12 +254,14 @@ def build_pipeline(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # below see the decoded columns (nf_*, ff_*, ol_* ...)
         from ..sources.file_source import wire_spool_source
 
-        df = wire_spool_source(spark, src["wire_spool"], src["wire"], **(src.get("options") or {}))
+        df = wire_spool_source(
+            spark, src["wire_spool"], src["wire"], streaming=streaming, **(src.get("options") or {})
+        )
         # decoded wire rows are not transcripts: the stable turn-order
         # window has no conv_id/turn_idx to order on
         spec = {**spec, "order": spec.get("order", {"enabled": False})}
         return _apply_sections(spark, df, spec)
-    df = spark.read.parquet(src["path"]) if "path" in src else spark.read.table(src["table"])
+    df = _read_source(spark, src, streaming)
 
     contract = spec.get("contract")
     if contract:
@@ -257,6 +283,22 @@ def build_pipeline(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
 
         df = apply_stanza_operators(df, spec["stanza_operators_post"])
     return _apply_sections(spark, df, spec)
+
+
+def _read_source(spark: SparkSession, src: dict[str, Any], streaming: bool) -> DataFrame:
+    if "table" in src:
+        return (spark.readStream if streaming else spark.read).table(src["table"])
+    if not streaming:
+        return spark.read.parquet(src["path"])
+    import os
+
+    path = src["path"]
+    if os.path.isfile(path):
+        # the file-stream source needs a directory/glob, not a single file
+        path = os.path.join(os.path.dirname(path), "*.parquet")
+    # a file stream cannot infer its schema: read it once from the footers
+    # the batch job would scan
+    return spark.readStream.schema(spark.read.parquet(src["path"]).schema).parquet(path)
 
 
 def _parse_stage(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
@@ -302,20 +344,10 @@ def _apply_sections(spark: SparkSession, df: DataFrame, spec: dict[str, Any]) ->
     dlq = spec.get("dlq")
     if dlq:
         # first-match reason column; the quarantine ROUTE (prepended in
-        # route_table_from_spec) is what moves these rows to their sink —
-        # the reason column just rides along as evidence
-        from pyspark.sql import functions as F
+        # route_table_from_spec) moves every row that has one to its sink
+        from .dlq import compile_rules, quarantine_reason
 
-        reason = F.coalesce(
-            *[
-                F.when(
-                    F.coalesce(parse_condition(r["when"]), F.lit(False)),
-                    F.lit(r["reason"]),
-                )
-                for r in dlq["rules"]
-            ]
-        )
-        df = df.withColumn("error_reason", reason)
+        df = df.withColumn("error_reason", quarantine_reason(compile_rules(dlq["rules"])))
 
     if spec.get("routes") or dlq:
         df = apply_routes(df, route_table_from_spec(spec))
@@ -352,7 +384,10 @@ def _apply_sections(spark: SparkSession, df: DataFrame, spec: dict[str, Any]) ->
 def route_table_from_spec(spec: dict[str, Any]):
     """The spec's routes section as a RouteTable — shared by build_pipeline
     (route_id assignment) and the sink fan-out (job.py), so the two can
-    never diverge. None when the section is absent."""
+    never diverge. With a dlq section, the quarantine route comes first
+    and every copy route skips quarantined rows; both read the
+    `error_reason` column build_pipeline adds. None when both sections
+    are absent."""
     from ..functions.ottl_compiler import parse_condition
     from ..operators.route import Route, RouteTable
 
@@ -365,15 +400,15 @@ def route_table_from_spec(spec: dict[str, Any]):
         for r in (routes or {}).get("table", [])
     ]
     if dlq:
-        # quarantine wins first (first-match-wins routing): a content
-        # failure must never leak into a regular sink
+        # quarantine wins first (first-match-wins routing) and copies skip
+        # it: a content failure must never leak into a regular sink
         from pyspark.sql import functions as F
 
-        bad = None
-        for r in dlq["rules"]:
-            c = F.coalesce(parse_condition(r["when"]), F.lit(False))
-            bad = c if bad is None else (bad | c)
-        table = [Route("quarantine", bad, "move")] + table
+        clean = F.col("error_reason").isNull()
+        table = [Route("quarantine", F.col("error_reason").isNotNull(), "move")] + [
+            Route(r.name, r.condition & clean, r.mode) if r.mode == "copy" else r
+            for r in table
+        ]
     return RouteTable(
         routes=table,
         default=(routes or {}).get("default", "general"),

@@ -1,5 +1,5 @@
-"""Dead-letter / quarantine sink: divert rows that fail pipeline
-invariants into an annotated DLQ instead of silently passing NULLs.
+"""Dead-letter / quarantine: rows that fail pipeline invariants go to an
+annotated quarantine sink instead of passing on as silent NULLs.
 
 The reference's exporterhelper retry queue ultimately DROPS data that
 exhausts retries (exporter/exporterhelper sending_queue — delivery
@@ -10,17 +10,38 @@ can't be parsed or violates an invariant must land somewhere queryable,
 tagged with why, so curation can audit loss instead of discovering it
 as silent NULL inflation.
 
-``split_quarantine`` is one tagging projection + two filters over the
-same frame — identical plan shape to the route fan-out (when-chain,
-first-match-wins), zero extra shuffles. The write path reuses the
-resumable-sink contract (plans/lineage.py), so the DLQ inherits
-idempotent resume and per-partition lineage like every other sink.
+The DLQ is the pipeline spec's quarantine route (plans/config.py): a
+spec's ``dlq.rules`` (OTTL conditions) compile through
+``quarantine_reason`` into an ``error_reason`` column, and
+``route_table_from_spec`` puts a first-match ``quarantine`` move route
+ahead of every other route and keeps quarantined rows out of copy routes.
+Batch and streaming jobs therefore divert bad rows the same way, through
+the same sink writers. ``job.py --dlq`` writes ``FIXTURE_DLQ_RULES`` into
+the spec. ``split_quarantine`` is the same reason column split into two
+frames, for callers that want the quarantined rows without routing.
 """
 
 from __future__ import annotations
 
+from typing import Any
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# The fixture pipeline's content invariants, in the spec's dlq.rules shape.
+# Rule order matters: an unparsable line is 'unparsed' even when it also
+# lacks a tool status.
+FIXTURE_DLQ_RULES = [
+    {"reason": "unparsed", "when": 'pattern_id == "raw"'},
+    {"reason": "missing_tool_status", "when": 'tool != "none" and status == nil'},
+]
+
+
+def compile_rules(rules: list[dict[str, Any]]) -> list[tuple[str, Column]]:
+    """dlq.rules entries as ordered (reason, OTTL condition Column) pairs."""
+    from ..functions.ottl_compiler import parse_condition
+
+    return [(r["reason"], parse_condition(r["when"])) for r in rules]
 
 
 def quarantine_reason(rules: list[tuple[str, Column]]) -> Column:
@@ -44,35 +65,6 @@ def split_quarantine(
     return accepted, quarantined
 
 
-def write_with_dlq(
-    routed: DataFrame,
-    rules: list[tuple[str, Column]],
-    base_path: str,
-    accepted_name: str = "accepted",
-    dlq_name: str = "quarantine",
-    metrics=None,
-) -> dict[str, str]:
-    """Split and write both halves through the resumable-sink contract
-    (manifest commit per sink, idempotent rerun skip)."""
-    from .lineage import write_sinks_resumable
-
-    accepted, quarantined = split_quarantine(routed, rules)
-    return write_sinks_resumable(
-        routed,
-        {accepted_name: accepted, dlq_name: quarantined},
-        base_path,
-        metrics=metrics,
-    )
-
-
-# The fixture pipeline's content invariants — used by the registry query
-# and job-level wiring. Rule order matters: an unparsable line is
-# 'unparsed' even when it also lacks a tool status.
 def fixture_rules() -> list[tuple[str, Column]]:
-    return [
-        ("unparsed", F.col("pattern_id") == "raw"),
-        (
-            "missing_tool_status",
-            (F.col("tool") != "none") & F.col("status").isNull(),
-        ),
-    ]
+    """FIXTURE_DLQ_RULES compiled, for split_quarantine callers."""
+    return compile_rules(FIXTURE_DLQ_RULES)

@@ -241,11 +241,6 @@ def collect_file_stats(files: list[str], cols: list[str]) -> dict[str, dict]:
     return out
 
 
-def _schema_fields(schema_json: str) -> dict[str, object]:
-    """name -> type (json repr) map from a StructType.json() string."""
-    return {f["name"]: f["type"] for f in json.loads(schema_json)["fields"]}
-
-
 def _evolved_schema(cur_json: str, new_json: str, evolve: bool) -> str:
     """Iceberg-style schema check at commit time: common columns must keep
     identical types (no silent coercion, ever); column ADDS are accepted

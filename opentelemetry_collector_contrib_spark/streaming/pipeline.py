@@ -8,10 +8,10 @@ exactly-once progress (the checkpointLocation replaces the stanza offset
 store, internal/checkpoint/checkpoint.go:27).
 
 Batch/stream symmetry is the design invariant: parse, enrich, and route are
-pure projections/broadcast-joins, so the SAME operator functions from
-operators/ run unchanged on a streaming DataFrame. Only the stateful tail
-(dedup windows, recombine sessions, aggregates) differs, and those live
-here.
+pure projections/broadcast-joins, so the SAME pipeline spec compiles to a
+streaming DataFrame (plans/config.build_pipeline(..., streaming=True)) and
+write_stream_sinks fans it out. Only the stateful tail (dedup windows,
+recombine sessions, aggregates) differs, and those live here.
 """
 
 from __future__ import annotations
@@ -47,13 +47,6 @@ def transcripts_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     if path.endswith((".json", ".jsonl")):
         return reader.json(path)
     return reader.parquet(path)
-
-
-def streaming_route(df: DataFrame, route_table=None) -> DataFrame:
-    """Routing is stateless — the batch route compiler applies verbatim."""
-    from ..operators.route import FIXTURE_ROUTES, apply_routes
-
-    return apply_routes(df, route_table or FIXTURE_ROUTES)
 
 
 def streaming_windowed_counts(
@@ -194,45 +187,23 @@ def write_stream_sinks(
     route_table=None,
     trigger_available_now: bool = True,
 ):
-    """Streaming fan-out: ONE query, foreachBatch writes every sink from the
-    same micro-batch (the routed frame is computed once per batch). Writes
-    are IDEMPOTENT under micro-batch retry: each sink batch lands in its own
-    `_batch=<id>` partition directory with overwrite mode, so a batch that
-    failed mid-fan-out and is replayed from the checkpoint overwrites its
-    own partial output instead of appending duplicates — foreachBatch alone
+    """Streaming fan-out: ONE query, foreachBatch writes every sink of
+    ``route.sink_frames(batch, route_table)`` from the same micro-batch
+    (the routed frame is computed once per batch); no table writes the
+    one sink `all`, as the batch job does. Writes are IDEMPOTENT under
+    micro-batch retry: each sink batch lands in its own `_batch=<id>`
+    partition directory with overwrite mode, so a batch that failed
+    mid-fan-out and is replayed from the checkpoint overwrites its own
+    partial output instead of appending duplicates — foreachBatch alone
     is only at-least-once. Readers scan `{base}/{sink}` as partitioned
-    parquet (`_batch` surfaces as a partition column). Returns the started
-    StreamingQuery."""
-    return _start_sink_fanout(
-        routed, base_path, checkpoint_dir, route_table, trigger_available_now
-    )
-
-
-def _start_sink_fanout(
-    routed: DataFrame,
-    base_path: str,
-    checkpoint_dir: str,
-    route_table,
-    trigger_available_now: bool,
-    split=None,
-):
-    """Shared write loop for the plain and DLQ fan-outs: the
-    persist/try-finally, copy_-column drop, and per-sink
-    ``_batch=<id>`` overwrite contract live in exactly one place, so an
-    idempotency/retry fix cannot silently diverge the two paths
-    (round-5 review). ``split(batch_df) -> (frame_for_routing,
-    extra_sinks)`` lets the DLQ path quarantine before routing."""
-    from ..operators.route import FIXTURE_ROUTES, sink_frames
-
-    table = route_table or FIXTURE_ROUTES
+    parquet (`_batch` surfaces as a partition column). Returns the
+    started StreamingQuery."""
+    from ..operators.route import sink_frames
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            to_route, extra = split(batch_df) if split else (batch_df, {})
-            sinks = sink_frames(to_route, table)
-            sinks.update(extra)
-            for name, sdf in sinks.items():
+            for name, sdf in sink_frames(batch_df, route_table).items():
                 out = sdf.drop(*[c for c in sdf.columns if c.startswith("copy_")])
                 out.write.mode("overwrite").parquet(f"{base_path}/{name}/_batch={batch_id}")
         finally:
@@ -660,33 +631,6 @@ def streaming_keep_first_dedup(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def write_stream_sinks_with_dlq(
-    routed: DataFrame,
-    base_path: str,
-    checkpoint_dir: str,
-    rules=None,
-    route_table=None,
-    trigger_available_now: bool = True,
-):
-    """Streaming fan-out with a quarantine sink: each micro-batch is split
-    by the DLQ rules (plans/dlq.py, first-match-wins reasons) BEFORE
-    routing, so content-failure rows land in ``{base}/quarantine`` with
-    their ``error_reason`` instead of polluting route sinks. Same
-    idempotent `_batch=<id>` overwrite contract as write_stream_sinks."""
-    from ..plans.dlq import fixture_rules, split_quarantine
-
-    dlq_rules = rules if rules is not None else fixture_rules()
-
-    def split(batch_df: DataFrame):
-        accepted, quarantined = split_quarantine(batch_df, dlq_rules)
-        return accepted, {"quarantine": quarantined}
-
-    return _start_sink_fanout(
-        routed, base_path, checkpoint_dir, route_table, trigger_available_now,
-        split=split,
-    )
 
 
 def streaming_curation_gate(

@@ -98,23 +98,29 @@ def test_config_dlq_section_routes_to_quarantine(spark):
         "order": {"enabled": False},
         "dlq": {"rules": [{"reason": "unparsed", "when": 'pattern_id == "raw"'}]},
         "routes": {
-            "table": [{"name": "errors", "condition": 'sev == "error"'}],
+            "table": [
+                {"name": "errors", "condition": 'sev == "error"'},
+                # matches every row: a copy sees quarantined rows too
+                {"name": "audit", "condition": "turn_idx >= 0", "mode": "copy"},
+            ],
             "default": "general",
         },
     }
     routed = build_pipeline(spark, spec).persist()
     try:
         sinks = sink_frames(routed, route_table_from_spec(spec))
-        assert set(sinks) == {"quarantine", "errors", "general"}
+        assert set(sinks) == {"quarantine", "errors", "general", "audit"}
         nq = sinks["quarantine"].count()
         assert nq > 0  # the fixture's ~2% unparsable lines land here
         # quarantine wins first-match: no raw rows leak into other sinks
         from pyspark.sql import functions as F
 
-        for name in ("errors", "general"):
+        for name in ("errors", "general", "audit"):
             assert sinks[name].filter(F.col("pattern_id") == "raw").count() == 0
         assert sinks["quarantine"].filter(F.col("error_reason").isNull()).count() == 0
-        total = sum(s.count() for s in sinks.values())
+        # the copy route takes every clean row and no quarantined one
+        assert sinks["audit"].count() == routed.count() - nq
+        total = sum(sinks[n].count() for n in ("quarantine", "errors", "general"))
         assert total == routed.count()
     finally:
         routed.unpersist()

@@ -5,9 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.plans.dlq import (
+    FIXTURE_DLQ_RULES,
     fixture_rules,
     split_quarantine,
-    write_with_dlq,
 )
 
 
@@ -36,17 +36,36 @@ def test_reasons_are_exhaustive_and_ordered(routed_t1):
     assert m.filter((F.col("tool") == "none") | F.col("status").isNotNull()).count() == 0
 
 
-def test_write_with_dlq_is_resumable(routed_t1, tmp_path):
-    base = str(tmp_path / "dlq_out")
-    paths = write_with_dlq(routed_t1, fixture_rules(), base)
-    assert set(paths) == {"accepted", "quarantine"}
-    spark = routed_t1.sparkSession
-    first = {k: spark.read.parquet(p).count() for k, p in paths.items()}
-    assert first["accepted"] + first["quarantine"] == routed_t1.count()
-    # rerun: manifest marks both sinks committed; counts unchanged
-    paths2 = write_with_dlq(routed_t1, fixture_rules(), base)
-    second = {k: spark.read.parquet(p).count() for k, p in paths2.items()}
-    assert second == first
+def test_write_with_dlq_is_resumable(spark, routed_t1, tmp_path):
+    """The spec's dlq section is the DLQ: its quarantine route moves bad
+    rows, the move sinks plus quarantine partition the input, and a rerun
+    through the resumable-sink contract changes nothing."""
+    from opentelemetry_collector_contrib_spark.operators.route import sink_frames
+    from opentelemetry_collector_contrib_spark.plans.config import (
+        build_pipeline,
+        route_table_from_spec,
+    )
+    from opentelemetry_collector_contrib_spark.plans.lineage import write_sinks_resumable
+    from opentelemetry_collector_contrib_spark.plans.pipeline import fixture_spec
+
+    spec = {**fixture_spec("sf0.001"), "dlq": {"rules": FIXTURE_DLQ_RULES}}
+    routed = build_pipeline(spark, spec).persist()
+    try:
+        sinks = sink_frames(routed, route_table_from_spec(spec))
+        base = str(tmp_path / "dlq_out")
+        paths = write_sinks_resumable(routed, sinks, base)
+        assert set(paths) == {"quarantine", "errors", "tool_events", "general", "human_turns"}
+        first = {k: spark.read.parquet(p).count() for k, p in paths.items()}
+        moves = ("quarantine", "errors", "tool_events", "general")
+        assert sum(first[k] for k in moves) == routed_t1.count()
+        _, bad = split_quarantine(routed_t1, fixture_rules())
+        assert first["quarantine"] == bad.count()
+        # rerun: manifest marks every sink committed; counts unchanged
+        paths2 = write_sinks_resumable(routed, sinks, base)
+        second = {k: spark.read.parquet(p).count() for k, p in paths2.items()}
+        assert second == first
+    finally:
+        routed.unpersist()
 
 
 # --- exporterhelper retry/queue analogue (round 4) ---------------------------

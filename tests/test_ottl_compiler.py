@@ -429,3 +429,38 @@ def test_editor_flatten_where_raises_type_guard(mapped):
     df2 = mapped.withColumn("nums", F.create_map(F.lit("n"), F.lit(7)))
     with _pytest.raises(ValueError, match="stringify_all.*where"):
         apply_statements(df2, ['stringify_all(nums) where status == "err"'])
+
+
+def test_nil_comparisons_test_for_absence(spark):
+    """`x == nil` is isNull(), `x != nil` is isNotNull(), on either side
+    (pkg/ottl/compare.go:44-70); SQL `x = NULL` would match no row."""
+    df = spark.createDataFrame([(1, None), (2, "warn")], "id int, sev string")
+
+    def ids(cond):
+        return sorted(r["id"] for r in df.filter(parse_condition(cond)).collect())
+
+    assert ids("sev == nil") == [1]
+    assert ids("nil == sev") == [1]
+    assert ids("sev != nil") == [2]
+    assert ids("nil != sev") == [2]
+    assert ids("nil == nil") == [1, 2]
+    assert ids("nil != nil") == []
+    assert ids('sev == nil or sev == "warn"') == [1, 2]
+    # the config.py docstring's own example: fill a missing severity
+    out = apply_statements(df, ['set(sev, "unknown") where sev == nil'])
+    assert {r["id"]: r["sev"] for r in out.collect()} == {1: "unknown", 2: "warn"}
+
+
+def test_streaming_build_refuses_contract_and_order_partitions(spark):
+    """A stream can be neither collected for a contract check nor totally
+    ordered: both fail when the spec is compiled, before any query starts."""
+    from opentelemetry_collector_contrib_spark.fixtures import ensure_tier
+
+    src = {"path": ensure_tier("t1")}
+    contract = {"checks": [{"type": "not_null", "col": "conv_id"}]}
+    with pytest.raises(ValueError, match="contract"):
+        build_pipeline(spark, {"source": src, "contract": contract}, streaming=True)
+    with pytest.raises(ValueError, match="order.partitions"):
+        build_pipeline(spark, {"source": src, "order": {"partitions": 4}}, streaming=True)
+    routed = build_pipeline(spark, {"source": src}, streaming=True)
+    assert routed.isStreaming and "turn_rn" not in routed.columns

@@ -8,12 +8,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_contrib_spark.operators.route import FIXTURE_ROUTES, apply_routes
 from opentelemetry_collector_contrib_spark.sources import csv_file_source, file_source, json_file_source, kafka_source_options
 from opentelemetry_collector_contrib_spark.streaming import (
     run_available_now,
     streaming_dedup,
     streaming_recombine,
-    streaming_route,
     streaming_windowed_counts,
     transcripts_stream,
 )
@@ -86,7 +86,7 @@ def test_streaming_route_matches_batch(spark, stream_input, tmp_path, dims):
     tool_dim, role_dim = dims
 
     def pipe(df):
-        return streaming_route(enrich_transcripts(parse_native(df), tool_dim, role_dim)).select(
+        return apply_routes(enrich_transcripts(parse_native(df), tool_dim, role_dim), FIXTURE_ROUTES).select(
             "conv_id", "turn_idx", "route_id"
         )
 
@@ -137,9 +137,12 @@ def test_streaming_sink_fanout(spark, stream_input, tmp_path, dims):
     from opentelemetry_collector_contrib_spark.streaming.pipeline import write_stream_sinks
 
     tool_dim, role_dim = dims
-    routed = streaming_route(enrich_transcripts(parse_native(transcripts_stream(spark, stream_input + "/*.json")), tool_dim, role_dim))
+    routed = apply_routes(
+        enrich_transcripts(parse_native(transcripts_stream(spark, stream_input + "/*.json")), tool_dim, role_dim),
+        FIXTURE_ROUTES,
+    )
     base = str(tmp_path / "stream_sinks")
-    q = write_stream_sinks(routed, base, str(tmp_path / "ck_sinks"))
+    q = write_stream_sinks(routed, base, str(tmp_path / "ck_sinks"), route_table=FIXTURE_ROUTES)
     q.awaitTermination()
     counts = {}
     for name in ("errors", "tool_events", "general", "human_turns"):
@@ -176,10 +179,11 @@ def test_streaming_sink_fanout_idempotent_replay(spark, stream_input, tmp_path, 
     base = str(tmp_path / "replay_sinks")
 
     def run(ck):
-        routed = streaming_route(
-            enrich_transcripts(parse_native(transcripts_stream(spark, stream_input + "/*.json")), tool_dim, role_dim)
+        routed = apply_routes(
+            enrich_transcripts(parse_native(transcripts_stream(spark, stream_input + "/*.json")), tool_dim, role_dim),
+            FIXTURE_ROUTES,
         )
-        q = write_stream_sinks(routed, base, str(tmp_path / ck))
+        q = write_stream_sinks(routed, base, str(tmp_path / ck), route_table=FIXTURE_ROUTES)
         q.awaitTermination()
 
     run("ck_a")
@@ -493,25 +497,42 @@ def test_filelog_header_metadata(spark):
     assert got[("B", 1)]["header_attrs"] == {}
 
 
-def test_streaming_sink_fanout_with_dlq(spark, stream_input, tmp_path, dims):
-    """Micro-batch quarantine: content-failure rows land in the DLQ sink
-    with reasons; route sinks receive only accepted rows; totals conserve."""
-    from opentelemetry_collector_contrib_spark.operators.enrich import enrich_transcripts
-    from opentelemetry_collector_contrib_spark.operators.parse import parse_native
-    from opentelemetry_collector_contrib_spark.streaming.pipeline import (
-        write_stream_sinks_with_dlq,
+def test_streaming_sink_fanout_with_dlq(spark, stream_input, tmp_path):
+    """Micro-batch quarantine through the spec's dlq section: content-failure
+    rows land in the DLQ sink with reasons; route sinks, the human_turns
+    copy included, receive only accepted rows; totals conserve. The six
+    stream_input lines are free text ('unparsed'); three parsed lines are
+    added, one of them a tool call without a status."""
+    from opentelemetry_collector_contrib_spark.plans.config import (
+        build_pipeline,
+        route_table_from_spec,
     )
+    from opentelemetry_collector_contrib_spark.plans.dlq import FIXTURE_DLQ_RULES
+    from opentelemetry_collector_contrib_spark.plans.pipeline import fixture_spec
+    from opentelemetry_collector_contrib_spark.streaming.pipeline import write_stream_sinks
 
-    tool_dim, role_dim = dims
-    routed = streaming_route(
-        enrich_transcripts(
-            parse_native(transcripts_stream(spark, stream_input + "/*.json")),
-            tool_dim,
-            role_dim,
-        )
-    )
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    extra = spark.createDataFrame(
+        [
+            ("c3", 0, "user", "LOG lvl=info tool=none latency_ms=5 status=ok", "none"),
+            ("c3", 1, "assistant", "LOG lvl=info tool=search latency_ms=20 status=ok", "search"),
+            ("c3", 2, "assistant", '{"event":"retry","tokens":12,"model":"g"}', "search"),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    src = str(tmp_path / "stream_pq")
+    spark.read.schema(schema).json(stream_input).unionByName(extra).write.parquet(src)
+    spec = {
+        **fixture_spec("sf0.001"),
+        "source": {"path": src},
+        "dlq": {"rules": FIXTURE_DLQ_RULES},
+    }
+    routed = build_pipeline(spark, spec, streaming=True)
+    assert routed.isStreaming
     base = str(tmp_path / "stream_sinks_dlq")
-    q = write_stream_sinks_with_dlq(routed, base, str(tmp_path / "ck_sinks_dlq"))
+    q = write_stream_sinks(
+        routed, base, str(tmp_path / "ck_sinks_dlq"), route_table=route_table_from_spec(spec)
+    )
     q.awaitTermination()
 
     def cnt(name):
@@ -522,10 +543,15 @@ def test_streaming_sink_fanout_with_dlq(spark, stream_input, tmp_path, dims):
 
     move_total = cnt("errors") + cnt("tool_events") + cnt("general")
     dlq = cnt("quarantine")
-    assert move_total + dlq == 6  # move sinks + DLQ partition the input
-    if dlq:
-        bad = spark.read.parquet(f"{base}/quarantine")
-        assert bad.filter(F.col("error_reason").isNull()).count() == 0
+    assert move_total + dlq == 9  # move sinks + DLQ partition the input
+    bad = spark.read.parquet(f"{base}/quarantine")
+    reasons = {r.error_reason: r["count"] for r in bad.groupBy("error_reason").count().collect()}
+    assert reasons == {"unparsed": 6, "missing_tool_status": 1}
+    assert (cnt("tool_events"), cnt("general"), cnt("human_turns")) == (1, 1, 1)
+    for name in ("errors", "tool_events", "general", "human_turns"):
+        if cnt(name):
+            sink = spark.read.parquet(f"{base}/{name}")
+            assert sink.filter(F.col("error_reason").isNotNull()).count() == 0
 
 
 def test_streaming_curation_gate_equals_batch(spark, tmp_path):
