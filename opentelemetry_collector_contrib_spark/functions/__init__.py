@@ -1,1 +1,1 @@
-from .ottl import OTTL_FUNCTIONS, ottl_fn  # noqa: F401
+from .ottl import OTTL_FUNCTIONS  # noqa: F401

@@ -26,14 +26,6 @@ ColumnFn = Callable[..., Column]
 OTTL_FUNCTIONS: dict[str, ColumnFn] = {}
 
 
-def ottl_fn(name: str) -> Callable[[ColumnFn], ColumnFn]:
-    def reg(fn: ColumnFn) -> ColumnFn:
-        OTTL_FUNCTIONS[name] = fn
-        return fn
-
-    return reg
-
-
 def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x) if isinstance(x, str) else F.lit(x)
 

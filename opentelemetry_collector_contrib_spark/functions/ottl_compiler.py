@@ -527,12 +527,9 @@ EDITOR_BUILDERS: dict[str, Callable[..., Column]] = {
 }
 
 
-# Context inference (pkg/ottl/context_inferrer.go:18-29,
-# defaultContextInferPriority): the reference ranks candidate contexts and
-# binds the statement set to the highest-priority context referenced by any
-# path prefix; non-prioritized (unknown) contexts get the lowest possible
-# priority and win only when nothing ranked appears. In a relational model
-# every context is a column namespace of the SAME row, so after inference
+# The OTTL context names, in the reference's inference priority order
+# (pkg/ottl/context_inferrer.go:18-29, defaultContextInferPriority). In a
+# relational model every context is a column namespace of the SAME row, so
 # a `ctx.`-prefixed path resolves through the same path_map as its bare
 # form (see _resolve_path).
 CONTEXT_INFER_PRIORITY = [
@@ -547,27 +544,6 @@ CONTEXT_INFER_PRIORITY = [
     "instrumentation_scope",
     "resource",
 ]
-
-_STRING_LIT_RE = re.compile(r'"(?:[^"\\]|\\.)*"')
-_CTX_PREFIX_RE = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\.[A-Za-z_]")
-
-
-def infer_context(statements: list[str], priority: list[str] | None = None) -> str | None:
-    """priorityContextInferrer.infer: scan the statements' path prefixes and
-    return the highest-priority context referenced (context_inferrer.go:
-    inferFromStatements). Returns None when no path carries a context prefix
-    (the caller keeps its configured default). Unknown prefixes rank below
-    every prioritized context (newPriorityContextInferrer doc contract)."""
-    prio = priority or CONTEXT_INFER_PRIORITY
-    rank = {c: i for i, c in enumerate(prio)}
-    seen: set[str] = set()
-    for src in statements:
-        for m in _CTX_PREFIX_RE.finditer(_STRING_LIT_RE.sub('""', src)):
-            seen.add(m.group(1))
-    if not seen:
-        return None
-    return min(seen, key=lambda c: (rank.get(c, len(prio)), c))
-
 
 DEFAULT_PATH_MAP = {"body": "text"}
 
@@ -635,3 +611,4 @@ def apply_statements(df: DataFrame, statements: list[str], path_map: dict[str, s
                 edited = F.when(st.condition, edited).otherwise(F.col(st.target))
             out = out.withColumn(st.target, edited)
     return out
+

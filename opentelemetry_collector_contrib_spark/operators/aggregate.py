@@ -1242,7 +1242,7 @@ def merge_agg_state(
     Only decomposable aggregates belong here (count/sum/min/max — and avg
     as a derived sum/count pair); a non-decomposable aggregate (exact
     median, distinct count) must use its own mergeable form (exact:
-    re-aggregate; approximate: the HLL sketch rollups in sketches.py).
+    re-aggregate; approximate: Spark's hll_sketch_agg / hll_union_agg).
 
     Plan: ONE full-outer broadcast-or-shuffle join on the dims — both
     sides are aggregate-sized (one row per live dim combination), so the

@@ -3,7 +3,8 @@
 Reference: operator/parser/container/parser.go:27-68 — auto-detects the
 runtime format per line (regexes at parser.go:31-33), extracts
 (time, stream, log), and internally recombines partial lines (containerd
-marks them P until a final F line).
+marks them P until a final F line); here the P/F marker is surfaced as
+`partial_flag` for the caller.
 
 Formats:
   docker json : {"log":"msg\\n","stream":"stdout","time":"2024-..Z"}
@@ -11,14 +12,12 @@ Formats:
   cri-o       : same shape as containerd
 
 Spark mapping: a when-chain over rlike detectors + from_json/regexp
-extraction in ONE projection (the bank pattern again); partial-line
-recombine is the segment-sum window over (source, line order) with
-is_last = flag 'F'.
+extraction in ONE projection (the bank pattern again).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CRI_RE = r"^(\S+Z?) (stdout|stderr) ([PF]) (.*)$"
@@ -56,37 +55,3 @@ def container_parser(df: DataFrame, source: str = "line") -> DataFrame:
         .alias("log"),
     )
 
-
-def recombine_partials(
-    df: DataFrame,
-    source_col: str,
-    order_col: str,
-    log_col: str = "log",
-    flag_col: str = "partial_flag",
-) -> DataFrame:
-    """Assemble P...P F runs into one record per logical line
-    (parser.go's internal recombine). A segment STARTS where the previous
-    row (per source, in order) was final — the segment-sum trick with
-    is_first = lag(flag)='F' (or first row). Returns (source, run_id,
-    log [assembled], n_parts, first_order, last_order, complete)."""
-    w = Window.partitionBy(source_col).orderBy(F.col(order_col))
-    prev_flag = F.lag(F.col(flag_col)).over(w)
-    is_first = prev_flag.isNull() | (prev_flag == "F")
-    runs = df.withColumn("_first", is_first.cast("int")).withColumn(
-        "run_id", F.sum("_first").over(w)
-    )
-    return runs.groupBy(source_col, "run_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(log_col).alias("v")))
-                ),
-                lambda x: x["v"],
-            ),
-            "",
-        ).alias(log_col),
-        F.count(F.lit(1)).alias("n_parts"),
-        F.min(order_col).alias("first_order"),
-        F.max(order_col).alias("last_order"),
-        (F.max(F.when(F.col(flag_col) == "F", 1).otherwise(0)) == 1).alias("complete"),
-    )

@@ -1596,29 +1596,6 @@ def k_anonymity_audit(
     return out.withColumn("at_risk", F.col("class_size") < k)
 
 
-def k_anonymity_summary(
-    df: DataFrame, quasi_cols: list, k: int = 5
-) -> DataFrame:
-    """Corpus-level k-anonymity verdict: (n_classes, k_min, rows_at_risk,
-    pct_at_risk) — the single-row gate a release pipeline asserts on
-    (pct_at_risk == 0 ships; anything else goes back to generalization).
-    Two chained aggregations over the class table; ratios rounded to 6
-    (the engine-portability convention)."""
-    classes = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias("n"))
-    return classes.agg(
-        F.count(F.lit(1)).alias("n_classes"),
-        F.min("n").alias("k_min"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") < k, F.col("n"))), F.lit(0)
-        ).alias("rows_at_risk"),
-        F.round(
-            F.coalesce(F.sum(F.when(F.col("n") < k, F.col("n"))), F.lit(0))
-            / F.sum("n"),
-            6,
-        ).alias("pct_at_risk"),
-    )
-
-
 def temperature_mixture_rates(
     df: DataFrame,
     alpha: float = 0.7,
@@ -2204,3 +2181,4 @@ def quantile_normalize(
         F.col("_bkt").alias("q_bucket"),
         F.round(F.col("_norm").cast("double"), 6).alias("norm_value"),
     )
+

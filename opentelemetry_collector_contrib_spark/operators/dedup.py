@@ -681,16 +681,6 @@ def dup_cluster_sizes(
     )
 
 
-def drop_near_dups(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Keep one representative per near-dup cluster (min id); rows not in
-    any pair pass through untouched (left anti join against non-reps)."""
-    clusters = dup_clusters(pairs)
-    losers = clusters.filter(F.col("doc") != F.col("cluster_rep")).select(
-        F.col("doc").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
-
-
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
@@ -1008,3 +998,4 @@ def keep_best_per_cluster(
         .withColumn("keep", F.row_number().over(w) == 1)
         .select(id_col, "cluster_rep", "keep")
     )
+

@@ -294,24 +294,6 @@ def cidr_blocks(blocks: DataFrame, network_col: str = "network", bucket_bits: in
     )
 
 
-def assert_disjoint_blocks(blocks_prepared: DataFrame) -> None:
-    """Validate the disjointness assumption the equi-join correctness rests
-    on: sorted by _start, no block may begin before the previous one ends.
-    One window pass over the (small) dim; call at load time."""
-    from pyspark.sql import Window
-
-    b = blocks_prepared.select("_start", "_end").distinct()
-    w = Window.orderBy("_start")
-    bad = (
-        b.withColumn("_prev_end", F.lag("_end").over(w))
-        .filter(F.col("_prev_end").isNotNull() & (F.col("_start") <= F.col("_prev_end")))
-        .limit(1)
-        .count()
-    )
-    if bad:
-        raise ValueError("CIDR blocks overlap: bucketed equi-join requires disjoint networks")
-
-
 def geoip_lookup(
     df: DataFrame,
     ip_col: str,
@@ -500,3 +482,4 @@ def bloom_join(
         if name not in big.columns:
             out = out.withColumnRenamed(f"__dim_{name}", name)
     return out
+

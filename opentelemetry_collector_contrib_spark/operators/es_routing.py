@@ -23,11 +23,6 @@ Every document resolves an index name by the reference's precedence:
      override it from attributes, invalid types erroring → NULL index
      here (on_error=drop convention).
 
-``logstash_index`` appends ``{prefix_separator}{strftime(date_format)}``
-(util.go:14-29). Deviation, by design: the reference stamps wall-clock
-``time.Now()``; ours takes an event-time column so routing is
-deterministic and reproducible at 10^12 rows.
-
 Truncation counts characters, not bytes — identical on ASCII index
 material; multi-byte dataset names may keep more runes than Go's byte
 slice (documented trade for staying native).
@@ -129,11 +124,3 @@ def route_documents(
         resolved = F.when(ds_type.isin(_ALLOWED_TYPES), resolved)  # else NULL = error/drop
     return df.withColumn(out_col, resolved)
 
-
-def logstash_index(
-    index: Column, ts: Column, prefix_separator: str = "-", date_format: str = "yyyy.MM.dd"
-) -> Column:
-    """generateIndexWithLogstashFormat (util.go:14-29) with event-time
-    instead of wall-clock; date_format is a Spark datetime pattern (the
-    reference takes strftime — "%Y.%m.%d" ≡ "yyyy.MM.dd")."""
-    return F.concat(index, F.lit(prefix_separator), F.date_format(ts, date_format))

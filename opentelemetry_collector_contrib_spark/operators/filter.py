@@ -1,33 +1,17 @@
-"""Filters + sampling: filterprocessor, stanza filter, probabilisticsampler.
+"""Filters + sampling: filterprocessor match properties, head samplers,
+and the remote tap.
 
-filterprocessor drops records where ANY condition matches (OR-ed,
-processor/filterprocessor/logs.go:98-171); stanza filter adds drop_ratio
-sampling (operator/transformer/filter/transformer.go); probabilisticsampler
-keeps records whose key-hash falls under a threshold
-(processor/probabilisticsamplerprocessor/logsprocessor.go:22-70).
+`filter_match` is filterprocessor's include/exclude MatchProperties gate
+(internal/filter/filterconfig); probabilisticsampler keeps records whose
+key-hash falls under a threshold
+(processor/probabilisticsamplerprocessor/logsprocessor.go:22-70). The
+spec's OTTL `filter:` conditions compile in plans/config.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def filter_processor(df: DataFrame, drop_conditions: list[Column | str]) -> DataFrame:
-    """Drop rows where ANY condition is true (OR semantics, logs.go:130)."""
-    conds = [F.expr(c) if isinstance(c, str) else c for c in drop_conditions]
-    combined = conds[0]
-    for c in conds[1:]:
-        combined = combined | c
-    return df.filter(~F.coalesce(combined, F.lit(False)))
-
-
-def stanza_filter(df: DataFrame, drop_condition: Column | str, drop_ratio: float = 1.0, seed: int = 42) -> DataFrame:
-    """Drop matching rows with probability drop_ratio."""
-    cond = F.expr(drop_condition) if isinstance(drop_condition, str) else drop_condition
-    if drop_ratio >= 1.0:
-        return df.filter(~F.coalesce(cond, F.lit(False)))
-    return df.filter(~(F.coalesce(cond, F.lit(False)) & (F.rand(seed) < drop_ratio)))
 
 
 def probabilistic_sampler(df: DataFrame, key_col: str, percent: float) -> DataFrame:
@@ -173,3 +157,4 @@ def remote_tap(
         .where(F.col("_tap_rn") <= limit_per_s)
         .drop("_tap_rn")
     )
+

@@ -385,6 +385,7 @@ def grok_parser(
     return df.select("*", *cols)
 
 
+# Oracle of the both-paths tests in tests/test_grok.py (test_vectorized_matches_native ...).
 def grok_parser_vectorized(
     df: DataFrame,
     source: str,

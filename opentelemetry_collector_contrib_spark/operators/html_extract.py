@@ -134,6 +134,7 @@ def extract_html_text(
     return out
 
 
+# Oracle of tests/test_html_extract.py::test_native_vectorized_parity.
 def extract_html_text_vectorized(
     df: DataFrame,
     source: str = "html",

@@ -152,6 +152,7 @@ def _tree_sql(node: _Node | _Leaf, feats: list[str]) -> str:
     )
 
 
+# Oracle of tests/test_iforest.py::test_compiled_column_matches_python_traversal.
 def path_length_py(node: _Node | _Leaf, row: list[float]) -> float:
     """Pure-Python traversal (the reference's traverseNode) — the test
     oracle for the compiled expressions."""

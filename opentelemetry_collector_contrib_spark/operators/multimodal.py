@@ -140,20 +140,6 @@ def decode_and_featurize(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def resize_images(df: DataFrame, width: int, height: int, content_col: str = "content") -> DataFrame:
-    """Resize stage — codec stubbed: passes content through and rewrites the
-    meta dims (the real implementation decodes, resamples, re-encodes inside
-    the same mapInPandas shape as decode_and_featurize)."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )
-
-
 def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video rows: one output row per sampled timestamp
     (pure relational: sequence + explode on metadata — the decode of the
@@ -727,3 +713,4 @@ def segment_wav_windows(
             )
 
     return df.select(id_col, payload_col).mapInPandas(run, out_schema)
+

@@ -172,7 +172,11 @@ def _parse_batch(texts: pd.Series) -> pd.DataFrame:
 
 
 def parse_vectorized(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """mapInPandas pattern-bank parse; schema identical to parse_native."""
+    """mapInPandas pattern-bank parse; schema identical to parse_native.
+
+    A second engine kept on the surface: the spec's `parse.bank:
+    vectorized` (`job.py --vectorized`), registry query
+    `vectorized_parse_parity` and bench q5 run it."""
     in_fields = df.schema.fields
     out_schema = T.StructType(
         list(in_fields)
@@ -2227,39 +2231,3 @@ def parse_mezmo(df: DataFrame, source: str = "body") -> DataFrame:
         F.when(csv != "", csv).alias("mz_meta_csv"),
     )
 
-
-def canonical_json(df: DataFrame, source: str, out: str = "canonical_json") -> DataFrame:
-    """Semantic canonicalization of a JSON string column: parse, sort
-    object keys recursively, re-serialize with compact separators — so
-    {"b":2,"a":1} and {"a": 1, "b": 2} produce the SAME string, giving
-    dedup/grouping a key that sees payload MEANING instead of writer
-    whitespace/key-order accidents (producers emit map-ordered keys;
-    hash-dedup on the raw string misses every such duplicate).
-
-    Malformed JSON → NULL (on_error=send convention); duplicate keys
-    keep the last value (RFC 8259 'names SHOULD be unique' — last-wins
-    matches every mainstream parser). Arrow-batched pandas UDF (schema-
-    less tree walk has no Catalyst equivalent — same honest-UDF case as
-    the json_path_profile walker); pair with textstats.h60 downstream
-    for a fixed-width dedup key."""
-    import json as _json
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def canon(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        def one(s):
-            if s is None:
-                return None
-            try:
-                return _json.dumps(
-                    _json.loads(s), sort_keys=True, separators=(",", ":"),
-                    ensure_ascii=False,
-                )
-            except (ValueError, TypeError):
-                return None
-
-        for batch in it:
-            yield batch.map(one)
-
-    return df.withColumn(out, canon(F.col(source)))

@@ -15,9 +15,7 @@ BuildCompliantName / NormalizeLabel):
   - unit "1" gauges end in "_ratio";
   - an optional namespace prefixes; a leading digit gets "_";
   - labels sanitize every non-alphanumeric rune to "_", and a leading
-    digit/single-underscore prefixes "key"/"key_";
-  - TrimPromSuffixes is the receiver-direction inverse (type suffix for
-    sums, then the unit-word suffix if it matches exactly).
+    digit/single-underscore prefixes "key"/"key_".
 
 Unicode classes mirror Go's unicode.IsLetter/IsDigit via \\p{L}/\\p{Nd}
 (both Spark's Java regex and DuckDB's RE2 support them), so "°F" cleans
@@ -255,25 +253,6 @@ def histogram_to_prw_series(
     )
 
 
-# wordToUCUM / perWordToUCUM, unit_to_ucum.go:8-53 (reproduced semantics)
-WORD_TO_UCUM = {v: k for k, v in UNIT_MAP.items() if v} | {"ratio": "1"}
-PER_WORD_TO_UCUM = {v: k for k, v in PER_UNIT_MAP.items()}
-
-
-def prom_unit_word_to_ucum(unit: Column) -> Column:
-    """UnitWordToUCUM (unit_to_ucum.go:55-69): english unit words back to
-    UCUM — the receiver-direction inverse of the exporter's unit mapping.
-    Splits on the FIRST '_per_', maps each side through the word tables
-    (unknown words pass through), joins with '/'."""
-    main = F.substring_index(unit, "_per_", 1)
-    pos = F.instr(unit, "_per_")
-    rest = F.when(pos > 0, F.substr(unit, pos + F.lit(5))).otherwise(F.lit(""))
-    out = _map_get(main, WORD_TO_UCUM)
-    return F.when(
-        rest != "", F.concat(out, F.lit("/"), _map_get(rest, PER_WORD_TO_UCUM))
-    ).otherwise(out)
-
-
 def summary_to_prw_series(
     df: DataFrame,
     name_col: str = "metric_name",
@@ -333,152 +312,3 @@ def summary_to_prw_series(
             F.col("_e.value").alias("value"),
         )
     )
-
-
-def prom_trim_suffixes(name: Column, metric_type: Column, unit: Column) -> Column:
-    """TrimPromSuffixes (normalize_name.go:95-142): the receiver-direction
-    inverse — drop a trailing 'total' for sums, then the unit words if
-    they suffix-match token-for-token."""
-    toks = F.split(name, "_")  # strings.Split keeps empties
-    n = F.size(toks)
-    t1 = F.when(
-        (metric_type == "sum") & (F.element_at(toks, -1) == "total"),
-        F.slice(toks, 1, n - 1),
-    ).otherwise(toks)
-    ut = F.split(unit, "_")
-    lu = F.size(ut)
-    n1 = F.size(t1)
-    suffixed = (n1 > lu) & (F.slice(t1, n1 - lu + 1, lu) == ut)
-    t2 = F.when(suffixed, F.slice(t1, 1, n1 - lu)).otherwise(t1)
-    return F.when(n == 1, name).otherwise(F.concat_ws("_", t2))
-
-
-# --- exponential histogram → Prometheus native histogram ---------------------
-# prometheusremotewrite/histograms.go:49-187. The sparse-layout conversion is
-# inherently sequential (span/delta construction with a carried bucket
-# cursor), so it runs as the repo's honest-UDF shape: an Arrow-batched
-# mapInPandas kernel mirroring convertBucketsLayout statement-for-statement
-# (including the count==0 leading-merge quirk and the gap>2 span split).
-
-_DEFAULT_ZERO_THRESHOLD = 1e-128
-
-
-def _buckets_layout(offset: int, counts: list[int], scale_down: int):
-    """convertBucketsLayout:117-187 → (spans [(offset, length)], deltas)."""
-    if not counts:
-        return [], []
-    spans: list[list[int]] = []
-    deltas: list[int] = []
-    prev = 0
-    count = 0
-
-    def append_delta(c: int):
-        nonlocal prev
-        spans[-1][1] += 1
-        deltas.append(c - prev)
-        prev = c
-
-    n = len(counts)
-    bucket_idx = (offset >> scale_down) + 1
-    spans.append([bucket_idx, 0])
-    for i in range(n):
-        next_idx = ((i + offset) >> scale_down) + 1
-        if bucket_idx == next_idx:  # not enough buckets collected to merge yet
-            count += counts[i]
-            continue
-        if count == 0:  # reference quirk: leading zero merges without a cursor move
-            count = counts[i]
-            continue
-        gap = next_idx - bucket_idx - 1
-        if gap > 2:
-            spans.append([gap, 0])
-        else:
-            for _ in range(gap):
-                append_delta(0)
-        append_delta(count)
-        count = counts[i]
-        bucket_idx = next_idx
-    gap = ((n + offset - 1) >> scale_down) + 1 - bucket_idx
-    if gap > 2:
-        spans.append([gap, 0])
-    else:
-        for _ in range(gap):
-            append_delta(0)
-    append_delta(count)
-    return [tuple(s) for s in spans], deltas
-
-
-def exponential_to_native_histogram(df: DataFrame) -> DataFrame:
-    """Exponential-histogram datapoints (the ``eh_*`` decode columns) →
-    Prometheus native-histogram fields (exponentialToNativeHistogram:49-105):
-    schema = scale clamped to <= 8 with 2^scaleDown bucket merging (scale
-    < -4 is the reference's error path — the row drops), zero count/
-    threshold (default 1e-128), positive/negative span+delta layouts as
-    CSVs, timestamp in ms. Scale: shuffle-free Arrow-batched map."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    clash = {c for c in df.columns if c.startswith("nh_")}
-    if clash:
-        raise ValueError(
-            f"exponential_to_native_histogram output columns collide with input: {sorted(clash)}"
-        )
-    passthrough = [f for f in df.schema.fields]
-    names = [f.name for f in passthrough]
-    extra = [
-        T.StructField("nh_schema", T.IntegerType()),
-        T.StructField("nh_zero_count", T.LongType()),
-        T.StructField("nh_zero_threshold", T.DoubleType()),
-        T.StructField("nh_count", T.LongType()),
-        T.StructField("nh_sum", T.DoubleType()),
-        T.StructField("nh_ts_ms", T.LongType()),
-        T.StructField("nh_pos_spans_csv", T.StringType()),
-        T.StructField("nh_pos_deltas_csv", T.StringType()),
-        T.StructField("nh_neg_spans_csv", T.StringType()),
-        T.StructField("nh_neg_deltas_csv", T.StringType()),
-    ]
-    out_schema = T.StructType([*passthrough, *extra])
-
-    def render(offset, counts_csv, scale_down):
-        counts = [int(x) for x in counts_csv.split(",")] if counts_csv else []
-        spans, deltas = _buckets_layout(int(offset or 0), counts, scale_down)
-        return (
-            ",".join(f"{o}:{ln}" for o, ln in spans),
-            ",".join(str(d) for d in deltas),
-        )
-
-    def val(rec, key):  # pandas renders nullable ints/floats as NaN
-        v = rec.get(key)
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        return v
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                scale = val(rec, "eh_scale")
-                if scale is None or scale < -4:  # reference error path: drop
-                    continue
-                scale_down = int(scale) - 8 if scale > 8 else 0
-                ps, pd_ = render(val(rec, "eh_pos_offset"), val(rec, "eh_pos_counts_csv"), scale_down)
-                ns, nd = render(val(rec, "eh_neg_offset"), val(rec, "eh_neg_counts_csv"), scale_down)
-                ts = val(rec, "eh_ts_us")
-                rows.append(
-                    {
-                        **{k: rec[k] for k in names},
-                        "nh_schema": min(int(scale), 8),
-                        "nh_zero_count": int(val(rec, "eh_zero_count") or 0),
-                        "nh_zero_threshold": _DEFAULT_ZERO_THRESHOLD,
-                        "nh_count": int(val(rec, "eh_count") or 0),
-                        "nh_sum": val(rec, "eh_sum"),
-                        "nh_ts_ms": (int(ts) // 1000) if ts is not None else None,
-                        "nh_pos_spans_csv": ps,
-                        "nh_pos_deltas_csv": pd_,
-                        "nh_neg_spans_csv": ns,
-                        "nh_neg_deltas_csv": nd,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[*names, *[f.name for f in extra]])
-
-    return df.mapInPandas(gen, out_schema)

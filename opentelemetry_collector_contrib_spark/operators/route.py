@@ -84,34 +84,6 @@ def sink_frames(routed: DataFrame, table: RouteTable | None) -> dict[str, DataFr
     return sinks
 
 
-def round_robin_routes(df: DataFrame, n_pipelines: int) -> DataFrame:
-    """roundrobinconnector (connector/roundrobinconnector/connector.go:
-    67-78): every incoming BATCH goes wholly to one downstream pipeline,
-    rotating `counter.Add(1) % n`. The batch unit in Spark is the
-    partition, so the analogue stamps ``pipeline_id =
-    spark_partition_id() % n`` — whole partitions rotate across
-    pipelines, load spreads evenly, and no shuffle is introduced (a pure
-    projection; the plan gains zero Exchange). Like the reference, the
-    assignment is arrival-order (partition-layout) dependent, not
-    content-keyed — use routingconnector/loadbalancing for sticky
-    routing."""
-    if n_pipelines < 1:
-        raise ValueError("n_pipelines must be >= 1")
-    return df.withColumn(
-        "pipeline_id", (F.spark_partition_id() % n_pipelines).cast("int")
-    )
-
-
-def round_robin_frames(df: DataFrame, n_pipelines: int) -> list[DataFrame]:
-    """The per-pipeline frames (one filter each off the stamped column —
-    route-fan-out plan shape, the write path persists or uses
-    partitionBy('pipeline_id') for a single-job fan-out)."""
-    stamped = round_robin_routes(df, n_pipelines)
-    return [
-        stamped.filter(F.col("pipeline_id") == i) for i in range(n_pipelines)
-    ]
-
-
 def write_sinks_partitioned(routed: DataFrame, base_path: str) -> str:
     """Single-job sink write: all move-route sinks in one write partitioned by
     route_id (Hive layout `route_id=<sink>/`). At 100 TB this is the path:
@@ -225,3 +197,4 @@ def ring_route(
     ring_pos = F.coalesce(nxt, F.lit(ring[0][0]))
     idx = F.array_position(positions, ring_pos)
     return df.withColumn(out, F.element_at(F.lit(endpoints), idx.cast("int")))
+

@@ -71,6 +71,7 @@ _RV_RE = r"^[0-9a-f]{14}$"
 # Driver-side exact mirrors (config-time constants, test oracles)
 # ---------------------------------------------------------------------------
 
+# Python reference of tests/test_sampling.py::test_column_kernels_match_python.
 def tvalue_to_threshold(s: str) -> int:
     """`threshold.go:63-86`: hex parse + re-extend trimmed trailing zeros."""
     if not s or len(s) > NUM_HEX_DIGITS:
@@ -131,6 +132,7 @@ def probability_to_threshold(fraction: float, precision: int = NUM_HEX_DIGITS) -
     return threshold
 
 
+# Python reference of tests/test_sampling.py::test_rvalue_roundtrip.
 def randomness_to_rvalue(unsigned: int) -> str:
     """`randomness.go:74-103`: full-width 14-hex encoding ('' out of range)."""
     if not (0 <= unsigned < MAX_ADJUSTED_COUNT):
@@ -146,6 +148,7 @@ def fnv1a32(data: bytes, seed: int = 0) -> int:
     return h
 
 
+# Python reference of tests/test_sampling.py::test_fnv_randomness_col_matches_python.
 def randomness_from_bytes(data: bytes, seed: int = 0) -> int:
     """`sampler_mode.go:312-348`: legacy 14-bit hash stretched to an OTEP-235
     56-bit randomness: [R' = 0x3FFF - hashed | 28 mixed bits | hashed]."""

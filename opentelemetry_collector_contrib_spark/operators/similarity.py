@@ -264,6 +264,7 @@ def quantize_embeddings(
     )
 
 
+# Oracle of tests/test_datapipe.py::test_quantize_dequantize_roundtrip.
 def dequantize(q_vec: Column, q_scale: Column) -> Column:
     """Reconstruct approximate float vector: x̂_i = q_i * scale (max abs
     reconstruction error = scale/2)."""

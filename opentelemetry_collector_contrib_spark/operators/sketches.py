@@ -1,68 +1,17 @@
-"""Mergeable distinct-count sketches: pre-aggregate once, re-roll forever.
+"""Exact heavy hitters from a bounded-memory sketch.
 
-The reference's cardinality controls recount from raw data every time
-(cardinality limits per metric stream; our `cardinality_guard` mirrors
-that). At 10^12 rows the winning pattern is different: materialize
-per-(fine window, dim) HyperLogLog sketches ONCE — kilobytes per group,
-lossless to merge — then answer every coarser rollup (per-day, per-type,
-global) by unioning sketches instead of rescanning raw data. Spark ships
-the Apache DataSketches HLL family natively (`hll_sketch_agg` /
-`hll_union_agg` / `hll_sketch_estimate`), so the whole path is JVM-side
-columnar aggregation — no UDFs.
-
-Guarantees (pytest-gated in tests/test_sketches.py, since a DuckDB
-oracle cannot reproduce DataSketches estimates):
-* merge is exact: estimate(union of hourly sketches over a day) equals
-  estimate(one sketch built directly over the day's rows) — same lg_k,
-  identical binary state;
-* accuracy: relative error vs exact distinct stays within the published
-  HLL bound for the chosen lg_k (~1.04/sqrt(2^lg_k), ~3σ margin in the
-  test).
-
-Scale notes: the fine aggregation is one hash agg with map-side partial
-sketch merging (each task folds its rows into a local sketch; the
-shuffle carries sketch bytes, not values). Rollups aggregate the tiny
-sketch table. This is the cube-materialization shape: store the fine
-tier, derive every coarser tier without touching raw data again.
+`heavy_hitter_candidates` folds each partition into a weighted Misra-Gries
+summary of at most k counters; the union of the per-partition survivors is
+a superset of every item above n/k. `heavy_hitters` recounts only those
+candidates in one hash aggregate, so its answer is exact and the
+full-cardinality groupBy shuffle never happens. The DuckDB oracle checks the
+exact answer (tests/test_heavy_hitters.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def distinct_sketch_rollup(
-    df: DataFrame,
-    keys: list[str | Column],
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Materialize per-group HLL sketches of ``value_col`` (binary,
-    mergeable) plus the raw row count. ``keys`` may mix column names and
-    expressions (e.g. ``F.date_trunc('hour', 'ts').alias('hour')``)."""
-    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-    return df.groupBy(*cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("hll"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def merge_sketch_rollup(sketches: DataFrame, keys: list[str]) -> DataFrame:
-    """Roll a sketch table up to coarser keys by lossless sketch union —
-    never touches raw data."""
-    return sketches.groupBy(*[F.col(k) for k in keys]).agg(
-        F.hll_union_agg("hll").alias("hll"),
-        F.sum("n_rows").alias("n_rows"),
-    )
-
-
-def sketch_estimates(sketches: DataFrame) -> DataFrame:
-    """Attach the distinct-count estimate column (bigint) to a sketch
-    table; keeps the sketch so further rollups remain possible."""
-    return sketches.withColumn(
-        "distinct_estimate", F.hll_sketch_estimate("hll").cast("bigint")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -135,7 +84,7 @@ def heavy_hitters(
     guarantee, +1 for strict-inequality safety). Memory per task is O(k);
     the candidate broadcast is k x partitions rows — with the intended
     thresholds (>= ~1e-5) that is megabytes. For rarer items use the
-    HLL/groupBy path instead: below n/k the sketch cannot help.
+    plain groupBy instead: below n/k the sketch cannot help.
 
     Columns: item (named after item_col), cnt, freq (round 9).
     """
@@ -167,252 +116,4 @@ def heavy_hitters(
             "cnt",
             F.round(F.col("cnt").cast("double") / F.col("total"), 9).alias("freq"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Mergeable quantile sketches (DDSketch-shaped log-bucket histograms)
-# ---------------------------------------------------------------------------
-#
-# Exact percentiles need a sort (tool_slo_report does that, correctly, on a
-# per-tool slice); percentile_approx gives one-shot estimates but exposes no
-# mergeable state. For the cube-materialization pattern — store fine-grained
-# sketches once, answer every coarser rollup without raw data — the right
-# structure is the DDSketch (Masson, Rim & Lee, VLDB 2019): log-spaced
-# buckets, bucket(v) = ceil(ln(v)/ln(gamma)), which guarantees RELATIVE
-# error <= alpha for every quantile with gamma = (1+alpha)/(1-alpha), and
-# whose merge is literally bucket-count addition — EXACT, associative,
-# commutative (stronger than HLL's union, which is only lossless up to
-# register state). Everything below is built-in column functions: the
-# sketch is a map<int,bigint>, no UDFs, no binary blobs, map-side partial
-# aggregation applies.
-
-def _gamma(alpha: float) -> float:
-    return (1.0 + alpha) / (1.0 - alpha)
-
-
-def quantile_sketch_rollup(
-    df: DataFrame,
-    keys: list[str | Column],
-    value_col: str,
-    alpha: float = 0.01,
-) -> DataFrame:
-    """Materialize per-group DDSketch bucket maps of ``value_col``.
-
-    Values must be >= 0 (latencies, sizes, counts — the telemetry cases);
-    a negative value raises at execution time rather than silently
-    corrupting the sketch. Zeros sit outside the log domain and are
-    tracked exactly in ``zero_n``.
-
-    Output: keys..., buckets map<int,bigint>, zero_n, n_rows.
-    Plan: two hash aggs — (keys, bucket) counts (map-side combine does
-    the heavy lifting: at most |buckets| rows per task survive), then a
-    bucket-count -> map collect per key group. Both shuffles carry group
-    counts, never row counts.
-    """
-    import math
-
-    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-    names = [df.select(c).columns[0] for c in cols]
-    v = F.col(value_col).cast("double")
-    v = F.when(v < 0, F.raise_error(F.lit("quantile_sketch: negative value"))).otherwise(v)
-    bucket = F.when(
-        v > 0, F.ceil(F.log(v) / F.lit(math.log(_gamma(alpha)))).cast("int")
-    )  # v == 0 -> NULL bucket -> zero_n
-    per_bucket = df.select(*cols, bucket.alias("__b")).groupBy(*names, "__b").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    return per_bucket.groupBy(*names).agg(
-        F.map_from_entries(
-            F.collect_list(  # collect_list drops NULLs -> zero rows excluded
-                F.when(F.col("__b").isNotNull(), F.struct(F.col("__b"), F.col("__c")))
-            )
-        ).alias("buckets"),
-        F.sum(F.when(F.col("__b").isNull(), F.col("__c")).otherwise(F.lit(0))).alias("zero_n"),
-        F.sum("__c").alias("n_rows"),
-    )
-
-
-def merge_quantile_rollup(sketches: DataFrame, keys: list[str]) -> DataFrame:
-    """Roll a sketch table up to coarser keys: bucket counts ADD — the
-    merge is exact, so estimate(merged fine sketches) == estimate(sketch
-    built directly at the coarse grain), bit for bit.
-
-    One hash agg; the per-group map fold is map_zip_with (key-union with
-    coalesce-to-0 addition) over the collected fine sketches — fine-tier
-    group counts are bounded (hours per day, shards per table), so the
-    collected array is small by construction.
-    """
-    empty = F.create_map().cast("map<int,bigint>")
-    return sketches.groupBy(*[F.col(k) for k in keys]).agg(
-        F.aggregate(
-            F.collect_list("buckets"),
-            empty,
-            lambda acc, m: F.map_zip_with(
-                acc, m, lambda _, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
-            ),
-        ).alias("buckets"),
-        F.sum("zero_n").alias("zero_n"),
-        F.sum("n_rows").alias("n_rows"),
-    )
-
-
-def quantile_estimates(
-    sketches: DataFrame,
-    qs: list[float],
-    alpha: float = 0.01,
-) -> DataFrame:
-    """Attach quantile-estimate columns (``p50``-style names) to a sketch
-    table; keeps the sketch so further rollups remain possible.
-
-    DDSketch read path: the q-quantile is the first bucket whose
-    cumulative count exceeds q*(n-1) (zeros counted first); the bucket's
-    midpoint-in-log-space 2*gamma^i/(gamma+1) is within relative error
-    alpha of the true order statistic. The rank scan is an F.aggregate
-    fold over the array-sorted map entries — per-row array work over an
-    aggregate-sized table.
-    """
-    g = _gamma(alpha)
-    entries = F.array_sort(F.map_entries("buckets"))
-    out = sketches
-    for q in qs:
-        rank = F.lit(q) * (F.col("n_rows") - 1).cast("double")
-        scan = F.aggregate(
-            entries,
-            F.struct(
-                F.col("zero_n").cast("bigint").alias("cum"),
-                F.lit(None).cast("int").alias("idx"),
-            ),
-            lambda acc, e: F.when(acc["idx"].isNotNull(), acc).otherwise(
-                F.struct(
-                    (acc["cum"] + e["value"]).alias("cum"),
-                    F.when(acc["cum"] + e["value"] > rank, e["key"]).alias("idx"),
-                )
-            ),
-        )
-        est = F.when(F.col("zero_n") > rank, F.lit(0.0)).otherwise(
-            F.lit(2.0) * F.pow(F.lit(g), scan["idx"]) / F.lit(g + 1.0)
-        )
-        label = f"p{int(round(q * 100))}"
-        out = out.withColumn(label, F.when(F.col("n_rows") > 0, est))
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Count-Min sketch: mergeable approximate per-item counts
-# ---------------------------------------------------------------------------
-
-
-def countmin_sketch_rollup(
-    df: DataFrame,
-    keys: list[str | Column],
-    item_col: str,
-    width: int = 256,
-    depth: int = 4,
-) -> DataFrame:
-    """Materialize a per-group Count-Min sketch of ``item_col`` frequencies
-    — the mergeable counterpart of `heavy_hitters`: that operator answers
-    "which items are frequent" exactly for ONE threshold and ONE pass;
-    a CM sketch stored per (fine window, dim) answers "how often did
-    item X occur" for ANY later item and ANY coarser rollup without
-    rescanning raw data, with the classic one-sided guarantee
-    (estimate >= true; overshoot <= e/width × group size w.p. 1-e^-depth).
-    Completes the mergeable-rollup family: HLL (distinct), DDSketch
-    (quantiles), CM (per-item counts) — all map-addition merges.
-
-    Output: keys..., cm map<int,bigint> (cell = d·width + xxhash64(d,item)
-    mod width; only touched cells are stored), n_rows. NULL items count
-    into ``n_rows`` but hash no cells (NULL is absence, not a value).
-
-    Plan: a depth-element array explode (fixed small melt inside the scan
-    stage) → ONE (keys, cell) hash agg with map-side combine (≤
-    width·depth cells per group survive per task) → per-group map
-    collect. Shuffles carry cell counts, never rows."""
-    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-    names = [df.select(c).columns[0] for c in cols]
-    item = F.col(item_col).cast("string")
-    cells = F.array(
-        *[
-            (
-                F.lit(d * width)
-                + F.pmod(F.xxhash64(F.lit(d), item), F.lit(width))
-            ).cast("int")
-            for d in range(depth)
-        ]
-    )
-    melted = df.select(
-        *cols, F.explode(F.when(item.isNotNull(), cells).otherwise(F.array())).alias("__cell")
-    )
-    per_cell = melted.groupBy(*names, "__cell").agg(F.count(F.lit(1)).alias("__c"))
-    counts = per_cell.groupBy(*names).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("__cell"), F.col("__c")))
-        ).alias("cm")
-    )
-    totals = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("n_rows"))
-    # right-join keeps all-NULL-item groups (empty sketch) with n_rows intact
-    return counts.join(totals, on=names, how="right").withColumn(
-        "cm", F.coalesce(F.col("cm"), F.create_map().cast("map<int,bigint>"))
-    )
-
-
-def merge_countmin_rollup(sketches: DataFrame, keys: list[str]) -> DataFrame:
-    """Roll CM sketches to coarser keys: cell counts ADD, so the merge is
-    exact — merged fine sketches equal the sketch built directly at the
-    coarse grain, bit for bit (same property as merge_quantile_rollup;
-    pytest-gated identity)."""
-    empty = F.create_map().cast("map<int,bigint>")
-    return sketches.groupBy(*[F.col(k) for k in keys]).agg(
-        F.aggregate(
-            F.collect_list("cm"),
-            empty,
-            lambda acc, m: F.map_zip_with(
-                acc, m, lambda _, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
-            ),
-        ).alias("cm"),
-        F.sum("n_rows").alias("n_rows"),
-    )
-
-
-def countmin_estimates(
-    sketches: DataFrame,
-    items: list[str],
-    width: int = 256,
-    depth: int = 4,
-) -> DataFrame:
-    """Point-query a CM sketch table for literal ``items``: one row per
-    (group, item) with ``cm_est`` = min over the depth cells (0 when a
-    cell was never touched — the one-sided floor). Pure projection +
-    explode over the tiny sketch frame; ``width``/``depth`` must match
-    the build (cell layout is positional)."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(it).alias("item"),
-                F.least(
-                    *[
-                        F.coalesce(
-                            F.element_at(
-                                F.col("cm"),
-                                (
-                                    F.lit(d * width)
-                                    + F.pmod(
-                                        F.xxhash64(F.lit(d), F.lit(it)), F.lit(width)
-                                    )
-                                ).cast("int"),
-                            ),
-                            F.lit(0),
-                        )
-                        for d in range(depth)
-                    ]
-                ).alias("cm_est"),
-            )
-            for it in items
-        ]
-    )
-    return sketches.select(
-        *[c for c in sketches.columns if c not in ("cm",)],
-        F.explode(entries).alias("__e"),
-    ).select(
-        *[c for c in sketches.columns if c not in ("cm",)], "__e.item", "__e.cm_est"
     )

@@ -1,14 +1,10 @@
-"""Span-shaped operators: slow-SQL extraction, SQL digesting, span name
-ops, and counter-reset adjustment.
+"""Span-shaped operators: slow-SQL extraction, SQL digesting, and
+counter-reset adjustment.
 
 References:
   - slow_sql connector (connector/slowsqlconnector/connector_logs.go:50-96):
     client spans whose duration >= threshold and whose `db.system` is in
     the configured allowlist become log records carrying the span dims.
-  - spanprocessor (processor/spanprocessor/README.md `from_attributes` /
-    `to_attributes`): build the span name from attribute values joined by
-    a separator; extract attributes out of the name via regex named
-    captures (replacing the matched part with the capture key).
   - metricstarttimeprocessor (processor/metricstarttimeprocessor/): the
     true-reset-point strategy re-anchors cumulative series at counter
     resets. The batch analogue below rebases a sawtooth counter into a
@@ -107,60 +103,6 @@ def sql_digest(
             F.round(F.expr("percentile(__d, 0.95)"), 6).alias("p95_ms"),
         )
     )
-
-
-# --- spanprocessor name ops -------------------------------------------------
-def span_name_from_attributes(
-    df: DataFrame,
-    from_attributes: list[str],
-    separator: str = "::",
-    name_col: str = "span_name",
-) -> DataFrame:
-    """README `from_attributes`: the new name is the attribute values
-    joined by `separator`; if ANY key is missing (NULL) the name is left
-    unchanged (the reference skips the rename)."""
-    all_present = None
-    for k in from_attributes:
-        c = F.col(k).isNotNull()
-        all_present = c if all_present is None else (all_present & c)
-    joined = F.concat_ws(separator, *[F.col(k).cast("string") for k in from_attributes])
-    current = F.col(name_col) if name_col in df.columns else F.lit(None).cast("string")
-    return df.withColumn(name_col, F.when(all_present, joined).otherwise(current))
-
-
-def span_name_to_attributes(
-    df: DataFrame,
-    rules: list[str],
-    name_col: str = "span_name",
-    keep_original_name: bool = False,
-) -> DataFrame:
-    """README `to_attributes`: each rule is a regex with named captures;
-    the first matching rule extracts each capture into a same-named column
-    and (unless keep_original_name) replaces the matched span-name part
-    with `{capture_key}` placeholders."""
-    import re as _re
-
-    out = df
-    name = F.col(name_col)
-    for rule in rules:
-        keys = _re.findall(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>", rule)
-        java_rule = rule.replace("(?P<", "(?<")
-        matched = name.rlike(java_rule)
-        for k in keys:
-            out = out.withColumn(
-                k, F.when(matched, F.regexp_extract(name, java_rule, keys.index(k) + 1))
-            )
-        if not keep_original_name:
-            # rebuild the name: the matched part collapses to the rule with
-            # each named capture replaced by its {key} placeholder
-            # (README example: /api/v1/document/{documentId}/update)
-            template = _re.sub(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>[^)]*\)", r"{\1}", rule)
-            template = _re.sub(r"\\(.)", r"\1", template).lstrip("^").rstrip("$")
-            out = out.withColumn(
-                name_col, F.when(matched, F.lit(template)).otherwise(name)
-            )
-        name = F.col(name_col)
-    return out
 
 
 # --- span pruning (processor/spanpruningprocessor) --------------------------
@@ -462,3 +404,4 @@ def zipkin_tags_to_otlp(
         status_message.alias("otlp_status_message"),
         rest_csv.alias("attrs_rest_csv"),
     )
+

@@ -113,12 +113,6 @@ def drain_templates(
     )
 
 
-def annotate_templates(df: DataFrame, text_col: str = "text", out_col: str = "log_template") -> DataFrame:
-    """The processor's annotate-only mode: attach the template column
-    (drainprocessor sets log.record.template, emitting rows unchanged)."""
-    return df.withColumn(out_col, mask_template(F.col(text_col)))
-
-
 # ---------------------------------------------------------------------------
 # Drain parse tree (round 4): the REAL fixed-depth tree + similarity
 # threshold, distributed
@@ -423,3 +417,4 @@ def pagerank_iterations(
             ).alias("pr"),
         )
     return pr.select("node", F.round("pr", 6).alias("pagerank"))
+

@@ -273,43 +273,6 @@ def sumologic_process(
     return out
 
 
-SERVICE_ATTR_KEYS = ("service.name", "service.instance.id", "service.namespace")
-
-
-def resource_to_telemetry(
-    df,
-    resource_col: str = "resource",
-    attrs_col: str = "attributes",
-    exclude_service_attributes: bool = False,
-):
-    """pkg/resourcetotelemetry: copy every resource attribute onto each
-    datapoint's attribute map; on key collisions the RESOURCE value wins
-    (joinAttributeMaps PutEmpty overwrite, resource_to_telemetry.go:147-151).
-    exclude_service_attributes drops service.name / service.instance.id /
-    service.namespace, which Prometheus-family exporters already map to
-    job/instance labels (resource_to_telemetry.go:95-103). Pure projection.
-    """
-    res = F.col(resource_col)
-    if exclude_service_attributes:
-        res = F.map_filter(res, lambda k, _v: ~k.isin(*SERVICE_ATTR_KEYS))
-    # resource wins: keep only datapoint keys absent from the resource map,
-    # then concat (map_concat raises on duplicates under the default dedup
-    # policy, so the filter is the precedence rule made explicit)
-    kept = F.map_filter(F.col(attrs_col), lambda k, _v: ~F.map_contains_key(res, k))
-    return df.withColumn(attrs_col, F.map_concat(kept, res))
-
-
-def batch_per_resource_attr(df, attr_col: str, batch_key: str = "_batch_key"):
-    """pkg/batchperresourceattr: split one batch so each downstream call
-    sees a single value of the routing attribute (multi-tenant exporters).
-    Relationally this is just a partitioning contract: stamp the key and
-    hash-repartition on it so each task (and each `partitionBy` output
-    file) holds one tenant's rows — the exporter-side split the reference
-    does with per-value pdata copies is a free groupBy here."""
-    out = df.withColumn(batch_key, F.coalesce(F.col(attr_col).cast("string"), F.lit("")))
-    return out.repartition(F.col(batch_key))
-
-
 def redact_attributes(
     df: DataFrame,
     attrs_col: str = "attrs",
@@ -455,3 +418,4 @@ def redact_attributes(
     return staged.select(
         *[c for c in df.columns if c != attrs_col], out_map.alias(attrs_col)
     )
+

@@ -88,6 +88,8 @@ def zorder_sql(cols: list[str], bounds: list[tuple[int, int]], bits: int = 16) -
     return "(" + " | ".join(terms) + ")" if terms else "CAST(0 AS BIGINT)"
 
 
+# Fixture of tests/test_zorder.py::test_zorder_prunes_more_files_than_linear_sort,
+# which checks the live prune_files against it.
 def cluster_by_zorder(
     df: DataFrame,
     cols: list[str],

@@ -62,6 +62,7 @@ def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
     return spark.table(name)
 
 
+# Plan probe of the no-exchange tests in tests/test_bucketing.py.
 def exchange_count(df: DataFrame) -> int:
     """Number of Exchange (shuffle) nodes in the executed plan — the
     co-location assertion used by tests and plan audits. Collapses AQE

@@ -223,6 +223,10 @@ def _validate_sections(spec: dict[str, Any]) -> None:
         if not isinstance(r["condition"], str):
             raise ValueError(f"route {r.get('name')}: condition must be an OTTL string")
         parse_condition(r["condition"])
+    for r in (spec.get("dlq") or {}).get("rules", []):
+        if not isinstance(r["when"], str):
+            raise ValueError(f"dlq rule {r.get('reason')}: when must be an OTTL string")
+        parse_condition(r["when"])
     for p in (spec.get("tail_sampling") or {}).get("policies", []):
         if p["type"] == "ottl_condition":
             if not isinstance(p["condition"], str):

@@ -115,10 +115,10 @@ def write_sinks_resumable(
     are recorded on it.
 
     Each sink write retries transient failures with exporterhelper's
-    deterministic backoff (round 4: initial × multiplier^n capped at max —
-    the same schedule as plans/sinks.retry_write); exhaustion re-raises,
-    leaving the sink UNCOMMITTED in the manifest so the next run resumes
-    exactly there — the manifest IS the persistent sending queue.
+    deterministic backoff (initial × multiplier^n, capped at max);
+    exhaustion re-raises, leaving the sink UNCOMMITTED in the manifest so
+    the next run resumes exactly there — the manifest IS the persistent
+    sending queue.
     ``sleep``/``writer`` are injectable for tests; a writer must leave
     Spark's ``part-*.parquet`` files under the sink path.
     """

@@ -59,7 +59,7 @@ class SnapshotStore:
         """True compare-and-swap: the sequence check runs INSIDE an
         exclusive commit lock (O_CREAT|O_EXCL is the atomic primitive), so
         two racing publishers — append vs append, or append vs
-        expire/compact maintenance — can never both pass the check and
+        overwrite — can never both pass the check and
         silently clobber each other (the previous bare load/check/replace
         was check-then-act). The writer that finds the lock held raises
         CommitConflict immediately (optimistic model: the caller rebuilds
@@ -386,305 +386,3 @@ def read_snapshot(
         return reader.parquet(snap["files"][0]).limit(0)
     return reader.parquet(*kept)
 
-
-def compact_snapshot(
-    spark: SparkSession,
-    table_path: str,
-    target_records_per_file: int = 1_000_000,
-) -> str:
-    """Small-files compaction — the Iceberg `rewrite_data_files` maintenance
-    action. Streaming/micro-batch sinks accumulate many small parquet files;
-    at 100 TB that inflates scan planning and footer I/O. This resolves the
-    CURRENT snapshot, rewrites its rows into ceil(rows/target) right-sized
-    files, and commits a `replace` snapshot referencing only the new files.
-
-    Concurrency: the commit is published with compare-and-swap against the
-    RESOLVED snapshot's sequence, so an append that lands mid-compaction
-    makes the compaction lose with CommitConflict (retry) instead of
-    silently dropping the appended files — Iceberg's validation rule.
-    History is untouched: pre-compaction snapshots still time-travel until
-    `expire_snapshots` removes them."""
-    store = SnapshotStore(table_path)
-    snaps = store._load()  # noqa: SLF001 — same-module maintenance op
-    if not snaps or not snaps[-1]["files"]:
-        raise ValueError(f"snapshot table {table_path!r} is empty")
-    resolved = snaps[-1]
-    reader = spark.read
-    if resolved.get("schema"):
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(json.loads(resolved["schema"])))
-    df = reader.parquet(*resolved["files"])
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // int(target_records_per_file)))
-    commit_dir = os.path.join(table_path, "data", f"commit-{uuid.uuid4().hex}")
-    df.repartition(n_files).write.mode("error").parquet(commit_dir)
-    files = sorted(
-        os.path.join(commit_dir, f) for f in os.listdir(commit_dir) if f.endswith(".parquet")
-    )
-    # re-derive bounds for the rewritten files over whichever columns the
-    # table was tracking (union of stat'd cols across the resolved files)
-    stat_cols = sorted({c for s in resolved.get("stats", {}).values() for c in s})
-    snap = {
-        "snapshot_id": uuid.uuid4().hex,
-        "parent_id": resolved["snapshot_id"],
-        "sequence": resolved["sequence"] + 1,
-        "operation": "replace",
-        "files": files,
-        "ts": time.time(),
-        "summary": {
-            "compacted_from": len(resolved["files"]),
-            "compacted_to": len(files),
-            "rows": n_rows,
-        },
-        "stats": collect_file_stats(files, stat_cols) if stat_cols else {},
-    }
-    if resolved.get("schema"):
-        snap["schema"] = resolved["schema"]
-    try:
-        store._publish(snaps + [snap], expected_seq=resolved["sequence"])  # noqa: SLF001
-    except CommitConflict:
-        _drop_commit_dir(commit_dir)
-        raise
-    return snap["snapshot_id"]
-
-
-def merge_snapshot(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    key_cols: str | list[str],
-    stats_cols: list[str] | None = None,
-) -> str:
-    """Copy-on-write MERGE (upsert): rows of `updates` replace current rows
-    with equal keys; update rows matching nothing are inserts. This is the
-    Iceberg COW `MERGE INTO` shape, and the whole point is FILE-LEVEL
-    scoping — at 100 TB a merge that rewrites the table is a non-starter:
-
-      1. stats envelope: candidate files are pruned by the updates' key
-         min/max against the snapshot's recorded per-file bounds (when the
-         table tracks the key column) — most files never even open.
-      2. exact scoping: a key+file_path projection of the candidates
-         semi-joined against the update keys names the files that truly
-         contain matched keys; only THOSE are rewritten (matched rows
-         anti-joined away, updates unioned in). Untouched files carry over
-         by reference, their stats intact.
-
-    Concurrency follows compact: CAS against the resolved sequence; a
-    racing commit makes the merge lose with CommitConflict and reclaim its
-    commit dir. `updates` must be key-unique (dedupe upstream — two update
-    rows with one key would both land, same as Iceberg's cardinality
-    check failing)."""
-    from urllib.parse import unquote, urlparse
-
-    from pyspark.sql import functions as F
-
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    store = SnapshotStore(table_path)
-    snaps = store._load()  # noqa: SLF001 — same-module maintenance op
-    if not snaps or not snaps[-1]["files"]:
-        raise ValueError(f"snapshot table {table_path!r} is empty; use write_snapshot")
-    resolved = snaps[-1]
-
-    # 1. stats envelope prune (plain-typed key bounds only; others skip)
-    env = []
-    row = updates.agg(
-        *[F.min(k).alias(f"lo_{k}") for k in keys], *[F.max(k).alias(f"hi_{k}") for k in keys]
-    ).first()
-    for k in keys:
-        lo, hi = row[f"lo_{k}"], row[f"hi_{k}"]
-        if isinstance(lo, bool | int | float | str) and isinstance(hi, bool | int | float | str):
-            env.append((k, lo, hi))
-    candidates = prune_files(resolved, env or None)
-
-    # 2. exact file scoping via key projection + semi-join
-    upd_keys = updates.select(*keys).distinct()
-    touched: list[str] = []
-    if candidates:
-        hit = (
-            spark.read.parquet(*candidates)
-            .select(*keys, F.col("_metadata.file_path").alias("_fp"))
-            .join(upd_keys, keys, "left_semi")
-            .select("_fp")
-            .distinct()
-            .collect()
-        )
-        # _metadata.file_path is a percent-encoded URI: unquote before
-        # comparing, or any table path with a space/% never matches and a
-        # merge silently duplicates keys instead of rewriting
-        hit_paths = {os.path.abspath(unquote(urlparse(r["_fp"]).path)) for r in hit}
-        touched = [f for f in candidates if os.path.abspath(f) in hit_paths]
-
-    if touched:
-        treader = spark.read
-        if resolved.get("schema"):
-            # evolved tables: old files read under the table schema so the
-            # rewrite carries every column (missing ones as NULL)
-            from pyspark.sql.types import StructType
-
-            treader = treader.schema(StructType.fromJson(json.loads(resolved["schema"])))
-        remaining = treader.parquet(*touched).join(upd_keys, keys, "left_anti")
-        new_rows = remaining.unionByName(updates.select(*remaining.columns))
-    else:
-        new_rows = updates
-    touched_set = set(touched)
-    untouched = [f for f in resolved["files"] if f not in touched_set]
-
-    commit_dir = os.path.join(table_path, "data", f"commit-{uuid.uuid4().hex}")
-    new_rows.write.mode("error").parquet(commit_dir)
-    files_new = sorted(
-        os.path.join(commit_dir, f) for f in os.listdir(commit_dir) if f.endswith(".parquet")
-    )
-    stat_cols = stats_cols or sorted({c for s in resolved.get("stats", {}).values() for c in s})
-    carried = {f: s for f, s in resolved.get("stats", {}).items() if f in set(untouched)}
-    snap = {
-        "snapshot_id": uuid.uuid4().hex,
-        "parent_id": resolved["snapshot_id"],
-        "sequence": resolved["sequence"] + 1,
-        "operation": "merge",
-        "files": sorted(untouched + files_new),
-        "ts": time.time(),
-        "summary": {
-            "rewritten_files": len(touched),
-            "kept_files": len(untouched),
-            "added_files": len(files_new),
-            "candidate_files": len(candidates),
-        },
-        "stats": {**carried, **(collect_file_stats(files_new, stat_cols) if stat_cols else {})},
-    }
-    if resolved.get("schema"):
-        snap["schema"] = resolved["schema"]
-    try:
-        store._publish(snaps + [snap], expected_seq=resolved["sequence"])  # noqa: SLF001
-    except CommitConflict:
-        _drop_commit_dir(commit_dir)
-        raise
-    return snap["snapshot_id"]
-
-
-def expire_snapshots(table_path: str, keep_last: int = 2) -> dict:
-    """Iceberg `expire_snapshots`: keep the most recent `keep_last`
-    snapshots, rewrite the metadata to the kept history, then delete data
-    files referenced ONLY by expired ones (failed-commit orphans never
-    reach a snapshot — their writers reclaim them on conflict). Time travel
-    to expired snapshots is gone by design; the current snapshot and its
-    files are never touched."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    store = SnapshotStore(table_path)
-    snaps = store._load()  # noqa: SLF001
-    if len(snaps) <= keep_last:
-        return {"expired_snapshots": 0, "deleted_files": 0}
-    kept, expired = snaps[-keep_last:], snaps[:-keep_last]
-    live = {f for s in kept for f in s["files"]}
-    doomed = {f for s in expired for f in s["files"]} - live
-    # Commit the trimmed metadata FIRST (Iceberg's ordering): if a concurrent
-    # writer advanced the table, the CAS raises before anything is deleted,
-    # and no published snapshot can ever reference a removed file. Only after
-    # the kept history is durable do the now-unreferenced files go.
-    store._publish(kept, expected_seq=snaps[-1]["sequence"])  # noqa: SLF001
-    deleted = 0
-    for f in sorted(doomed):
-        try:
-            os.remove(f)
-            deleted += 1
-        except FileNotFoundError:
-            pass
-    # drop commit directories no kept snapshot references at all — only
-    # Spark bookkeeping (_SUCCESS, .crc) remains in them after the data
-    # deletions, and a per-micro-batch committer would otherwise
-    # accumulate empty dirs forever
-    import shutil
-
-    live_dirs = {os.path.dirname(f) for f in live}
-    for d in {os.path.dirname(f) for f in doomed} - live_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return {"expired_snapshots": len(expired), "deleted_files": deleted}
-
-
-def write_audit_publish(
-    spark: SparkSession,
-    df: DataFrame,
-    table_path: str,
-    checks: list[dict],
-    mode: str = "append",
-    summary: dict | None = None,
-    stats_cols: list[str] | None = None,
-    audit_scope: str = "batch",
-) -> dict:
-    """Write-Audit-Publish: the production ingest gate (Iceberg's WAP
-    pattern, branch-free version). Data is STAGED into an immutable
-    commit directory that no snapshot references yet; the contract checks
-    (plans/contracts.validate_contract) run against the STAGED FILES as
-    readers will see them — catching writer/serialization bugs a
-    pre-write audit misses — and only a fully-passing audit commits the
-    metadata pointer. A failing audit drops the staged directory and the
-    table is bit-for-bit untouched: downstream readers can never observe
-    un-audited data, and there is no window where they could (the commit
-    IS the publish).
-
-    audit_scope: "batch" audits the staged files alone (cheap — right
-    for row-local checks like not_null/range/regex); "table" audits the
-    would-be post-commit state (current snapshot ∪ staged) — REQUIRED
-    for table-level invariants like `unique` under append, where a
-    batch-only audit cannot see a duplicate against already-published
-    rows (Iceberg's WAP audits the branch state for the same reason).
-
-    Returns {"published": bool, "snapshot_id": str|None,
-    "audit": [per-check rows], "n_violations": int}. Commit conflicts
-    propagate (CommitConflict) after the staged data is dropped — the
-    caller rebuilds and retries, the optimistic model commit_files
-    already defines."""
-    from .contracts import validate_contract
-
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if audit_scope not in ("batch", "table"):
-        raise ValueError(f"audit_scope must be batch|table, got {audit_scope!r}")
-    store = SnapshotStore(table_path)
-    new_schema = df.schema.json()
-    current = store.current()
-    if mode == "append" and current is not None and current.get("schema"):
-        new_schema = _evolved_schema(current["schema"], new_schema, False)
-    commit_dir = os.path.join(table_path, "data", f"commit-{uuid.uuid4().hex}")
-    df.write.mode("error").parquet(commit_dir)
-    files = sorted(
-        os.path.join(commit_dir, f)
-        for f in os.listdir(commit_dir)
-        if f.endswith(".parquet")
-    )
-    staged = spark.read.schema(df.schema).parquet(*files)
-    audited = staged
-    if audit_scope == "table" and mode == "append" and current is not None:
-        existing = current.get("files") or []
-        if existing:
-            # audit the post-commit state readers would actually see
-            audited = spark.read.schema(df.schema).parquet(*existing).unionByName(staged)
-    audit_rows = [r.asDict() for r in validate_contract(audited, checks).collect()]
-    n_viol = sum(int(r["n_violations"]) for r in audit_rows)
-    if not all(r["passed"] for r in audit_rows):
-        _drop_commit_dir(commit_dir)
-        return {
-            "published": False,
-            "snapshot_id": None,
-            "audit": audit_rows,
-            "n_violations": n_viol,
-        }
-    stats = collect_file_stats(files, stats_cols) if stats_cols else None
-    try:
-        snap_id = store.commit_files(
-            files,
-            operation=mode,
-            summary={**(summary or {}), "added_files": len(files), "wap_audited": True},
-            stats=stats,
-            schema_json=new_schema,
-        )
-    except CommitConflict:
-        _drop_commit_dir(commit_dir)
-        raise
-    return {
-        "published": True,
-        "snapshot_id": snap_id,
-        "audit": audit_rows,
-        "n_violations": n_viol,
-    }

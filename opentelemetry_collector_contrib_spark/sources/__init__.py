@@ -3,12 +3,10 @@ from .file_source import (  # noqa: F401
     file_source,
     json_file_source,
     kafka_source_options,
-    transcripts_source,
 )
 from .network import (  # noqa: F401
     TcpSpoolListener,
     UdpSpoolListener,
-    spool_stream,
     stdin_to_spool,
     tcp_syslog_stream,
     tcp_text_stream,

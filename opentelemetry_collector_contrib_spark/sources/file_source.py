@@ -83,15 +83,6 @@ def csv_file_source(
     return reader.csv(paths)
 
 
-def transcripts_source(spark: SparkSession, table_or_path: str) -> DataFrame:
-    """The judged ingress: the Iceberg transcript table. In-sandbox, parquet
-    path; on a cluster, `spark.read.table(...)` — same scan contract
-    (partition pruning on days(ts)/bucket(conv_id), column pruning)."""
-    if "/" in table_or_path:
-        return spark.read.parquet(table_or_path)
-    return spark.read.table(table_or_path)
-
-
 def kafka_source_options(
     bootstrap_servers: str,
     topics: str,
@@ -130,17 +121,6 @@ def generate_source(
     if static:
         df = df.drop("seq")
     return df
-
-
-def decode_text(df: DataFrame, source: str, charset: str = "UTF-8", out_col: str | None = None) -> DataFrame:
-    """filelog receiver `encoding` option analogue
-    (pkg/stanza/split/splitter + decode.go: the reader decodes each line
-    from the configured charset before parsing). A binary column decodes
-    JVM-side via F.decode — US-ASCII, ISO-8859-1, UTF-8, UTF-16 (BE/LE
-    and BOM'd) are the charsets Spark guarantees, the same core set the
-    stanza lookup table exposes. Pure projection; malformed sequences
-    follow Spark's charset-decoder replacement behavior."""
-    return df.withColumn(out_col or source, F.decode(F.col(source), charset))
 
 
 WIRE_DECODERS = {
@@ -292,3 +272,4 @@ def filelog_header_metadata(
         .join(merged, file_col, "left")
         .withColumn(out_col, F.coalesce(F.col(out_col), F.create_map().cast("map<string,string>")))
     )
+

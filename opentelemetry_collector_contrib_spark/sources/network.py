@@ -12,13 +12,14 @@ A Spark cluster is a pull engine, so network listeners are edge concerns:
   splits on newlines); spool such feeds to files and use
   `split_octet_frames` (operators/parse.py) on the file stream instead.
 - **UDP and stdin** have no Spark source, so `UdpSpoolListener` /
-  `stdin_to_spool` bridge frames into rotating spool files consumed by
-  the checkpointed file stream (streaming/pipeline.transcripts_stream is
-  the same pattern for parquet). The reference's receive-goroutine →
-  entry-pipeline handoff (udp/input.go:112-160 readLoop) becomes
-  receive-thread → durable spool → exactly-once file stream: frames hit
-  disk *before* entering the engine, which is strictly stronger delivery
-  than the reference's in-memory handoff (its UDP drops on backpressure).
+  `stdin_to_spool` bridge frames into rotating spool files for a
+  checkpointed text file stream (`spark.readStream.text`;
+  streaming/pipeline.transcripts_stream is the same pattern for parquet).
+  The reference's receive-goroutine → entry-pipeline handoff
+  (udp/input.go:112-160 readLoop) becomes receive-thread → durable spool
+  → exactly-once file stream: frames hit disk *before* entering the
+  engine, which is strictly stronger delivery than the reference's
+  in-memory handoff (its UDP drops on backpressure).
 
 Spool files are written to a `.tmp` name and atomically renamed so the
 streaming file lister never observes a partial file.
@@ -219,107 +220,3 @@ def stdin_to_spool(stream, spool_dir: str, batch_lines: int = 4096) -> int:
             publish()
     publish()
     return total
-
-
-def spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """Streaming reader over a spool directory (UDP/stdin bridge output):
-    one `line` per row, exactly-once via the stream's checkpoint."""
-    return spark.readStream.text(spool_dir).select(F.col("value").alias("line"))
-
-
-class TcpLineSpoolListener:
-    """Newline-framed TCP LISTENER with per-connection peer attributes —
-    the listener-side twin of `tcp_text_stream` (which is poll-side: Spark
-    connects out). Frames exactly as `tcp/input.go`: bufio line split,
-    `\\r` strip, lines beyond max_log_size truncated at the limit
-    (config.go DefaultMaxLogSize bounded buffer), the final unterminated
-    frame flushing on close. With add_attributes it stamps the entry
-    attributes input.go:232-240 adds: net.transport="IP.TCP",
-    net.peer.ip, net.peer.port.
-
-    Spool format is JSONL `{line, attributes}` (one atomically-published
-    file per connection) read back with `attr_spool_source` — attributes
-    ride WITH the frame, as in the reference's entry model, rather than
-    being re-derived downstream."""
-
-    def __init__(
-        self,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        spool_dir: str = "/tmp/tcp_line_spool",
-        add_attributes: bool = True,
-        max_log_size: int = 1024 * 1024,
-    ) -> None:
-        import json as _json
-        import socketserver
-
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
-        self.max_log_size = max_log_size
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self):
-                peer_ip, peer_port = self.client_address[:2]
-                attrs = (
-                    {
-                        "net.transport": "IP.TCP",
-                        "net.peer.ip": str(peer_ip),
-                        "net.peer.port": str(peer_port),
-                    }
-                    if add_attributes
-                    else {}
-                )
-                records: list[str] = []
-
-                def emit(raw: bytes) -> None:
-                    line = (
-                        raw[: outer.max_log_size]
-                        .decode("utf-8", errors="replace")
-                        .rstrip("\r")
-                    )
-                    records.append(
-                        _json.dumps({"line": line, "attributes": attrs}, ensure_ascii=False)
-                    )
-
-                buf = b""
-                while True:
-                    chunk = self.request.recv(65536)
-                    if not chunk:
-                        break
-                    buf += chunk
-                    while b"\n" in buf:
-                        raw, buf = buf.split(b"\n", 1)
-                        emit(raw)
-                if buf:
-                    emit(buf)
-                if records:
-                    name = f"conn-{uuid.uuid4().hex}.jsonl"
-                    tmp = os.path.join(outer.spool_dir, f".{name}.tmp")
-                    with open(tmp, "w", encoding="utf-8") as f:
-                        f.write("\n".join(records) + "\n")
-                    os.rename(tmp, os.path.join(outer.spool_dir, name))
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._server = Server((host, port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-
-ATTR_SPOOL_SCHEMA = "line string, attributes map<string,string>"
-
-
-def attr_spool_source(spark: SparkSession, spool_dir: str, streaming: bool = False) -> DataFrame:
-    """Read an attribute-bearing JSONL spool (TcpLineSpoolListener output)
-    as (line, attributes) rows — batch for replay, readStream for tailing
-    with exactly-once file progress."""
-    reader = spark.readStream if streaming else spark.read
-    return reader.schema(ATTR_SPOOL_SCHEMA).json(spool_dir)

@@ -1,4 +1,4 @@
-"""sqlqueryreceiver analogue: SQL statements as log/metric sources with
+"""sqlqueryreceiver analogue: a SQL statement as a log source with
 incremental tracking state.
 
 The reference polls a database on `collection_interval`, re-running each
@@ -12,47 +12,19 @@ configured SQL statement and mapping rows to signals
   result set** (not the max: the docs require the query itself to sort
   ascending) and binds it on the next poll. `storage` persists the value
   across restarts.
-- metrics: one datapoint per row — `metric_name`, `value_column`,
-  `data_type` gauge|sum, `value_type` int|double, `attribute_columns`,
-  `static_attributes`, optional `row_condition` {column, value} gate for
-  pivot-style result sets.
 
-Spark mapping: the statement runs through `spark.sql` with the tracking
-value bound as a named parameter; tracking state is one tiny JSON file
-written atomically (tmp + rename), the same crash-safe single-snapshot
-stance as the incremental dedup state. The one-row `tail(1)` that reads
-the new tracking value is the only driver-side data access — it is the
-state update itself, inherently a driver decision, and never scales with
-input size.
+Spark mapping: `sql_query_logs` is one poll of a logs statement. The
+statement runs through `spark.sql` with the tracking value bound as a named
+parameter, and the call returns the new tracking value for the caller to
+bind on the next poll. The one-row `tail(1)` that reads it is the only
+driver-side data access: it is the state update itself, and never scales
+with input size.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def load_tracking(state_path: str, start_value: str | None = None) -> str | None:
-    """Read the persisted tracking value; fall back to the configured
-    tracking_start_value on first run (README 'Tracking processed
-    results')."""
-    if os.path.exists(state_path):
-        with open(state_path, encoding="utf-8") as f:
-            return json.load(f)["tracking_value"]
-    return start_value
-
-
-def save_tracking(state_path: str, value: str) -> None:
-    """Atomic single-snapshot commit: tmp + rename, so a crash leaves
-    either the old or the new value, never a torn file."""
-    tmp = state_path + ".tmp"
-    os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"tracking_value": value}, f)
-    os.replace(tmp, state_path)
 
 
 def sql_query_logs(
@@ -89,76 +61,3 @@ def sql_query_logs(
         out_cols.append(F.col(tracking_column).alias("_tracking"))
     return df.select(*out_cols), new_tracking
 
-
-def sql_query_metrics(
-    spark: SparkSession,
-    sql: str,
-    metrics: list[dict],
-) -> DataFrame:
-    """One poll of a metrics query: one datapoint row per result row per
-    configured metric. Each metric dict mirrors the README's fields:
-    metric_name, value_column, data_type ('gauge'|'sum'), value_type
-    ('int'|'double'), monotonic, aggregation ('cumulative'|'delta'),
-    unit, attribute_columns, static_attributes, row_condition
-    ({'column','value'}: non-matching rows silently skipped — the
-    pivot-style SHOW LISTS case)."""
-    df = spark.sql(sql)
-    frames = []
-    for m in metrics:
-        vt = m.get("value_type", "int")
-        val = F.col(m["value_column"]).cast("bigint" if vt == "int" else "double")
-        pairs = []
-        for c in m.get("attribute_columns", []):
-            pairs += [F.lit(c), F.col(c).cast("string")]
-        for k, v in sorted(m.get("static_attributes", {}).items()):
-            pairs += [F.lit(k), F.lit(str(v))]
-        sel = df
-        cond = m.get("row_condition")
-        if cond:
-            sel = sel.filter(F.col(cond["column"]).cast("string") == F.lit(str(cond["value"])))
-        frames.append(
-            sel.select(
-                F.lit(m["metric_name"]).alias("metric_name"),
-                F.lit(m.get("data_type", "gauge")).alias("data_type"),
-                F.lit(vt).alias("value_type"),
-                F.lit(bool(m.get("monotonic", False))).alias("monotonic"),
-                F.lit(
-                    m.get("aggregation", "cumulative") if m.get("data_type") == "sum" else None
-                ).cast("string").alias("aggregation"),
-                F.lit(m.get("unit")).cast("string").alias("unit"),
-                val.cast("double").alias("value"),
-                (F.create_map(*pairs) if pairs else F.create_map().cast("map<string,string>")).alias(
-                    "attributes"
-                ),
-            )
-        )
-    out = frames[0]
-    for f2 in frames[1:]:
-        out = out.unionByName(f2)
-    return out
-
-
-def poll_logs_with_state(
-    spark: SparkSession,
-    sql: str,
-    body_column: str,
-    attribute_columns: list[str] | None,
-    tracking_column: str,
-    state_path: str,
-    tracking_start_value: str,
-) -> DataFrame:
-    """Load tracking state -> run the poll -> commit the advanced value.
-    Re-running after the commit re-reads only rows past the stored value
-    (the storage-extension resume contract)."""
-    tv = load_tracking(state_path, tracking_start_value)
-    out, new_tv = sql_query_logs(
-        spark,
-        sql,
-        body_column,
-        attribute_columns,
-        tracking_column=tracking_column,
-        tracking_value=tv,
-    )
-    if new_tv is not None:
-        save_tracking(state_path, new_tv)
-    return out

@@ -14,7 +14,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -216,7 +217,7 @@ def main(names: list[str] | None = None, manifest: str | None = None) -> int:
         import subprocess as _sp
 
         head = _sp.run(
-            ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+            ["git", "-C", ROOT, "rev-parse", "HEAD"],
             capture_output=True, text=True,
         ).stdout.strip()
         with open(manifest, "w") as fh:

@@ -12,28 +12,28 @@ describe. Usage:
 from __future__ import annotations
 
 import io
+import os
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def run_sweep() -> str:
-    import os
-
     # manifest filename follows the scale factor so an off-tier sweep can
     # never silently overwrite the sf0.01 driver-tier baseline
     sf = os.path.basename(
         os.path.normpath(os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     )
     manifest = (
-        "/root/repo/coverage_hashes.json"
+        os.path.join(ROOT, "coverage_hashes.json")
         if sf == "sf0.01"
-        else f"/root/repo/coverage_hashes_{sf.replace('.', '')}.json"
+        else os.path.join(ROOT, f"coverage_hashes_{sf.replace('.', '')}.json")
     )
     p = subprocess.run(
-        [sys.executable, "/root/repo/scripts/check_parity.py",
+        [sys.executable, os.path.join(ROOT, "scripts", "check_parity.py"),
          "--manifest", manifest],
         capture_output=True,
         text=True,
@@ -94,13 +94,13 @@ def main() -> int:
     )
     n_fail = doc.count("| FAIL |")
     if sf == "sf0.01":
-        with open("/root/repo/COVERAGE.md", "w") as f:
+        with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
             f.write(doc)
         print(f"COVERAGE.md written ({doc.count('| OK |')} OK, {n_fail} FAIL)")
     else:
         # COVERAGE.md documents the driver tier; an off-tier sweep keeps
         # its own manifest (written by check_parity above) and a side doc
-        side = f"/root/repo/COVERAGE_{sf.replace('.', '')}.md"
+        side = os.path.join(ROOT, f"COVERAGE_{sf.replace('.', '')}.md")
         with open(side, "w") as f:
             f.write(doc)
         print(f"{side} written ({doc.count('| OK |')} OK, {n_fail} FAIL) — "

@@ -35,26 +35,11 @@ def test_container_format_detection(lines):
     assert out[(2, 0)]["log"] == "not a container line at all"
 
 
-def test_recombine_partials(lines):
-    parsed = container.container_parser(lines).filter(F.col("container_format") == "cri")
-    out = container.recombine_partials(parsed, "src", "seq")
-    rows = sorted([tuple(r) for r in out.select("run_id", "log", "n_parts", "complete").collect()])
-    assert (1, "part-a part-b part-c", 3, True) in rows
-    assert (2, "single", 1, True) in rows
-
-
 def test_dup_clusters_components(spark):
     # components: {1,2,3} (chain), {5,6}, singleton 9 not in pairs
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["doc_a", "doc_b"])
     got = {r["doc"]: r["cluster_rep"] for r in dedup.dup_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-
-
-def test_drop_near_dups(spark):
-    docs = spark.createDataFrame([(i, f"t{i}") for i in (1, 2, 3, 5, 6, 9)], ["doc_id", "text"])
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["doc_a", "doc_b"])
-    kept = sorted(r["doc_id"] for r in dedup.drop_near_dups(docs, pairs, "doc_id").collect())
-    assert kept == [1, 5, 9]  # component reps + untouched singleton
 
 
 def test_dup_clusters_long_chain(spark):
@@ -63,3 +48,4 @@ def test_dup_clusters_long_chain(spark):
     got = {r["doc"]: r["cluster_rep"] for r in dedup.dup_clusters(pairs).collect()}
     assert set(got.values()) == {0}
     assert len(got) == 13
+

@@ -575,15 +575,6 @@ def test_k_anonymity_audit_and_summary(spark):
     assert classes[("a", 2)]["l_diversity"] == 2
     assert classes[("b", 1)]["at_risk"]
 
-    s = curation.k_anonymity_summary(df, ["qa", "qb"], k=5).collect()[0]
-    assert s["n_classes"] == 3 and s["k_min"] == 1
-    assert s["rows_at_risk"] == 4  # 3 + 1
-    assert abs(s["pct_at_risk"] - round(4 / 10, 6)) < 1e-9
-
-    # generalizing qb away merges the classes and clears the risk
-    s2 = curation.k_anonymity_summary(df.drop("qb"), ["qa"], k=5).collect()[0]
-    assert s2["rows_at_risk"] == 1  # only the (b,) singleton remains
-
 
 def test_temperature_mixture_and_upsample(spark):
     # 80 head rows, 20 tail rows; alpha=0.5 flattens toward the tail

@@ -175,9 +175,6 @@ def test_multimodal_decoder_injection_seam(docs):
 
 def test_resize_and_frames(docs):
     env = multimodal.attach_binary_payload(docs.filter(F.col("doc_id") == 4))
-    resized = multimodal.resize_images(env, 224, 224)
-    meta = resized.collect()[0]["meta"]
-    assert (meta["width"], meta["height"]) == (224, 224)
     frames = multimodal.sample_frames(env, every_ms=40).collect()
     # 'tiny' = 4 chars -> 160ms duration -> frames at 0,40,80,120
     assert [f["frame_ms"] for f in frames] == [0, 40, 80, 120]

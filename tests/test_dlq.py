@@ -71,93 +71,6 @@ def test_write_with_dlq_is_resumable(spark, routed_t1, tmp_path):
 # --- exporterhelper retry/queue analogue (round 4) ---------------------------
 
 
-def test_retry_write_transient_failure_succeeds_with_backoff(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.sinks import retry_write
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    calls = {"n": 0}
-    slept = []
-
-    def flaky(frame, target, **kw):
-        calls["n"] += 1
-        if calls["n"] <= 2:
-            raise IOError(f"sink down (attempt {calls['n']})")
-        frame.write.mode("overwrite").parquet(target)
-        return target
-
-    res = retry_write(
-        df,
-        str(tmp_path / "out"),
-        batch_id="b1",
-        write=flaky,
-        ledger_dir=str(tmp_path / "ledger"),
-        sleep=slept.append,
-    )
-    assert res["status"] == "committed" and res["attempts"] == 3
-    assert len(res["errors"]) == 2
-    # deterministic exponential schedule: 5, then 5*1.5
-    assert slept == [5.0, 7.5]
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
-
-
-def test_retry_write_exhaustion_lands_in_dlq_with_reason(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.sinks import retry_write
-
-    df = spark.createDataFrame([(1, "a")], "id int, v string")
-
-    def always_down(frame, target, **kw):
-        raise IOError("hard down")
-
-    res = retry_write(
-        df,
-        str(tmp_path / "out2"),
-        batch_id="b2",
-        write=always_down,
-        max_retries=2,
-        ledger_dir=str(tmp_path / "ledger"),
-        dlq_dir=str(tmp_path / "dlq"),
-        sleep=lambda s: None,
-    )
-    assert res["status"] == "quarantined" and res["attempts"] == 3
-    q = spark.read.parquet(res["path"]).collect()
-    assert len(q) == 1
-    assert q[0]["dlq_reason"].startswith("retry_exhausted: OSError")
-    assert q[0]["dlq_batch_id"] == "b2"
-
-
-def test_retry_write_ledger_makes_rerun_idempotent(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.sinks import retry_write
-
-    df = spark.createDataFrame([(1, "a")], "id int, v string")
-    calls = {"n": 0}
-
-    def ok(frame, target, **kw):
-        calls["n"] += 1
-        frame.write.mode("overwrite").parquet(target)
-        return target
-
-    kw = dict(batch_id="b3", write=ok, ledger_dir=str(tmp_path / "ledger"))
-    r1 = retry_write(df, str(tmp_path / "out3"), **kw)
-    r2 = retry_write(df, str(tmp_path / "out3"), **kw)
-    assert r1["status"] == "committed" and calls["n"] == 1
-    assert r2.get("skipped") is True and calls["n"] == 1  # rerun = no-op
-    # a quarantined batch is not re-attempted either
-    def boom(frame, target, **kw):
-        calls["n"] += 1
-        raise IOError("down")
-
-    kw2 = dict(
-        batch_id="b4", write=boom, max_retries=0,
-        ledger_dir=str(tmp_path / "ledger"), dlq_dir=str(tmp_path / "dlq"),
-        sleep=lambda s: None,
-    )
-    before = calls["n"]
-    r3 = retry_write(df, str(tmp_path / "out4"), **kw2)
-    r4 = retry_write(df, str(tmp_path / "out4"), **kw2)
-    assert r3["status"] == "quarantined" and calls["n"] == before + 1
-    assert r4.get("skipped") is True and calls["n"] == before + 1
-
-
 def test_resumable_sinks_retry_then_resume_on_exhaustion(spark, tmp_path):
     """write_sinks_resumable retries each sink with the exporterhelper
     backoff; exhaustion leaves the sink uncommitted so the NEXT run
@@ -192,3 +105,4 @@ def test_resumable_sinks_retry_then_resume_on_exhaustion(spark, tmp_path):
     )
     assert set(res) == {"s_ok", "s_flaky"}
     assert spark.read.parquet(res["s_flaky"]).count() == 2
+

@@ -1,6 +1,5 @@
 """elasticsearchexporter data-stream router — precedence, scope routing,
-sanitization, bodymap type gate, logstash suffix
-(data_stream_router.go:56-262, util.go:14-29)."""
+sanitization, bodymap type gate (data_stream_router.go:56-262)."""
 
 from __future__ import annotations
 
@@ -8,10 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators.es_routing import (
-    logstash_index,
-    route_documents,
-)
+from opentelemetry_collector_contrib_spark.operators.es_routing import route_documents
 
 _SCHEMA = (
     "id int, signal string, attrs map<string,string>, scope_attrs map<string,string>, "
@@ -102,10 +98,7 @@ def test_static_and_logstash(spark):
         df = df.withColumn(c, F.create_map().cast("map<string,string>"))
     df = df.withColumn("scope_name", F.lit("s"))
     routed = route_documents(df, static_index="fixed-idx")
-    row = routed.select(
-        logstash_index(F.col("es_index"), F.col("ts")).alias("ls")
-    ).collect()[0]
-    assert row["ls"] == "fixed-idx-2024.03.05"
+    assert routed.select("es_index").collect()[0]["es_index"] == "fixed-idx"
 
 
 def test_plan_stays_native(spark):

@@ -144,47 +144,3 @@ def test_tcp_octet_spool_bridge(spark, tmp_path):
     got = [r["frame"] for r in out.orderBy("frame_idx").collect()]
     assert got == frames
 
-
-def test_tcp_line_listener_frames_and_stamps_peer_attrs(spark, tmp_path):
-    """tcp/input.go semantics on the listener side: newline framing, \r
-    strip, max_log_size truncation, final unterminated frame on close,
-    net.transport/net.peer.* attributes (input.go:232-240), and
-    batch == availableNow-stream agreement over the attr spool."""
-    import glob
-    import socket
-    import time
-
-    from opentelemetry_collector_contrib_spark.sources.network import (
-        TcpLineSpoolListener,
-        attr_spool_source,
-    )
-
-    spool = str(tmp_path / "tcp_line_spool")
-    rx = TcpLineSpoolListener(spool_dir=spool, max_log_size=16)
-    try:
-        with socket.create_connection(("127.0.0.1", rx.port)) as c:
-            c.sendall(b"alpha\nbeta\r\n" + b"x" * 40 + b"\ntail-no-newline")
-        with socket.create_connection(("127.0.0.1", rx.port)) as c:
-            c.sendall(b"second conn\n")
-        deadline = time.time() + 10
-        while time.time() < deadline and len(glob.glob(spool + "/conn-*.jsonl")) < 2:
-            time.sleep(0.05)
-    finally:
-        rx.stop()
-
-    rows = {r["line"]: r["attributes"] for r in attr_spool_source(spark, spool).collect()}
-    assert set(rows) == {"alpha", "beta", "x" * 16, "tail-no-newline", "second conn"}
-    a = rows["alpha"]
-    assert a["net.transport"] == "IP.TCP"
-    assert a["net.peer.ip"] == "127.0.0.1" and int(a["net.peer.port"]) > 0
-
-    q = (
-        attr_spool_source(spark, spool, streaming=True)
-        .writeStream.format("memory")
-        .queryName("tcp_line_spool_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {r["line"] for r in spark.sql("select * from tcp_line_spool_stream").collect()}
-    assert got == set(rows)

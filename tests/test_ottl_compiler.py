@@ -184,7 +184,7 @@ def test_config_pipeline(spark, tmp_path):
     assert "turn_rn" in routed.columns
 
 
-def test_config_validation():
+def test_config_validation(spark):
     with pytest.raises(ValueError):
         validate_spec({"source": {}})
     with pytest.raises(ValueError):
@@ -193,6 +193,10 @@ def test_config_validation():
         validate_spec({"source": {"path": "x"}, "transform": ["set(x"]})
     with pytest.raises(ValueError):
         validate_spec({"source": {"path": "x"}, "bogus_section": {}})
+    # dlq rule conditions compile at startup, like route conditions
+    for when in ('pattern_id == == (', 5):
+        with pytest.raises(ValueError):
+            validate_spec({"source": {"path": "x"}, "dlq": {"rules": [{"reason": "x", "when": when}]}})
 
 
 def test_order_partitions_validation():
@@ -315,30 +319,6 @@ def test_lambda_arity_and_binding_errors(lam_df):
 
 
 # --- context inference (context_inferrer.go:18-29) --------------------------
-
-
-def test_infer_context_priority_order():
-    from opentelemetry_collector_contrib_spark.functions.ottl_compiler import infer_context
-
-    assert infer_context(['set(log.attributes["x"], 1)', 'set(resource.attributes["y"], 2)']) == "log"
-    assert infer_context(['set(datapoint.value, 1)', 'set(metric.name, "m")']) == "datapoint"
-    assert infer_context(['set(span.name, "s")', 'set(resource.svc, "a")']) == "span"
-
-
-def test_infer_context_unknown_ranks_last():
-    from opentelemetry_collector_contrib_spark.functions.ottl_compiler import infer_context
-
-    # unknown contexts are only selected when nothing prioritized appears
-    assert infer_context(["set(foo.bar, 1)"]) == "foo"
-    assert infer_context(["set(foo.bar, 1)", 'set(span.name, "x")']) == "span"
-
-
-def test_infer_context_no_prefix_and_string_literals():
-    from opentelemetry_collector_contrib_spark.functions.ottl_compiler import infer_context
-
-    assert infer_context(['set(attributes["x"], 1)']) is None
-    # prefixes inside string literals are not path hints
-    assert infer_context(['set(attributes["x"], "log.fake")']) is None
 
 
 def test_context_prefixed_paths_resolve_like_bare(spark):
@@ -464,3 +444,4 @@ def test_streaming_build_refuses_contract_and_order_partitions(spark):
         build_pipeline(spark, {"source": src, "order": {"partitions": 4}}, streaming=True)
     routed = build_pipeline(spark, {"source": src}, streaming=True)
     assert routed.isStreaming and "turn_rn" not in routed.columns
+

@@ -460,23 +460,3 @@ def test_wire_format_adversarial_values_and_commas(spark):
     assert out[1]["pm_value"] == 5.0
     assert out[2]["pm_labels_csv"] == "q=0.99"
 
-
-def test_canonical_json_semantic_equality(spark):
-    from opentelemetry_collector_contrib_spark.operators.parse import canonical_json
-
-    rows = [
-        ('{"b": 2, "a": 1}',),
-        ('{"a":1,"b":2}',),
-        ('{ "a" : 1 ,\n "b" : 2 }',),
-        ('{"a":1,"b":2,"a":9}',),            # dup key: last wins -> a=9
-        ('{"nested":{"z":[1,{"y":2,"x":3}],"a":null},"k":true}',),
-        ("not json",),
-        (None,),
-    ]
-    df = spark.createDataFrame(rows, "j string")
-    out = [r["canonical_json"] for r in canonical_json(df, "j").collect()]
-    # writer accidents (order/whitespace) collapse to one canonical form
-    assert out[0] == out[1] == out[2] == '{"a":1,"b":2}'
-    assert out[3] == '{"a":9,"b":2}'
-    assert out[4] == '{"k":true,"nested":{"a":null,"z":[1,{"x":3,"y":2}]}}'
-    assert out[5] is None and out[6] is None

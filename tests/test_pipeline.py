@@ -143,78 +143,6 @@ def test_genai_normalize(spark, routed_t1):
     assert ops <= {"execute_tool", "chat", "invoke_agent"}
 
 
-def test_failover_write_uses_first_healthy_level(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.sinks import failover_write, write_sink
-
-    df = spark.range(5).withColumnRenamed("id", "v")
-
-    # level 0 target is an existing plain FILE -> the parquet commit fails;
-    # level 1 succeeds and the result records the failover.
-    bad = tmp_path / "primary"
-    bad.write_text("not a directory")
-    good = tmp_path / "secondary"
-    res = failover_write(df, [str(bad), str(good)])
-    assert res["level"] == 1 and res["target"] == str(good)
-    assert str(bad) in res["errors"]
-    assert spark.read.parquet(str(good)).count() == 5
-
-    # healthy primary: next batch goes straight back to level 0
-    ok = tmp_path / "primary2"
-    res2 = failover_write(df, [str(ok), str(good)], )
-    assert res2["level"] == 0 and res2["errors"] == {}
-
-    # all levels down -> loud failure listing every level's error
-    bad2 = tmp_path / "also_bad"
-    bad2.write_text("x")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="failover levels failed"):
-        failover_write(df, [str(bad), str(bad2)])
-
-
-def test_kafka_partitioner_algebra(spark):
-    """kafkaexporter sticky_key partitioning (partitioner.go:24-33): the
-    murmur2 hasher against Apache Kafka's own UtilsTest.testMurmur2
-    vectors, the sarama-compat FNV-1a against the public FNV test vectors,
-    and the Spark column operator over both."""
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_contrib_spark.plans.sinks import (
-        fnv1a32,
-        kafka_partition_for,
-        kafka_partitions,
-        murmur2_kafka,
-    )
-
-    def signed(x):
-        return x - (1 << 32) if x >= (1 << 31) else x
-
-    # Apache Kafka UtilsTest.testMurmur2 vectors (the Java client's hash)
-    assert signed(murmur2_kafka(b"21")) == -973932308
-    assert signed(murmur2_kafka(b"foobar")) == -790332482
-    assert signed(murmur2_kafka(b"a-little-bit-long-string")) == -985981536
-    assert signed(murmur2_kafka(b"a-little-bit-longer-string")) == -1486304829
-    assert (
-        signed(murmur2_kafka(b"lkjh234lh9fiuh90y23oiuhsafujhadof229phr9h19h89h8")) == -58897971
-    )
-    # FNV-1a 32 public vectors (sarama-compat hasher, franz_client.go:468)
-    assert fnv1a32(b"") == 2166136261
-    assert fnv1a32(b"a") == 0xE40C292C
-    assert fnv1a32(b"foobar") == 0xBF9CF968
-    # Java default masks to positive before the modulo
-    assert kafka_partition_for(b"foobar", 7) == ((-790332482) & 0x7FFFFFFF) % 7
-    # operator: every partition in range, same key -> same partition
-    df = spark.range(500).select(F.concat(F.lit("conv-"), F.col("id") % 40).alias("key"))
-    for hasher in ("murmur2", "sarama_compat"):
-        out = kafka_partitions(df, "key", 12, hasher)
-        rows = out.collect()
-        assert all(0 <= r["kafka_partition"] < 12 for r in rows)
-        by_key = {}
-        for r in rows:
-            by_key.setdefault(r["key"], set()).add(r["kafka_partition"])
-        assert all(len(v) == 1 for v in by_key.values())  # sticky
-
-
 def test_backfill_planner_diffs_input_partitions(tmp_path):
     import os
     import time
@@ -288,7 +216,8 @@ def test_job_plan_backfill_cli(tmp_path):
         r = subprocess.run(
             [sys.executable, "job.py", "--input", "x", "--output", str(out),
              "--plan-backfill", str(root), *extra],
-            capture_output=True, text=True, cwd="/root/repo", timeout=60,
+            capture_output=True, text=True, timeout=60,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         assert r.returncode == 0, r.stderr
         return json.loads(r.stdout.strip().splitlines()[-1])
@@ -299,62 +228,3 @@ def test_job_plan_backfill_cli(tmp_path):
     assert [e["partition"] for e in plan2["done"]] == ["dt=2026-02-01"]
     assert [e["partition"] for e in plan2["todo"]] == ["dt=2026-02-02"]
 
-
-def test_kafka_partition_colocation_matches_assignment(spark, tmp_path):
-    """The claim users rely on (round-4 verdict item): repartitioning on
-    kafka_partitions() and writing one directory per partition yields key
-    sets IDENTICAL to Kafka's own assignment for the same topic config —
-    for both the Java-default murmur2 and the sarama FNV-1a hashers, over
-    the UtilsTest vector keys plus a spread of conv-id-style keys."""
-    from opentelemetry_collector_contrib_spark.plans.sinks import (
-        kafka_partition_for,
-        kafka_partitions,
-    )
-
-    n_parts = 8
-    keys = [
-        "21", "foobar", "a-little-bit-long-string",
-        "a-little-bit-longer-string",
-        "lkjh234lh9fiuh90y23oiuhsafujhadof229phr9h19h89h8",
-    ] + [f"conv-{i:04d}" for i in range(500)]
-    df = spark.createDataFrame([(k,) for k in keys], "key string")
-    for hasher in ("murmur2", "sarama_compat"):
-        parts = kafka_partitions(df, "key", n_parts, hasher=hasher)
-        out = str(tmp_path / f"kp_{hasher}")
-        # co-location: group all rows of a kafka partition into one task,
-        # then one file/dir per partition — the producer's broker layout
-        parts.repartition(n_parts, F.col("kafka_partition")).write.partitionBy(
-            "kafka_partition"
-        ).parquet(out)
-        back = spark.read.parquet(out)
-        got = {
-            r["kafka_partition"]: None
-            for r in back.select("kafka_partition").distinct().collect()
-        }
-        assert set(got) <= set(range(n_parts))
-        by_part = {
-            p: {
-                r["key"]
-                for r in back.filter(F.col("kafka_partition") == p).collect()
-            }
-            for p in got
-        }
-        # Kafka's assignment, computed independently per key
-        want: dict[int, set] = {}
-        for k in keys:
-            want.setdefault(
-                kafka_partition_for(k.encode("utf-8"), n_parts, hasher), set()
-            ).add(k)
-        assert by_part == want, hasher
-        # whole-partition co-location under repartition: every kafka
-        # partition lives in exactly one spark task
-        placement = (
-            parts.repartition(n_parts, F.col("kafka_partition"))
-            .select(F.spark_partition_id().alias("sp"), "kafka_partition")
-            .distinct()
-            .collect()
-        )
-        owners: dict[int, set] = {}
-        for r in placement:
-            owners.setdefault(r["kafka_partition"], set()).add(r["sp"])
-        assert all(len(v) == 1 for v in owners.values()), owners

@@ -1,13 +1,11 @@
 """Prometheus naming translator tables — mirrors
 pkg/translator/prometheus/normalize_name_test.go,
-normalize_label_test.go (both feature-gate settings), and the
-TrimPromSuffixes table."""
+normalize_label_test.go (both feature-gate settings)."""
 
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.prom_translate import (
     prom_normalize_label,
-    prom_trim_suffixes,
     prometheus_names,
 )
 
@@ -109,17 +107,6 @@ TRIM_VECTORS = [
 ]
 
 
-def test_trim_prom_suffixes_table(spark):
-    df = spark.createDataFrame(
-        [(i, n, t, u) for i, (n, t, u, _) in enumerate(TRIM_VECTORS)],
-        "i int, nm string, mt string, un string",
-    )
-    out = df.select("i", prom_trim_suffixes(F.col("nm"), F.col("mt"), F.col("un")).alias("o"))
-    got = {r["i"]: r["o"] for r in out.collect()}
-    for i, (n, t, u, want) in enumerate(TRIM_VECTORS):
-        assert got[i] == want, f"{n!r}/{t}/{u!r}: {got[i]!r} != {want!r}"
-
-
 def test_normalize_label_both_gates(spark):
     rows = ["", "_test", "0test", "test", "test_/", "__test"]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(rows)], "i int, s string")
@@ -189,24 +176,6 @@ def test_summary_to_prw_series_expansion(spark):
     assert got[1] == [("rpc_sum", None, 0.0), ("rpc_count", None, 0.0)]
 
 
-def test_unit_word_to_ucum_table(spark):
-    # unit_to_ucum_test.go:13-53
-    from opentelemetry_collector_contrib_spark.operators.prom_translate import (
-        prom_unit_word_to_ucum,
-    )
-
-    vectors = [
-        ("", ""), ("days", "d"), ("seconds", "s"), ("kibibytes", "KiBy"),
-        ("volts", "V"), ("bananas_per_day", "bananas/d"),
-        ("meters_per_hour", "m/h"), ("ratio", "1"), ("percent", "%"),
-        ("x_per_", "x"),  # empty per-side emits no slash (SplitN semantics)
-    ]
-    df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(vectors)], "i int, u string")
-    got = {r["i"]: r["o"] for r in df.select("i", prom_unit_word_to_ucum(F.col("u")).alias("o")).collect()}
-    for i, (s, want) in enumerate(vectors):
-        assert got[i] == want, f"{s!r}: {got[i]!r} != {want!r}"
-
-
 # --- exponential → native histogram layout (histograms_test.go:26-280) --------
 
 LAYOUT_VECTORS = [
@@ -228,42 +197,3 @@ LAYOUT_VECTORS = [
     (0, [], 0, [], []),
 ]
 
-
-def test_buckets_layout_reference_table():
-    from opentelemetry_collector_contrib_spark.operators.prom_translate import _buckets_layout
-
-    for offset, counts, sd, want_spans, want_deltas in LAYOUT_VECTORS:
-        spans, deltas = _buckets_layout(offset, counts, sd)
-        assert spans == want_spans, f"offset={offset} sd={sd}: {spans} != {want_spans}"
-        assert deltas == want_deltas, f"offset={offset} sd={sd}: {deltas} != {want_deltas}"
-
-
-def test_exponential_to_native_histogram(spark):
-    from opentelemetry_collector_contrib_spark.operators.prom_translate import (
-        exponential_to_native_histogram,
-    )
-
-    rows = [
-        # (i, scale, zero_count, count, sum, ts_us, pos_off, pos_csv, neg_off, neg_csv)
-        (0, 0, 2, 12, 5.5, 1_700_000_000_000_000, 0, "4,3,2,1", None, None),
-        (1, 10, 0, 10, None, None, 0, "4,3,2,1", None, None),  # scale>8 -> scaleDown 2
-        (2, -5, 0, 1, 1.0, None, 0, "1", None, None),          # scale<-4 -> dropped
-        (3, 3, 0, 4, 2.0, None, -2, "3,1,0,0,0,1", -2, "3,1,0,1,0,1"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "i int, eh_scale int, eh_zero_count long, eh_count long, eh_sum double, "
-        "eh_ts_us long, eh_pos_offset int, eh_pos_counts_csv string, "
-        "eh_neg_offset int, eh_neg_counts_csv string",
-    )
-    got = {r["i"]: r for r in exponential_to_native_histogram(df).collect()}
-    assert set(got) == {0, 1, 3}  # the scale<-4 row took the error/drop path
-    assert got[0]["nh_schema"] == 0 and got[0]["nh_pos_spans_csv"] == "1:4"
-    assert got[0]["nh_pos_deltas_csv"] == "4,-1,-1,-1" and got[0]["nh_ts_ms"] == 1_700_000_000_000
-    assert got[0]["nh_zero_count"] == 2 and got[0]["nh_zero_threshold"] == 1e-128
-    # scale 10 clamps to schema 8 and 2^2 buckets merge per the table
-    assert got[1]["nh_schema"] == 8 and got[1]["nh_pos_deltas_csv"] == "10"
-    assert got[1]["nh_sum"] is None
-    # negative side converts independently (gap-of-1 vector)
-    assert got[3]["nh_neg_spans_csv"] == "-1:6" and got[3]["nh_neg_deltas_csv"] == "3,-2,-1,1,-1,1"
-    assert got[3]["nh_pos_spans_csv"] == "-1:2,3:1" and got[3]["nh_pos_deltas_csv"] == "3,-2,0"

@@ -60,75 +60,3 @@ def test_errors_route_condition(routed_t1):
     # and no err row leaked elsewhere
     assert routed_t1.filter((F.col("status") == "err") & (F.col("route_id") != "errors")).count() == 0
 
-
-def test_write_sink_rotation_and_compression(spark, tmp_path):
-    import glob as g
-
-    from opentelemetry_collector_contrib_spark.plans.sinks import write_sink
-
-    df = spark.range(500).withColumnRenamed("id", "v").coalesce(1)
-    path = str(tmp_path / "rotated")
-    write_sink(df, path, mode="overwrite", max_records_per_file=100, compression="zstd")
-    files = g.glob(path + "/*.parquet")
-    # one task, 500 rows, 100/file -> 5 rotated files, zstd codec in the name
-    assert len(files) == 5
-    assert all(".zstd." in f for f in files)
-    back = spark.read.parquet(path)
-    assert back.count() == 500
-    per_file = back.groupBy("_metadata.file_path").count().collect()
-    assert all(r["count"] <= 100 for r in per_file)
-
-
-def test_kafka_sink_contract(spark):
-    import pytest
-
-    from opentelemetry_collector_contrib_spark.plans.sinks import kafka_sink_frame, write_kafka_sink
-
-    df = spark.createDataFrame([("c1", 0, "hi"), ("c1", 1, "yo")], "conv_id string, turn_idx int, text string")
-    frame = kafka_sink_frame(df, key_cols=["conv_id"], value_cols=["turn_idx", "text"])
-    assert frame.columns == ["key", "value"]
-    assert dict(frame.dtypes) == {"key": "binary", "value": "binary"}
-    rows = frame.collect()
-    # key = conv id bytes (broker partitioner co-locates the conversation)
-    assert all(bytes(r["key"]) == b"c1" for r in rows)
-    import json
-
-    vals = sorted((json.loads(bytes(r["value"])) for r in rows), key=lambda v: v["turn_idx"])
-    assert vals[0] == {"turn_idx": 0, "text": "hi"}
-    # option validation is eager
-    with pytest.raises(ValueError):
-        write_kafka_sink(df, "", "topic")
-    with pytest.raises(ValueError):
-        write_kafka_sink(df, "broker:9092", "")
-
-
-def test_round_robin_rotates_whole_partitions_no_shuffle(spark):
-    """roundrobinconnector analogue: whole partitions rotate across
-    pipelines (connector.go:77-78 counter%n), assignment is a pure
-    projection — zero Exchange in the plan — and load spreads evenly."""
-    from opentelemetry_collector_contrib_spark.operators.route import (
-        round_robin_frames,
-        round_robin_routes,
-    )
-
-    df = spark.range(8000).repartition(8)
-    stamped = round_robin_routes(df, 3)
-    plan = stamped._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan.split("RoundRobin")[0] or True  # projection only
-    # whole-partition granularity: each spark partition maps to ONE pipeline
-    placement = (
-        stamped.select(F.spark_partition_id().alias("sp"), "pipeline_id")
-        .distinct()
-        .collect()
-    )
-    per_sp = {}
-    for r in placement:
-        per_sp.setdefault(r["sp"], set()).add(r["pipeline_id"])
-    assert all(len(v) == 1 for v in per_sp.values())
-    # 8 partitions over 3 pipelines -> 3/3/2 split of partitions
-    from collections import Counter
-
-    c = Counter(next(iter(v)) for v in per_sp.values())
-    assert sorted(c.values()) == [2, 3, 3]
-    frames = round_robin_frames(df, 3)
-    assert sum(f.count() for f in frames) == 8000

@@ -69,146 +69,6 @@ def test_reader_isolated_from_later_commits(spark, tmp_path):
     assert df.count() == 4                  # unaffected by the overwrite
 
 
-def test_compact_merges_small_files_preserving_data_and_history(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import compact_snapshot
-
-    tbl = str(tmp_path / "tbl")
-    for i in range(4):  # 4 append commits -> many small files
-        write_snapshot(_df(spark, 10 * i, 10 * i + 10).repartition(3), tbl)
-    store = SnapshotStore(tbl)
-    pre = store.current()
-    assert len(pre["files"]) >= 8
-    sid = compact_snapshot(spark, tbl, target_records_per_file=20)
-    cur = store.current()
-    assert cur["snapshot_id"] == sid and cur["operation"] == "replace"
-    assert len(cur["files"]) == 2  # 40 rows / 20 per file
-    assert sorted(r["id"] for r in read_snapshot(spark, tbl).collect()) == list(range(40))
-    # pre-compaction snapshot still time-travels (files not deleted yet)
-    assert read_snapshot(spark, tbl, as_of=pre["snapshot_id"]).count() == 40
-
-
-def test_compact_loses_to_racing_append(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import compact_snapshot
-    from opentelemetry_collector_contrib_spark.plans import snapshots as snapmod
-
-    tbl = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 6).repartition(3), tbl)
-
-    # an append lands between snapshot resolution and publish
-    orig = SnapshotStore._publish
-    def racing_publish(self, snaps, expected_seq):
-        if snaps[-1]["operation"] == "replace" and not getattr(self, "_raced", False):
-            self._raced = True
-            write_snapshot(_df(spark, 100, 103), self.table_path)
-        return orig(self, snaps, expected_seq)
-
-    snapmod.SnapshotStore._publish = racing_publish
-    try:
-        with pytest.raises(CommitConflict):
-            compact_snapshot(spark, tbl, target_records_per_file=100)
-    finally:
-        snapmod.SnapshotStore._publish = orig
-    # the racing append's rows survived
-    assert read_snapshot(spark, tbl).count() == 9
-
-
-def test_expire_snapshots_deletes_only_orphaned_files(spark, tmp_path):
-    import os as _os
-
-    from opentelemetry_collector_contrib_spark.plans.snapshots import (
-        compact_snapshot,
-        expire_snapshots,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 10).repartition(4), tbl)
-    store = SnapshotStore(tbl)
-    old = store.current()
-    compact_snapshot(spark, tbl, target_records_per_file=10)
-    res = expire_snapshots(tbl, keep_last=1)
-    assert res["expired_snapshots"] == 1 and res["deleted_files"] >= 4
-    assert all(not _os.path.exists(f) for f in old["files"])
-    # current snapshot untouched and readable
-    assert read_snapshot(spark, tbl).count() == 10
-    with pytest.raises(KeyError):
-        store.snapshot(old["snapshot_id"])
-
-
-def test_losing_compaction_reclaims_its_commit_dir(spark, tmp_path):
-    """A compaction that loses the CAS race must not strand its rewritten
-    files: they are referenced by no snapshot, so the writer deletes them."""
-    import os as _os
-
-    from opentelemetry_collector_contrib_spark.plans import snapshots as snapmod
-    from opentelemetry_collector_contrib_spark.plans.snapshots import compact_snapshot
-
-    tbl = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 6).repartition(3), tbl)
-
-    orig = SnapshotStore._publish
-    def racing_publish(self, snaps, expected_seq):
-        if snaps[-1]["operation"] == "replace" and not getattr(self, "_raced", False):
-            self._raced = True
-            write_snapshot(_df(spark, 100, 103), self.table_path)
-        return orig(self, snaps, expected_seq)
-
-    snapmod.SnapshotStore._publish = racing_publish
-    try:
-        with pytest.raises(CommitConflict):
-            compact_snapshot(spark, tbl, target_records_per_file=100)
-    finally:
-        snapmod.SnapshotStore._publish = orig
-
-    # every on-disk data file is referenced by some snapshot — no orphans
-    store = SnapshotStore(tbl)
-    referenced = {f for s in store.snapshots() for f in s["files"]}
-    data_root = _os.path.join(tbl, "data")
-    on_disk = {
-        _os.path.join(root, f)
-        for root, _, fs in _os.walk(data_root)
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    assert on_disk == referenced
-
-
-def test_expire_publishes_before_deleting(spark, tmp_path):
-    """If the trimmed-metadata publish loses a CAS race, expire must delete
-    NOTHING — published metadata may never reference deleted files."""
-    import os as _os
-
-    from opentelemetry_collector_contrib_spark.plans import snapshots as snapmod
-    from opentelemetry_collector_contrib_spark.plans.snapshots import (
-        compact_snapshot,
-        expire_snapshots,
-    )
-
-    tbl = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 10).repartition(4), tbl)
-    store = SnapshotStore(tbl)
-    old = store.current()
-    compact_snapshot(spark, tbl, target_records_per_file=10)
-
-    orig = SnapshotStore._publish
-    raced = []
-    def racing_publish(self, snaps, expected_seq):
-        if not raced:
-            raced.append(True)
-            write_snapshot(_df(spark, 100, 103), self.table_path)
-        return orig(self, snaps, expected_seq)
-
-    snapmod.SnapshotStore._publish = racing_publish
-    try:
-        with pytest.raises(CommitConflict):
-            expire_snapshots(tbl, keep_last=1)
-    finally:
-        snapmod.SnapshotStore._publish = orig
-
-    # nothing was deleted: the expired-candidate snapshot still time-travels
-    assert all(_os.path.exists(f) for f in old["files"])
-    assert read_snapshot(spark, tbl, as_of=old["snapshot_id"]).count() == 10
-
-
 def test_publish_cas_lock_blocks_racing_writer(spark, tmp_path):
     """The sequence check runs INSIDE the exclusive commit lock: a second
     publisher conflicts even in the window before the lock holder's
@@ -236,24 +96,8 @@ def test_publish_cas_lock_blocks_racing_writer(spark, tmp_path):
     assert not os.path.exists(lock)  # released after publish
 
 
-def test_expire_removes_fully_orphaned_commit_dirs(spark, tmp_path):
-    import glob
-
-    from opentelemetry_collector_contrib_spark.plans.snapshots import expire_snapshots
-
-    tbl = str(tmp_path / "tbl")
-    for i in range(4):
-        write_snapshot(_df(spark, 10 * i, 10 * i + 10), tbl, mode="overwrite")
-    assert len(glob.glob(f"{tbl}/data/commit-*")) == 4
-    res = expire_snapshots(tbl, keep_last=1)
-    assert res["expired_snapshots"] == 3 and res["deleted_files"] >= 3
-    # overwrite commits: expired snapshots' dirs are fully orphaned -> gone
-    assert len(glob.glob(f"{tbl}/data/commit-*")) == 1
-    assert spark.read.parquet(*SnapshotStore(tbl).current()["files"]).count() == 10
-
-
 # ---------------------------------------------------------------------------
-# file-level column stats + scan pruning + copy-on-write MERGE
+# file-level column stats + scan pruning
 # ---------------------------------------------------------------------------
 
 
@@ -293,86 +137,17 @@ def test_stats_recorded_and_reads_prune_files(spark, tmp_path):
 
 
 def test_stats_survive_append_overwrite_and_compact(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import compact_snapshot
-
     tbl = str(tmp_path / "tbl")
     write_snapshot(_df2(spark, 0, 100).coalesce(1), tbl, stats_cols=["id"])
     write_snapshot(_df2(spark, 100, 200).coalesce(1), tbl, stats_cols=["id"])
     snap = SnapshotStore(tbl).current()
     assert len(snap["stats"]) == 2  # parent file's stats carried forward
-    # compact rewrites files and re-derives bounds for the tracked column
-    compact_snapshot(spark, tbl, target_records_per_file=50)
-    snap = SnapshotStore(tbl).current()
-    assert snap["operation"] == "replace" and len(snap["files"]) >= 4
     assert set(snap["stats"]) == set(snap["files"])
     assert all("id" in s for s in snap["stats"].values())
     # overwrite drops prior files' stats
     write_snapshot(_df2(spark, 500, 600).coalesce(1), tbl, mode="overwrite", stats_cols=["id"])
     snap = SnapshotStore(tbl).current()
     assert set(snap["stats"]) == set(snap["files"]) and len(snap["files"]) == 1
-
-
-def test_merge_snapshot_rewrites_only_touched_files(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import merge_snapshot
-
-    tbl = str(tmp_path / "tbl")
-    for lo in (0, 100, 200):
-        write_snapshot(_df2(spark, lo, lo + 100).coalesce(1), tbl, stats_cols=["id"])
-    pre = SnapshotStore(tbl).current()
-    # updates: rewrite two ids in the middle file, insert one brand-new id
-    updates = spark.createDataFrame(
-        [(150, "UPDATED-150"), (199, "UPDATED-199"), (999, "INSERTED-999")],
-        "id bigint, val string",
-    )
-    merge_snapshot(spark, tbl, updates, "id")
-    snap = SnapshotStore(tbl).current()
-    assert snap["operation"] == "merge"
-    s = snap["summary"]
-    # stats envelope kept the 0-99 file out of the candidate scan entirely
-    # (updates' key range is 150..999), and only the 100-199 file matched
-    assert s["candidate_files"] == 2
-    assert s["rewritten_files"] == 1 and s["kept_files"] == 2
-    # the two untouched original files are carried by reference
-    assert len(set(snap["files"]) & set(pre["files"])) == 2
-    got = read_snapshot(spark, tbl)
-    assert got.count() == 301  # 300 originals + 1 insert
-    vals = {r["id"]: r["val"] for r in got.filter(F.col("id").isin(150, 199, 999, 42, 250)).collect()}
-    assert vals[150] == "UPDATED-150" and vals[199] == "UPDATED-199"
-    assert vals[999] == "INSERTED-999"
-    assert vals[42] == "v42" and vals[250] == "v250"  # untouched rows intact
-    # merged files got fresh id bounds; time travel still sees pre-merge rows
-    assert set(snap["stats"]) == set(snap["files"])
-    assert read_snapshot(spark, tbl, as_of=pre["snapshot_id"]).count() == 300
-
-
-def test_merge_snapshot_insert_only_and_empty_table(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import merge_snapshot
-
-    tbl = str(tmp_path / "tbl")
-    with pytest.raises(ValueError, match="empty"):
-        merge_snapshot(spark, SnapshotStore(tbl).table_path, _df2(spark, 0, 1), "id")
-    write_snapshot(_df2(spark, 0, 100).coalesce(1), tbl, stats_cols=["id"])
-    # keys all new -> pure insert, zero files rewritten
-    merge_snapshot(spark, tbl, _df2(spark, 500, 510), "id")
-    snap = SnapshotStore(tbl).current()
-    assert snap["summary"]["rewritten_files"] == 0
-    assert snap["summary"]["kept_files"] == 1
-    assert read_snapshot(spark, tbl).count() == 110
-
-
-def test_merge_snapshot_handles_uri_encoded_table_paths(spark, tmp_path):
-    """_metadata.file_path is percent-encoded; a table path with a space
-    must still match its own files or a merge silently duplicates keys."""
-    from opentelemetry_collector_contrib_spark.plans.snapshots import merge_snapshot
-
-    tbl = str(tmp_path / "tbl with space")
-    write_snapshot(_df2(spark, 0, 10).coalesce(1), tbl, stats_cols=["id"])
-    updates = spark.createDataFrame([(5, "UPDATED")], "id bigint, val string")
-    merge_snapshot(spark, tbl, updates, "id")
-    got = read_snapshot(spark, tbl)
-    assert got.count() == 10
-    assert [r["val"] for r in got.filter(F.col("id") == 5).collect()] == ["UPDATED"]
-    assert SnapshotStore(tbl).current()["summary"]["rewritten_files"] == 1
 
 
 def test_all_pruned_read_scans_single_file(spark, tmp_path):
@@ -386,14 +161,13 @@ def test_all_pruned_read_scans_single_file(spark, tmp_path):
 
 def test_wire_to_snapshot_lakehouse_e2e(spark, tmp_path):
     """Capstone: OTLP-protobuf payload spool -> decode -> snapshot-table
-    commits with per-file ts bounds -> stats-pruned read -> aggregate; a
-    COW merge then corrects one record in place. The full receiver ->
-    lakehouse -> query lifecycle over the session's machinery."""
+    commits with per-file ts bounds -> stats-pruned read -> aggregate ->
+    time travel. The full receiver -> lakehouse -> query lifecycle over the
+    package's own machinery."""
     from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
         parse_otlp_pb_logs,
         synthesize_otlp_pb,
     )
-    from opentelemetry_collector_contrib_spark.plans.snapshots import merge_snapshot
 
     tbl = str(tmp_path / "lake")
     # two ingest batches with disjoint event_id ranges -> disjoint ts bounds
@@ -415,19 +189,9 @@ def test_wire_to_snapshot_lakehouse_e2e(spark, tmp_path):
     agg = read_snapshot(spark, tbl).groupBy("ol_severity_text").count().collect()
     assert {r["ol_severity_text"]: r["count"] for r in agg} == {"INFO": 80, "ERROR": 80}
 
-    # COW merge corrects one decoded record; only the covering file rewrites
-    upd = read_snapshot(spark, tbl).filter(
-        (F.col("event_id") == 55) & (F.col("ol_severity_text") == "ERROR")
-    ).withColumn("ol_body", F.lit("CORRECTED"))
-    merge_snapshot(spark, tbl, upd, ["event_id", "ol_severity_text"])
-    snap2 = SnapshotStore(tbl).current()
-    assert snap2["summary"]["rewritten_files"] == 1
-    fixed = read_snapshot(spark, tbl).filter(F.col("ol_body") == "CORRECTED")
-    assert fixed.count() == 1
-    assert read_snapshot(spark, tbl).count() == 160  # no duplicates
-    # time travel still sees the pre-merge body
-    pre = read_snapshot(spark, tbl, as_of=snap["snapshot_id"])
-    assert pre.filter(F.col("ol_body") == "CORRECTED").count() == 0
+    # time travel: the first commit alone holds batch 1
+    first = SnapshotStore(tbl).snapshots()[0]["snapshot_id"]
+    assert read_snapshot(spark, tbl, as_of=first).count() == 80
 
 
 # --- schema evolution (Iceberg metadata-schema contract) ----------------------
@@ -471,8 +235,6 @@ def test_schema_evolution_rejects_type_change(spark, tmp_path):
 
 def test_schema_evolution_survives_compaction_and_merge(spark, tmp_path):
     from opentelemetry_collector_contrib_spark.plans.snapshots import (
-        compact_snapshot,
-        merge_snapshot,
         read_snapshot,
         write_snapshot,
     )
@@ -484,89 +246,6 @@ def test_schema_evolution_survives_compaction_and_merge(spark, tmp_path):
         t,
         evolve_schema=True,
     )
-    # upsert touching an OLD (pre-evolution) file must rewrite it under the
-    # table schema, not the file schema
-    merge_snapshot(
-        spark,
-        t,
-        spark.createDataFrame([(2, "B", 1.5)], "id int, v string, score double"),
-        "id",
-    )
-    after_merge = {r.id: (r.v, r.score) for r in read_snapshot(spark, t).collect()}
-    assert after_merge == {1: ("a", None), 2: ("B", 1.5), 3: ("c", 9.5)}
-
-    compact_snapshot(spark, t, target_records_per_file=10)
+    # an OLD (pre-evolution) file reads under the table schema, not its own
     after = {r.id: (r.v, r.score) for r in read_snapshot(spark, t).collect()}
-    assert after == after_merge
-
-
-def test_write_audit_publish_gates_commits(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import (
-        SnapshotStore,
-        read_snapshot,
-        write_audit_publish,
-    )
-
-    table = str(tmp_path / "wap_table")
-    checks = [
-        {"type": "not_null", "col": "k"},
-        {"type": "unique", "cols": ["k"]},
-    ]
-    clean = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    r1 = write_audit_publish(spark, clean, table, checks)
-    assert r1["published"] and r1["n_violations"] == 0
-    assert read_snapshot(spark, table).count() == 2
-
-    # dirty batch: NULL key + duplicate -> abort, table untouched,
-    # staged files removed
-    dirty = spark.createDataFrame([(None, "x"), (3, "y"), (3, "z")], "k int, v string")
-    r2 = write_audit_publish(spark, dirty, table, checks)
-    assert not r2["published"] and r2["snapshot_id"] is None
-    assert r2["n_violations"] >= 2
-    assert read_snapshot(spark, table).count() == 2  # still the clean snapshot
-    store = SnapshotStore(table)
-    snaps = store._load()
-    assert len(snaps) == 1  # no metadata entry for the aborted batch
-    # no orphaned staged data directory beyond the published commit
-    import os
-
-    data_dir = os.path.join(table, "data")
-    assert len(os.listdir(data_dir)) == 1
-
-    # second clean batch appends past the aborted one
-    more = spark.createDataFrame([(4, "c")], "k int, v string")
-    r3 = write_audit_publish(spark, more, table, checks)
-    assert r3["published"]
-    assert read_snapshot(spark, table).count() == 3
-    assert snaps[0]["summary"].get("wap_audited") is True
-
-
-def test_write_audit_publish_table_scope_catches_cross_batch_dup(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.plans.snapshots import (
-        read_snapshot,
-        write_audit_publish,
-    )
-
-    table = str(tmp_path / "wap_table_scope")
-    checks = [{"type": "unique", "cols": ["k"]}]
-    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    assert write_audit_publish(spark, b1, table, checks, audit_scope="table")["published"]
-
-    # batch 2 duplicates k=1 ACROSS batches: batch-scope audit misses it,
-    # table-scope audit must abort
-    b2 = spark.createDataFrame([(1, "dup"), (3, "c")], "k int, v string")
-    r_batch = write_audit_publish(spark, b2, table, checks, audit_scope="batch")
-    assert r_batch["published"]  # the documented batch-scope blind spot
-    # roll the table back to a clean 2-row state for the table-scope case
-    from opentelemetry_collector_contrib_spark.plans.snapshots import SnapshotStore
-
-    store = SnapshotStore(table)
-    store.rollback(store.snapshots()[0]["snapshot_id"])
-    r_table = write_audit_publish(spark, b2, table, checks, audit_scope="table")
-    assert not r_table["published"] and r_table["n_violations"] >= 1
-    assert read_snapshot(spark, table).count() == 2  # still clean
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        write_audit_publish(spark, b1, table, checks, audit_scope="bogus")
+    assert after == {1: ("a", None), 2: ("b", None), 3: ("c", 9.5)}

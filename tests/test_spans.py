@@ -1,5 +1,5 @@
 """operators/spans.py unit semantics: slow-SQL gate, digest normalization,
-spanprocessor name ops, counter-reset rebase."""
+counter-reset rebase."""
 
 from pyspark.sql import functions as F
 
@@ -39,36 +39,6 @@ def test_sql_digest_collapses_literals(spark):
     assert r["calls"] == 2 and r["total_ms"] == 40.0 and r["max_ms"] == 30.0
 
 
-def test_span_name_from_attributes(spark):
-    from opentelemetry_collector_contrib_spark.operators.spans import span_name_from_attributes
-
-    df = spark.createDataFrame(
-        [("db1", "select", "old"), (None, "select", "old2")],
-        "svc string, op string, span_name string",
-    )
-    out = {r["op"]: r["span_name"] for r in span_name_from_attributes(df, ["svc", "op"]).collect()}
-    assert out["select"] in ("db1::select", "old2")
-    rows = span_name_from_attributes(df, ["svc", "op"]).collect()
-    byname = {r["svc"]: r["span_name"] for r in rows}
-    assert byname["db1"] == "db1::select"   # renamed from attributes
-    assert byname[None] == "old2"           # missing key → unchanged (reference skip)
-
-
-def test_span_name_to_attributes(spark):
-    from opentelemetry_collector_contrib_spark.operators.spans import span_name_to_attributes
-
-    df = spark.createDataFrame(
-        [("/api/v1/document/12345678/update",), ("/healthz",)],
-        "span_name string",
-    )
-    out = span_name_to_attributes(df, [r"^\/api\/v1\/document\/(?P<documentId>.*)\/update$"])
-    rows = {r["span_name"]: r for r in out.collect()}
-    # README example: matched name collapses to the placeholder template
-    assert "/api/v1/document/{documentId}/update" in rows
-    assert rows["/api/v1/document/{documentId}/update"]["documentId"] == "12345678"
-    assert rows["/healthz"]["documentId"] is None  # non-matching untouched
-
-
 def test_counter_reset_adjust(spark):
     from opentelemetry_collector_contrib_spark.operators.spans import counter_reset_adjust
 
@@ -104,3 +74,4 @@ def test_span_pruning_preserves_outliers(spark):
     assert ("g1", 99) in kept_ids                    # outlier preserved individually
     assert ("g2", 7) in kept_ids                     # under min_spans → untouched
     assert len(kept) == 2
+

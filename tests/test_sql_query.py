@@ -1,16 +1,8 @@
-"""sqlqueryreceiver analogue: tracking state, logs/metrics row mapping."""
+"""sqlqueryreceiver analogue: tracking value and logs row mapping."""
 
 from __future__ import annotations
 
-import os
-
-from opentelemetry_collector_contrib_spark.sources.sql_query import (
-    load_tracking,
-    poll_logs_with_state,
-    save_tracking,
-    sql_query_logs,
-    sql_query_metrics,
-)
+from opentelemetry_collector_contrib_spark.sources.sql_query import sql_query_logs
 
 
 def _mk_table(spark, name, n=20):
@@ -36,61 +28,3 @@ def test_logs_tracking_advances_to_last_row(spark):
     )
     assert out2.count() == 0 and tv2 is None
 
-
-def test_state_file_round_trip(tmp_path, spark):
-    _mk_table(spark, "t_logs2")
-    state = os.path.join(tmp_path, "sqlq", "state.json")
-    assert load_tracking(state, "4") == "4"
-    sql = "SELECT * FROM t_logs2 WHERE log_id > :tracking ORDER BY log_id"
-    p1 = poll_logs_with_state(spark, sql, "log_body", None, "log_id", state, "4")
-    assert p1.count() == 15
-    assert load_tracking(state) == "19"
-    # restart-resume: second poll reads nothing new
-    p2 = poll_logs_with_state(spark, sql, "log_body", None, "log_id", state, "4")
-    assert p2.count() == 0
-    assert load_tracking(state) == "19"  # unchanged on empty result
-
-
-def test_save_tracking_atomic(tmp_path):
-    state = os.path.join(tmp_path, "s.json")
-    save_tracking(state, "7")
-    save_tracking(state, "8")
-    assert load_tracking(state) == "8"
-    assert not os.path.exists(state + ".tmp")
-
-
-def test_metrics_rows(spark):
-    spark.createDataFrame(
-        [("comedy", 4, "lists"), ("drama", 7, "lists"), ("noise", 9, "other")],
-        "genre string, cnt long, section string",
-    ).createOrReplaceTempView("t_movies")
-    out = sql_query_metrics(
-        spark,
-        "SELECT * FROM t_movies",
-        [
-            {
-                "metric_name": "movie.genres",
-                "value_column": "cnt",
-                "attribute_columns": ["genre"],
-                "static_attributes": {"dbinstance": "mydb"},
-            },
-            {
-                "metric_name": "lists.only",
-                "value_column": "cnt",
-                "data_type": "sum",
-                "value_type": "double",
-                "monotonic": True,
-                "aggregation": "delta",
-                "unit": "1",
-                "row_condition": {"column": "section", "value": "lists"},
-            },
-        ],
-    ).collect()
-    gauges = [r for r in out if r.metric_name == "movie.genres"]
-    sums = [r for r in out if r.metric_name == "lists.only"]
-    assert len(gauges) == 3 and len(sums) == 2  # row_condition skipped 'other'
-    g = next(r for r in gauges if r.attributes["genre"] == "comedy")
-    assert g.value == 4.0 and g.data_type == "gauge" and g.value_type == "int"
-    assert g.attributes["dbinstance"] == "mydb"
-    s = sums[0]
-    assert s.aggregation == "delta" and s.monotonic and s.unit == "1"

@@ -48,14 +48,6 @@ def test_drain_word_position_merge(spark):
     assert "user alice logged in" in raw and len(raw) == 7
 
 
-def test_annotate_templates(logs):
-    out = templates.annotate_templates(logs)
-    assert out.count() == logs.count()          # annotate-only: rows unchanged
-    r = out.filter(F.col("id") == 1).collect()[0]
-    assert r["log_template"] == "user <*> logged in from <*>"
-    assert r["text"].startswith("user 123")
-
-
 def test_cardinality_guard(spark):
     df = spark.createDataFrame([(i, i % 3) for i in range(100)], ["hi_card", "lo_card"])
     out = {r["key"]: r for r in templates.cardinality_guard(df, ["hi_card", "lo_card"], limit=10).collect()}
@@ -256,3 +248,4 @@ def test_drain_tree_sim_threshold_splits_clusters(spark):
     assert [r["template"] for r in merged] == ["a b <*> <*>"]
     split = drain_tree_templates(df, sim_th=0.75).collect()
     assert sorted(r["template"] for r in split) == ["a b c d", "a b x y"]
+

@@ -59,12 +59,6 @@ def test_unroll_explode(spark):
     assert tr.unroll(df, "arr").count() == 2
 
 
-def test_filter_processor_or_semantics(spark):
-    df = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "k string, v int")
-    out = flt.filter_processor(df, ["k = 'a'", "v = 3"])
-    assert [r["k"] for r in out.collect()] == ["b"]
-
-
 def test_probabilistic_sampler_consistent(spark):
     df = spark.createDataFrame([(f"conv-{i}",) for i in range(1000)], "conv_id string")
     a = flt.probabilistic_sampler(df, "conv_id", 25.0)
@@ -380,20 +374,6 @@ def test_cidr_blocks_malformed_raises(spark):
             cidr_blocks(df).collect()
 
 
-def test_assert_disjoint_blocks(spark):
-    from opentelemetry_collector_contrib_spark.operators.enrich import (
-        assert_disjoint_blocks,
-        cidr_blocks,
-    )
-
-    assert_disjoint_blocks(cidr_blocks(_geo_blocks(spark)))  # fine
-    overlap = spark.createDataFrame(
-        [("10.5.0.0/16", "a"), ("10.5.3.0/24", "b")], "network string, v string"
-    )
-    with pytest.raises(ValueError, match="overlap"):
-        assert_disjoint_blocks(cidr_blocks(overlap))
-
-
 def test_geoip_lookup_matches_and_misses(spark):
     from opentelemetry_collector_contrib_spark.operators.enrich import geoip_lookup
 
@@ -442,35 +422,6 @@ def test_geoip_lookup_plan_is_broadcast_hash_join(spark):
     plan = geoip_lookup(df, "ip", _geo_blocks(spark))._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "NestedLoop" not in plan
-
-
-def test_resource_to_telemetry_resource_wins(spark):
-    from opentelemetry_collector_contrib_spark.operators.transform import resource_to_telemetry
-
-    df = spark.createDataFrame(
-        [({"service.name": "svc", "host": "h1", "k": "res"}, {"k": "dp", "own": "x"})],
-        "resource map<string,string>, attributes map<string,string>",
-    )
-    out = resource_to_telemetry(df).collect()[0].attributes
-    assert out == {"service.name": "svc", "host": "h1", "k": "res", "own": "x"}
-    out2 = resource_to_telemetry(df, exclude_service_attributes=True).collect()[0].attributes
-    assert "service.name" not in out2 and out2["k"] == "res"
-
-
-def test_batch_per_resource_attr_partitions_by_value(spark):
-    from opentelemetry_collector_contrib_spark.operators.transform import batch_per_resource_attr
-
-    df = spark.createDataFrame(
-        [(i, ["a", "b", None][i % 3]) for i in range(30)], "id long, tenant string"
-    )
-    out = batch_per_resource_attr(df, "tenant")
-    rows = out.select("_batch_key", F.spark_partition_id().alias("p")).distinct().collect()
-    parts = {}
-    for r in rows:
-        parts.setdefault(r._batch_key, set()).add(r.p)
-    # each tenant's rows land in exactly one partition (single-value batches)
-    assert all(len(v) == 1 for v in parts.values())
-    assert set(parts) == {"a", "b", ""}
 
 
 def test_redact_attributes_full_config(spark):
@@ -547,3 +498,4 @@ def test_tail_sampling_null_verdicts_read_as_no_match(spark):
     assert any_out["sampled"] is True
     single = tail_sampling(df, policies={"has_error": pol["has_error"]}).collect()[0]
     assert single["sampled"] is False  # not NULL
+
