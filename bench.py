@@ -570,12 +570,6 @@ def main() -> None:
                 lambda _k, v: v.isNotNull(),
             ).alias("labels")
         )
-        # engine choice measured both ways (BENCH/AB_r5.md): the round-5
-        # two-phase auto path is 1.35x WHEN the label map is materialized
-        # (persisted / scanned — the production shape), but ~0.75x on
-        # THIS query, whose map is an in-plan synthetic expression — the
-        # phase boundary rebuilds map->entries->map in interpreted HOF
-        # land. q26 therefore stays on the entries engine.
         q26 = relabel(labeled, _RELABEL_RULES).select(labels_csv(F.col("labels")).alias("l"))
         timed("q26_prom_relabel", lambda: force(q26))
 

@@ -26,12 +26,10 @@ the DuckDB oracle reproduces signatures, buckets, and verdicts exactly.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import h60, tokens, word_shingles
+from .textstats import h60, tokens
 
 # ---------------------------------------------------------------------------
 # exact dedup (hash-groupBy)

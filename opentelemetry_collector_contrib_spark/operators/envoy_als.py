@@ -18,8 +18,6 @@ mapInPandas over the payload scan, malformed messages drop, zero shuffle.
 
 from __future__ import annotations
 
-import struct
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -20,7 +20,6 @@ new wire shape (varint seconds+nanos)."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator  # noqa: F401 — via _pb_map
 
 import pandas as pd
 from pyspark.sql import DataFrame

@@ -23,8 +23,6 @@ hash aggregation on their group key — map-side partial agg handles 100 TB.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")

@@ -31,20 +31,10 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Callable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text", media_type: str = "image/png") -> DataFrame:
     """Build the multimodal envelope from a text column (fixture path: the

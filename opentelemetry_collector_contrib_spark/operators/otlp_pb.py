@@ -379,7 +379,7 @@ def _attrs_csv_col(attrs):
 
 
 def parse_otlp_pb_logs_jvm(df: DataFrame, source: str = "payload") -> DataFrame:
-    """JVM-side LogsData decode via spark-protobuf: same output SCHEMA as
+    r"""JVM-side LogsData decode via spark-protobuf: same output SCHEMA as
     parse_otlp_pb_logs (one row per LogRecord, resource and scope
     flattened, malformed payloads dropped via PERMISSIVE-null).
 

@@ -21,30 +21,44 @@ anchored ``^(?:re)$``), and then by ``action``:
                      the expanded replacement name (last write wins)
   - ``labeldrop``/``labelkeep`` filter label names by regex
 
-Everything compiles to native map/regex Column expressions at plan-build
-time — zero Python in the hot path, no shuffle, so a 10^12-row scrape
-stream relabels at scan speed. Labels ride in a ``map<string,string>``
-column.
+Everything compiles to native Column expressions at plan-build time —
+zero Python in the hot path, no shuffle, so a 10^12-row scrape stream
+relabels at scan speed. Labels ride in a ``map<string,string>`` column,
+but inside the chain they are split in two: every label a rule names (a
+source, or a literal target) is a string column, extracted once (NULL
+means absent), and the static actions rewrite those columns with codegen
+when-chains. The labels no rule names stay in a ``rest`` map, which only
+the dynamic actions (labelmap, labeldrop/labelkeep, a replace with a
+group-ref target) read; they test each column by name with a regex gate
+on ``F.lit(name)`` that Catalyst folds to a constant. The map is
+reassembled once at the end, sorted by label name — Prometheus's own
+``labels.Labels`` order.
 
-Two Catalyst hazards shape the implementation (both measured, both
-fatal at depth ~7 without the countermeasures):
+Three Catalyst hazards shape the implementation (all measured, all fatal
+on long chains without the countermeasures):
 
-  1. **Multiplicative inlining.** A rule's expression naturally
-     references the incoming label map several times (joined source
-     value, cleared map, fallback branch). When Catalyst collapses the
-     per-rule projections, each reference re-inlines the whole upstream
-     chain — ~5 refs/rule × 9 rules ≈ 2M-node plans. Fix: every rule
-     binds the incoming map ONCE as a higher-order-function lambda
-     variable (``element_at(transform(array(labels), l -> rule(l)), 1)``)
-     — lambda-variable references are leaf nodes Catalyst never expands,
-     so the chain grows additively, not multiplicatively.
+  1. **Multiplicative inlining.** A rule's expression references its
+     inputs several times (joined source value, match gate, fallback
+     branch, and a dynamic rule reads every column and the ``rest`` map
+     once per column or hit). When Catalyst collapses the per-rule
+     projections, each reference re-inlines the whole upstream chain.
   2. **Filter pushdown blowup.** A keep/drop Filter above the projection
      stack gets pushed through it, substituting the full labels
      expression into the predicate at every level. A nondeterministic
-     pass-through column (``rand()`` — streaming-legal, unlike
-     monotonically_increasing_id) right under each Filter pins it in
-     place; the column is dropped immediately and results are
-     unchanged.
+     column (``rand()`` — streaming-legal, unlike
+     monotonically_increasing_id) right under each Filter, which the
+     predicate reads (``rand() >= 0``, always true), pins it in place; an
+     unread one is pruned away and the Filter pushed down regardless.
+  3. **State projection.** The cure for hazard 1: after the extraction
+     and before each dynamic rule the state (the label columns plus
+     ``rest``) is projected into real columns, and a dynamic rule projects
+     its own many-times-read values (the expanded name, the sorted hits)
+     too. Catalyst keeps a projection whose expressions are read more
+     than once, so the plan grows linearly with the chain; without it,
+     repeated labelmaps grow it several-fold per copy of the chain. The
+     static rules between them are not projected: each projection is
+     analyzed again on every DataFrame call, and a per-rule one costs
+     the chain's build about 0.3 s, more than it saves.
 
 Replacement strings support RE2-style ``$1``/``${1}`` group references
 (translated to Java's ``$1``); a literal ``$`` in a replacement is not
@@ -86,19 +100,6 @@ def _java_repl(repl: str, n_groups: int | None = None) -> str:
             r"\$(\d+)", lambda m: "" if int(m.group(1)) > n_groups else m.group(0), out
         )
     return out
-
-
-from ._catalyst import bind_once as _once  # hazard 1: see module docstring
-
-
-def _joined(l: Column, source_labels: list[str], sep: str) -> Column:
-    """Prometheus joins source label values with separator; a label that
-    is absent contributes the empty string."""
-    if not source_labels:
-        return F.lit("")
-    return F.concat_ws(
-        sep, *[F.coalesce(F.element_at(l, F.lit(s)), F.lit("")) for s in source_labels]
-    )
 
 
 def _expand(val: Column, anchored: str, template: str, n_groups: int | None = None) -> Column:
@@ -222,481 +223,173 @@ def _hashmod(val: Column, modulus: int) -> Column:
     return F.pmod(v, F.lit(modulus).cast("decimal(38,0)")).cast("bigint").cast("string")
 
 
-def relabel(
-    df: DataFrame,
-    rules: list[dict],
-    labels_col: str = "labels",
-    engine: str = "entries",
-) -> DataFrame:
+_STATE = "__rl_"  # prefix of the chain's working columns, dropped at the end
+_REST = _STATE + "rest"
+
+
+def _template_prefix(template: str) -> str:
+    """Literal text every expansion of a replacement template starts with:
+    everything before the first group ref. A backslash (Java's replacement
+    escape) makes the prefix unsure, so it yields "" (no narrowing)."""
+    prefix = template.split("$", 1)[0]
+    return "" if "\\" in prefix else prefix
+
+
+def relabel(df: DataFrame, rules: list[dict], labels_col: str = "labels") -> DataFrame:
     """Apply a relabel_configs chain to ``labels_col``.
 
     Each rule is a dict with Prometheus's keys (``action``,
     ``source_labels``, ``separator``, ``regex``, ``target_label``,
     ``replacement``, ``modulus``); omitted keys take Prometheus's
     defaults. keep/drop/keepequal/dropequal filter rows; every other
-    action rewrites the label map in place.
-
-    engine="entries" (default, round 4): the map is converted ONCE to an
-    array<struct<k,v>> at chain start, every rule runs as array
-    filter/concat algebra, and the result folds back to a map at the end
-    — measured ~1.7× faster than per-rule map_filter/map_concat rebuilds
-    (map_concat pays the duplicate-key machinery on every rule). Rule
-    order, label order, and all semantics are identical to
-    engine="map" (the original per-rule map rewriting, kept both as the
-    reference implementation and for callers composing on the map mid-
-    chain); an equivalence pytest runs the full action matrix on both.
-    """
-    if engine == "auto":
-        # columnar when the whole chain is statically compilable (raises
-        # before touching df otherwise); else TWO-PHASE (round 5): the
-        # maximal static PREFIX runs columnar and only the dynamic suffix
-        # pays the entries engine — scrape configs conventionally front-
-        # load their static replace/hashmod/keep rules before labelmap/
-        # labeldrop cleanup, so the prefix is usually most of the chain.
-        # Phase boundary: the columnar prefix re-emits the map CANONICALLY
-        # SORTED (its documented contract), so the composed output's label
-        # order is canonical, values identical to entries-only.
-        # Measured trade-off (BENCH/AB_r5.md): ~1.35x over entries when
-        # the label map is a MATERIALIZED attribute (scan/persist — the
-        # production shape), ~0.75x when the map is itself an in-plan
-        # expression (the boundary rebuilds map→entries→map inside
-        # interpreted HOF evaluation). Callers relabeling an
-        # expression-built map should pass engine="entries" explicitly.
-        try:
-            return _relabel_columnar(df, rules, labels_col)
-        except ValueError:
-            pass
-        k = _static_prefix_len(rules)
-        if k >= 2:
-            head = _relabel_columnar(df, rules[:k], labels_col)
-            return _relabel_entries(head, rules[k:], labels_col)
-        return _relabel_entries(df, rules, labels_col)
-    if engine == "entries":
-        return _relabel_entries(df, rules, labels_col)
-    if engine == "columnar":
-        return _relabel_columnar(df, rules, labels_col)
-    if engine != "map":
-        raise ValueError(f"unknown relabel engine {engine!r}")
-
-    def _filtered(frame: DataFrame, pred: Column) -> DataFrame:
-        # nondeterministic pass-through pins the Filter above the
-        # projection stack (hazard 2 in the module docstring)
-        b = frame.withColumn("__rl_barrier", F.rand())
-        return b.filter(pred).drop("__rl_barrier")
-
-    for raw in rules:
-        rule = {**_DEFAULTS, **raw}
-        action = rule["action"]
-        anchored = _anchor(rule["regex"])
-        srcs = rule.get("source_labels", [])
-        sep = rule["separator"]
-        labels = F.col(labels_col)
-
-        if action in ("keep", "drop"):
-            matched = _once(
-                labels,
-                lambda l: _match_gate(_joined(l, srcs, sep), anchored, rule["regex"]),
-            )
-            df = _filtered(df, matched if action == "keep" else ~matched)
-        elif action in ("keepequal", "dropequal"):
-            eq = _once(
-                labels,
-                lambda l: _joined(l, srcs, sep)
-                == F.coalesce(F.element_at(l, F.lit(rule["target_label"])), F.lit("")),
-            )
-            df = _filtered(df, eq if action == "keepequal" else ~eq)
-        elif action == "replace":
-            n_groups = _group_count(rule["regex"])
-            tgt_tpl = rule["target_label"]
-            rep_tpl = rule["replacement"]
-            # templates without group refs are compile-time constants —
-            # skip the per-row regexp_replace expansion (and for a literal
-            # target name, evaluate Prometheus's target.IsValid() gate now)
-            tgt_literal = "$" not in tgt_tpl
-            rep_literal = "$" not in rep_tpl
-            if tgt_literal and not _is_valid_label_name(tgt_tpl):
-                continue  # invalid literal target -> rule is always a no-op
-
-            def _replace(l: Column) -> Column:
-                val = _joined(l, srcs, sep)
-                name = (
-                    F.lit(tgt_tpl)
-                    if tgt_literal
-                    else _expand(val, anchored, tgt_tpl, n_groups)
-                )
-                newval = (
-                    F.lit(rep_tpl)
-                    if rep_literal
-                    else _expand(val, anchored, rep_tpl, n_groups)
-                )
-                cond = _match_gate(val, anchored, rule["regex"])
-                if not tgt_literal:
-                    # invalid expanded target name -> rule skipped, as in
-                    # Prometheus relabel.go's target.IsValid() gate
-                    cond = cond & name.rlike(_LABEL_NAME_RE)
-                return F.when(cond, _set_label(l, name, newval)).otherwise(l)
-
-            df = df.withColumn(labels_col, _once(labels, _replace))
-        elif action in ("lowercase", "uppercase"):
-            case_fn = F.lower if action == "lowercase" else F.upper
-
-            def _cased(l: Column) -> Column:
-                return _set_label(
-                    l, F.lit(rule["target_label"]), case_fn(_joined(l, srcs, sep))
-                )
-
-            df = df.withColumn(labels_col, _once(labels, _cased))
-        elif action == "hashmod":
-            modulus = int(rule["modulus"])
-
-            def _hm(l: Column) -> Column:
-                return _set_label(
-                    l, F.lit(rule["target_label"]), _hashmod(_joined(l, srcs, sep), modulus)
-                )
-
-            df = df.withColumn(labels_col, _once(labels, _hm))
-        elif action == "labelmap":
-            repl = _java_repl(rule["replacement"])
-
-            def _lmap(l: Column) -> Column:
-                # iterate matched entries in SORTED source-name order —
-                # Prometheus's labels.Labels is canonically sorted, so a
-                # colliding expanded target resolves last-wins over the
-                # sorted source names; sorting here makes the fold order
-                # engine-independent (round-5 review: the two-phase auto
-                # boundary re-sorts the map, which would otherwise flip
-                # the collision winner vs the entries engine)
-                renamed = F.transform(
-                    F.array_sort(
-                        F.filter(
-                            F.map_entries(l),
-                            lambda e: _match_gate(e["key"], anchored, rule["regex"]),
-                        )
-                    ),
-                    lambda e: F.struct(
-                        F.regexp_replace(e["key"], anchored, repl).alias("key"),
-                        e["value"].alias("value"),
-                    ),
-                )
-                # fold Set() over the renamed entries: last write wins
-                # without relying on the session's mapKeyDedupPolicy
-                return F.aggregate(
-                    renamed,
-                    l,
-                    lambda acc, e: F.map_concat(
-                        F.map_filter(acc, lambda k, _v: k != e["key"]),
-                        F.map_from_arrays(F.array(e["key"]), F.array(e["value"])),
-                    ),
-                )
-
-            df = df.withColumn(labels_col, _once(labels, _lmap))
-        elif action in ("labeldrop", "labelkeep"):
-            keep = action == "labelkeep"
-
-            def _lfilter(l: Column) -> Column:
-                return F.map_filter(
-                    l,
-                    lambda k, _v: (
-                        _match_gate(k, anchored, rule["regex"])
-                        if keep
-                        else ~_match_gate(k, anchored, rule["regex"])
-                    ),
-                )
-
-            df = df.withColumn(labels_col, _once(labels, _lfilter))
-        else:
-            raise ValueError(f"unknown relabel action: {action}")
-    return df
-
-
-def _relabel_entries(df: DataFrame, rules: list[dict], labels_col: str) -> DataFrame:
-    """The entries-array engine: identical rule semantics to the map
-    engine, one map→array conversion in, one array→map fold out, pure
-    array filter/concat algebra in between (no per-rule map_concat
-    duplicate-key machinery). Label order matches the map engine exactly:
-    Set() removes the old entry in place and appends at the end."""
-    ACOL = "__rl_entries"
-
-    def _entry(k: Column, v: Column) -> Column:
-        return F.struct(k.alias("k"), v.alias("v"))
-
-    def _a_get(a: Column, name) -> Column:
-        return F.get(F.filter(a, lambda e: e["k"] == name), 0)["v"]
-
-    def _a_joined(a: Column, source_labels: list[str], sep: str) -> Column:
-        if not source_labels:
-            return F.lit("")
-        return F.concat_ws(
-            sep,
-            *[F.coalesce(_a_get(a, F.lit(s)), F.lit("")) for s in source_labels],
-        )
-
-    def _a_set(a: Column, name: Column, value: Column) -> Column:
-        cleared = F.filter(a, lambda e: e["k"] != name)
-        return F.when(value == "", cleared).otherwise(
-            F.concat(cleared, F.array(_entry(name, value)))
-        )
-
-    def _filtered(frame: DataFrame, pred: Column) -> DataFrame:
-        b = frame.withColumn("__rl_barrier", F.rand())
-        return b.filter(pred).drop("__rl_barrier")
-
-    df = df.withColumn(
-        ACOL,
-        F.transform(
-            F.map_entries(F.col(labels_col)),
-            lambda e: _entry(e["key"], e["value"]),
-        ),
-    )
-    for raw in rules:
-        rule = {**_DEFAULTS, **raw}
-        action = rule["action"]
-        anchored = _anchor(rule["regex"])
-        srcs = rule.get("source_labels", [])
-        sep = rule["separator"]
-        arr = F.col(ACOL)
-
-        if action in ("keep", "drop"):
-            matched = _once(
-                arr,
-                lambda a: _match_gate(_a_joined(a, srcs, sep), anchored, rule["regex"]),
-            )
-            df = _filtered(df, matched if action == "keep" else ~matched)
-        elif action in ("keepequal", "dropequal"):
-            eq = _once(
-                arr,
-                lambda a: _a_joined(a, srcs, sep)
-                == F.coalesce(_a_get(a, F.lit(rule["target_label"])), F.lit("")),
-            )
-            df = _filtered(df, eq if action == "keepequal" else ~eq)
-        elif action == "replace":
-            n_groups = _group_count(rule["regex"])
-            tgt_tpl = rule["target_label"]
-            rep_tpl = rule["replacement"]
-            tgt_literal = "$" not in tgt_tpl
-            rep_literal = "$" not in rep_tpl
-            if tgt_literal and not _is_valid_label_name(tgt_tpl):
-                continue
-
-            def _replace(a: Column) -> Column:
-                val = _a_joined(a, srcs, sep)
-                name = (
-                    F.lit(tgt_tpl)
-                    if tgt_literal
-                    else _expand(val, anchored, tgt_tpl, n_groups)
-                )
-                newval = (
-                    F.lit(rep_tpl)
-                    if rep_literal
-                    else _expand(val, anchored, rep_tpl, n_groups)
-                )
-                cond = _match_gate(val, anchored, rule["regex"])
-                if not tgt_literal:
-                    cond = cond & name.rlike(_LABEL_NAME_RE)
-                return F.when(cond, _a_set(a, name, newval)).otherwise(a)
-
-            df = df.withColumn(ACOL, _once(arr, _replace))
-        elif action in ("lowercase", "uppercase"):
-            case_fn = F.lower if action == "lowercase" else F.upper
-
-            def _cased(a: Column) -> Column:
-                return _a_set(
-                    a, F.lit(rule["target_label"]), case_fn(_a_joined(a, srcs, sep))
-                )
-
-            df = df.withColumn(ACOL, _once(arr, _cased))
-        elif action == "hashmod":
-            modulus = int(rule["modulus"])
-
-            def _hm(a: Column) -> Column:
-                return _a_set(
-                    a,
-                    F.lit(rule["target_label"]),
-                    _hashmod(_a_joined(a, srcs, sep), modulus),
-                )
-
-            df = df.withColumn(ACOL, _once(arr, _hm))
-        elif action == "labelmap":
-            repl = _java_repl(rule["replacement"])
-
-            def _lmap(a: Column) -> Column:
-                # sorted source-name fold order — see the map engine's
-                # labelmap note (Prometheus sorted-labels semantics;
-                # engine-independent collision winner)
-                renamed = F.transform(
-                    F.array_sort(
-                        F.filter(
-                            a, lambda e: _match_gate(e["k"], anchored, rule["regex"])
-                        )
-                    ),
-                    lambda e: _entry(
-                        F.regexp_replace(e["k"], anchored, repl), e["v"]
-                    ),
-                )
-                # fold Set() over renamed entries: last write wins, same
-                # unconditional remove+append as the map engine's fold
-                return F.aggregate(
-                    renamed,
-                    a,
-                    lambda acc, e: F.concat(
-                        F.filter(acc, lambda x: x["k"] != e["k"]), F.array(e)
-                    ),
-                )
-
-            df = df.withColumn(ACOL, _once(arr, _lmap))
-        elif action in ("labeldrop", "labelkeep"):
-            keep = action == "labelkeep"
-
-            def _lfilter(a: Column) -> Column:
-                return F.filter(
-                    a,
-                    lambda e: (
-                        _match_gate(e["k"], anchored, rule["regex"])
-                        if keep
-                        else ~_match_gate(e["k"], anchored, rule["regex"])
-                    ),
-                )
-
-            df = df.withColumn(ACOL, _once(arr, _lfilter))
-        else:
-            raise ValueError(f"unknown relabel action: {action}")
-    return df.withColumn(labels_col, F.map_from_entries(F.col(ACOL))).drop(ACOL)
-
-
-_COLUMNAR_ACTIONS = {
-    "replace", "keep", "drop", "keepequal", "dropequal",
-    "lowercase", "uppercase", "hashmod",
-}
-
-
-def _static_prefix_len(rules: list[dict]) -> int:
-    """Length of the maximal leading run of rules the columnar engine can
-    compile (same eligibility checks _relabel_columnar enforces: static
-    action set, literal replace targets)."""
-    n = 0
-    for raw in rules:
-        rule = {**_DEFAULTS, **raw}
-        if rule["action"] not in _COLUMNAR_ACTIONS:
-            break
-        if rule["action"] == "replace" and "$" in rule["target_label"]:
-            break
-        n += 1
-    return n
-
-
-def _relabel_columnar(df: DataFrame, rules: list[dict], labels_col: str) -> DataFrame:
-    """Opt-in WHOLE-STAGE-CODEGEN fast path for STATIC chains: when every
-    rule's touched label names are known at compile time (no labelmap /
-    labeldrop / labelkeep, no group refs in target names), the touched
-    labels lower onto plain string COLUMNS — extracted from the map once,
-    rewritten by pure codegen when-chains per rule, reassembled once at
-    the end. Array/map higher-order functions never enter the per-rule
-    hot path (they are CodegenFallback and dominate the dynamic engines'
-    cost — see PLANS.md round-4 profile).
-
-    Contract difference, documented: the output map is CANONICALLY SORTED
-    by label name (which is Prometheus's own labels.Labels invariant)
-    rather than insertion-ordered; values are identical to the other
-    engines. Raises ValueError for chains that need the dynamic
-    representation — callers fall back to engine="entries"."""
+    action rewrites the label set. The output map is sorted by label
+    name; the module docstring describes how the chain compiles."""
+    rules = [
+        r for r in ({**_DEFAULTS, **raw} for raw in rules)
+        # a literal, invalid replace target makes the rule a no-op
+        if not (r["action"] == "replace" and "$" not in r["target_label"]
+                and not _is_valid_label_name(r["target_label"]))
+    ]
     touched: list[str] = []
+    for rule in rules:
+        names = list(rule.get("source_labels", []))
+        if "target_label" in rule and not (
+            rule["action"] == "replace" and "$" in rule["target_label"]
+        ):
+            names.append(rule["target_label"])
+        for n in names:
+            if n not in touched:
+                touched.append(n)
 
-    def touch(name: str) -> None:
-        if name not in touched:
-            touched.append(name)
+    labels = F.col(labels_col)
+    work: dict[str, Column] = {n: F.element_at(labels, F.lit(n)) for n in touched}
+    rest = F.map_filter(labels, lambda k, _v: ~k.isin(*touched)) if touched else labels
+    slots = {n: f"{_STATE}{i}" for i, n in enumerate(touched)}
 
-    compiled = []
-    for raw in rules:
-        rule = {**_DEFAULTS, **raw}
-        action = rule["action"]
-        if action not in _COLUMNAR_ACTIONS:
-            raise ValueError(
-                f"columnar engine cannot compile action {action!r} (dynamic "
-                "label names) — use engine='entries'"
-            )
-        if action == "replace" and "$" in rule["target_label"]:
-            raise ValueError(
-                "columnar engine needs a literal target_label — use engine='entries'"
-            )
-        for s in rule.get("source_labels", []):
-            touch(s)
-        if rule.get("target_label"):
-            touch(rule["target_label"])
-        compiled.append(rule)
-
-    # one map extraction per touched label (missing -> NULL; present-empty
-    # stays ""); deletion is represented as NULL from here on
-    work: dict[str, Column] = {
-        l: F.element_at(F.col(labels_col), F.lit(l)) for l in touched
-    }
+    def project(frame: DataFrame) -> DataFrame:
+        """Hazard 3: materialize the state as real columns, so the rule
+        that follows reads columns instead of re-inlining the chain."""
+        nonlocal rest
+        frame = frame.withColumns({**{slots[n]: work[n] for n in touched}, _REST: rest})
+        work.update({n: F.col(slots[n]) for n in touched})
+        rest = F.col(_REST)
+        return frame
 
     def joined(srcs: list[str], sep: str) -> Column:
         if not srcs:
             return F.lit("")
         return F.concat_ws(sep, *[F.coalesce(work[s], F.lit("")) for s in srcs])
 
-    def _filtered(frame: DataFrame, pred: Column) -> DataFrame:
-        b = frame.withColumn("__rl_barrier", F.rand())
-        return b.filter(pred).drop("__rl_barrier")
+    def entries(m: Column, values: dict[str, Column]) -> Column:
+        """The entries of map ``m`` plus a (name, value) entry for each
+        non-NULL value."""
+        out = F.map_entries(m)
+        if values:
+            pairs = F.array(*[F.struct(F.lit(n).alias("key"), v.alias("value")) for n, v in values.items()])
+            out = F.concat(out, F.filter(pairs, lambda e: e["value"].isNotNull()))
+        return out
 
-    for rule in compiled:
+    def filtered(frame: DataFrame, pred: Column) -> DataFrame:
+        # hazard 2: the predicate reads a nondeterministic column, so the
+        # Filter can neither be pushed below it nor have it pruned away
+        b = frame.withColumn(_STATE + "barrier", F.rand())
+        return b.filter(pred & (F.col(_STATE + "barrier") >= 0))
+
+    df = project(df)
+    for rule in rules:
         action = rule["action"]
-        anchored = _anchor(rule["regex"])
+        regex = rule["regex"]
+        anchored = _anchor(regex)
         srcs = rule.get("source_labels", [])
         sep = rule["separator"]
+        if action in ("labelmap", "labeldrop", "labelkeep") or (
+            action == "replace" and "$" in rule["target_label"]
+        ):
+            df = project(df)
+
+        def gate(v: Column) -> Column:
+            return _match_gate(v, anchored, regex)
+
         if action in ("keep", "drop"):
-            m = _match_gate(joined(srcs, sep), anchored, rule["regex"])
-            df = _filtered(df, m if action == "keep" else ~m)
+            m = gate(joined(srcs, sep))
+            df = filtered(df, m if action == "keep" else ~m)
         elif action in ("keepequal", "dropequal"):
             eq = joined(srcs, sep) == F.coalesce(work[rule["target_label"]], F.lit(""))
-            df = _filtered(df, eq if action == "keepequal" else ~eq)
+            df = filtered(df, eq if action == "keepequal" else ~eq)
         elif action == "replace":
-            n_groups = _group_count(rule["regex"])
-            tgt = rule["target_label"]
-            if not _is_valid_label_name(tgt):
-                continue  # literal target, invalid name -> rule is a no-op
-            rep = rule["replacement"]
+            n_groups = _group_count(regex)
+            tgt, rep = rule["target_label"], rule["replacement"]
             val = joined(srcs, sep)
-            newval = (
-                F.lit(rep) if "$" not in rep else _expand(val, anchored, rep, n_groups)
-            )
-            cond = _match_gate(val, anchored, rule["regex"])
-            # Set(""): delete -> NULL; no match -> keep previous value
-            work[tgt] = F.when(cond, F.nullif(newval, F.lit(""))).otherwise(work[tgt])
+            newval = F.lit(rep) if "$" not in rep else _expand(val, anchored, rep, n_groups)
+            if "$" not in tgt:
+                # Set(""): delete -> NULL; no match -> keep previous value
+                work[tgt] = F.when(gate(val), F.nullif(newval, F.lit(""))).otherwise(work[tgt])
+                continue
+            # group-ref target: the expanded name may be any column or a
+            # rest label, so the rule's values become columns first
+            df = df.withColumns({
+                _STATE + "name": _expand(val, anchored, tgt, n_groups),
+                _STATE + "new": newval,
+                # invalid expanded target name -> rule skipped, as in
+                # Prometheus relabel.go's target.IsValid() gate
+                _STATE + "hit": gate(val)
+                & _expand(val, anchored, tgt, n_groups).rlike(_LABEL_NAME_RE),
+            })
+            name, new, hit = (F.col(_STATE + c) for c in ("name", "new", "hit"))
+            prefix = _template_prefix(tgt)
+            for n in touched:
+                if n.startswith(prefix):
+                    work[n] = F.when(hit & (name == n), F.nullif(new, F.lit(""))).otherwise(work[n])
+            to_rest = hit & ~name.isin(*touched) if touched else hit
+            rest = F.when(to_rest, _set_label(rest, name, new)).otherwise(rest)
         elif action in ("lowercase", "uppercase"):
             case_fn = F.lower if action == "lowercase" else F.upper
             work[rule["target_label"]] = F.nullif(case_fn(joined(srcs, sep)), F.lit(""))
         elif action == "hashmod":
-            work[rule["target_label"]] = _hashmod(
-                joined(srcs, sep), int(rule["modulus"])
+            work[rule["target_label"]] = _hashmod(joined(srcs, sep), int(rule["modulus"]))
+        elif action == "labelmap":
+            repl = _java_repl(rule["replacement"])
+            # every matching label, columns and rest alike, sorted by
+            # source name (Prometheus iterates sorted labels, so a colliding
+            # target resolves last-wins over sorted sources) and renamed
+            matched = entries(
+                F.map_filter(rest, lambda k, _v: gate(k)),
+                {n: F.when(gate(F.lit(n)), work[n]) for n in touched},
             )
+            df = df.withColumn(_STATE + "hits", F.transform(
+                F.sort_array(matched),
+                lambda e: F.struct(
+                    F.regexp_replace(e["key"], anchored, repl).alias("key"),
+                    e["value"].alias("value"),
+                ),
+            ))
+            hits = F.col(_STATE + "hits")
+            prefix = _template_prefix(rule["replacement"])
+            for n in touched:
+                if n.startswith(prefix):
+                    # last hit on this column's name, else its old value
+                    last = F.get(F.reverse(F.filter(hits, lambda e: e["key"] == n)), 0)
+                    work[n] = F.coalesce(last["value"], work[n])
+            # fold Set() over the other hits in order: the last write wins
+            rest = F.aggregate(
+                F.filter(hits, lambda e: ~e["key"].isin(*touched)) if touched else hits,
+                rest,
+                lambda acc, e: F.map_concat(
+                    F.map_filter(acc, lambda k, _v: k != e["key"]),
+                    F.map_from_arrays(F.array(e["key"]), F.array(e["value"])),
+                ),
+            )
+        elif action in ("labeldrop", "labelkeep"):
+            keep = action == "labelkeep"
+            rest = F.map_filter(rest, lambda k, _v: gate(k) if keep else ~gate(k))
+            for n in touched:
+                hit = gate(F.lit(n))
+                work[n] = F.when(hit if keep else ~hit, work[n])
+        else:
+            raise ValueError(f"unknown relabel action: {action}")
 
-    # nothing touched any label (chain is pure source-less filters) →
-    # the map is untouched; skip reassembly entirely. This also avoids
-    # F.array() with zero elements, whose array<null> type would fail the
-    # touched_entries filter at plan time with an AnalysisException that
-    # engine="auto" (which only catches ValueError) would not absorb.
-    if not touched:
-        return df
-
-    # reassemble ONCE: untouched entries + surviving touched labels, sorted
-    untouched = F.filter(
-        F.map_entries(F.col(labels_col)),
-        lambda e: ~e["key"].isin(*touched) if touched else F.lit(True),
-    )
-    touched_entries = F.filter(
-        F.array(
-            *[
-                F.struct(F.lit(l).alias("key"), work[l].alias("value"))
-                for l in touched
-            ]
-        ),
-        lambda e: e["value"].isNotNull(),
-    )
-    assembled = F.map_from_entries(
-        F.array_sort(F.concat(untouched, touched_entries))
-    )
-    return df.withColumn(labels_col, assembled)
+    out = df.withColumn(labels_col, F.map_from_entries(F.sort_array(entries(rest, work))))
+    return out.drop(*[c for c in out.columns if c.startswith(_STATE)])
 
 
 def labels_csv(labels: Column) -> Column:

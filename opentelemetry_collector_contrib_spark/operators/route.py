@@ -18,7 +18,7 @@ full pipeline per record regardless).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame

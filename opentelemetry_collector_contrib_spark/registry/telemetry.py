@@ -5062,10 +5062,10 @@ def q_prom_relabel(spark, sf_dir):
 
 
 def q_prom_relabel_columnar(spark, sf_dir):
-    """The columnar fast-path engine (round 4: static chains lower onto
-    plain codegen columns — see prom_relabel._relabel_columnar) over the
-    same service-discovery fixture, running the static subset of the main
-    chain (everything except the data-dependent labelmap/labeldrop).
+    """The columnar fast path (static chains lower onto plain codegen
+    columns, no dynamic rule touches the rest map — see prom_relabel.relabel)
+    over the same service-discovery fixture, running the static subset of
+    the main chain (everything except the data-dependent labelmap/labeldrop).
     Value-gated against an analytical oracle deriving each surviving
     row's sorted label CSV directly."""
     from ..operators.prom_relabel import labels_csv, relabel
@@ -5090,7 +5090,7 @@ def q_prom_relabel_columnar(spark, sf_dir):
     static_rules = [
         r for r in _RELABEL_RULES if r["action"] not in ("labelmap", "labeldrop")
     ]
-    out = relabel(src, static_rules, engine="columnar")
+    out = relabel(src, static_rules)
     return out.select("event_id", labels_csv(F.col("labels")).alias("labels"))
 
 

@@ -165,7 +165,7 @@ def main() -> None:
         )
 
         for name, q in [
-            ("prom relabel (lambda-bound rule chain, rand() filter barriers)", q_prom_relabel),
+            ("prom relabel (label columns + rest map, rand() filter barriers)", q_prom_relabel),
             ("gitlab CI spans (in-array stage derivation, no shuffle)", q_gitlab_pipeline_spans),
             ("es route index (single projection)", q_es_route_index),
             ("pq encode (inlined codebook, zero joins)", q_pq_codes),

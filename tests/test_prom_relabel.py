@@ -9,6 +9,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.prom_relabel import labels_csv, relabel
+from relabel_oracle import assert_matches_oracle
 
 
 def _df(spark, rows):
@@ -257,36 +258,13 @@ def test_merge_scrape_labels_honor_modes(spark):
 
 
 def test_entries_engine_equals_map_engine_full_matrix(spark):
-    """Round-4 entries-array engine: byte-identical results to the map
-    engine across all nine actions chained, including label order."""
+    """All nine actions chained (the registry's scrape chain) over an
+    expression-built label map: the same rows and label values as the map
+    oracle, output keys canonically sorted."""
     from opentelemetry_collector_contrib_spark.registry.telemetry import _RELABEL_RULES
 
-    h = F.xxhash64("id")
-    df = spark.range(2000).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("__address__"), F.concat(F.lit("10.0."), F.pmod(h, F.lit(200)).cast("string"), F.lit(":9100")),
-                F.lit("__scheme__"), F.when(h % 2 == 0, F.lit("http")).otherwise(F.lit("https")),
-                F.lit("__meta_kubernetes_namespace"), F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string")),
-                F.lit("__meta_kubernetes_pod_name"), F.concat(F.lit("pod-"), F.pmod(h, F.lit(7)).cast("string")),
-                F.lit("__meta_kubernetes_pod_label_App"),
-                F.when(h % 3 != 0, F.concat(F.lit("Web"), F.pmod(h, F.lit(4)).cast("string"))),
-                F.lit("instance"), F.when(h % 11 == 0, F.lit("i")),
-                F.lit("job"), F.lit("scrape"),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    )
-    m = {
-        r["id"]: list(r["labels"].items())  # order-sensitive compare
-        for r in relabel(df, _RELABEL_RULES, engine="map").collect()
-    }
-    e = {
-        r["id"]: list(r["labels"].items())
-        for r in relabel(df, _RELABEL_RULES, engine="entries").collect()
-    }
-    assert m == e and len(m) > 0
+    out = assert_matches_oracle(_label_fixture(spark), _RELABEL_RULES)
+    assert 0 < len(out) < 2000
 
 
 _STATIC_RULES = [
@@ -323,32 +301,18 @@ def _label_fixture(spark, n=2000):
 
 
 def test_columnar_engine_value_equals_entries_on_static_chain(spark):
-    """The codegen fast path for static chains: identical label VALUES to
-    the dynamic engines (order is canonical-sorted, Prometheus's own
-    labels.Labels invariant)."""
-    df = _label_fixture(spark)
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, _STATIC_RULES, engine="entries").collect()}
-    c = {r["id"]: dict(r["labels"]) for r in relabel(df, _STATIC_RULES, engine="columnar").collect()}
-    assert e == c and len(e) > 0
-
-
-def test_columnar_engine_rejects_dynamic_chains(spark):
-    import pytest
-
-    df = _label_fixture(spark, 5)
-    with pytest.raises(ValueError, match="columnar engine"):
-        relabel(df, [{"action": "labelmap", "regex": "(.+)"}], engine="columnar")
-    with pytest.raises(ValueError, match="literal target_label"):
-        relabel(df, [{"action": "replace", "source_labels": ["job"],
-                      "regex": "(.+)", "target_label": "x_$1"}], engine="columnar")
+    """A static chain (every label it names is known when the plan is
+    built): the same label values as the map oracle, keys sorted."""
+    out = assert_matches_oracle(_label_fixture(spark), _STATIC_RULES)
+    assert len(out) > 0
 
 
 def test_columnar_engine_hot_path_is_codegen(spark):
-    """Per-rule work must be plain column expressions: the only
-    higher-order functions allowed are the single extract/reassemble pair
-    at the chain boundaries."""
+    """Per-rule work on a static chain must be plain column expressions:
+    the only higher-order functions allowed are the single extract/reassemble
+    pair at the chain boundaries."""
     df = _label_fixture(spark, 10)
-    out = relabel(df, _STATIC_RULES, engine="columnar")
+    out = relabel(df, _STATIC_RULES)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # boundary ops only: one map_entries-based filter + one map_from_entries
@@ -356,12 +320,41 @@ def test_columnar_engine_hot_path_is_codegen(spark):
 
 
 def test_auto_engine_picks_columnar_when_eligible(spark):
+    """One engine for every chain shape: a static chain keeps the codegen
+    plan, and a dynamic one (labelmap) gives the oracle's values."""
     df = _label_fixture(spark, 300)
-    # static chain -> columnar plan (no per-rule HOFs beyond the boundary pair)
-    static_plan = relabel(df, _STATIC_RULES, engine="auto")._jdf.queryExecution().executedPlan().toString()
+    static_plan = relabel(df, _STATIC_RULES)._jdf.queryExecution().executedPlan().toString()
     assert static_plan.count("map_from_entries") <= 2
-    # dynamic chain (labelmap) -> entries engine, same values as explicit
     dyn = [{"action": "labelmap", "regex": "__meta_kubernetes_(.+)", "replacement": "k8s_$1"}]
-    a = {r["id"]: dict(r["labels"]) for r in relabel(df, dyn, engine="auto").collect()}
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, dyn, engine="entries").collect()}
-    assert a == e
+    assert_matches_oracle(df, dyn)
+
+
+def test_plan_grows_linearly_with_chain_length(spark):
+    """Each rule starts from the state projected into real columns, so the
+    optimized plan grows linearly with the chain: three copies of the
+    scrape chain, and nine-rule chains whose labelmaps target names later
+    rules read, stay within 3.5x of the scrape chain's plan. Without the
+    projection the repeated-labelmap chain's plan is about 9x."""
+    from opentelemetry_collector_contrib_spark.registry.telemetry import _RELABEL_RULES
+
+    k8s = [
+        *_RELABEL_RULES[:6],  # ... labelmap __meta_kubernetes_(.+) -> k8s_$1
+        {"action": "replace", "source_labels": ["k8s_namespace"], "target_label": "ns"},
+        {"action": "keep", "source_labels": ["k8s_namespace"], "regex": "ns-[0-3]"},
+        {"action": "replace", "source_labels": ["k8s_namespace", "ns"], "regex": "(.+);(.+)",
+         "target_label": "k8s_namespace", "replacement": "$2"},
+    ]
+    relabel_twice = 3 * [
+        {"action": "labelmap", "regex": "__meta_kubernetes_(.+)", "replacement": "k8s_$1"},
+        {"action": "labelmap", "regex": "k8s_(.+)", "replacement": "k8s_$1"},
+        {"action": "replace", "source_labels": ["k8s_k8s_namespace"], "target_label": "k8s_k8s_namespace",
+         "replacement": "$1x"},
+    ]
+    df = _label_fixture(spark, 10)
+
+    def plan_len(rules):
+        return len(relabel(df, rules)._jdf.queryExecution().optimizedPlan().toString())
+
+    base = plan_len(_RELABEL_RULES)
+    for rules in (3 * _RELABEL_RULES, k8s, relabel_twice):
+        assert plan_len(rules) <= 3.5 * base, rules

@@ -11,6 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
+from relabel_oracle import assert_matches_oracle, relabel_map
 
 _VALUES = st.text(
     alphabet=st.sampled_from(list("abcXYZ019 .*+?()[]{}|\\^$;/=é中\n")), max_size=12
@@ -111,25 +112,17 @@ def test_default_regex_rejects_line_terminators(spark):
         ("(.+)", lambda v: v != "" and not any(c in v for c in "\n\r  ")),
     ]:
         expect_keep = {i for i, v in enumerate(vals) if matches(v)}
-        for engine in ("map", "entries", "columnar"):
-            kept = {
-                r["id"]
-                for r in relabel(
-                    df,
-                    [{"action": "keep", "source_labels": ["job"], "regex": regex}],
-                    engine=engine,
-                ).collect()
-            }
-            assert kept == expect_keep, (regex, engine)
+        keep = [{"action": "keep", "source_labels": ["job"], "regex": regex}]
+        for run in (relabel, relabel_map):
+            kept = {r["id"] for r in run(df, keep).collect()}
+            assert kept == expect_keep, (regex, run.__name__)
+        assert_matches_oracle(df, keep)
         # replace with the default regex must be a no-op on non-matching rows
-        out = {
-            r["id"]: dict(r["labels"])
-            for r in relabel(
-                df,
-                [{"action": "replace", "source_labels": ["job"], "regex": regex,
-                  "target_label": "copy"}],
-            ).collect()
-        }
+        out = assert_matches_oracle(
+            df,
+            [{"action": "replace", "source_labels": ["job"], "regex": regex,
+              "target_label": "copy"}],
+        )
         for i, v in enumerate(vals):
             if i in expect_keep and v != "":
                 assert out[i].get("copy") == v, (regex, i)
@@ -138,20 +131,17 @@ def test_default_regex_rejects_line_terminators(spark):
 
 
 def test_columnar_empty_touched_chain_is_pure_filter(spark):
-    """A chain that touches no label (source-less keep/drop) must compile
-    on every engine — the columnar engine used to build a zero-element
-    F.array() whose array<null> type crashed at plan time, which
-    engine='auto' (catching only ValueError) did not absorb."""
+    """A chain that touches no label (source-less keep/drop) must compile:
+    with no label columns the reassembly has no column entries to add (a
+    zero-element F.array() is array<null> and fails at plan time)."""
     df = spark.createDataFrame(
         [(0, {"a": "x"}), (1, {"a": "y"})], "id int, labels map<string,string>"
     )
-    for engine in ("map", "entries", "columnar", "auto"):
-        # regex "" full-matches the joined empty source -> keep everything
-        out = relabel(df, [{"action": "keep", "regex": ""}], engine=engine)
-        rows = {r["id"]: dict(r["labels"]) for r in out.collect()}
-        assert rows == {0: {"a": "x"}, 1: {"a": "y"}}, engine
-        # regex "nope" matches nothing -> drop everything
-        assert relabel(df, [{"action": "keep", "regex": "nope"}], engine=engine).count() == 0
+    # regex "" full-matches the joined empty source -> keep everything
+    rows = assert_matches_oracle(df, [{"action": "keep", "regex": ""}])
+    assert rows == {0: {"a": "x"}, 1: {"a": "y"}}
+    # regex "nope" matches nothing -> drop everything
+    assert relabel(df, [{"action": "keep", "regex": "nope"}]).count() == 0
 
 
 # --- round 4: engine equivalence under random rule chains --------------------
@@ -185,54 +175,37 @@ def _random_rules(rng):
     return rules
 
 
-def test_entries_engine_equals_map_engine_random_chains(spark):
-    """50 random rule chains over a mixed label fixture: the two engines
-    must agree exactly (values AND label order) on every chain."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
-
+def _chain_fixture(spark, n, with_tmp=True):
     h = F.xxhash64("id")
-    df = spark.range(300).select(
+    pairs = [
+        F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
+        F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
+        F.lit("job"), F.lit("scrape"),
+        F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
+    ]
+    if with_tmp:
+        pairs += [F.lit("__tmp_y"), F.when(h % 2 == 0, F.lit("1/2"))]
+    return spark.range(n).select(
         F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
-                F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
-                F.lit("job"), F.lit("scrape"),
-                F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
-                F.lit("__tmp_y"), F.when(h % 2 == 0, F.lit("1/2")),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
+        F.map_filter(F.create_map(*pairs), lambda _k, v: v.isNotNull()).alias("labels"),
     ).persist()
+
+
+def test_entries_engine_equals_map_engine_random_chains(spark):
+    """50 random rule chains over a mixed label fixture: the engine must
+    give the map oracle's rows and label values on every chain."""
+    df = _chain_fixture(spark, 300)
     rng = _random.Random(424242)
     for trial in range(50):
-        rules = _random_rules(rng)
-        m = {r["id"]: list(r["labels"].items())
-             for r in relabel(df, rules, engine="map").collect()}
-        e = {r["id"]: list(r["labels"].items())
-             for r in relabel(df, rules, engine="entries").collect()}
-        assert m == e, (trial, rules)
+        assert_matches_oracle(df, _random_rules(rng), context=trial)
     df.unpersist()
 
 
 def test_columnar_engine_joins_random_equivalence_when_eligible(spark):
-    """For every random chain the columnar engine can compile (static
-    label names only), its VALUES must equal the entries engine's."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
-
-    h = F.xxhash64("id")
-    df = spark.range(200).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
-                F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
-                F.lit("job"), F.lit("scrape"),
-                F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    ).persist()
+    """The random chains that name only static labels (no labelmap /
+    labeldrop / labelkeep, no group-ref targets) run without a dynamic
+    rule; their values must equal the map oracle's too."""
+    df = _chain_fixture(spark, 200, with_tmp=False)
     rng = _random.Random(777)
     tested = 0
     for _ in range(60):
@@ -245,26 +218,18 @@ def test_columnar_engine_joins_random_equivalence_when_eligible(spark):
         if not eligible:
             continue
         tested += 1
-        e = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="entries").collect()}
-        c = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="columnar").collect()}
-        assert e == c, rules
+        assert_matches_oracle(df, rules)
     assert tested >= 5  # the generator must actually produce eligible chains
     df.unpersist()
 
 
 def test_auto_two_phase_mixed_chain_equals_entries(spark):
-    """Round-5 two-phase lowering: a mixed chain (static prefix + dynamic
-    labelmap/labeldrop suffix) under engine='auto' must produce exactly
-    the entries engine's label VALUES per row (order is canonical at the
-    phase boundary, by the columnar contract)."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import (
-        _static_prefix_len,
-    )
+    """A mixed chain (static rules, then labelmap/labeldrop) over addresses
+    that sometimes equal the instance label: the map oracle's kept rows and
+    label values."""
     from opentelemetry_collector_contrib_spark.registry.telemetry import (
         _RELABEL_RULES,
     )
-
-    assert _static_prefix_len(_RELABEL_RULES) == 5  # q26's chain shape
 
     h = F.xxhash64("id")
     addr = F.concat(F.lit("10.0."), F.pmod(h, F.lit(200)).cast("string"),
@@ -285,82 +250,39 @@ def test_auto_two_phase_mixed_chain_equals_entries(spark):
             lambda _k, v: v.isNotNull(),
         ).alias("labels"),
     ).persist()
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, _RELABEL_RULES, engine="entries").collect()}
-    a = {r["id"]: dict(r["labels"]) for r in relabel(df, _RELABEL_RULES, engine="auto").collect()}
-    assert a == e
-    # the kept/dropped row set must agree too (keep gate sits in the prefix)
-    assert set(a) == set(e) and 0 < len(a) < 400
+    out = assert_matches_oracle(df, _RELABEL_RULES)
+    # the keep and dropequal gates both drop rows
+    assert 0 < len(out) < 400
     df.unpersist()
 
 
 def test_auto_engine_random_chains_value_equivalence(spark):
-    """auto (whole-columnar / two-phase / entries, whichever compiles)
-    must agree with the entries engine on label VALUES for random mixed
-    chains — label order may differ (canonical at the columnar phase
-    boundary, by contract)."""
-    h = F.xxhash64("id")
-    df = spark.range(200).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
-                F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
-                F.lit("job"), F.lit("scrape"),
-                F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
-                F.lit("__tmp_y"), F.when(h % 2 == 0, F.lit("1/2")),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    ).persist()
+    """20 more random mixed chains (seed 31337): the map oracle's values."""
+    df = _chain_fixture(spark, 200)
     rng = _random.Random(31337)
     for trial in range(20):
-        rules = _random_rules(rng)
-        e = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="entries").collect()}
-        a = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="auto").collect()}
-        assert a == e, (trial, rules)
+        assert_matches_oracle(df, _random_rules(rng), context=trial)
     df.unpersist()
-
-
-def test_static_prefix_len_edges():
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import (
-        _static_prefix_len,
-    )
-
-    assert _static_prefix_len([]) == 0
-    # dynamic head -> no prefix -> auto degrades to entries wholesale
-    assert _static_prefix_len([{"action": "labelmap", "regex": "(.+)"}]) == 0
-    # group-ref target breaks the static run
-    assert _static_prefix_len(
-        [{"action": "keep", "regex": "x"},
-         {"action": "replace", "source_labels": ["a"], "target_label": "$1"},
-         {"action": "drop", "regex": "y"}]
-    ) == 1
-    # fully static chain -> whole length (auto would go whole-columnar first)
-    assert _static_prefix_len(
-        [{"action": "keep", "regex": "x"}, {"action": "hashmod", "source_labels": ["a"],
-         "modulus": 2, "target_label": "t"}]
-    ) == 2
 
 
 def test_labelmap_collision_winner_engine_independent(spark):
     """Two source labels mapping to the SAME expanded target: Prometheus
-    iterates canonically-sorted labels, so the sorted-last source wins.
-    All engines (and auto's two-phase boundary, which re-sorts the map)
-    must agree — the round-5 review caught entries folding in insertion
-    order, flipping the winner vs auto."""
+    iterates canonically-sorted labels, so the sorted-last source wins,
+    whether the sources are label columns or rest-map entries."""
     df = spark.createDataFrame(
         [(0, {"__meta_svc_app": "S", "__meta_pod_app": "P", "job": "j"})],
         "id int, labels map<string,string>",
     )
     rules = [
-        # static prefix so auto takes the two-phase path
         {"action": "replace", "source_labels": ["job"], "target_label": "jc"},
         {"action": "hashmod", "source_labels": ["job"], "modulus": 4, "target_label": "shard"},
         {"action": "labelmap", "regex": "__meta_(?:pod|svc)_app", "replacement": "app"},
     ]
+    # a rest-map source beating a column source, and the other way round
+    pod_col = [{"action": "replace", "source_labels": ["__meta_pod_app"], "target_label": "pc"}]
+    svc_col = [{"action": "replace", "source_labels": ["__meta_svc_app"], "target_label": "sc"}]
     got = {}
-    for engine in ("map", "entries", "auto"):
-        (row,) = relabel(df, rules, engine=engine).collect()
-        got[engine] = dict(row["labels"])["app"]
+    for name, chain in (("rest", rules), ("pod_col", pod_col + rules), ("svc_col", svc_col + rules)):
+        got[name] = assert_matches_oracle(df, chain)[0]["app"]
     # sorted source names: __meta_pod_app < __meta_svc_app -> svc folds last
-    assert got == {"map": "S", "entries": "S", "auto": "S"}, got
+    assert got == {"rest": "S", "pod_col": "S", "svc_col": "S"}, got
