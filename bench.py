@@ -255,14 +255,9 @@ def main() -> None:
     # as a LogsData payload (cached spool, generated untimed), then decoded
     # and fully materialized. records/s = n_rows / q14 seconds.
     def wire_decode():
-        # auto-probes spark-protobuf: JVM from_protobuf when the jar is
-        # present (A/B hook for jar-bearing environments), the honest
-        # Arrow-batched Python walk otherwise (this image)
-        from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-            parse_otlp_pb_logs_auto,
-        )
+        from opentelemetry_collector_contrib_spark.operators.otlp_pb import parse_otlp_pb_logs
 
-        return force(parse_otlp_pb_logs_auto(spark.read.parquet(wire_spool), "payload"))
+        return force(parse_otlp_pb_logs(spark.read.parquet(wire_spool), "payload"))
 
     if selected is None or "q14_otlp_pb_decode" in selected:
         from opentelemetry_collector_contrib_spark.fixtures import tier_for_sf_dir

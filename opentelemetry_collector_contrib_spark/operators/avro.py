@@ -2,10 +2,10 @@
 ``extension/encoding/avrologencodingextension`` analogue: a static JSON
 schema (`config.go:11`, errNoSchema when absent) drives deserialization of
 each payload into a record (`avro.go:30-38`; the reference delegates to
-goavro's NativeFromBinary). Here the schema compiles once per executor
-into a closure tree and the decode runs as an Arrow-batched mapInPandas —
-Avro binary is zigzag-varint length-prefixed data, the same honest
-pandas-UDF case as msgpack and protobuf.
+goavro's NativeFromBinary). Here the schema compiles once, on the driver,
+into a closure tree and the decode runs on the shared mapInArrow kernel
+(``_wire.explode_decode``) — Avro binary is zigzag-varint length-prefixed
+data, the same honest Python-UDF case as msgpack and protobuf.
 
 Supported schema subset (the reference's own test schema,
 `testdata/schema1.avro`, uses every one of these): null, boolean, int,
@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._wire import explode_decode
 
 # --- binary primitives -------------------------------------------------------
 
@@ -185,6 +186,19 @@ def _render(v) -> str | None:
     return str(v)
 
 
+def _shape(v, kind: str):
+    """A decoded value as its output column's Python type."""
+    if v is None:
+        return None
+    if kind == "long":
+        return int(v)
+    if kind == "double":
+        return float(v)
+    if kind == "boolean":
+        return bool(v)
+    return _render(v)
+
+
 def parse_avro(df: DataFrame, source: str, schema_json: str, prefix: str = "av_") -> DataFrame:
     """One row per payload, one `prefix`-ed output column per top-level
     record field, typed by the schema (primitives native, complex values
@@ -195,45 +209,18 @@ def parse_avro(df: DataFrame, source: str, schema_json: str, prefix: str = "av_"
     schema = json.loads(schema_json)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("root avro schema must be a record")
-    field_kinds = [(f["name"], _reader(f["type"])[1]) for f in schema["fields"]]
-    passthrough = [f for f in df.schema.fields if f.name != source]
-    names = [f.name for f in passthrough]
-    out_fields = [T.StructField(prefix + n, _KIND_SPARK[k]) for n, k in field_kinds]
-    out_schema = T.StructType([*passthrough, *out_fields])
+    dec, _ = _reader(schema)
+    kinds = {prefix + f["name"]: _reader(f["type"])[1] for f in schema["fields"]}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec, _ = _reader(schema)  # compile once per executor/partition
-        out_cols = [prefix + n for n, _ in field_kinds]
-        kinds = dict(field_kinds)
+    def decode(payload: bytes) -> list[dict]:
+        try:
+            native, _pos = dec(payload, 0)
+            return [{prefix + k: _shape(v, kinds[prefix + k]) for k, v in native.items()}]
+        except Exception:  # noqa: BLE001 — malformed -> NULL fields
+            return [dict.fromkeys(kinds)]
 
-        def shape(v, kind):
-            if v is None:
-                return None
-            if kind == "long":
-                return int(v)
-            if kind == "double":
-                return float(v)
-            if kind == "boolean":
-                return bool(v)
-            return _render(v)
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                payload = rec[source]
-                base = {k: rec[k] for k in names}
-                if payload is None:
-                    continue
-                try:
-                    native, _pos = dec(bytes(payload), 0)
-                    rows.append(
-                        {**base, **{prefix + k: shape(v, kinds[k]) for k, v in native.items()}}
-                    )
-                except Exception:  # noqa: BLE001 — malformed -> NULL fields
-                    rows.append({**base, **dict.fromkeys(out_cols)})
-            yield pd.DataFrame(rows, columns=[*names, *out_cols])
-
-    return df.mapInPandas(gen, out_schema)
+    fields = [T.StructField(c, _KIND_SPARK[k]) for c, k in kinds.items()]
+    return explode_decode(df, source, fields, decode)
 
 
 # --- encode side (fixtures/tests) --------------------------------------------

@@ -12,8 +12,8 @@ into typed columns, reimplemented from the public Envoy data-plane-api
 protos (data/accesslog/v3/accesslog.proto — field numbers in the
 docstrings below; the proto is stable/v3).
 
-Same operator shape as the other binary decoders: Arrow-batched
-mapInPandas over the payload scan, malformed messages drop, zero shuffle.
+Same operator shape as the other binary decoders: the shared mapInArrow
+kernel `_wire.explode_decode` over the payload scan, malformed messages drop, zero shuffle.
 """
 
 from __future__ import annotations
@@ -23,13 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .otlp_pb import _b, _enc_varint, _fields, _ld, _pb_map, _tag
+from ._wire import as_bytes, enc_ld, enc_tag, enc_varint, explode_decode, iter_fields
 
 
 def _i63(v: int) -> int:
     """Byte counters are uint64 on the wire but land in LongType columns;
     a value >= 2^63 would abort the task at Arrow conversion instead of
-    dropping the one malformed message — raise so _pb_map drops it."""
+    dropping the one malformed message — raise so explode_decode drops it."""
     v = int(v)
     if v >> 63:
         raise ValueError(f"counter {v} exceeds int64")
@@ -69,12 +69,12 @@ _ALS_FIELDS = [
 def _dec_socket_address(buf: bytes) -> tuple[str | None, int]:
     """core.v3.Address: socket_address=1{protocol=1, address=2,
     port_value=3}; pipe/internal address variants yield (None, 0)."""
-    for f1, _, v1 in _fields(buf):
+    for f1, _, v1 in iter_fields(buf):
         if f1 == 1:
             addr, port = None, 0
-            for f2, _, v2 in _fields(_b(v1)):
+            for f2, _, v2 in iter_fields(as_bytes(v1)):
                 if f2 == 2:
-                    addr = _b(v2).decode("utf-8", errors="replace")
+                    addr = as_bytes(v2).decode("utf-8", errors="replace")
                 elif f2 == 3:
                     port = int(v2) & 0x7FFFFFFF  # int32 column; mask corrupt varints
             return addr, port
@@ -84,7 +84,7 @@ def _dec_socket_address(buf: bytes) -> tuple[str | None, int]:
 def _dec_ts_us(buf: bytes) -> int:
     """google.protobuf.Timestamp/Duration {seconds=1, nanos=2} → µs."""
     secs = nanos = 0
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 1:
             secs = int(v)
         elif f == 2:
@@ -96,17 +96,17 @@ def _dec_common(buf: bytes, row: dict) -> None:
     """AccessLogCommon: downstream_remote_address=2, start_time=5,
     time_to_last_downstream_tx_byte=12, upstream_cluster=15,
     route_name=19 (accesslog.proto field numbers)."""
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 2:
-            row["ea_down_addr"], row["ea_down_port"] = _dec_socket_address(_b(v))
+            row["ea_down_addr"], row["ea_down_port"] = _dec_socket_address(as_bytes(v))
         elif f == 5:
-            row["ea_start_us"] = _dec_ts_us(_b(v))
+            row["ea_start_us"] = _dec_ts_us(as_bytes(v))
         elif f == 12:
-            row["ea_duration_us"] = _dec_ts_us(_b(v))
+            row["ea_duration_us"] = _dec_ts_us(as_bytes(v))
         elif f == 15:
-            row["ea_upstream_cluster"] = _b(v).decode("utf-8", errors="replace")
+            row["ea_upstream_cluster"] = as_bytes(v).decode("utf-8", errors="replace")
         elif f == 19:
-            row["ea_route_name"] = _b(v).decode("utf-8", errors="replace")
+            row["ea_route_name"] = as_bytes(v).decode("utf-8", errors="replace")
 
 
 def _new_row(kind: str, log_name: str | None) -> dict:
@@ -133,48 +133,48 @@ def decode_als_message(payload: bytes) -> list[dict]:
     log_name = None
     http_entries: list[bytes] = []
     tcp_entries: list[bytes] = []
-    for f1, _, v1 in _fields(payload):
+    for f1, _, v1 in iter_fields(payload):
         if f1 == 1:
-            for f2, _, v2 in _fields(_b(v1)):
+            for f2, _, v2 in iter_fields(as_bytes(v1)):
                 if f2 == 2:
-                    log_name = _b(v2).decode("utf-8", errors="replace")
+                    log_name = as_bytes(v2).decode("utf-8", errors="replace")
         elif f1 == 2:
-            for f2, _, v2 in _fields(_b(v1)):
+            for f2, _, v2 in iter_fields(as_bytes(v1)):
                 if f2 == 1:
-                    http_entries.append(_b(v2))
+                    http_entries.append(as_bytes(v2))
         elif f1 == 3:
-            for f2, _, v2 in _fields(_b(v1)):
+            for f2, _, v2 in iter_fields(as_bytes(v1)):
                 if f2 == 1:
-                    tcp_entries.append(_b(v2))
+                    tcp_entries.append(as_bytes(v2))
     rows = []
     for entry in http_entries:
         row = _new_row("http", log_name)
-        for f, _, v in _fields(entry):
+        for f, _, v in iter_fields(entry):
             if f == 1:
-                _dec_common(_b(v), row)
+                _dec_common(as_bytes(v), row)
             elif f == 2:
                 row["ea_protocol"] = _HTTP_VERSIONS.get(int(v), str(int(v)))
             elif f == 3:
-                for f2, _, v2 in _fields(_b(v)):
+                for f2, _, v2 in iter_fields(as_bytes(v)):
                     if f2 == 1:
                         row["ea_method"] = _METHODS.get(int(v2), str(int(v2)))
                     elif f2 == 2:
-                        row["ea_scheme"] = _b(v2).decode("utf-8", errors="replace")
+                        row["ea_scheme"] = as_bytes(v2).decode("utf-8", errors="replace")
                     elif f2 == 3:
-                        row["ea_authority"] = _b(v2).decode("utf-8", errors="replace")
+                        row["ea_authority"] = as_bytes(v2).decode("utf-8", errors="replace")
                     elif f2 == 5:
-                        row["ea_path"] = _b(v2).decode("utf-8", errors="replace")
+                        row["ea_path"] = as_bytes(v2).decode("utf-8", errors="replace")
                     elif f2 == 6:
-                        row["ea_user_agent"] = _b(v2).decode("utf-8", errors="replace")
+                        row["ea_user_agent"] = as_bytes(v2).decode("utf-8", errors="replace")
                     elif f2 == 9:
-                        row["ea_request_id"] = _b(v2).decode("utf-8", errors="replace")
+                        row["ea_request_id"] = as_bytes(v2).decode("utf-8", errors="replace")
                     elif f2 == 12:
                         row["ea_req_body_bytes"] = _i63(v2)
             elif f == 4:
-                for f2, _, v2 in _fields(_b(v)):
+                for f2, _, v2 in iter_fields(as_bytes(v)):
                     if f2 == 1:
                         # response_code is a google.protobuf.UInt32Value
-                        for f3, _, v3 in _fields(_b(v2)):
+                        for f3, _, v3 in iter_fields(as_bytes(v2)):
                             if f3 == 1:
                                 row["ea_resp_code"] = int(v3) & 0x7FFFFFFF
                     elif f2 == 3:
@@ -182,11 +182,11 @@ def decode_als_message(payload: bytes) -> list[dict]:
         rows.append(row)
     for entry in tcp_entries:
         row = _new_row("tcp", log_name)
-        for f, _, v in _fields(entry):
+        for f, _, v in iter_fields(entry):
             if f == 1:
-                _dec_common(_b(v), row)
+                _dec_common(as_bytes(v), row)
             elif f == 2:
-                for f2, _, v2 in _fields(_b(v)):
+                for f2, _, v2 in iter_fields(as_bytes(v)):
                     if f2 == 1:
                         row["ea_rx_bytes"] = _i63(v2)
                     elif f2 == 2:
@@ -197,19 +197,19 @@ def decode_als_message(payload: bytes) -> list[dict]:
 
 def parse_envoy_als(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per access-log entry in each StreamAccessLogsMessage."""
-    return _pb_map(df, source, _ALS_FIELDS, decode_als_message)
+    return explode_decode(df, source, _ALS_FIELDS, decode_als_message)
 
 
 # --- encoders (fixtures/tests) ------------------------------------------------
 
 
 def _enc_uvarint_field(fnum: int, v: int) -> bytes:
-    return _tag(fnum, 0) + _enc_varint(v)
+    return enc_tag(fnum, 0) + enc_varint(v)
 
 
 def enc_socket_address(addr: str, port: int) -> bytes:
-    sa = _ld(2, addr.encode()) + _enc_uvarint_field(3, port)
-    return _ld(1, sa)
+    sa = enc_ld(2, addr.encode()) + _enc_uvarint_field(3, port)
+    return enc_ld(1, sa)
 
 
 def enc_ts(us: int) -> bytes:
@@ -223,41 +223,41 @@ def enc_http_entry(
     route: str, protocol: int = 2,
 ) -> bytes:
     common = (
-        _ld(2, enc_socket_address(down_addr, down_port))
-        + _ld(5, enc_ts(start_us))
-        + _ld(12, enc_ts(duration_us))
-        + _ld(15, cluster.encode())
-        + _ld(19, route.encode())
+        enc_ld(2, enc_socket_address(down_addr, down_port))
+        + enc_ld(5, enc_ts(start_us))
+        + enc_ld(12, enc_ts(duration_us))
+        + enc_ld(15, cluster.encode())
+        + enc_ld(19, route.encode())
     )
     req = (
-        _enc_uvarint_field(1, method) + _ld(2, scheme.encode())
-        + _ld(3, authority.encode()) + _ld(5, path.encode())
-        + _ld(6, user_agent.encode()) + _ld(9, request_id.encode())
+        _enc_uvarint_field(1, method) + enc_ld(2, scheme.encode())
+        + enc_ld(3, authority.encode()) + enc_ld(5, path.encode())
+        + enc_ld(6, user_agent.encode()) + enc_ld(9, request_id.encode())
         + _enc_uvarint_field(12, req_bytes)
     )
-    resp = _ld(1, _enc_uvarint_field(1, code)) + _enc_uvarint_field(3, resp_bytes)
+    resp = enc_ld(1, _enc_uvarint_field(1, code)) + _enc_uvarint_field(3, resp_bytes)
     return (
-        _ld(1, common) + _enc_uvarint_field(2, protocol) + _ld(3, req) + _ld(4, resp)
+        enc_ld(1, common) + _enc_uvarint_field(2, protocol) + enc_ld(3, req) + enc_ld(4, resp)
     )
 
 
 def enc_tcp_entry(start_us: int, rx: int, tx: int, down_addr: str, down_port: int,
                   cluster: str) -> bytes:
     common = (
-        _ld(2, enc_socket_address(down_addr, down_port))
-        + _ld(5, enc_ts(start_us))
-        + _ld(15, cluster.encode())
+        enc_ld(2, enc_socket_address(down_addr, down_port))
+        + enc_ld(5, enc_ts(start_us))
+        + enc_ld(15, cluster.encode())
     )
     conn = _enc_uvarint_field(1, rx) + _enc_uvarint_field(2, tx)
-    return _ld(1, common) + _ld(2, conn)
+    return enc_ld(1, common) + enc_ld(2, conn)
 
 
 def enc_als_message(log_name: str, http: list[bytes], tcp: list[bytes] | None = None) -> bytes:
-    out = _ld(1, _ld(2, log_name.encode()))
+    out = enc_ld(1, enc_ld(2, log_name.encode()))
     if http:
-        out += _ld(2, b"".join(_ld(1, e) for e in http))
+        out += enc_ld(2, b"".join(enc_ld(1, e) for e in http))
     if tcp:
-        out += _ld(3, b"".join(_ld(1, e) for e in tcp))
+        out += enc_ld(3, b"".join(enc_ld(1, e) for e in tcp))
     return out
 
 

@@ -189,7 +189,7 @@ def macos_log_lines(df: DataFrame, line_col: str = "line", fmt: str = "ndjson") 
             .withColumn(
                 "ml_severity_num",
                 F.coalesce(
-                    sev_map.getItem(entry.getField("messageType")), F.lit(0)
+                    sev_map[entry.getField("messageType")], F.lit(0)
                 ).cast("int"),
             )
         )

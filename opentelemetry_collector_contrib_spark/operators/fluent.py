@@ -4,9 +4,10 @@
 The reference terminates TCP and decodes a msgpack event stream
 (`conversion.go:24-420`, `server.go:186-250`, `timeext.go`); here each row
 carries one already-framed event payload (the spool-bridge pattern used
-for the other network inputs) and the decode runs as an Arrow-batched
-``mapInPandas`` — msgpack is a length-prefixed binary format, so like
-octet framing it is the honest pandas-UDF case: no regex split exists.
+for the other network inputs) and the decode runs on the shared
+``mapInArrow`` kernel (``_wire.explode_decode``) — msgpack is a
+length-prefixed binary format, so like octet framing it is the honest
+Python-UDF case: no regex split exists.
 
 Mirrored semantics:
 - mode detection by the SECOND array element (`server.go:192-250`):
@@ -29,12 +30,13 @@ from __future__ import annotations
 
 import gzip
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._wire import explode_decode
 
 
 class EventTime:
@@ -220,6 +222,8 @@ def _render(v) -> str:
 
 
 def _record_rows(tag: str, mode: str, chunk, time_obj, record: dict):
+    if not isinstance(record, dict):
+        raise ValueError("record is not a map")
     body = None
     attrs = []
     for k, v in record.items():
@@ -289,28 +293,10 @@ def parse_fluent_forward(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per decoded log record (message events yield 1, forward and
     packedforward yield one per entry). Malformed payloads drop — the
     reference closes the connection on a decode error; over a table the
-    analogous contract is dropping the event. Arrow-batched mapInPandas:
-    one Python invocation per partition, decode loop per event."""
-    passthrough = [f for f in df.schema.fields if f.name != source]
-    out_schema = T.StructType([*passthrough, *_FF_FIELDS])
-    names = [f.name for f in passthrough]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                payload = rec[source]
-                if payload is None:
-                    continue
-                try:
-                    decoded = decode_event(bytes(payload))
-                except Exception:  # noqa: BLE001 — malformed event drops
-                    continue
-                base = {k: rec[k] for k in names}
-                rows.extend({**base, **d} for d in decoded)
-            yield pd.DataFrame(rows, columns=[*names, *[f.name for f in _FF_FIELDS]])
-
-    return df.mapInPandas(gen, out_schema)
+    analogous contract is dropping the event. Runs on the shared
+    mapInArrow kernel: one Python invocation per partition, decode loop
+    per event."""
+    return explode_decode(df, source, _FF_FIELDS, decode_event)
 
 
 def synthesize_fluent_payloads(

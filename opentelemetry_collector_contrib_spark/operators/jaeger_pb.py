@@ -13,7 +13,7 @@ Field numbers follow the public jaeger-idl ``model.proto``:
         4 binary), v_str=3, v_bool=4, v_int64=5, v_float64=6 (fixed64),
         v_binary=7 }
 
-Reuses the proto-wire reader from ``otlp_pb`` (same varint / fixed64 /
+Reuses the proto-wire reader and decode kernel from ``_wire`` (same varint / fixed64 /
 length-delimited grammar); the Timestamp/Duration submessages are the one
 new wire shape (varint seconds+nanos)."""
 
@@ -26,31 +26,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .otlp_pb import _b, _enc_varint, _fields, _ld, _pb_map, _tag
+from ._wire import as_bytes, as_int64, enc_ld, enc_tag, enc_varint, explode_decode, iter_fields
 
 
 def _ts_us(buf: bytes) -> int:
     """google.protobuf.Timestamp/Duration: seconds=1, nanos=2 (varints,
     negative values arrive as 64-bit two's complement)."""
     sec = ns = 0
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 1:
-            sec = v - (1 << 64) if v >= (1 << 63) else v
+            sec = as_int64(v)
         elif f == 2:
-            ns = v - (1 << 64) if v >= (1 << 63) else v
+            ns = as_int64(v)
     return sec * 1_000_000 + ns // 1000
 
 
 def _kv(buf: bytes) -> tuple[str, str]:
     key, vtype = "", 0
     vals: dict[int, object] = {}
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 1:
-            key = _b(v).decode("utf-8", errors="replace")
+            key = as_bytes(v).decode("utf-8", errors="replace")
         elif f == 2:
             vtype = int(v)
         elif f in (3, 6, 7):
-            vals[f] = _b(v)  # length-delimited / fixed64 slots
+            vals[f] = as_bytes(v)  # length-delimited / fixed64 slots
         elif f in (4, 5):
             vals[f] = v
     if vtype == 0:
@@ -58,8 +58,7 @@ def _kv(buf: bytes) -> tuple[str, str]:
     elif vtype == 1:
         out = "true" if vals.get(4) else "false"
     elif vtype == 2:
-        raw = vals.get(5, 0)
-        out = str(raw - (1 << 64) if raw >= (1 << 63) else raw)
+        out = str(as_int64(vals.get(5, 0)))
     elif vtype == 3:
         out = repr(struct.unpack("<d", vals.get(6, b"\0" * 8))[0])
     else:
@@ -90,7 +89,7 @@ def decode_jaeger_span(payload: bytes) -> list[dict]:
     tags: list[tuple[str, str]] = []
     ptags: list[tuple[str, str]] = []
     seen = False
-    for f, w, v in _fields(payload):
+    for f, w, v in iter_fields(payload):
         seen = True
         if f == 1 and w == 2:
             row["jg_trace_id"] = bytes(v).hex()
@@ -100,7 +99,7 @@ def decode_jaeger_span(payload: bytes) -> list[dict]:
             row["jg_op"] = v.decode("utf-8", errors="replace")
         elif f == 4 and w == 2:
             ref_type, ref_span = 0, None
-            for rf, rw, rv in _fields(v):
+            for rf, rw, rv in iter_fields(v):
                 if rf == 2 and rw == 2:
                     ref_span = bytes(rv).hex()
                 elif rf == 3:
@@ -117,7 +116,7 @@ def decode_jaeger_span(payload: bytes) -> list[dict]:
         elif f == 8 and w == 2:
             tags.append(_kv(v))
         elif f == 10 and w == 2:
-            for pf, _, pv in _fields(v):
+            for pf, _, pv in iter_fields(v):
                 if pf == 1:
                     row["jg_service"] = pv.decode("utf-8", errors="replace")
                 elif pf == 2:
@@ -132,7 +131,7 @@ def decode_jaeger_span(payload: bytes) -> list[dict]:
 def parse_jaeger_pb_spans(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per payload (each payload is one jaeger-proto Span, the
     encoding extension's contract). Malformed payloads drop."""
-    return _pb_map(df, source, _JG_FIELDS, decode_jaeger_span)
+    return explode_decode(df, source, _JG_FIELDS, decode_jaeger_span)
 
 
 # --- encode side (fixtures/tests) --------------------------------------------
@@ -141,24 +140,24 @@ def parse_jaeger_pb_spans(df: DataFrame, source: str = "payload") -> DataFrame:
 def _enc_ts(sec: int, ns: int) -> bytes:
     out = b""
     if sec:
-        out += _tag(1, 0) + _enc_varint(sec)
+        out += enc_tag(1, 0) + enc_varint(sec)
     if ns:
-        out += _tag(2, 0) + _enc_varint(ns)
+        out += enc_tag(2, 0) + enc_varint(ns)
     return out
 
 
 def enc_jaeger_kv(key: str, value) -> bytes:
-    out = _ld(1, key.encode("utf-8"))
+    out = enc_ld(1, key.encode("utf-8"))
     if isinstance(value, bool):
-        out += _tag(2, 0) + _enc_varint(1) + _tag(4, 0) + _enc_varint(1 if value else 0)
+        out += enc_tag(2, 0) + enc_varint(1) + enc_tag(4, 0) + enc_varint(1 if value else 0)
     elif isinstance(value, int):
-        out += _tag(2, 0) + _enc_varint(2) + _tag(5, 0) + _enc_varint(value)
+        out += enc_tag(2, 0) + enc_varint(2) + enc_tag(5, 0) + enc_varint(value)
     elif isinstance(value, float):
-        out += _tag(2, 0) + _enc_varint(3) + _tag(6, 1) + struct.pack("<d", value)
+        out += enc_tag(2, 0) + enc_varint(3) + enc_tag(6, 1) + struct.pack("<d", value)
     elif isinstance(value, bytes):
-        out += _tag(2, 0) + _enc_varint(4) + _ld(7, value)
+        out += enc_tag(2, 0) + enc_varint(4) + enc_ld(7, value)
     else:
-        out += _ld(3, str(value).encode("utf-8"))  # v_type 0 (default) omitted
+        out += enc_ld(3, str(value).encode("utf-8"))  # v_type 0 (default) omitted
     return out
 
 
@@ -168,20 +167,20 @@ def enc_jaeger_span(
     tags: dict | None = None, service: str | None = None,
     process_tags: dict | None = None,
 ) -> bytes:
-    out = _ld(1, trace_id) + _ld(2, span_id) + _ld(3, op.encode("utf-8"))
+    out = enc_ld(1, trace_id) + enc_ld(2, span_id) + enc_ld(3, op.encode("utf-8"))
     if parent_span_id:
-        ref = _ld(1, trace_id) + _ld(2, parent_span_id)  # ref_type 0 = CHILD_OF
-        out += _ld(4, ref)
-    out += _tag(5, 5) + struct.pack("<I", flags)
-    out += _ld(6, _enc_ts(start_us // 1_000_000, (start_us % 1_000_000) * 1000))
-    out += _ld(7, _enc_ts(duration_us // 1_000_000, (duration_us % 1_000_000) * 1000))
+        ref = enc_ld(1, trace_id) + enc_ld(2, parent_span_id)  # ref_type 0 = CHILD_OF
+        out += enc_ld(4, ref)
+    out += enc_tag(5, 5) + struct.pack("<I", flags)
+    out += enc_ld(6, _enc_ts(start_us // 1_000_000, (start_us % 1_000_000) * 1000))
+    out += enc_ld(7, _enc_ts(duration_us // 1_000_000, (duration_us % 1_000_000) * 1000))
     for k, v in (tags or {}).items():
-        out += _ld(8, enc_jaeger_kv(k, v))
+        out += enc_ld(8, enc_jaeger_kv(k, v))
     if service is not None:
-        proc = _ld(1, service.encode("utf-8"))
+        proc = enc_ld(1, service.encode("utf-8"))
         for k, v in (process_tags or {}).items():
-            proc += _ld(2, enc_jaeger_kv(k, v))
-        out += _ld(10, proc)
+            proc += enc_ld(2, enc_jaeger_kv(k, v))
+        out += enc_ld(10, proc)
     return out
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .otlp_pb import _pb_map
+from ._wire import enc_varint, explode_decode
 
 CT_STOP, CT_TRUE, CT_FALSE, CT_BYTE, CT_I16, CT_I32, CT_I64 = 0, 1, 2, 3, 4, 5, 6
 CT_DOUBLE, CT_BINARY, CT_LIST, CT_SET, CT_MAP, CT_STRUCT = 7, 8, 9, 10, 11, 12
@@ -314,27 +314,15 @@ def decode_jaeger_batch(payload: bytes, protocol: str = "compact") -> list[dict]
 
 def parse_jaeger_thrift_batches(df: DataFrame, source: str = "payload", protocol: str = "compact") -> DataFrame:
     """Arrow-batched decode; malformed payloads drop (the UDP server's
-    discard path). Scale: shuffle-free mapInPandas over the scan."""
-    return _pb_map(df, source, _JT_FIELDS, lambda p: decode_jaeger_batch(p, protocol))
+    discard path). Scale: shuffle-free mapInArrow over the scan."""
+    return explode_decode(df, source, _JT_FIELDS, lambda p: decode_jaeger_batch(p, protocol))
 
 
 # --- encode side (fixtures/tests) --------------------------------------------
 
 
-def _wv(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _wzz(v: int) -> bytes:
-    return _wv((v << 1) ^ (v >> 63) if v < 0 else v << 1)
+    return enc_varint((v << 1) ^ (v >> 63) if v < 0 else v << 1)
 
 
 class _W:
@@ -367,7 +355,7 @@ class _W:
     def s(self, fid: int, v: bytes | str):
         raw = v.encode("utf-8") if isinstance(v, str) else v
         self._hdr(fid, CT_BINARY)
-        self.buf += _wv(len(raw)) + raw
+        self.buf += enc_varint(len(raw)) + raw
 
     def lst(self, fid: int, items: list[bytes], et: int = CT_STRUCT):
         self._hdr(fid, CT_LIST)
@@ -375,7 +363,7 @@ class _W:
             self.buf.append((len(items) << 4) | et)
         else:
             self.buf.append(0xF0 | et)
-            self.buf += _wv(len(items))
+            self.buf += enc_varint(len(items))
         for it in items:
             self.buf += it
 

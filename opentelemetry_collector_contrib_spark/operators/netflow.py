@@ -13,8 +13,9 @@ flowTypeNames).
 
 Here the datagram is a `binary` column (the spool bridge delivers exported
 packets as rows; our ingress is a table, not a socket) and the decode is an
-Arrow-batched mapInPandas kernel — same operator shape as the OTLP/SignalFx/
-SkyWalking protobuf decoders in otlp_pb.py: decode cost is per-row Python
+Arrow-batched Python kernel: numpy batch decoders under mapInPandas for
+NetFlow v5/v9/IPFIX, and for sFlow the mapInArrow kernel the protobuf
+decoders share (`_wire.explode_decode`). Decode cost is per-row Python
 but embarrassingly parallel across parquet splits, so at 100 TB the job
 scales with cores; a JVM datasource could swap in without changing the
 plan shape. Malformed or truncated packets drop (on_error=send analogue).
@@ -39,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._wire import explode_decode
 
 # IANA protocol numbers -> names, the subset of parser.go:37-180's table
 # that flow exports actually carry in practice; anything else renders
@@ -416,15 +419,6 @@ def _v5_decode_batch(payloads, pdf: pd.DataFrame, names: list[str]) -> pd.DataFr
         "nf_ip_tos": recs["tos"].astype(np.int32),
     })
     return pd.concat([base, out], axis=1)
-
-
-def _nf_map(df: DataFrame, source: str, decode) -> DataFrame:
-    """mapInPandas fan-out: passthrough columns + one output row per flow
-    record; malformed packets drop. Delegates to the shared otlp_pb
-    kernel so per-payload guard fixes apply in exactly one place."""
-    from .otlp_pb import _pb_map
-
-    return _pb_map(df, source, _NF_FIELDS, decode)
 
 
 def parse_netflow_v5(df: DataFrame, source: str = "payload") -> DataFrame:
@@ -1157,7 +1151,7 @@ def decode_sflow(payload: bytes) -> list[dict]:
 
 def parse_sflow(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per sFlow v5 flow sample (raw-header record reconstructed)."""
-    return _nf_map(df, source, decode_sflow)
+    return explode_decode(df, source, _NF_FIELDS, decode_sflow)
 
 
 def enc_sflow(seq: int, samples: list[dict], agent_ip: bytes = b"\x0a\x00\x00\x01") -> bytes:

@@ -16,118 +16,76 @@ connectors. Field numbers follow the public opentelemetry-proto schema
   AnyValue oneof{ string=1, bool=2, int=3, double=4, array=5, kvlist=6,
                   bytes=7 }
 
+The module also decodes OTLP traces, number/histogram/exponential-histogram
+metrics, Prometheus remote-write v1, SignalFx and SkyWalking payloads, and
+holds the fixture encoders for each.
+
 Decoding protobuf is length-prefixed binary work — like msgpack and octet
-framing it is the honest Arrow-batched pandas-UDF case. The reader is a
-self-contained proto-wire subset (varint / fixed64 / length-delimited /
-fixed32), not a vendored library; unknown fields are skipped by wire type
-exactly as proto requires, so payloads from newer schema revisions still
-decode."""
+framing it is the honest Arrow-batched Python-UDF case. Each `decode_*`
+walks one payload with the proto-wire reader in `_wire.py` (unknown fields
+are skipped by wire type exactly as proto requires, so payloads from newer
+schema revisions still decode) and returns one dict per output row; each
+`parse_*` runs its decoder through `_wire.explode_decode`, the mapInArrow
+kernel all row-exploding wire decoders share."""
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# --- proto wire reader -------------------------------------------------------
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    out = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint overflow")
-
-
-def _fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
-    """Yield (field_number, wire_type, value) over one message's bytes.
-    wire 0 -> int, 1 -> 8 raw bytes, 2 -> bytes, 5 -> 4 raw bytes."""
-    pos = 0
-    while pos < len(buf):
-        tag, pos = _read_varint(buf, pos)
-        fnum, wtype = tag >> 3, tag & 0x07
-        if wtype == 0:
-            v, pos = _read_varint(buf, pos)
-        elif wtype == 1:
-            v, pos = buf[pos : pos + 8], pos + 8
-            if len(v) != 8:
-                raise ValueError("truncated fixed64")
-        elif wtype == 2:
-            n, pos = _read_varint(buf, pos)
-            v, pos = buf[pos : pos + n], pos + n
-            if len(v) != n:
-                raise ValueError("truncated length-delimited field")
-        elif wtype == 5:
-            v, pos = buf[pos : pos + 4], pos + 4
-            if len(v) != 4:
-                raise ValueError("truncated fixed32")
-        else:
-            raise ValueError(f"unsupported wire type {wtype}")
-        yield fnum, wtype, v
-
-
-def _b(v) -> bytes:
-    """Assert a length-delimited value: varint-typed fields reaching a
-    bytes/string/submessage slot are wire-type mismatches and must fail
-    the payload (never bytes(int) — that ALLOCATES v zero bytes)."""
-    if isinstance(v, int):
-        raise ValueError("wire type mismatch: varint where bytes expected")
-    return v
-
-
-def _zigzag_signed(v: int) -> int:
-    """proto int64 varints are two's-complement in 64 bits (NOT zigzag)."""
-    return v - (1 << 64) if v >= (1 << 63) else v
+from ._wire import (
+    as_bytes,
+    as_int64,
+    enc_ld,
+    enc_tag,
+    enc_varint,
+    explode_decode,
+    iter_fields,
+    packed_varints,
+)
 
 
 def _i32(v: int) -> int:
     """Validate an int32-typed varint (enums, temporality, kind). A value
     outside int32 range must fail INSIDE the per-payload try (-> payload
-    drops) rather than later in the pandas->Arrow conversion, which is
+    drops) rather than later in the kernel's Arrow batch build, which is
     outside it and would fail the whole task."""
-    x = int(v)
-    x = x - (1 << 64) if x >= (1 << 63) else x
+    x = as_int64(int(v))
     if not -(1 << 31) <= x < (1 << 31):
         raise ValueError(f"int32 field out of range: {x}")
     return x
 
 
 def _any_value(buf: bytes) -> object:
-    for fnum, _, v in _fields(buf):
+    for fnum, _, v in iter_fields(buf):
         if fnum == 1:
-            return _b(v).decode("utf-8", errors="replace")
+            return as_bytes(v).decode("utf-8", errors="replace")
         if fnum == 2:
             return bool(v)
         if fnum == 3:
-            return _zigzag_signed(v)
+            return as_int64(v)
         if fnum == 4:
             return struct.unpack("<d", v)[0]
         if fnum == 5:  # ArrayValue{ values = 1 }
-            return [_any_value(x) for f, _, x in _fields(_b(v)) if f == 1]
+            return [_any_value(x) for f, _, x in iter_fields(as_bytes(v)) if f == 1]
         if fnum == 6:  # KeyValueList{ values = 1 }
-            return dict(_key_value(x) for f, _, x in _fields(_b(v)) if f == 1)
+            return dict(_key_value(x) for f, _, x in iter_fields(as_bytes(v)) if f == 1)
         if fnum == 7:
-            return bytes(_b(v))
+            return bytes(as_bytes(v))
     return None
 
 
 def _key_value(buf: bytes) -> tuple[str, object]:
     key, val = "", None
-    for fnum, _, v in _fields(buf):
+    for fnum, _, v in iter_fields(buf):
         if fnum == 1:
-            key = _b(v).decode("utf-8", errors="replace")
+            key = as_bytes(v).decode("utf-8", errors="replace")
         elif fnum == 2:
-            val = _any_value(_b(v))
+            val = _any_value(as_bytes(v))
     return key, val
 
 
@@ -159,22 +117,22 @@ def decode_logs_data(payload: bytes) -> list[dict]:
     """LogsData / ExportLogsServiceRequest bytes -> one dict per LogRecord,
     resource and scope context flattened onto each row (the pdata shape)."""
     rows = []
-    for f1, _, rl in _fields(payload):
+    for f1, _, rl in iter_fields(payload):
         if f1 != 1:
             continue
         res_attrs: list[tuple[str, object]] = []
         scopes = []
-        for f2, _, v2 in _fields(rl):
+        for f2, _, v2 in iter_fields(rl):
             if f2 == 1:  # Resource
-                res_attrs = [_key_value(x) for f, _, x in _fields(v2) if f == 1]
+                res_attrs = [_key_value(x) for f, _, x in iter_fields(v2) if f == 1]
             elif f2 == 2:
                 scopes.append(v2)
         for sl in scopes:
             scope_name = None
             records = []
-            for f3, _, v3 in _fields(sl):
+            for f3, _, v3 in iter_fields(sl):
                 if f3 == 1:
-                    for f4, _, v4 in _fields(v3):
+                    for f4, _, v4 in iter_fields(v3):
                         if f4 == 1:
                             scope_name = v4.decode("utf-8", errors="replace")
                 elif f3 == 2:
@@ -192,21 +150,21 @@ def decode_logs_data(payload: bytes) -> list[dict]:
                     "ol_resource_csv": _attrs_csv(res_attrs),
                 }
                 attrs: list[tuple[str, object]] = []
-                for f4, _, v4 in _fields(lr):
+                for f4, _, v4 in iter_fields(lr):
                     if f4 == 1:
                         row["ol_ts_us"] = struct.unpack("<Q", v4)[0] // 1000
                     elif f4 == 2:
                         row["ol_severity_number"] = _i32(v4)
                     elif f4 == 3:
-                        row["ol_severity_text"] = _b(v4).decode("utf-8", errors="replace")
+                        row["ol_severity_text"] = as_bytes(v4).decode("utf-8", errors="replace")
                     elif f4 == 5:
                         row["ol_body"] = _render(_any_value(v4))
                     elif f4 == 6:
                         attrs.append(_key_value(v4))
                     elif f4 == 9:
-                        row["ol_trace_id"] = bytes(_b(v4)).hex()
+                        row["ol_trace_id"] = bytes(as_bytes(v4)).hex()
                     elif f4 == 10:
-                        row["ol_span_id"] = bytes(_b(v4)).hex()
+                        row["ol_span_id"] = bytes(as_bytes(v4)).hex()
                 row["ol_attrs_csv"] = _attrs_csv(attrs)
                 rows.append(row)
     return rows
@@ -228,250 +186,10 @@ _OL_FIELDS = [
 def parse_otlp_pb_logs(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per LogRecord in each OTLP-protobuf payload. Malformed
     payloads drop (receiver rejects the request). Arrow-batched."""
-    return _pb_map(df, source, _OL_FIELDS, decode_logs_data)
-
-
-# --- optional JVM decode seam (spark-protobuf), round 5 ----------------------
-#
-# The reference's receivers decode OTLP in native code; our honest
-# Arrow-batched Python walk is the fallback, but when an environment ships
-# the OPTIONAL spark-protobuf module (absent from this image — probe result
-# PROTOBUF_NOT_LOADED, BENCH/SESSION_r4.md), `from_protobuf()` decodes
-# JVM-side inside whole-stage codegen. The descriptor set is HAND-ENCODED
-# with the same wire writers the fixture encoders use (descriptor.proto is
-# itself protobuf), so building it needs no protobuf library; only USING it
-# needs the jar. A/B hook for a jar-bearing environment:
-#     SPARK_GRAFT_OTLP_ENGINE=jvm python bench.py   (q14 auto-probes anyway)
-
-_DESC_TYPE = {
-    "double": 1, "int64": 3, "int32": 5, "fixed64": 6, "fixed32": 7,
-    "bool": 8, "string": 9, "message": 11, "bytes": 12,
-}
-_OTLP_PKG = "opentelemetry.proto.logs.v1"
-
-
-def _desc_field(
-    name: str, number: int, ftype: str, *, repeated: bool = False,
-    type_name: str | None = None,
-) -> bytes:
-    """FieldDescriptorProto bytes: name=1, number=3, label=4, type=5,
-    type_name=6 (fully qualified, leading dot)."""
-    out = _ld(1, name.encode())
-    out += _tag(3, 0) + _enc_varint(number)
-    out += _tag(4, 0) + _enc_varint(3 if repeated else 1)  # REPEATED / OPTIONAL
-    out += _tag(5, 0) + _enc_varint(_DESC_TYPE[ftype])
-    if type_name is not None:
-        out += _ld(6, ("." + _OTLP_PKG + "." + type_name).encode())
-    return out
-
-
-def _desc_message(name: str, fields: list[bytes]) -> bytes:
-    """DescriptorProto bytes: name=1, field=2 (repeated)."""
-    return _ld(1, name.encode()) + b"".join(_ld(2, f) for f in fields)
-
-
-def logs_descriptor_set() -> bytes:
-    """FileDescriptorSet bytes for the LogsData subset this module walks
-    (field numbers from the public opentelemetry-proto logs.proto /
-    common.proto — see module docstring). AnyValue's recursive
-    array_value/kvlist_value arms are OMITTED so the schema is
-    non-recursive (spark-protobuf rejects recursion unless
-    recursive.fields.max.depth is set); unknown fields skip on decode per
-    the proto contract, so payloads carrying them still parse — their
-    bodies render NULL on the JVM path (the Python walk renders them;
-    scalar bodies agree on both paths)."""
-    M, Fd = _desc_message, _desc_field
-    msgs = [
-        M("LogsData", [Fd("resource_logs", 1, "message", repeated=True, type_name="ResourceLogs")]),
-        M("ResourceLogs", [
-            Fd("resource", 1, "message", type_name="Resource"),
-            Fd("scope_logs", 2, "message", repeated=True, type_name="ScopeLogs"),
-            Fd("schema_url", 3, "string"),
-        ]),
-        M("Resource", [Fd("attributes", 1, "message", repeated=True, type_name="KeyValue")]),
-        M("ScopeLogs", [
-            Fd("scope", 1, "message", type_name="InstrumentationScope"),
-            Fd("log_records", 2, "message", repeated=True, type_name="LogRecord"),
-        ]),
-        M("InstrumentationScope", [Fd("name", 1, "string"), Fd("version", 2, "string")]),
-        M("LogRecord", [
-            Fd("time_unix_nano", 1, "fixed64"),
-            Fd("severity_number", 2, "int32"),
-            Fd("severity_text", 3, "string"),
-            Fd("body", 5, "message", type_name="AnyValue"),
-            Fd("attributes", 6, "message", repeated=True, type_name="KeyValue"),
-            Fd("flags", 8, "fixed32"),
-            Fd("trace_id", 9, "bytes"),
-            Fd("span_id", 10, "bytes"),
-            Fd("observed_time_unix_nano", 11, "fixed64"),
-        ]),
-        M("KeyValue", [Fd("key", 1, "string"), Fd("value", 2, "message", type_name="AnyValue")]),
-        M("AnyValue", [
-            Fd("string_value", 1, "string"),
-            Fd("bool_value", 2, "bool"),
-            Fd("int_value", 3, "int64"),
-            Fd("double_value", 4, "double"),
-            Fd("bytes_value", 7, "bytes"),
-        ]),
-    ]
-    fdp = (
-        _ld(1, b"otlp_logs_subset.proto")
-        + _ld(2, _OTLP_PKG.encode())
-        + b"".join(_ld(4, m) for m in msgs)
-        + _ld(12, b"proto3")
-    )
-    return _ld(1, fdp)
-
-
-def jvm_protobuf_available(spark) -> bool:
-    """True iff the optional spark-protobuf module is on the session
-    classpath. Resolves through Spark's Utils.classForName first —
-    jars delivered via ``--packages``/``spark.jars`` land on Spark's
-    MutableURLClassLoader, which plain ``Class.forName`` (system
-    classloader) cannot see, so the naive probe would false-negative in
-    exactly the environments the seam exists for (round-5 review).
-    Any resolution failure means the honest Python walk runs instead."""
-    cls = "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-    try:
-        # (className, initialize, noSparkClassLoader) — uses the context-
-        # or-Spark classloader, the one session jars are registered on
-        spark._jvm.org.apache.spark.util.Utils.classForName(cls, True, False)
-        return True
-    except Exception:  # noqa: BLE001 — Py4J wraps ClassNotFoundException
-        pass
-    try:
-        spark._jvm.java.lang.Class.forName(cls)
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def _render_any_col(v):
-    """Spark rendering of a decoded AnyValue struct, mirroring _render for
-    the scalar arms (string as-is, bool true/false, int/double cast,
-    bytes lower-hex). Absent proto3 scalars arrive as NULL
-    (spark-protobuf's default emit.default.values=false), so coalesce
-    picks the set arm exactly like the oneof walk."""
-    return F.coalesce(
-        v["string_value"],
-        F.when(v["bool_value"].isNotNull(),
-               F.when(v["bool_value"], F.lit("true")).otherwise(F.lit("false"))),
-        v["int_value"].cast("string"),
-        v["double_value"].cast("string"),
-        F.lower(F.hex(v["bytes_value"])),
-    )
-
-
-def _attrs_csv_col(attrs):
-    """k=render(v) CSV of a repeated-KeyValue column sorted by (key,
-    rendered value) (NULL render → empty string, empty list → NULL),
-    matching _attrs_csv. Sorting the joined "k=v" strings instead would put
-    "a.b=…" before "a=…" ('.' < '='), unlike the walk's key order."""
-    pairs = F.transform(
-        attrs,
-        lambda kv: F.struct(
-            kv["key"].alias("k"),
-            F.coalesce(_render_any_col(kv["value"]), F.lit("")).alias("v"),
-        ),
-    )
-    rendered = F.transform(F.array_sort(pairs), lambda p: F.concat(p["k"], F.lit("="), p["v"]))
-    return F.when(F.size(attrs) > 0, F.array_join(rendered, ","))
-
-
-def parse_otlp_pb_logs_jvm(df: DataFrame, source: str = "payload") -> DataFrame:
-    r"""JVM-side LogsData decode via spark-protobuf: same output SCHEMA as
-    parse_otlp_pb_logs (one row per LogRecord, resource and scope
-    flattened, malformed payloads dropped via PERMISSIVE-null).
-
-    Known value-rendering divergences from the Python walk (round-5
-    review — both are rare on real payloads but hash-relevant):
-      - AnyValue doubles render via Spark's double→string cast (Java
-        ``Double.toString``: scientific notation at \|x\| ≥ 1e7 / < 1e-3)
-        while the walk uses Python ``repr`` — e.g. 12345678.5 renders
-        '1.23456785E7' here vs '12345678.5' there;
-      - a serializer that EXPLICITLY emits a default-valued oneof arm
-        (``string_value:""``, ``bool_value:false``, ``int_value:0``)
-        decodes to NULL here (no oneof presence in the hand descriptor +
-        emit.default.values=false) but renders ''/'false'/'0' in the walk.
-    String/str-int bodies and attrs — the shapes the fixtures and the
-    parity oracle exercise — agree exactly. Requires
-    jvm_protobuf_available(); use parse_otlp_pb_logs_auto for the
-    probe-gated dispatch."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    msg = from_protobuf(
-        F.col(source),
-        _OTLP_PKG + ".LogsData",
-        binaryDescriptorSet=logs_descriptor_set(),
-        options={"mode": "PERMISSIVE"},
-    )
-    rl = (
-        df.withColumn("_m", msg)
-        .filter(F.col("_m").isNotNull())
-        .select(F.explode("_m.resource_logs").alias("_rl"))
-    )
-    sl = rl.select(
-        _attrs_csv_col(F.col("_rl.resource.attributes")).alias("ol_resource_csv"),
-        F.explode("_rl.scope_logs").alias("_sl"),
-    )
-    lr = sl.select(
-        "ol_resource_csv",
-        F.col("_sl.scope.name").alias("ol_scope"),
-        F.explode("_sl.log_records").alias("_lr"),
-    )
-    r = F.col("_lr")
-    return lr.select(
-        # integral div: ns values (~1.8e18) exceed double's 2^53 mantissa,
-        # so float division would corrupt the microsecond timestamp
-        F.try_divide(r["time_unix_nano"].cast("decimal(20,0)"), F.lit(1000))
-        .cast("long")
-        .alias("ol_ts_us"),
-        F.nullif(r["severity_number"], F.lit(0)).cast("int").alias("ol_severity_number"),
-        F.nullif(r["severity_text"], F.lit("")).alias("ol_severity_text"),
-        _render_any_col(r["body"]).alias("ol_body"),
-        _attrs_csv_col(r["attributes"]).alias("ol_attrs_csv"),
-        F.lower(F.hex(r["trace_id"])).alias("ol_trace_id"),
-        F.lower(F.hex(r["span_id"])).alias("ol_span_id"),
-        "ol_scope",
-        "ol_resource_csv",
-    ).select([f.name for f in _OL_FIELDS])
-
-
-def parse_otlp_pb_logs_auto(df: DataFrame, source: str = "payload") -> DataFrame:
-    """Probe-gated dispatch: spark-protobuf JVM decode when the jar is
-    present, the Arrow-batched Python walk otherwise. Output schema is
-    identical either way; see parse_otlp_pb_logs_jvm for the two
-    documented value-rendering caveats (double formatting, explicitly
-    serialized default oneof arms) a jar-bearing environment should
-    pin with its own golden run before switching hashes over."""
-    if jvm_protobuf_available(df.sparkSession):
-        return parse_otlp_pb_logs_jvm(df, source)
-    return parse_otlp_pb_logs(df, source)
+    return explode_decode(df, source, _OL_FIELDS, decode_logs_data)
 
 
 # --- encode side (fixtures/tests only) ---------------------------------------
-
-
-def _tag(fnum: int, wtype: int) -> bytes:
-    return _enc_varint((fnum << 3) | wtype)
-
-
-def _enc_varint(v: int) -> bytes:
-    if v < 0:
-        v += 1 << 64
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _ld(fnum: int, payload: bytes) -> bytes:
-    return _tag(fnum, 2) + _enc_varint(len(payload)) + payload
 
 
 def enc_any(v) -> bytes:
@@ -480,24 +198,24 @@ def enc_any(v) -> bytes:
     if hasattr(v, "item") and type(v).__module__ == "numpy":
         v = v.item()  # pandas hands numpy scalars to per-column encoders
     if isinstance(v, bool):
-        return _tag(2, 0) + _enc_varint(1 if v else 0)
+        return enc_tag(2, 0) + enc_varint(1 if v else 0)
     if isinstance(v, str):
-        return _ld(1, v.encode("utf-8"))
+        return enc_ld(1, v.encode("utf-8"))
     if isinstance(v, int):
-        return _tag(3, 0) + _enc_varint(v)
+        return enc_tag(3, 0) + enc_varint(v)
     if isinstance(v, float):
-        return _tag(4, 1) + struct.pack("<d", v)
+        return enc_tag(4, 1) + struct.pack("<d", v)
     if isinstance(v, bytes):
-        return _ld(7, v)
+        return enc_ld(7, v)
     if isinstance(v, list):
-        return _ld(5, b"".join(_ld(1, enc_any(x)) for x in v))
+        return enc_ld(5, b"".join(enc_ld(1, enc_any(x)) for x in v))
     if isinstance(v, dict):
-        return _ld(6, b"".join(_ld(1, enc_kv(k, x)) for k, x in v.items()))
+        return enc_ld(6, b"".join(enc_ld(1, enc_kv(k, x)) for k, x in v.items()))
     raise TypeError(type(v))
 
 
 def enc_kv(k: str, v) -> bytes:
-    return _ld(1, k.encode("utf-8")) + _ld(2, enc_any(v))
+    return enc_ld(1, k.encode("utf-8")) + enc_ld(2, enc_any(v))
 
 
 def enc_log_record(
@@ -509,29 +227,29 @@ def enc_log_record(
     trace_id: bytes | None = None,
     span_id: bytes | None = None,
 ) -> bytes:
-    out = _tag(1, 1) + struct.pack("<Q", ts_ns)
+    out = enc_tag(1, 1) + struct.pack("<Q", ts_ns)
     if severity_number:
-        out += _tag(2, 0) + _enc_varint(severity_number)
+        out += enc_tag(2, 0) + enc_varint(severity_number)
     if severity_text is not None:
-        out += _ld(3, severity_text.encode("utf-8"))
-    out += _ld(5, enc_any(body))
+        out += enc_ld(3, severity_text.encode("utf-8"))
+    out += enc_ld(5, enc_any(body))
     for k, v in (attrs or {}).items():
-        out += _ld(6, enc_kv(k, v))
+        out += enc_ld(6, enc_kv(k, v))
     if trace_id:
-        out += _ld(9, trace_id)
+        out += enc_ld(9, trace_id)
     if span_id:
-        out += _ld(10, span_id)
+        out += enc_ld(10, span_id)
     return out
 
 
 def enc_logs_data(
     records: list[bytes], resource_attrs: dict | None = None, scope_name: str | None = None
 ) -> bytes:
-    resource = b"".join(_ld(1, enc_kv(k, v)) for k, v in (resource_attrs or {}).items())
-    scope = _ld(1, scope_name.encode("utf-8")) if scope_name else b""
-    scope_logs = _ld(1, scope) + b"".join(_ld(2, r) for r in records)
-    resource_logs = _ld(1, resource) + _ld(2, scope_logs)
-    return _ld(1, resource_logs)
+    resource = b"".join(enc_ld(1, enc_kv(k, v)) for k, v in (resource_attrs or {}).items())
+    scope = enc_ld(1, scope_name.encode("utf-8")) if scope_name else b""
+    scope_logs = enc_ld(1, scope) + b"".join(enc_ld(2, r) for r in records)
+    resource_logs = enc_ld(1, resource) + enc_ld(2, scope_logs)
+    return enc_ld(1, resource_logs)
 
 
 def synthesize_otlp_pb(df: DataFrame, id_col: str = "event_id", cols: dict | None = None) -> DataFrame:
@@ -590,18 +308,18 @@ _SPAN_FIELDS = [
 
 def decode_traces_data(payload: bytes) -> list[dict]:
     rows = []
-    for f1, _, rs in _fields(payload):
+    for f1, _, rs in iter_fields(payload):
         if f1 != 1:
             continue
         res_attrs: list[tuple[str, object]] = []
         scope_spans = []
-        for f2, _, v2 in _fields(rs):
+        for f2, _, v2 in iter_fields(rs):
             if f2 == 1:
-                res_attrs = [_key_value(x) for f, _, x in _fields(v2) if f == 1]
+                res_attrs = [_key_value(x) for f, _, x in iter_fields(v2) if f == 1]
             elif f2 == 2:
                 scope_spans.append(v2)
         for ss in scope_spans:
-            for f3, _, sp in _fields(ss):
+            for f3, _, sp in iter_fields(ss):
                 if f3 != 2:
                     continue
                 row = dict.fromkeys(
@@ -611,13 +329,13 @@ def decode_traces_data(payload: bytes) -> list[dict]:
                 )
                 row["sp_resource_csv"] = _attrs_csv(res_attrs)
                 attrs: list[tuple[str, object]] = []
-                for f4, _, v4 in _fields(sp):
+                for f4, _, v4 in iter_fields(sp):
                     if f4 == 1:
-                        row["sp_trace_id"] = bytes(_b(v4)).hex()
+                        row["sp_trace_id"] = bytes(as_bytes(v4)).hex()
                     elif f4 == 2:
-                        row["sp_span_id"] = bytes(_b(v4)).hex()
+                        row["sp_span_id"] = bytes(as_bytes(v4)).hex()
                     elif f4 == 4:
-                        row["sp_parent_span_id"] = bytes(_b(v4)).hex()
+                        row["sp_parent_span_id"] = bytes(as_bytes(v4)).hex()
                     elif f4 == 5:
                         row["sp_name"] = v4.decode("utf-8", errors="replace")
                     elif f4 == 6:
@@ -629,7 +347,7 @@ def decode_traces_data(payload: bytes) -> list[dict]:
                     elif f4 == 9:
                         attrs.append(_key_value(v4))
                     elif f4 == 15:
-                        for f5, _, v5 in _fields(v4):
+                        for f5, _, v5 in iter_fields(v4):
                             if f5 == 3:
                                 row["sp_status_code"] = _i32(v5)
                 row["sp_attrs_csv"] = _attrs_csv(attrs)
@@ -639,7 +357,7 @@ def decode_traces_data(payload: bytes) -> list[dict]:
 
 def parse_otlp_pb_traces(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per Span in each OTLP-protobuf TracesData payload."""
-    return _pb_map(df, source, _SPAN_FIELDS, decode_traces_data)
+    return explode_decode(df, source, _SPAN_FIELDS, decode_traces_data)
 
 
 # --- metrics (metrics.proto, number datapoints) -------------------------------
@@ -666,7 +384,7 @@ _NUMDP_FIELDS = [
 def _number_dp(buf: bytes) -> dict:
     dp = {"mt_ts_us": None, "mt_value": None, "mt_is_int": None, "mt_attrs_csv": None}
     attrs: list[tuple[str, object]] = []
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 3:
             dp["mt_ts_us"] = struct.unpack("<Q", v)[0] // 1000
         elif f == 4:
@@ -683,18 +401,18 @@ def _number_dp(buf: bytes) -> dict:
 
 def decode_metrics_data(payload: bytes) -> list[dict]:
     rows = []
-    for f1, _, rm in _fields(payload):
+    for f1, _, rm in iter_fields(payload):
         if f1 != 1:
             continue
-        for f2, _, sm in _fields(rm):
+        for f2, _, sm in iter_fields(rm):
             if f2 != 2:
                 continue
-            for f3, _, metric in _fields(sm):
+            for f3, _, metric in iter_fields(sm):
                 if f3 != 2:
                     continue
                 name = unit = None
                 dps = []
-                for f4, _, v4 in _fields(metric):
+                for f4, _, v4 in iter_fields(metric):
                     if f4 == 1:
                         name = v4.decode("utf-8", errors="replace")
                     elif f4 == 3:
@@ -703,7 +421,7 @@ def decode_metrics_data(payload: bytes) -> list[dict]:
                         mtype = "gauge" if f4 == 5 else "sum"
                         temporality = monotonic = None
                         points = []
-                        for f5, _, v5 in _fields(v4):
+                        for f5, _, v5 in iter_fields(v4):
                             if f5 == 1:
                                 points.append(_number_dp(v5))
                             elif f5 == 2 and mtype == "sum":
@@ -722,30 +440,7 @@ def decode_metrics_data(payload: bytes) -> list[dict]:
 def parse_otlp_pb_metrics(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per number datapoint (gauge/sum) in each OTLP-protobuf
     MetricsData payload."""
-    return _pb_map(df, source, _NUMDP_FIELDS, decode_metrics_data)
-
-
-def _pb_map(df: DataFrame, source: str, fields: list, decode) -> DataFrame:
-    passthrough = [f for f in df.schema.fields if f.name != source]
-    names = [f.name for f in passthrough]
-    out_schema = T.StructType([*passthrough, *fields])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                payload = rec[source]
-                if payload is None:
-                    continue
-                try:
-                    decoded = decode(bytes(payload))
-                except Exception:  # noqa: BLE001
-                    continue
-                base = {k: rec[k] for k in names}
-                rows.extend({**base, **d} for d in decoded)
-            yield pd.DataFrame(rows, columns=[*names, *[f.name for f in fields]])
-
-    return df.mapInPandas(gen, out_schema)
+    return explode_decode(df, source, _NUMDP_FIELDS, decode_metrics_data)
 
 
 # --- trace/metric encoders (fixtures/tests) -----------------------------------
@@ -756,32 +451,32 @@ def enc_span(
     kind: int = 1, parent_span_id: bytes | None = None,
     attrs: dict | None = None, status_code: int | None = None,
 ) -> bytes:
-    out = _ld(1, trace_id) + _ld(2, span_id)
+    out = enc_ld(1, trace_id) + enc_ld(2, span_id)
     if parent_span_id:
-        out += _ld(4, parent_span_id)
-    out += _ld(5, name.encode("utf-8")) + _tag(6, 0) + _enc_varint(kind)
-    out += _tag(7, 1) + struct.pack("<Q", start_ns) + _tag(8, 1) + struct.pack("<Q", end_ns)
+        out += enc_ld(4, parent_span_id)
+    out += enc_ld(5, name.encode("utf-8")) + enc_tag(6, 0) + enc_varint(kind)
+    out += enc_tag(7, 1) + struct.pack("<Q", start_ns) + enc_tag(8, 1) + struct.pack("<Q", end_ns)
     for k, v in (attrs or {}).items():
-        out += _ld(9, enc_kv(k, v))
+        out += enc_ld(9, enc_kv(k, v))
     if status_code is not None:
-        out += _ld(15, _tag(3, 0) + _enc_varint(status_code))
+        out += enc_ld(15, enc_tag(3, 0) + enc_varint(status_code))
     return out
 
 
 def enc_traces_data(spans: list[bytes], resource_attrs: dict | None = None) -> bytes:
-    resource = b"".join(_ld(1, enc_kv(k, v)) for k, v in (resource_attrs or {}).items())
-    scope_spans = b"".join(_ld(2, s) for s in spans)
-    return _ld(1, _ld(1, resource) + _ld(2, scope_spans))
+    resource = b"".join(enc_ld(1, enc_kv(k, v)) for k, v in (resource_attrs or {}).items())
+    scope_spans = b"".join(enc_ld(2, s) for s in spans)
+    return enc_ld(1, enc_ld(1, resource) + enc_ld(2, scope_spans))
 
 
 def enc_number_dp(ts_ns: int, value, attrs: dict | None = None) -> bytes:
-    out = _tag(3, 1) + struct.pack("<Q", ts_ns)
+    out = enc_tag(3, 1) + struct.pack("<Q", ts_ns)
     if isinstance(value, int):
-        out += _tag(6, 1) + struct.pack("<q", value)
+        out += enc_tag(6, 1) + struct.pack("<q", value)
     else:
-        out += _tag(4, 1) + struct.pack("<d", value)
+        out += enc_tag(4, 1) + struct.pack("<d", value)
     for k, v in (attrs or {}).items():
-        out += _ld(7, enc_kv(k, v))
+        out += enc_ld(7, enc_kv(k, v))
     return out
 
 
@@ -789,19 +484,19 @@ def enc_metric(
     name: str, unit: str, dps: list[bytes], mtype: str = "gauge",
     temporality: int | None = None, monotonic: bool | None = None,
 ) -> bytes:
-    inner = b"".join(_ld(1, d) for d in dps)
+    inner = b"".join(enc_ld(1, d) for d in dps)
     if mtype == "sum":
         if temporality is not None:
-            inner += _tag(2, 0) + _enc_varint(temporality)
+            inner += enc_tag(2, 0) + enc_varint(temporality)
         if monotonic is not None:
-            inner += _tag(3, 0) + _enc_varint(1 if monotonic else 0)
-    out = _ld(1, name.encode("utf-8")) + _ld(3, unit.encode("utf-8"))
-    return out + _ld(5 if mtype == "gauge" else 7, inner)
+            inner += enc_tag(3, 0) + enc_varint(1 if monotonic else 0)
+    out = enc_ld(1, name.encode("utf-8")) + enc_ld(3, unit.encode("utf-8"))
+    return out + enc_ld(5 if mtype == "gauge" else 7, inner)
 
 
 def enc_metrics_data(metrics: list[bytes]) -> bytes:
-    scope_metrics = b"".join(_ld(2, m) for m in metrics)
-    return _ld(1, _ld(2, scope_metrics))
+    scope_metrics = b"".join(enc_ld(2, m) for m in metrics)
+    return enc_ld(1, enc_ld(2, scope_metrics))
 
 
 def synthesize_otlp_pb_spans(df: DataFrame) -> DataFrame:
@@ -886,7 +581,7 @@ def _hist_dp(buf: bytes) -> dict:
         "hh_bucket_counts_csv": None, "hh_bounds_csv": None, "hh_attrs_csv": None,
     }
     attrs: list[tuple[str, object]] = []
-    for f, _, v in _fields(buf):
+    for f, _, v in iter_fields(buf):
         if f == 3:
             dp["hh_ts_us"] = struct.unpack("<Q", v)[0] // 1000
         elif f == 4:
@@ -905,24 +600,24 @@ def _hist_dp(buf: bytes) -> dict:
 
 def decode_histograms_data(payload: bytes) -> list[dict]:
     rows = []
-    for f1, _, rm in _fields(payload):
+    for f1, _, rm in iter_fields(payload):
         if f1 != 1:
             continue
-        for f2, _, sm in _fields(rm):
+        for f2, _, sm in iter_fields(rm):
             if f2 != 2:
                 continue
-            for f3, _, metric in _fields(sm):
+            for f3, _, metric in iter_fields(sm):
                 if f3 != 2:
                     continue
                 name = None
                 dps = []
-                for f4, _, v4 in _fields(metric):
+                for f4, _, v4 in iter_fields(metric):
                     if f4 == 1:
                         name = v4.decode("utf-8", errors="replace")
                     elif f4 == 9:  # histogram
                         temporality = None
                         points = []
-                        for f5, _, v5 in _fields(v4):
+                        for f5, _, v5 in iter_fields(v4):
                             if f5 == 1:
                                 points.append(_hist_dp(v5))
                             elif f5 == 2:
@@ -937,24 +632,24 @@ def parse_otlp_pb_histograms(df: DataFrame, source: str = "payload") -> DataFram
     payload — bucket counts and explicit bounds arrive as the proto PACKED
     wire encodings and surface as the repo's canonical CSV columns, so the
     output plugs straight into the histogram merge/rebucket operators."""
-    return _pb_map(df, source, _HIST_FIELDS, decode_histograms_data)
+    return explode_decode(df, source, _HIST_FIELDS, decode_histograms_data)
 
 
 def enc_hist_dp(ts_ns: int, count: int, total: float, bucket_counts: list[int],
                 bounds: list[float], attrs: dict | None = None) -> bytes:
-    out = _tag(3, 1) + struct.pack("<Q", ts_ns)
-    out += _tag(4, 1) + struct.pack("<Q", count)
-    out += _tag(5, 1) + struct.pack("<d", total)
-    out += _ld(6, b"".join(struct.pack("<Q", c) for c in bucket_counts))
-    out += _ld(7, b"".join(struct.pack("<d", b) for b in bounds))
+    out = enc_tag(3, 1) + struct.pack("<Q", ts_ns)
+    out += enc_tag(4, 1) + struct.pack("<Q", count)
+    out += enc_tag(5, 1) + struct.pack("<d", total)
+    out += enc_ld(6, b"".join(struct.pack("<Q", c) for c in bucket_counts))
+    out += enc_ld(7, b"".join(struct.pack("<d", b) for b in bounds))
     for k, v in (attrs or {}).items():
-        out += _ld(9, enc_kv(k, v))
+        out += enc_ld(9, enc_kv(k, v))
     return out
 
 
 def enc_histogram_metric(name: str, dps: list[bytes], temporality: int = 2) -> bytes:
-    inner = b"".join(_ld(1, d) for d in dps) + _tag(2, 0) + _enc_varint(temporality)
-    return _ld(1, name.encode("utf-8")) + _ld(9, inner)
+    inner = b"".join(enc_ld(1, d) for d in dps) + enc_tag(2, 0) + enc_varint(temporality)
+    return enc_ld(1, name.encode("utf-8")) + enc_ld(9, inner)
 
 
 def synthesize_otlp_pb_histograms(df: DataFrame) -> DataFrame:
@@ -1003,23 +698,15 @@ def _unzigzag32(v: int) -> int:
     return (v >> 1) ^ -(v & 1)
 
 
-def _packed_varints(buf: bytes) -> list[int]:
-    out, pos = [], 0
-    while pos < len(buf):
-        v, pos = _read_varint(buf, pos)
-        out.append(v)
-    return out
-
-
 def _exph_buckets(buf: bytes) -> tuple[int | None, str | None]:
     offset, counts = None, None
-    for f, w, v in _fields(buf):
+    for f, w, v in iter_fields(buf):
         if f == 1:
             offset = _unzigzag32(v)
         elif f == 2:
             # packed (wire 2) is canonical; tolerate unpacked varints too
             if w == 2:
-                counts = ",".join(str(x) for x in _packed_varints(v))
+                counts = ",".join(str(x) for x in packed_varints(v))
             else:
                 counts = (counts + "," if counts else "") + str(v)
     return offset, counts
@@ -1027,24 +714,24 @@ def _exph_buckets(buf: bytes) -> tuple[int | None, str | None]:
 
 def decode_exp_histograms_data(payload: bytes) -> list[dict]:
     rows = []
-    for f1, _, rm in _fields(payload):
+    for f1, _, rm in iter_fields(payload):
         if f1 != 1:
             continue
-        for f2, _, sm in _fields(rm):
+        for f2, _, sm in iter_fields(rm):
             if f2 != 2:
                 continue
-            for f3, _, metric in _fields(sm):
+            for f3, _, metric in iter_fields(sm):
                 if f3 != 2:
                     continue
                 name = None
                 dps = []
-                for f4, _, v4 in _fields(metric):
+                for f4, _, v4 in iter_fields(metric):
                     if f4 == 1:
                         name = v4.decode("utf-8", errors="replace")
                     elif f4 == 10:
                         temporality = None
                         points = []
-                        for f5, _, v5 in _fields(v4):
+                        for f5, _, v5 in iter_fields(v4):
                             if f5 == 1:
                                 dp = {
                                     "eh_ts_us": None, "eh_count": None, "eh_sum": None,
@@ -1052,7 +739,7 @@ def decode_exp_histograms_data(payload: bytes) -> list[dict]:
                                     "eh_pos_offset": None, "eh_pos_counts_csv": None,
                                     "eh_neg_offset": None, "eh_neg_counts_csv": None,
                                 }
-                                for f6, _, v6 in _fields(v5):
+                                for f6, _, v6 in iter_fields(v5):
                                     if f6 == 3:
                                         dp["eh_ts_us"] = struct.unpack("<Q", v6)[0] // 1000
                                     elif f6 == 4:
@@ -1084,34 +771,34 @@ def parse_otlp_pb_exp_histograms(df: DataFrame, source: str = "payload") -> Data
     and bucket offsets, packed-varint bucket counts — emitting the same
     (scale, offset, counts) shape the exponential-histogram operators
     (downscale/merge/delta) consume."""
-    return _pb_map(df, source, _EXPH_FIELDS, decode_exp_histograms_data)
+    return explode_decode(df, source, _EXPH_FIELDS, decode_exp_histograms_data)
 
 
 def _zigzag32(v: int) -> bytes:
-    return _enc_varint(((v << 1) ^ (v >> 31)) & 0xFFFFFFFF)
+    return enc_varint(((v << 1) ^ (v >> 31)) & 0xFFFFFFFF)
 
 
 def enc_exp_hist_dp(ts_ns: int, count: int, total: float, scale: int, zero_count: int,
                     pos_offset: int, pos_counts: list[int],
                     neg_offset: int | None = None, neg_counts: list[int] | None = None) -> bytes:
-    out = _tag(3, 1) + struct.pack("<Q", ts_ns)
-    out += _tag(4, 1) + struct.pack("<Q", count)
-    out += _tag(5, 1) + struct.pack("<d", total)
-    out += _tag(6, 0) + _zigzag32(scale)
-    out += _tag(7, 1) + struct.pack("<Q", zero_count)
-    pos = _tag(1, 0) + _zigzag32(pos_offset) + _ld(2, b"".join(_enc_varint(c) for c in pos_counts))
-    out += _ld(8, pos)
+    out = enc_tag(3, 1) + struct.pack("<Q", ts_ns)
+    out += enc_tag(4, 1) + struct.pack("<Q", count)
+    out += enc_tag(5, 1) + struct.pack("<d", total)
+    out += enc_tag(6, 0) + _zigzag32(scale)
+    out += enc_tag(7, 1) + struct.pack("<Q", zero_count)
+    pos = enc_tag(1, 0) + _zigzag32(pos_offset) + enc_ld(2, b"".join(enc_varint(c) for c in pos_counts))
+    out += enc_ld(8, pos)
     if neg_counts is not None:
-        neg = _tag(1, 0) + _zigzag32(neg_offset or 0) + _ld(
-            2, b"".join(_enc_varint(c) for c in neg_counts)
+        neg = enc_tag(1, 0) + _zigzag32(neg_offset or 0) + enc_ld(
+            2, b"".join(enc_varint(c) for c in neg_counts)
         )
-        out += _ld(9, neg)
+        out += enc_ld(9, neg)
     return out
 
 
 def enc_exp_histogram_metric(name: str, dps: list[bytes], temporality: int = 2) -> bytes:
-    inner = b"".join(_ld(1, d) for d in dps) + _tag(2, 0) + _enc_varint(temporality)
-    return _ld(1, name.encode("utf-8")) + _ld(10, inner)
+    inner = b"".join(enc_ld(1, d) for d in dps) + enc_tag(2, 0) + enc_varint(temporality)
+    return enc_ld(1, name.encode("utf-8")) + enc_ld(10, inner)
 
 
 def synthesize_otlp_pb_exp_histograms(df: DataFrame) -> DataFrame:
@@ -1183,27 +870,27 @@ _RW_FIELDS = [
 
 def decode_remote_write(payload: bytes) -> list[dict]:
     rows = []
-    for f1, _, ts_msg in _fields(payload):
+    for f1, _, ts_msg in iter_fields(payload):
         if f1 != 1:
             continue
         labels: list[tuple[str, str]] = []
         samples = []
-        for f2, _, v2 in _fields(_b(ts_msg)):
+        for f2, _, v2 in iter_fields(as_bytes(ts_msg)):
             if f2 == 1:
                 name = value = ""
-                for f3, _, v3 in _fields(_b(v2)):
+                for f3, _, v3 in iter_fields(as_bytes(v2)):
                     if f3 == 1:
-                        name = _b(v3).decode("utf-8", errors="replace")
+                        name = as_bytes(v3).decode("utf-8", errors="replace")
                     elif f3 == 2:
-                        value = _b(v3).decode("utf-8", errors="replace")
+                        value = as_bytes(v3).decode("utf-8", errors="replace")
                 labels.append((name, value))
             elif f2 == 2:
                 val = ts = None
-                for f3, _, v3 in _fields(_b(v2)):
+                for f3, _, v3 in iter_fields(as_bytes(v2)):
                     if f3 == 1:
-                        val = struct.unpack("<d", _b(v3))[0]
+                        val = struct.unpack("<d", as_bytes(v3))[0]
                     elif f3 == 2:
-                        ts = _zigzag_signed(int(v3))
+                        ts = as_int64(int(v3))
                 samples.append((ts, val))
         mname = next((v for n, v in labels if n == "__name__"), None)
         rest = sorted((n, v) for n, v in labels if n != "__name__")
@@ -1219,7 +906,7 @@ def parse_remote_write(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per sample in each prompb WriteRequest — `__name__` split
     from the label set (Prometheus convention), remaining labels as the
     canonical sorted CSV."""
-    return _pb_map(df, source, _RW_FIELDS, decode_remote_write)
+    return explode_decode(df, source, _RW_FIELDS, decode_remote_write)
 
 
 def enc_remote_write(series: list[tuple[dict, list[tuple[int, float]]]]) -> bytes:
@@ -1228,10 +915,10 @@ def enc_remote_write(series: list[tuple[dict, list[tuple[int, float]]]]) -> byte
     for labels, samples in series:
         ts_msg = b""
         for n, v in labels.items():
-            ts_msg += _ld(1, _ld(1, n.encode("utf-8")) + _ld(2, str(v).encode("utf-8")))
+            ts_msg += enc_ld(1, enc_ld(1, n.encode("utf-8")) + enc_ld(2, str(v).encode("utf-8")))
         for ts, val in samples:
-            ts_msg += _ld(2, _tag(1, 1) + struct.pack("<d", val) + _tag(2, 0) + _enc_varint(ts))
-        out += _ld(1, ts_msg)
+            ts_msg += enc_ld(2, enc_tag(1, 1) + struct.pack("<d", val) + enc_tag(2, 0) + enc_varint(ts))
+        out += enc_ld(1, ts_msg)
     return out
 
 
@@ -1276,7 +963,7 @@ def decode_signalfx(payload: bytes) -> list[dict]:
     Dimension key=1 value=2). One output row per datapoint, dimensions as
     the canonical sorted k=v CSV."""
     rows = []
-    for f1, _, dp_msg in _fields(payload):
+    for f1, _, dp_msg in iter_fields(payload):
         if f1 != 1:
             continue
         source = metric = None
@@ -1285,28 +972,28 @@ def decode_signalfx(payload: bytes) -> list[dict]:
         val = None
         is_int = False
         dims: list[tuple[str, str]] = []
-        for f2, _, v2 in _fields(_b(dp_msg)):
+        for f2, _, v2 in iter_fields(as_bytes(dp_msg)):
             if f2 == 1:
-                source = _b(v2).decode("utf-8", errors="replace")
+                source = as_bytes(v2).decode("utf-8", errors="replace")
             elif f2 == 2:
-                metric = _b(v2).decode("utf-8", errors="replace")
+                metric = as_bytes(v2).decode("utf-8", errors="replace")
             elif f2 == 3:
-                ts_ms = _i64_signed(int(v2))
+                ts_ms = as_int64(int(v2))
             elif f2 == 4:
-                for f3, _, v3 in _fields(_b(v2)):
+                for f3, _, v3 in iter_fields(as_bytes(v2)):
                     if f3 == 2:
-                        val, is_int = struct.unpack("<d", _b(v3))[0], False
+                        val, is_int = struct.unpack("<d", as_bytes(v3))[0], False
                     elif f3 == 3:
-                        val, is_int = float(_i64_signed(int(v3))), True
+                        val, is_int = float(as_int64(int(v3))), True
             elif f2 == 5:
                 mtype = int(v2)
             elif f2 == 6:
                 k = v = ""
-                for f3, _, v3 in _fields(_b(v2)):
+                for f3, _, v3 in iter_fields(as_bytes(v2)):
                     if f3 == 1:
-                        k = _b(v3).decode("utf-8", errors="replace")
+                        k = as_bytes(v3).decode("utf-8", errors="replace")
                     elif f3 == 2:
-                        v = _b(v3).decode("utf-8", errors="replace")
+                        v = as_bytes(v3).decode("utf-8", errors="replace")
                 dims.append((k, v))
         rows.append(
             {
@@ -1322,14 +1009,9 @@ def decode_signalfx(payload: bytes) -> list[dict]:
     return rows
 
 
-def _i64_signed(v: int) -> int:
-    """Plain (non-zigzag) int64 varint: wrap the two's-complement range."""
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
 def parse_signalfx(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per SignalFx datapoint in each DataPointUploadMessage."""
-    return _pb_map(df, source, _SFX_FIELDS, decode_signalfx)
+    return explode_decode(df, source, _SFX_FIELDS, decode_signalfx)
 
 
 def enc_sfx_datapoint(
@@ -1342,23 +1024,23 @@ def enc_sfx_datapoint(
 ) -> bytes:
     dp = b""
     if source is not None:
-        dp += _ld(1, source.encode("utf-8"))
-    dp += _ld(2, metric.encode("utf-8"))
-    dp += _tag(3, 0) + _enc_varint(ts_ms & ((1 << 64) - 1))
+        dp += enc_ld(1, source.encode("utf-8"))
+    dp += enc_ld(2, metric.encode("utf-8"))
+    dp += enc_tag(3, 0) + enc_varint(ts_ms & ((1 << 64) - 1))
     if isinstance(value, int):
-        datum = _tag(3, 0) + _enc_varint(value & ((1 << 64) - 1))
+        datum = enc_tag(3, 0) + enc_varint(value & ((1 << 64) - 1))
     else:
-        datum = _tag(2, 1) + struct.pack("<d", float(value))
-    dp += _ld(4, datum)
+        datum = enc_tag(2, 1) + struct.pack("<d", float(value))
+    dp += enc_ld(4, datum)
     if metric_type:
-        dp += _tag(5, 0) + _enc_varint(metric_type)
+        dp += enc_tag(5, 0) + enc_varint(metric_type)
     for k, v in (dims or {}).items():
-        dp += _ld(6, _ld(1, k.encode("utf-8")) + _ld(2, str(v).encode("utf-8")))
+        dp += enc_ld(6, enc_ld(1, k.encode("utf-8")) + enc_ld(2, str(v).encode("utf-8")))
     return dp
 
 
 def enc_sfx_upload(datapoints: list[bytes]) -> bytes:
-    return b"".join(_ld(1, dp) for dp in datapoints)
+    return b"".join(enc_ld(1, dp) for dp in datapoints)
 
 
 def synthesize_signalfx(df: DataFrame) -> DataFrame:
@@ -1422,15 +1104,15 @@ def decode_skywalking_segment(payload: bytes) -> list[dict]:
     two's-complement varint."""
     trace_id = seg_id = service = instance = None
     spans = []
-    for f1, _, v1 in _fields(payload):
+    for f1, _, v1 in iter_fields(payload):
         if f1 == 1:
-            trace_id = _b(v1).decode("utf-8", errors="replace")
+            trace_id = as_bytes(v1).decode("utf-8", errors="replace")
         elif f1 == 2:
-            seg_id = _b(v1).decode("utf-8", errors="replace")
+            seg_id = as_bytes(v1).decode("utf-8", errors="replace")
         elif f1 == 4:
-            service = _b(v1).decode("utf-8", errors="replace")
+            service = as_bytes(v1).decode("utf-8", errors="replace")
         elif f1 == 5:
-            instance = _b(v1).decode("utf-8", errors="replace")
+            instance = as_bytes(v1).decode("utf-8", errors="replace")
         elif f1 == 3:
             sp = {
                 "sw_span_id": 0, "sw_parent_span_id": 0, "sw_op": None,
@@ -1439,19 +1121,19 @@ def decode_skywalking_segment(payload: bytes) -> list[dict]:
                 "sw_start_ms": 0, "sw_end_ms": 0,
             }
             tags: list[tuple[str, str]] = []
-            for f2, _, v2 in _fields(_b(v1)):
+            for f2, _, v2 in iter_fields(as_bytes(v1)):
                 if f2 == 1:
                     sp["sw_span_id"] = _i32(int(v2))
                 elif f2 == 2:
                     sp["sw_parent_span_id"] = _i32(int(v2))
                 elif f2 == 3:
-                    sp["sw_start_ms"] = _i64_signed(int(v2))
+                    sp["sw_start_ms"] = as_int64(int(v2))
                 elif f2 == 4:
-                    sp["sw_end_ms"] = _i64_signed(int(v2))
+                    sp["sw_end_ms"] = as_int64(int(v2))
                 elif f2 == 6:
-                    sp["sw_op"] = _b(v2).decode("utf-8", errors="replace")
+                    sp["sw_op"] = as_bytes(v2).decode("utf-8", errors="replace")
                 elif f2 == 7:
-                    sp["sw_peer"] = _b(v2).decode("utf-8", errors="replace")
+                    sp["sw_peer"] = as_bytes(v2).decode("utf-8", errors="replace")
                 elif f2 == 8:
                     sp["sw_type"] = _SW_SPAN_TYPES.get(int(v2), str(int(v2)))
                 elif f2 == 9:
@@ -1462,11 +1144,11 @@ def decode_skywalking_segment(payload: bytes) -> list[dict]:
                     sp["sw_is_error"] = bool(int(v2))
                 elif f2 == 12:
                     k = v = ""
-                    for f3, _, v3 in _fields(_b(v2)):
+                    for f3, _, v3 in iter_fields(as_bytes(v2)):
                         if f3 == 1:
-                            k = _b(v3).decode("utf-8", errors="replace")
+                            k = as_bytes(v3).decode("utf-8", errors="replace")
                         elif f3 == 2:
-                            v = _b(v3).decode("utf-8", errors="replace")
+                            v = as_bytes(v3).decode("utf-8", errors="replace")
                     tags.append((k, v))
             sp["sw_tags_csv"] = ",".join(f"{k}={v}" for k, v in sorted(tags)) or None
             spans.append(sp)
@@ -1481,7 +1163,7 @@ def decode_skywalking_segment(payload: bytes) -> list[dict]:
 
 def parse_skywalking(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per span in each SkyWalking SegmentObject payload."""
-    return _pb_map(df, source, _SW_FIELDS, decode_skywalking_segment)
+    return explode_decode(df, source, _SW_FIELDS, decode_skywalking_segment)
 
 
 def enc_sw_span(
@@ -1497,33 +1179,33 @@ def enc_sw_span(
     is_error: bool = False,
     tags: dict | None = None,
 ) -> bytes:
-    sp = _tag(1, 0) + _enc_varint(span_id & ((1 << 64) - 1))
-    sp += _tag(2, 0) + _enc_varint(parent_id & ((1 << 64) - 1))
-    sp += _tag(3, 0) + _enc_varint(start_ms & ((1 << 64) - 1))
-    sp += _tag(4, 0) + _enc_varint(end_ms & ((1 << 64) - 1))
-    sp += _ld(6, op.encode("utf-8"))
+    sp = enc_tag(1, 0) + enc_varint(span_id & ((1 << 64) - 1))
+    sp += enc_tag(2, 0) + enc_varint(parent_id & ((1 << 64) - 1))
+    sp += enc_tag(3, 0) + enc_varint(start_ms & ((1 << 64) - 1))
+    sp += enc_tag(4, 0) + enc_varint(end_ms & ((1 << 64) - 1))
+    sp += enc_ld(6, op.encode("utf-8"))
     if peer is not None:
-        sp += _ld(7, peer.encode("utf-8"))
+        sp += enc_ld(7, peer.encode("utf-8"))
     if span_type:
-        sp += _tag(8, 0) + _enc_varint(span_type)
+        sp += enc_tag(8, 0) + enc_varint(span_type)
     if layer:
-        sp += _tag(9, 0) + _enc_varint(layer)
+        sp += enc_tag(9, 0) + enc_varint(layer)
     if component_id:
-        sp += _tag(10, 0) + _enc_varint(component_id)
+        sp += enc_tag(10, 0) + enc_varint(component_id)
     if is_error:
-        sp += _tag(11, 0) + _enc_varint(1)
+        sp += enc_tag(11, 0) + enc_varint(1)
     for k, v in (tags or {}).items():
-        sp += _ld(12, _ld(1, k.encode("utf-8")) + _ld(2, str(v).encode("utf-8")))
+        sp += enc_ld(12, enc_ld(1, k.encode("utf-8")) + enc_ld(2, str(v).encode("utf-8")))
     return sp
 
 
 def enc_sw_segment(
     trace_id: str, segment_id: str, service: str, instance: str, spans: list[bytes]
 ) -> bytes:
-    out = _ld(1, trace_id.encode("utf-8")) + _ld(2, segment_id.encode("utf-8"))
+    out = enc_ld(1, trace_id.encode("utf-8")) + enc_ld(2, segment_id.encode("utf-8"))
     for sp in spans:
-        out += _ld(3, sp)
-    out += _ld(4, service.encode("utf-8")) + _ld(5, instance.encode("utf-8"))
+        out += enc_ld(3, sp)
+    out += enc_ld(4, service.encode("utf-8")) + enc_ld(5, instance.encode("utf-8"))
     return out
 
 

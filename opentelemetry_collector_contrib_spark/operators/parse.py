@@ -58,17 +58,19 @@ PARSED_FIELDS: list[tuple[str, str]] = [
 
 
 def parse_native(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """First-match pattern bank as a single Catalyst projection, one regex
-    execution per (row, pattern).
+    """First-match pattern bank as a single Catalyst projection.
 
     Per-group `regexp_extract` re-runs the whole regex once per group (the
     kv+syslog+json bank would cost up to 13 executions/row). Instead each
-    pattern runs ONCE as `regexp_replace(text, pat, '$1\\x01$2...')` — a
-    full-line anchored pattern rewrites the line to its groups joined by an
-    \\x01 separator — and a single split recovers the fields. rlike gates
-    per pattern, so a row costs 3 rlike + 1 replace + 1 split. Values are
-    byte-identical to per-group extraction (same regex, same groups) — the
-    oracle contract is unchanged.
+    output field reads `split(regexp_replace(text, pat, '$1\\x01$2...'))[i]`
+    — a full-line anchored pattern rewrites the line to its groups joined
+    by an \\x01 separator, and the split picks one group. The when-chains
+    do not share that replace+split: the optimized plan and the generated
+    code hold 10 `regexp_replace` sites, one per output field. rlike gates
+    per pattern, so a matched row pays 1–3 rlike plus one replace+split
+    per field its pattern fills (3 for kv and json, 4 for syslog). Values
+    are byte-identical to per-group extraction (same regex, same groups) —
+    the oracle contract is unchanged.
 
     Separator-collision guard: `SYSLOG_RE`'s message group is `(.*)`, so a
     payload containing a literal \\x01 byte would shift every field after

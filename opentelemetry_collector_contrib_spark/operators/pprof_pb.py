@@ -9,7 +9,7 @@ function -> string table) and typed labels. This module is the analytics
 flattening of the same wire format: **one output row per (sample,
 sample_type)** with the resolved leaf-first stack, string/numeric labels,
 and the profile envelope (period, time/duration). The proto-wire walk
-shares `otlp_pb.py`'s reader; gzip'd payloads (the `runtime/pprof` on-disk
+shares `_wire.py`'s reader; gzip'd payloads (the `runtime/pprof` on-disk
 form) are inflated with the bounded 64 MiB bomb guard.
 
 Wire schema (google/pprof profile.proto): Profile{sample_type=1,
@@ -21,8 +21,9 @@ mapping_id=2, address=3, line=4}; Line{function_id=1, line=2};
 Function{id=1, name=2, system_name=3, filename=4, start_line=5}.
 All name-ish fields are string-table indices; index 0 is "".
 
-Scale shape: Arrow-batched mapInPandas (binary wire decode is the honest
-pandas-UDF case, same stance as otlp_pb/jaeger_pb/fluent); the payload
+Scale shape: the shared mapInArrow kernel `_wire.explode_decode` (binary
+wire decode is the honest Python-UDF case, same stance as
+otlp_pb/jaeger_pb/fluent); the payload
 spool partitions like any parquet scan, so decode parallelism tracks
 splits. Malformed payloads drop per-row (on_error=send analogue), never
 fail the task.
@@ -38,7 +39,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .otlp_pb import _b, _enc_varint, _fields, _ld, _read_varint, _tag, _zigzag_signed
+from ._wire import (
+    as_bytes,
+    as_int64,
+    enc_ld,
+    enc_tag,
+    enc_varint,
+    explode_decode,
+    iter_fields,
+    packed_varints,
+)
 
 _MAX_INFLATE = 64 * 1024 * 1024
 
@@ -53,21 +63,9 @@ def _maybe_gunzip(payload: bytes) -> bytes:
     return out
 
 
-def _packed_uvarints(v) -> list[int]:
-    """A repeated varint field: packed bytes (wire 2) or one scalar."""
-    if isinstance(v, int):
-        return [v]
-    out, pos = [], 0
-    buf = _b(v)
-    while pos < len(buf):
-        x, pos = _read_varint(buf, pos)
-        out.append(x)
-    return out
-
-
 def _value_type(buf: bytes) -> tuple[int, int]:
     ty = unit = 0
-    for fnum, _, v in _fields(buf):
+    for fnum, _, v in iter_fields(buf):
         if fnum == 1:
             ty = v
         elif fnum == 2:
@@ -77,13 +75,13 @@ def _value_type(buf: bytes) -> tuple[int, int]:
 
 def _label(buf: bytes) -> dict:
     out = {"key": 0, "str": 0, "num": 0, "num_unit": 0}
-    for fnum, _, v in _fields(buf):
+    for fnum, _, v in iter_fields(buf):
         if fnum == 1:
             out["key"] = v
         elif fnum == 2:
             out["str"] = v
         elif fnum == 3:
-            out["num"] = _zigzag_signed(v)
+            out["num"] = as_int64(v)
         elif fnum == 4:
             out["num_unit"] = v
     return out
@@ -105,40 +103,40 @@ def decode_pprof_profile(payload: bytes) -> list[dict]:
     period_type = (0, 0)
     default_st = 0
 
-    for fnum, _, v in _fields(buf):
+    for fnum, _, v in iter_fields(buf):
         if fnum == 6:
-            strtab.append(_b(v).decode("utf-8", errors="replace"))
+            strtab.append(as_bytes(v).decode("utf-8", errors="replace"))
         elif fnum == 1:
-            sample_types.append(_value_type(_b(v)))
+            sample_types.append(_value_type(as_bytes(v)))
         elif fnum == 2:
             s = {"loc_ids": [], "values": [], "labels": []}
-            for f2, _, v2 in _fields(_b(v)):
+            for f2, _, v2 in iter_fields(as_bytes(v)):
                 if f2 == 1:
-                    s["loc_ids"].extend(_packed_uvarints(v2))
+                    s["loc_ids"].extend(packed_varints(v2))
                 elif f2 == 2:
                     s["values"].extend(
-                        _zigzag_signed(x) for x in _packed_uvarints(v2)
+                        as_int64(x) for x in packed_varints(v2)
                     )
                 elif f2 == 3:
-                    s["labels"].append(_label(_b(v2)))
+                    s["labels"].append(_label(as_bytes(v2)))
             samples.append(s)
         elif fnum == 4:
             loc = {"id": 0, "lines": []}
-            for f2, _, v2 in _fields(_b(v)):
+            for f2, _, v2 in iter_fields(as_bytes(v)):
                 if f2 == 1:
                     loc["id"] = v2
                 elif f2 == 4:
                     fn_id = line_no = 0
-                    for f3, _, v3 in _fields(_b(v2)):
+                    for f3, _, v3 in iter_fields(as_bytes(v2)):
                         if f3 == 1:
                             fn_id = v3
                         elif f3 == 2:
-                            line_no = _zigzag_signed(v3)
+                            line_no = as_int64(v3)
                     loc["lines"].append((fn_id, line_no))
             locations[loc["id"]] = loc
         elif fnum == 5:
             fn = {"id": 0, "name": 0, "filename": 0}
-            for f2, _, v2 in _fields(_b(v)):
+            for f2, _, v2 in iter_fields(as_bytes(v)):
                 if f2 == 1:
                     fn["id"] = v2
                 elif f2 == 2:
@@ -147,13 +145,13 @@ def decode_pprof_profile(payload: bytes) -> list[dict]:
                     fn["filename"] = v2
             functions[fn["id"]] = fn
         elif fnum == 9:
-            time_nanos = _zigzag_signed(v)
+            time_nanos = as_int64(v)
         elif fnum == 10:
-            duration_nanos = _zigzag_signed(v)
+            duration_nanos = as_int64(v)
         elif fnum == 11:
-            period_type = _value_type(_b(v))
+            period_type = _value_type(as_bytes(v))
         elif fnum == 12:
-            period = _zigzag_signed(v)
+            period = as_int64(v)
         elif fnum == 14:
             default_st = v
 
@@ -234,9 +232,7 @@ _PPROF_FIELDS = [
 
 def parse_pprof_profiles(df: DataFrame, source: str = "payload") -> DataFrame:
     """One row per (sample, sample_type) per pprof payload."""
-    from .otlp_pb import _pb_map
-
-    return _pb_map(df, source, _PPROF_FIELDS, decode_pprof_profile)
+    return explode_decode(df, source, _PPROF_FIELDS, decode_pprof_profile)
 
 
 def flame_rollup(
@@ -291,13 +287,8 @@ class _StrTab:
         return self._idx[s]
 
 
-def _enc_svarint(v: int) -> bytes:
-    """proto int64: two's-complement 64-bit varint (not zigzag)."""
-    return _enc_varint(v & ((1 << 64) - 1))
-
-
 def _enc_value_type(tab: _StrTab, ty: str, unit: str) -> bytes:
-    return _tag(1, 0) + _enc_varint(tab(ty)) + _tag(2, 0) + _enc_varint(tab(unit))
+    return enc_tag(1, 0) + enc_varint(tab(ty)) + enc_tag(2, 0) + enc_varint(tab(unit))
 
 
 def enc_pprof_profile(
@@ -327,9 +318,9 @@ def enc_pprof_profile(
             fid = len(fn_ids) + 1
             fn_ids[key] = fid
             fn_msgs.append(
-                _tag(1, 0) + _enc_varint(fid)
-                + _tag(2, 0) + _enc_varint(key[0])
-                + _tag(4, 0) + _enc_varint(key[1])
+                enc_tag(1, 0) + enc_varint(fid)
+                + enc_tag(2, 0) + enc_varint(key[0])
+                + enc_tag(4, 0) + enc_varint(key[1])
             )
         return fn_ids[key]
 
@@ -339,40 +330,40 @@ def enc_pprof_profile(
         if key not in loc_ids:
             lid = len(loc_ids) + 1
             loc_ids[key] = lid
-            line_msg = _tag(1, 0) + _enc_varint(fid) + _tag(2, 0) + _enc_svarint(line)
+            line_msg = enc_tag(1, 0) + enc_varint(fid) + enc_tag(2, 0) + enc_varint(line)
             loc_msgs.append(
-                _tag(1, 0) + _enc_varint(lid) + _ld(4, line_msg)
+                enc_tag(1, 0) + enc_varint(lid) + enc_ld(4, line_msg)
             )
         return loc_ids[key]
 
     sample_msgs: list[bytes] = []
     for s in samples:
         lids = [loc_id(n, f, ln) for n, f, ln in s["stack"]]
-        packed_locs = b"".join(_enc_varint(x) for x in lids)
-        packed_vals = b"".join(_enc_svarint(v) for v in s["values"])
-        msg = _ld(1, packed_locs) + _ld(2, packed_vals)
+        packed_locs = b"".join(enc_varint(x) for x in lids)
+        packed_vals = b"".join(enc_varint(v) for v in s["values"])
+        msg = enc_ld(1, packed_locs) + enc_ld(2, packed_vals)
         for k, v in sorted(s.get("labels", {}).items()):
-            msg += _ld(3, _tag(1, 0) + _enc_varint(tab(k)) + _tag(2, 0) + _enc_varint(tab(v)))
+            msg += enc_ld(3, enc_tag(1, 0) + enc_varint(tab(k)) + enc_tag(2, 0) + enc_varint(tab(v)))
         for k, (num, unit) in sorted(s.get("num_labels", {}).items()):
-            lab = _tag(1, 0) + _enc_varint(tab(k)) + _tag(3, 0) + _enc_svarint(num)
+            lab = enc_tag(1, 0) + enc_varint(tab(k)) + enc_tag(3, 0) + enc_varint(num)
             if unit:
-                lab += _tag(4, 0) + _enc_varint(tab(unit))
-            msg += _ld(3, lab)
+                lab += enc_tag(4, 0) + enc_varint(tab(unit))
+            msg += enc_ld(3, lab)
         sample_msgs.append(msg)
 
-    out = b"".join(_ld(1, _enc_value_type(tab, ty, un)) for ty, un in sample_types)
-    out += b"".join(_ld(2, m) for m in sample_msgs)
-    out += b"".join(_ld(4, m) for m in loc_msgs)
-    out += b"".join(_ld(5, m) for m in fn_msgs)
-    out += b"".join(_ld(6, s.encode()) for s in tab.table)
+    out = b"".join(enc_ld(1, _enc_value_type(tab, ty, un)) for ty, un in sample_types)
+    out += b"".join(enc_ld(2, m) for m in sample_msgs)
+    out += b"".join(enc_ld(4, m) for m in loc_msgs)
+    out += b"".join(enc_ld(5, m) for m in fn_msgs)
+    out += b"".join(enc_ld(6, s.encode()) for s in tab.table)
     if time_nanos:
-        out += _tag(9, 0) + _enc_svarint(time_nanos)
+        out += enc_tag(9, 0) + enc_varint(time_nanos)
     if duration_nanos:
-        out += _tag(10, 0) + _enc_svarint(duration_nanos)
+        out += enc_tag(10, 0) + enc_varint(duration_nanos)
     if period_type is not None:
-        out += _ld(11, _enc_value_type(tab, *period_type))
+        out += enc_ld(11, _enc_value_type(tab, *period_type))
     if period:
-        out += _tag(12, 0) + _enc_svarint(period)
+        out += enc_tag(12, 0) + enc_varint(period)
     if gzipped:
         return gzip.compress(out, compresslevel=1, mtime=0)
     return out

@@ -30,24 +30,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .otlp_pb import _b, _enc_varint, _fields, _ld, _read_varint, _tag, _zigzag_signed
+from ._wire import (
+    as_bytes,
+    as_int64,
+    enc_ld,
+    enc_tag,
+    enc_varint,
+    explode_decode,
+    iter_fields,
+    packed_varints,
+)
 
 # Metadata.MetricType (mirrors prompb v1 MetricMetadata numbering)
 METRIC_TYPES = {
     0: "unspecified", 1: "counter", 2: "gauge", 3: "histogram",
     4: "gaugehistogram", 5: "summary", 6: "info", 7: "stateset",
 }
-
-
-def _packed_u32(v) -> list[int]:
-    if isinstance(v, int):
-        return [v]
-    out, pos = [], 0
-    buf = _b(v)
-    while pos < len(buf):
-        x, pos = _read_varint(buf, pos)
-        out.append(x)
-    return out
 
 
 def decode_remote_write_v2(payload: bytes) -> list[dict]:
@@ -57,24 +55,24 @@ def decode_remote_write_v2(payload: bytes) -> list[dict]:
     receiver's badRequestErrors path."""
     symbols: list[str] = []
     series: list[dict] = []
-    for f1, _, v in _fields(bytes(payload)):
+    for f1, _, v in iter_fields(bytes(payload)):
         if f1 == 4:
-            symbols.append(_b(v).decode("utf-8", errors="replace"))
+            symbols.append(as_bytes(v).decode("utf-8", errors="replace"))
         elif f1 == 5:
             s = {"refs": [], "samples": [], "type": 0, "help_ref": 0, "unit_ref": 0, "created": 0}
-            for f2, _, v2 in _fields(_b(v)):
+            for f2, _, v2 in iter_fields(as_bytes(v)):
                 if f2 == 1:
-                    s["refs"].extend(_packed_u32(v2))
+                    s["refs"].extend(packed_varints(v2))
                 elif f2 == 2:
                     val = ts = None
-                    for f3, _, v3 in _fields(_b(v2)):
+                    for f3, _, v3 in iter_fields(as_bytes(v2)):
                         if f3 == 1:
-                            val = struct.unpack("<d", _b(v3))[0]
+                            val = struct.unpack("<d", as_bytes(v3))[0]
                         elif f3 == 2:
-                            ts = _zigzag_signed(int(v3))
+                            ts = as_int64(int(v3))
                     s["samples"].append((ts, val))
                 elif f2 == 5:
-                    for f3, _, v3 in _fields(_b(v2)):
+                    for f3, _, v3 in iter_fields(as_bytes(v2)):
                         if f3 == 1:
                             s["type"] = int(v3)
                         elif f3 == 3:
@@ -82,7 +80,7 @@ def decode_remote_write_v2(payload: bytes) -> list[dict]:
                         elif f3 == 4:
                             s["unit_ref"] = int(v3)
                 elif f2 == 6:
-                    s["created"] = _zigzag_signed(int(v2))
+                    s["created"] = as_int64(int(v2))
             series.append(s)
 
     n = len(symbols)
@@ -135,9 +133,7 @@ _PRW2_FIELDS = [
 
 
 def parse_remote_write_v2(df: DataFrame, source: str = "payload") -> DataFrame:
-    from .otlp_pb import _pb_map
-
-    return _pb_map(df, source, _PRW2_FIELDS, decode_remote_write_v2)
+    return explode_decode(df, source, _PRW2_FIELDS, decode_remote_write_v2)
 
 
 def prw2_apply_target_info(df: DataFrame) -> DataFrame:
@@ -182,17 +178,17 @@ def enc_remote_write_v2(
         for k, v in pairs:
             refs.append(sym(k))
             refs.append(sym(v))
-        msg = _ld(1, b"".join(_enc_varint(r) for r in refs))
+        msg = enc_ld(1, b"".join(enc_varint(r) for r in refs))
         for ts, val in s["samples"]:
-            msg += _ld(2, _tag(1, 1) + struct.pack("<d", val) + _tag(2, 0) + _enc_varint(ts & ((1 << 64) - 1)))
-        meta = _tag(1, 0) + _enc_varint(int(s.get("type", 0)))
-        meta += _tag(3, 0) + _enc_varint(sym(s.get("help", "")))
-        meta += _tag(4, 0) + _enc_varint(sym(s.get("unit", "")))
-        msg += _ld(5, meta)
+            msg += enc_ld(2, enc_tag(1, 1) + struct.pack("<d", val) + enc_tag(2, 0) + enc_varint(ts & ((1 << 64) - 1)))
+        meta = enc_tag(1, 0) + enc_varint(int(s.get("type", 0)))
+        meta += enc_tag(3, 0) + enc_varint(sym(s.get("help", "")))
+        meta += enc_tag(4, 0) + enc_varint(sym(s.get("unit", "")))
+        msg += enc_ld(5, meta)
         ts_msgs.append(msg)
 
-    out = b"".join(_ld(4, t.encode()) for t in table)
-    out += b"".join(_ld(5, m) for m in ts_msgs)
+    out = b"".join(enc_ld(4, t.encode()) for t in table)
+    out += b"".join(enc_ld(5, m) for m in ts_msgs)
     return out
 
 

@@ -16,7 +16,7 @@ Wire contract is the public openzipkin ``zipkin.proto``:
         port=4 (varint) }
   Annotation{ timestamp=1 (fixed64 µs), value=2 }
 
-Reuses the proto-wire reader from ``otlp_pb``; the zipkinv2 translator's
+Reuses the proto-wire reader and decode kernel from ``_wire``; the zipkinv2 translator's
 observable mapping (kind enum → name, CHILD parent id, tag map) surfaces
 as flat columns, tags/annotations as sorted CSVs so results hash
 deterministically on every engine."""
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .otlp_pb import _b, _enc_varint, _fields, _ld, _pb_map, _tag
+from ._wire import as_bytes, enc_ld, enc_tag, enc_varint, explode_decode, iter_fields
 
 _KIND_NAMES = {1: "CLIENT", 2: "SERVER", 3: "PRODUCER", 4: "CONSUMER"}
 
@@ -52,9 +52,9 @@ _ZK_FIELDS = [
 
 
 def _endpoint_service(buf: bytes) -> str | None:
-    for f, w, v in _fields(buf):
+    for f, w, v in iter_fields(buf):
         if f == 1 and w == 2:
-            return _b(v).decode("utf-8", errors="replace")
+            return as_bytes(v).decode("utf-8", errors="replace")
     return None
 
 
@@ -64,7 +64,7 @@ def _decode_span(buf: bytes) -> dict:
     row["zk_shared"] = False
     tags: list[tuple[str, str]] = []
     annos: list[tuple[int, str]] = []
-    for f, w, v in _fields(buf):
+    for f, w, v in iter_fields(buf):
         if f == 1 and w == 2:
             row["zk_trace_id"] = bytes(v).hex()
         elif f == 2 and w == 2:
@@ -85,7 +85,7 @@ def _decode_span(buf: bytes) -> dict:
             row["zk_remote_service"] = _endpoint_service(v)
         elif f == 10 and w == 2:
             ts, val = 0, ""
-            for af, aw, av in _fields(v):
+            for af, aw, av in iter_fields(v):
                 if af == 1 and aw == 1:
                     ts = struct.unpack("<Q", av)[0]
                 elif af == 2 and aw == 2:
@@ -94,7 +94,7 @@ def _decode_span(buf: bytes) -> dict:
         elif f == 11 and w == 2:
             # map<string,string> entry: key=1, value=2
             k = val = ""
-            for mf, mw, mv in _fields(v):
+            for mf, mw, mv in iter_fields(v):
                 if mf == 1 and mw == 2:
                     k = mv.decode("utf-8", errors="replace")
                 elif mf == 2 and mw == 2:
@@ -115,9 +115,9 @@ def decode_zipkin_list(payload: bytes) -> list[dict]:
     """One ListOfSpans payload → one row per span (the POST body the
     receiver accepts; trace_receiver.go's protobuf branch)."""
     out = []
-    for f, w, v in _fields(payload):
+    for f, w, v in iter_fields(payload):
         if f == 1 and w == 2:
-            out.append(_decode_span(_b(v)))
+            out.append(_decode_span(as_bytes(v)))
     if not out:
         raise ValueError("empty ListOfSpans")
     return out
@@ -125,9 +125,9 @@ def decode_zipkin_list(payload: bytes) -> list[dict]:
 
 def parse_zipkin_pb_spans(df: DataFrame, source: str = "payload") -> DataFrame:
     """Arrow-batched decode, one row per span; malformed payloads drop
-    (the receiver's 400 path). Scale: pure mapInPandas over the scan —
+    (the receiver's 400 path). Scale: pure mapInArrow over the scan —
     no shuffle; the decoder is a flat single-pass wire walk."""
-    return _pb_map(df, source, _ZK_FIELDS, decode_zipkin_list)
+    return explode_decode(df, source, _ZK_FIELDS, decode_zipkin_list)
 
 
 # --- encode side (fixtures/tests) --------------------------------------------
@@ -136,11 +136,11 @@ def parse_zipkin_pb_spans(df: DataFrame, source: str = "payload") -> DataFrame:
 def _enc_endpoint(service: str | None, ipv4: bytes | None = None, port: int | None = None) -> bytes:
     out = b""
     if service is not None:
-        out += _ld(1, service.encode("utf-8"))
+        out += enc_ld(1, service.encode("utf-8"))
     if ipv4:
-        out += _ld(2, ipv4)
+        out += enc_ld(2, ipv4)
     if port:
-        out += _tag(4, 0) + _enc_varint(port)
+        out += enc_tag(4, 0) + enc_varint(port)
     return out
 
 
@@ -152,32 +152,32 @@ def enc_zipkin_span(
     annotations: list[tuple[int, str]] | None = None,
     debug: bool = False, shared: bool = False,
 ) -> bytes:
-    out = _ld(1, trace_id)
+    out = enc_ld(1, trace_id)
     if parent_id:
-        out += _ld(2, parent_id)
-    out += _ld(3, span_id)
+        out += enc_ld(2, parent_id)
+    out += enc_ld(3, span_id)
     if kind:
-        out += _tag(4, 0) + _enc_varint(kind)
-    out += _ld(5, name.encode("utf-8"))
-    out += _tag(6, 1) + struct.pack("<Q", ts_us)
-    out += _tag(7, 0) + _enc_varint(duration_us)
+        out += enc_tag(4, 0) + enc_varint(kind)
+    out += enc_ld(5, name.encode("utf-8"))
+    out += enc_tag(6, 1) + struct.pack("<Q", ts_us)
+    out += enc_tag(7, 0) + enc_varint(duration_us)
     if service is not None:
-        out += _ld(8, _enc_endpoint(service, b"\x0a\x00\x00\x01", 8080))
+        out += enc_ld(8, _enc_endpoint(service, b"\x0a\x00\x00\x01", 8080))
     if remote_service is not None:
-        out += _ld(9, _enc_endpoint(remote_service, None, 5432))
+        out += enc_ld(9, _enc_endpoint(remote_service, None, 5432))
     for ts, val in annotations or []:
-        out += _ld(10, _tag(1, 1) + struct.pack("<Q", ts) + _ld(2, val.encode("utf-8")))
+        out += enc_ld(10, enc_tag(1, 1) + struct.pack("<Q", ts) + enc_ld(2, val.encode("utf-8")))
     for k, v in (tags or {}).items():
-        out += _ld(11, _ld(1, k.encode("utf-8")) + _ld(2, v.encode("utf-8")))
+        out += enc_ld(11, enc_ld(1, k.encode("utf-8")) + enc_ld(2, v.encode("utf-8")))
     if debug:
-        out += _tag(12, 0) + _enc_varint(1)
+        out += enc_tag(12, 0) + enc_varint(1)
     if shared:
-        out += _tag(13, 0) + _enc_varint(1)
+        out += enc_tag(13, 0) + enc_varint(1)
     return out
 
 
 def enc_zipkin_list(spans: list[bytes]) -> bytes:
-    return b"".join(_ld(1, s) for s in spans)
+    return b"".join(enc_ld(1, s) for s in spans)
 
 
 def synthesize_zipkin_pb(df: DataFrame) -> DataFrame:

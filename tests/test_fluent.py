@@ -83,7 +83,7 @@ def test_synthesize_matches_decode_modes(spark):
 
 # --- property: codec round-trip over arbitrary msgpack-subset values --------
 
-from hypothesis import given, settings  # noqa: E402
+from hypothesis import example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _scalar = st.one_of(
@@ -114,6 +114,7 @@ def test_codec_roundtrip_property(v):
 
 @settings(max_examples=120, deadline=None)
 @given(st.binary(min_size=1, max_size=64))
+@example(b"\x93\xa0\x00\x00")  # ["", 0, 0]: a message event whose record is not a map
 def test_decode_event_never_hangs_or_crashes_unexpectedly(raw):
     """Arbitrary bytes either decode to rows or raise ValueError/IndexError/
     struct.error/Unicode errors — the exception families parse_fluent_forward

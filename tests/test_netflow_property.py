@@ -112,7 +112,7 @@ def test_v5_single_byte_mutation_total(pos, val):
         pass
 
 
-# the ALS decoder rides _pb_map, whose per-payload guard drops on ANY
+# the ALS decoder rides explode_decode, whose per-payload guard drops on ANY
 # exception — so its contract (like the other pb decoders in
 # test_otlp_pb.py) is TERMINATION within the bounded exception set, not
 # ValueError-only like the length-checked flow decoders above.

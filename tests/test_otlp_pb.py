@@ -1,7 +1,8 @@
 """OTLP protobuf logs decode (operators/otlp_pb.py) — proto wire subset
 against the public opentelemetry-proto logs.proto/common.proto field
 numbers: AnyValue oneof coverage, two's-complement int64 varints, unknown
-field skipping, malformed-payload rejection."""
+field skipping, malformed-payload rejection, and the row alignment and
+exact longs of the shared decode kernel (operators/_wire.py)."""
 
 from __future__ import annotations
 
@@ -9,10 +10,9 @@ import struct
 
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_contrib_spark.operators._wire import enc_ld, enc_tag, enc_varint
 from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-    _enc_varint,
-    _ld,
-    _tag,
+    _OL_FIELDS,
     decode_logs_data,
     enc_any,
     enc_log_record,
@@ -56,8 +56,8 @@ def test_unknown_fields_are_skipped():
     # splice an unknown varint field (99) and an unknown fixed32 (98) into
     # a LogRecord — decode must ignore both and keep everything else
     rec = enc_log_record(2_000_000_000, "hello", 9, "INFO")
-    rec += _tag(99, 0) + _enc_varint(12345)
-    rec += _tag(98, 5) + struct.pack("<I", 7)
+    rec += enc_tag(99, 0) + enc_varint(12345)
+    rec += enc_tag(98, 5) + struct.pack("<I", 7)
     row = decode_logs_data(enc_logs_data([rec]))[0]
     assert (row["ol_body"], row["ol_severity_text"]) == ("hello", "INFO")
 
@@ -215,31 +215,27 @@ def test_review_fixes_duplicate_keys_bad_enums_and_none_values(spark):
     payload inside the guard (not fail the task in Arrow conversion)."""
     import struct as _struct
 
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        _enc_varint,
-        _ld,
-        _tag,
-        decode_logs_data,
-        enc_kv,
-        enc_log_record,
-        enc_logs_data,
-        parse_otlp_pb_logs,
-    )
+    from opentelemetry_collector_contrib_spark.operators.otlp_pb import enc_kv
 
     # duplicate key, int vs str values — must decode, sorted by key then value
     rec = enc_log_record(0, "b")
-    rec += _ld(6, enc_kv("k", 1)) + _ld(6, enc_kv("k", "x")) + _ld(6, enc_kv("a", None))
+    rec += enc_ld(6, enc_kv("k", 1)) + enc_ld(6, enc_kv("k", "x")) + enc_ld(6, enc_kv("a", None))
     row = decode_logs_data(enc_logs_data([rec]))[0]
     assert row["ol_attrs_csv"] == "a=,k=1,k=x"
+    # by key, not by the joined "k=v" string ('.' < '=' would put
+    # http.method.original first)
+    attrs = {"http.method.original": "get", "http.method": "GET", "ab": "x", "a": True}
+    row = decode_logs_data(enc_logs_data([enc_log_record(0, "b", attrs=attrs)]))[0]
+    assert row["ol_attrs_csv"] == "a=true,ab=x,http.method=GET,http.method.original=get"
 
     # negative enums arrive as 10-byte two's-complement varints: -1 must
     # decode to -1 (valid int32), NOT drop the payload
-    neg = enc_log_record(0, "negsev") + _tag(2, 0) + _enc_varint(-1)
+    neg = enc_log_record(0, "negsev") + enc_tag(2, 0) + enc_varint(-1)
     assert decode_logs_data(enc_logs_data([neg]))[0]["ol_severity_number"] == -1
     # a varint beyond int32 range must drop the payload INSIDE the guard
-    # (reaching pandas->Arrow int32 conversion would fail the whole task)
-    bad = _tag(1, 1) + _struct.pack("<Q", 0) + _tag(2, 0) + _enc_varint(1 << 40)
-    bad += _ld(5, enc_kv("ignored", "x"))
+    # (reaching the kernel's Arrow int32 column build would fail the whole task)
+    bad = enc_tag(1, 1) + _struct.pack("<Q", 0) + enc_tag(2, 0) + enc_varint(1 << 40)
+    bad += enc_ld(5, enc_kv("ignored", "x"))
     good = enc_log_record(0, "fine", 9)
     df = spark.createDataFrame(
         [(1, bytearray(enc_logs_data([bad]))), (2, bytearray(enc_logs_data([good])))],
@@ -293,7 +289,7 @@ def test_proto_decoders_never_hang_or_crash_unexpectedly(raw):
             assert isinstance(out, list)
         except (ValueError, IndexError, KeyError, TypeError, AttributeError,
                 MemoryError, OverflowError, _struct.error, UnicodeDecodeError):
-            # all of these are inside _pb_map's per-payload guard -> the
+            # all of these are inside explode_decode's per-payload guard -> the
             # payload drops; the property is that decode TERMINATES
             pass
 
@@ -355,135 +351,59 @@ def test_skywalking_segment_negative_parent_and_enums():
     assert all(r["sw_service"] == "svc" and r["sw_trace_id"] == "t" * 32 for r in rows)
 
 
-# --- round 5: spark-protobuf JVM seam ---------------------------------------
+# --- the shared decode kernel (operators/_wire.py) ---------------------------
 
 
-def test_jvm_probe_and_auto_fallback(spark):
-    """In this image the spark-protobuf jar is absent (probe result
-    PROTOBUF_NOT_LOADED, BENCH/SESSION_r4.md): the probe must say so and
-    parse_otlp_pb_logs_auto must produce the Python walk's rows exactly.
-    In a jar-bearing environment the same test exercises the JVM branch
-    against the walk instead — the documented A/B hook."""
+def test_metrics_long_past_2_53_survives_a_null_in_the_batch(spark):
+    """A LongType value past 2^53 must come out exact even when another row
+    of the same Arrow batch holds NULL in that field: a float64 round trip
+    would turn (2^64 - 1) // 1000 into ...552."""
     from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        jvm_protobuf_available,
-        parse_otlp_pb_logs_auto,
-        parse_otlp_pb_logs_jvm,
+        decode_metrics_data,
+        enc_metric,
+        enc_metrics_data,
+        enc_number_dp,
+        parse_otlp_pb_metrics,
     )
 
-    df = spark.range(40).select(
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("body-"), F.col("id")).alias("text"),
-    )
-    pay = synthesize_otlp_pb(df)
-    walk = sorted(tuple(r) for r in parse_otlp_pb_logs(pay, "payload").collect())
-    auto = sorted(tuple(r) for r in parse_otlp_pb_logs_auto(pay, "payload").collect())
-    assert auto == walk and len(walk) > 0
-    if jvm_protobuf_available(spark):
-        jvm = sorted(tuple(r) for r in parse_otlp_pb_logs_jvm(pay, "payload").collect())
-        assert jvm == walk
-
-
-def test_attrs_csv_col_sorts_by_key_like_the_walk(spark):
-    """The JVM path's attrs CSV must order entries like the Python walk:
-    by key, then rendered value. Sorting the joined "k=v" strings put
-    http.method.original before http.method ('.' < '='). The attribute
-    array is built with F.array(F.struct(...)) in spark-protobuf's decoded
-    KeyValue shape, so no jar is needed."""
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        _attrs_csv,
-        _attrs_csv_col,
-    )
-
-    def kv(key, s=None, i=None, b=None):
-        return F.struct(
-            F.lit(key).alias("key"),
-            F.struct(
-                F.lit(s).cast("string").alias("string_value"),
-                F.lit(b).cast("boolean").alias("bool_value"),
-                F.lit(i).cast("long").alias("int_value"),
-                F.lit(None).cast("double").alias("double_value"),
-                F.lit(None).cast("binary").alias("bytes_value"),
-            ).alias("value"),
-        )
-
-    attrs = F.array(
-        kv("http.method.original", s="get"),
-        kv("http.method", s="GET"),
-        kv("dup", i=2),
-        kv("dup", s="10"),
-        kv("a", b=True),
-        kv("ab", s="x"),
-    )
-    got = spark.range(1).select(_attrs_csv_col(attrs).alias("csv")).first()["csv"]
-    want = _attrs_csv([
-        ("http.method.original", "get"), ("http.method", "GET"),
-        ("dup", 2), ("dup", "10"), ("a", True), ("ab", "x"),
-    ])
-    assert want == "a=true,ab=x,dup=10,dup=2,http.method=GET,http.method.original=get"
+    untimed = enc_tag(4, 1) + struct.pack("<d", 2.5)  # as_double, no time field
+    payload = enc_metrics_data([enc_metric("g", "1", [enc_number_dp(2**64 - 1, 1.5), untimed])])
+    want = [r["mt_ts_us"] for r in decode_metrics_data(payload)]
+    assert want == [18446744073709551, None]
+    df = spark.createDataFrame([(1, bytearray(payload))], "id long, payload binary")
+    got = [r["mt_ts_us"] for r in parse_otlp_pb_metrics(df, "payload").collect()]
     assert got == want
 
 
-def test_logs_descriptor_set_structure_roundtrip():
-    """The hand-encoded FileDescriptorSet must be structurally sound: our
-    own wire reader walks it back and the message/field inventory must
-    match the field numbers decode_logs_data dispatches on — a schema
-    drift between the two decode paths fails here, without needing the
-    jar."""
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        _fields,
-        logs_descriptor_set,
-    )
+def test_kernel_keeps_passthrough_aligned_and_typed(spark):
+    """Payloads that decode to no rows (NULL, malformed), one row and
+    several rows in one batch: every output row carries its own payload's
+    passthrough values, and the passthrough columns keep their Spark
+    types."""
+    import datetime
 
-    (f_set,) = [v for f, _, v in _fields(logs_descriptor_set()) if f == 1]
-    name = pkg = syntax = None
-    messages = {}
-    for f, _, v in _fields(bytes(f_set)):
-        if f == 1:
-            name = bytes(v).decode()
-        elif f == 2:
-            pkg = bytes(v).decode()
-        elif f == 12:
-            syntax = bytes(v).decode()
-        elif f == 4:
-            mname, fields = None, {}
-            for f2, _, v2 in _fields(bytes(v)):
-                if f2 == 1:
-                    mname = bytes(v2).decode()
-                elif f2 == 2:
-                    fname = num = ftype = tname = None
-                    rep = False
-                    for f3, _, v3 in _fields(bytes(v2)):
-                        if f3 == 1:
-                            fname = bytes(v3).decode()
-                        elif f3 == 3:
-                            num = v3
-                        elif f3 == 4:
-                            rep = v3 == 3
-                        elif f3 == 5:
-                            ftype = v3
-                        elif f3 == 6:
-                            tname = bytes(v3).decode()
-                    fields[fname] = (num, ftype, rep, tname)
-            messages[mname] = fields
-    assert (name, pkg, syntax) == ("otlp_logs_subset.proto", "opentelemetry.proto.logs.v1", "proto3")
-    lr = messages["LogRecord"]
-    # the exact field numbers the Python walk dispatches on
-    assert lr["time_unix_nano"][0:2] == (1, 6)   # fixed64
-    assert lr["severity_number"][0:2] == (2, 5)  # int32
-    assert lr["severity_text"][0:2] == (3, 9)    # string
-    assert lr["body"][:2] == (5, 11) and lr["body"][3].endswith(".AnyValue")
-    assert lr["attributes"][:3] == (6, 11, True)
-    assert lr["trace_id"][0:2] == (9, 12) and lr["span_id"][0:2] == (10, 12)
-    assert messages["LogsData"]["resource_logs"][:3] == (1, 11, True)
-    assert messages["KeyValue"]["value"][3].endswith(".AnyValue")
-    av = messages["AnyValue"]
-    assert {k: v[0] for k, v in av.items()} == {
-        "string_value": 1, "bool_value": 2, "int_value": 3,
-        "double_value": 4, "bytes_value": 7,
-    }
-    # every message reference resolves inside the file (no dependencies)
-    declared = {f".{pkg}.{m}" for m in messages}
-    for m, fs in messages.items():
-        for fname, (num, ftype, rep, tname) in fs.items():
-            if ftype == 11:
-                assert tname in declared, (m, fname, tname)
+    from pyspark.sql import types as T
+
+    from opentelemetry_collector_contrib_spark.operators._wire import explode_decode
+
+    def logs(*bodies):
+        return bytearray(enc_logs_data([enc_log_record(1_000, b) for b in bodies]))
+
+    ts = datetime.datetime(2024, 5, 6, 7, 8, 9)
+    rows = [
+        (1, ts, {"k": "1"}, "null", None),
+        (2, ts, {"k": "2"}, "malformed", bytearray(b"\x0a\x05\x01")),
+        (3, ts + datetime.timedelta(seconds=3), {"k": "3"}, "one", logs("a")),
+        (4, None, None, None, logs("b", "c", "d")),
+        (5, ts, {}, "one more", logs("e")),
+    ]
+    schema = "id long, ts timestamp, tags map<string,string>, s string, payload binary"
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    out = explode_decode(df, "payload", _OL_FIELDS, decode_logs_data)
+    assert out.schema[:4] == df.schema[:4]
+    assert [f.name for f in out.schema[4:]] == [f.name for f in _OL_FIELDS]
+    assert isinstance(out.schema["ts"].dataType, T.TimestampType)
+    by_id = {r[0]: r[1:4] for r in rows}
+    got = [(r["id"], r["ol_body"], (r["ts"], r["tags"], r["s"])) for r in out.collect()]
+    assert [(i, body) for i, body, _ in got] == [(3, "a"), (4, "b"), (4, "c"), (4, "d"), (5, "e")]
+    assert all(passthrough == by_id[i] for i, _, passthrough in got)

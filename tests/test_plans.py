@@ -226,7 +226,7 @@ def test_host_info_single_aggregate_exchange(spark):
         # session-7 translators: all must stay scan-speed projections.
         # (prw_histogram_series is excluded: its REGISTRY fixture composes
         # over the Arrow-batched protobuf wire decode, so the plan shows
-        # the decoder's mapInPandas; the expansion itself is the same
+        # the decoder's mapInArrow; the expansion itself is the same
         # native shape prw_summary_series proves below.)
         "prom_name_normalize",
         "loki_stream_labels",
@@ -326,12 +326,15 @@ def test_statsd_aggregate_bounded_exchanges(spark):
      "ipfix_cross_packet_templates", "sflow_parse", "envoy_als_entries"],
 )
 def test_netflow_decode_is_shuffle_free_arrow_map(spark, name):
-    """Flow-packet decode is a per-row fan-out: one Arrow-batched
-    mapInPandas over the scan, zero Exchange, no joins — the same shape as
-    the OTLP/SignalFx protobuf decoders, so it scales with splits."""
+    """Flow-packet decode is a per-row fan-out: one Arrow-batched map over
+    the scan, zero Exchange, no joins, so it scales with splits. sFlow and
+    Envoy ALS run on the protobuf decoders' mapInArrow kernel
+    (`_wire.explode_decode`); NetFlow v5/v9/IPFIX on numpy batch decoders
+    under mapInPandas."""
     plan = plan_of(_query(name)(spark, SF))
     assert n_exchanges(plan) == 0, tree_of(plan)
-    assert "MapInPandas" in plan, "decode kernel must be Arrow-batched mapInPandas"
+    kernel = "MapInArrow" if name in ("sflow_parse", "envoy_als_entries") else "MapInPandas"
+    assert kernel in plan, f"{name} must decode in one Arrow-batched {kernel}"
     for node in (*FORBIDDEN, "SortMergeJoin", "BatchEvalPython"):
         assert node not in plan, f"{name} plan contains {node}"
 

@@ -8,14 +8,13 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from opentelemetry_collector_contrib_spark.operators._wire import enc_ld, enc_tag, enc_varint
 from opentelemetry_collector_contrib_spark.operators.pprof_pb import (
-    _enc_svarint,
     decode_pprof_profile,
     enc_pprof_profile,
     parse_pprof_profiles,
     synthesize_pprof,
 )
-from opentelemetry_collector_contrib_spark.operators.otlp_pb import _enc_varint, _ld, _tag
 
 
 def _one_sample_profile(**kw):
@@ -68,21 +67,21 @@ def test_unpacked_repeated_accepted():
     """Sample.location_id / value may arrive unpacked (one varint field per
     element) — proto2-era writers do this; readers must accept both."""
     # string table: "", "cpu", "ns", "fn"
-    strtab = b"".join(_ld(6, s) for s in [b"", b"cpu", b"ns", b"fn"])
-    vt = _ld(1, _tag(1, 0) + _enc_varint(1) + _tag(2, 0) + _enc_varint(2))
-    fn = _ld(5, _tag(1, 0) + _enc_varint(1) + _tag(2, 0) + _enc_varint(3))
-    line = _tag(1, 0) + _enc_varint(1) + _tag(2, 0) + _enc_svarint(5)
-    loc = _ld(4, _tag(1, 0) + _enc_varint(9) + _ld(4, line))
-    sample = _ld(2, _tag(1, 0) + _enc_varint(9) + _tag(2, 0) + _enc_svarint(11))
+    strtab = b"".join(enc_ld(6, s) for s in [b"", b"cpu", b"ns", b"fn"])
+    vt = enc_ld(1, enc_tag(1, 0) + enc_varint(1) + enc_tag(2, 0) + enc_varint(2))
+    fn = enc_ld(5, enc_tag(1, 0) + enc_varint(1) + enc_tag(2, 0) + enc_varint(3))
+    line = enc_tag(1, 0) + enc_varint(1) + enc_tag(2, 0) + enc_varint(5)
+    loc = enc_ld(4, enc_tag(1, 0) + enc_varint(9) + enc_ld(4, line))
+    sample = enc_ld(2, enc_tag(1, 0) + enc_varint(9) + enc_tag(2, 0) + enc_varint(11))
     rows = decode_pprof_profile(vt + sample + loc + fn + strtab)
     assert rows[0]["value"] == 11 and rows[0]["stack"] == "fn"
 
 
 def test_unsymbolized_location_renders_address():
-    strtab = b"".join(_ld(6, s) for s in [b"", b"cpu", b"ns"])
-    vt = _ld(1, _tag(1, 0) + _enc_varint(1) + _tag(2, 0) + _enc_varint(2))
-    loc = _ld(4, _tag(1, 0) + _enc_varint(255))  # no line info
-    sample = _ld(2, _ld(1, _enc_varint(255)) + _ld(2, _enc_svarint(1)))
+    strtab = b"".join(enc_ld(6, s) for s in [b"", b"cpu", b"ns"])
+    vt = enc_ld(1, enc_tag(1, 0) + enc_varint(1) + enc_tag(2, 0) + enc_varint(2))
+    loc = enc_ld(4, enc_tag(1, 0) + enc_varint(255))  # no line info
+    sample = enc_ld(2, enc_ld(1, enc_varint(255)) + enc_ld(2, enc_varint(1)))
     rows = decode_pprof_profile(vt + sample + loc + strtab)
     assert rows[0]["stack"] == "0xff"
 
@@ -91,9 +90,9 @@ def test_malformed_payloads_raise():
     with pytest.raises(Exception):
         decode_pprof_profile(b"\x1f\x8b not actually gzip")
     # dangling location reference
-    strtab = b"".join(_ld(6, s) for s in [b"", b"cpu", b"ns"])
-    vt = _ld(1, _tag(1, 0) + _enc_varint(1) + _tag(2, 0) + _enc_varint(2))
-    sample = _ld(2, _ld(1, _enc_varint(77)) + _ld(2, _enc_svarint(1)))
+    strtab = b"".join(enc_ld(6, s) for s in [b"", b"cpu", b"ns"])
+    vt = enc_ld(1, enc_tag(1, 0) + enc_varint(1) + enc_tag(2, 0) + enc_varint(2))
+    sample = enc_ld(2, enc_ld(1, enc_varint(77)) + enc_ld(2, enc_varint(1)))
     with pytest.raises(ValueError):
         decode_pprof_profile(vt + sample + strtab)
     # value count != sample_type count

@@ -42,10 +42,10 @@ def test_per_series_validation_skips():
     rows = decode_remote_write_v2(enc_remote_write_v2([good, dup, nameless]))
     assert [r["prw_name"] for r in rows] == ["ok"]
     # out-of-bounds labels_refs: craft by appending a bogus ref
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import _enc_varint, _ld
+    from opentelemetry_collector_contrib_spark.operators._wire import enc_ld, enc_varint
 
     p = enc_remote_write_v2([good])
-    bogus = _ld(5, _ld(1, _enc_varint(250) + _enc_varint(251)))
+    bogus = enc_ld(5, enc_ld(1, enc_varint(250) + enc_varint(251)))
     assert [r["prw_name"] for r in decode_remote_write_v2(p + bogus)] == ["ok"]
 
 
