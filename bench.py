@@ -203,8 +203,8 @@ def main() -> None:
     timed("q11_session_asof", session_asof)
 
     # q12: per-trace span-tree kernel (coralogix-analogue transactions +
-    # CRISP critical path) over every conversation — the partition-amortized
-    # mapInPandas path (one Python call per partition, traces contiguous)
+    # CRISP critical path) over every conversation — the grouped mapInArrow
+    # kernel (one Python call per partition, traces contiguous)
     def trace_tree():
         from pyspark.sql import Window
 
@@ -281,7 +281,7 @@ def main() -> None:
 
     # q15: Arrow IPC pack+unpack kernel (the otelarrow wire shape) — rows
     # regroup into one IPC stream payload per conv bucket and come back out,
-    # fully materialized. Exercises the mapInPandas group-carry encode and
+    # fully materialized. Exercises the grouped mapInArrow encode and
     # the declared-schema decode end to end.
     def arrow_roundtrip():
         from opentelemetry_collector_contrib_spark.operators.arrow_ipc import (

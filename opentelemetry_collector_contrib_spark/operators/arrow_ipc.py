@@ -6,26 +6,25 @@ Arrow record batches over gRPC (OTAP: `receiver/otelarrowreceiver`,
 payloads). The transport/dictionary-delta machinery is connection state
 and out of scope in-sandbox (same stance as the kafka broker contract);
 the data kernel — pack row groups into Arrow IPC stream payloads and
-unpack them back, losslessly — IS in scope and is the honest
-mapInPandas case: the rows already cross the JVM↔Python boundary as
-Arrow batches, so encode/decode is a zero-copy reframe, not a codec.
+unpack them back, losslessly — IS in scope: the rows already cross the
+JVM↔Python boundary as Arrow batches, so encode/decode is a reframe of
+those batches, not a codec, and no value goes through pandas.
 
-Scale design: encode is repartition(key) + sortWithinPartitions +
-mapInPandas with a cross-batch group carry (the repo's preferred shape
-for small numerous groups — no per-group applyInPandas shuffle-and-pickle).
-One IPC payload per key; payload size is bounded by the caller's key
-granularity. Decode is a flat mapInPandas explode. Both stream through
-Arrow buffers; nothing collects."""
+Scale design: encode runs on the grouped kernel (`_groups.py`), one IPC
+payload per distinct key (NULL keys included) sliced straight out of the
+Arrow batch; payload size is bounded by the caller's key granularity.
+Decode runs on the shared row-exploding kernel (`_wire.explode_decode`).
+Both stream through Arrow buffers; nothing collects."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from io import BytesIO
-
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ._groups import bounds, group_kernel
+from ._wire import explode_decode
 
 
 def encode_arrow_ipc(
@@ -38,54 +37,25 @@ def encode_arrow_ipc(
     payload is the Arrow IPC STREAM serialization of the group's
     payload_cols, rows ordered by sort_cols (deterministic bytes given a
     deterministic sort key)."""
-    in_fields = {f.name: f for f in df.schema.fields}
-    out_schema = T.StructType(
-        [*(in_fields[k] for k in key_cols),
-         T.StructField("aip_rows", T.LongType()),
-         T.StructField("payload", T.BinaryType())]
-    )
+    out_schema = df.select(*key_cols).schema.add("aip_rows", T.LongType()).add("payload", T.BinaryType())
     cols = [*key_cols, *sort_cols, *[c for c in payload_cols if c not in key_cols and c not in sort_cols]]
-    part = df.select(*dict.fromkeys(cols)).repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *sort_cols
-    )
 
-    def enc(pdf: pd.DataFrame) -> dict:
-        buf = BytesIO()
-        table = pa.Table.from_pandas(pdf[payload_cols], preserve_index=False)
-        with pa.ipc.new_stream(buf, table.schema) as w:
-            w.write_table(table)
-        head = pdf.iloc[0]
-        return {
-            **{k: head[k] for k in key_cols},
-            "aip_rows": len(pdf),
-            "payload": buf.getvalue(),
-        }
+    def enc(batch: pa.RecordBatch, starts: list[int]) -> pa.RecordBatch:
+        sizes, payloads = [], []
+        for lo, hi in bounds(starts, batch.num_rows):
+            part = batch.slice(lo, hi - lo).select(payload_cols)
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, part.schema) as w:
+                w.write_batch(part)
+            sizes.append(hi - lo)
+            payloads.append(sink.getvalue().to_pybytes())
+        heads = batch.select(key_cols).take(pa.array(starts, pa.int64()))
+        return pa.RecordBatch.from_arrays(
+            [*heads.columns, pa.array(sizes, pa.int64()), pa.array(payloads, pa.binary())],
+            names=[*key_cols, "aip_rows", "payload"],
+        )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            # rows are key-sorted: groups are contiguous; the last group may
-            # continue into the next Arrow batch, so hold it back
-            keys = pdf[key_cols].astype(object)
-            boundary = (keys != keys.shift()).any(axis=1).to_numpy().nonzero()[0]
-            starts = list(boundary) + [len(pdf)]
-            done_rows = []
-            for s, e in zip(starts[:-1], starts[1:]):
-                if e == len(pdf):
-                    carry = pdf.iloc[s:].reset_index(drop=True)
-                else:
-                    done_rows.append(enc(pdf.iloc[s:e]))
-            if done_rows:
-                yield pd.DataFrame(done_rows, columns=[*key_cols, "aip_rows", "payload"])
-        if carry is not None and not carry.empty:
-            yield pd.DataFrame([enc(carry)], columns=[*key_cols, "aip_rows", "payload"])
-
-    return part.mapInPandas(gen, out_schema)
+    return group_kernel(df.select(*dict.fromkeys(cols)), key_cols, sort_cols, out_schema, enc)
 
 
 def decode_arrow_ipc(
@@ -97,35 +67,17 @@ def decode_arrow_ipc(
     """Unpack each Arrow IPC stream payload back to rows. `schema` is the
     DDL of the encoded columns (wire contracts are declared, not sniffed —
     a corrupt payload must not be able to rewrite the plan's types);
-    payloads whose schema disagrees, or that do not parse, are dropped
-    (on_error=send semantics)."""
-    keep = passthrough or []
+    payloads whose column names disagree, whose columns do not cast to the
+    declared types, or that do not parse, are dropped (on_error=send
+    semantics)."""
     decl = T._parse_datatype_string(schema)
-    out_schema = T.StructType([*(df.schema[k] for k in keep), *decl.fields])
-    want = [f.name for f in decl.fields]
+    target = to_arrow_schema(decl)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                payload = rec[source]
-                if payload is None:
-                    continue
-                try:
-                    with pa.ipc.open_stream(pa.BufferReader(bytes(payload))) as r:
-                        t = r.read_all()
-                except Exception:  # noqa: BLE001 — corrupt frame drops
-                    continue
-                if sorted(t.schema.names) != sorted(want):
-                    continue
-                body = t.select(want).to_pandas()
-                for k in keep:
-                    body[k] = rec[k]
-                out.append(body[[*keep, *want]])
-            yield (
-                pd.concat(out, ignore_index=True)
-                if out
-                else pd.DataFrame(columns=[*keep, *want])
-            )
+    def decode(payload: bytes) -> list[dict]:
+        with pa.ipc.open_stream(payload) as r:
+            table = r.read_all()
+        if sorted(table.schema.names) != sorted(target.names):
+            raise ValueError(f"payload columns {table.schema.names} are not {target.names}")
+        return table.select(target.names).cast(target).to_pylist()
 
-    return df.mapInPandas(gen, out_schema)
+    return explode_decode(df.select(*(passthrough or []), source), source, decl.fields, decode)

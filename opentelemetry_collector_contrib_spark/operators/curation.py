@@ -17,12 +17,15 @@ Scale notes (10^12 docs):
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql import types as T
 
+from ._groups import bounds, group_kernel, pylist
 from .textstats import h60, shingles_of, tokens
 
 
@@ -1114,12 +1117,13 @@ def pack_conversations(
     downstream — silently dropping them would bias against long dialogues).
 
     Scale: per-conv token totals are ONE hash aggregate; the sequential
-    next-fit state lives inside applyInPandas per SHARD (fill counter +
-    pack counter — O(1) state, conversations stream through in conv_id
-    order), and shards are independent, so parallelism = shard count. No
-    global ordering is ever required; at 10^12 turns pick shards ≈ 4-16×
-    cluster parallelism. Deterministic: (shard, conv_id) order fixes the
-    layout, so reruns produce byte-identical packs (resume/caching safe).
+    next-fit state is folded per SHARD on the grouped Arrow kernel
+    (`_groups.py`; fill counter + pack counter — O(1) state, conversations
+    stream through in conv_id order), and shards are independent, so
+    parallelism = shard count. No global ordering is ever required; at
+    10^12 turns pick shards ≈ 4-16× cluster parallelism. Deterministic:
+    (shard, conv_id) order fixes the layout, so reruns produce
+    byte-identical packs (resume/caching safe).
     """
     from ..operators.textstats import tokens as _ws_tokens
 
@@ -1152,36 +1156,26 @@ def pack_conversations(
         "pack_pos bigint, fill bigint, oversize boolean"
     )
 
-    def _next_fit(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("conv_id").reset_index(drop=True)
-        n = pdf["n_tokens"].to_numpy()
-        pack = [0] * len(pdf)
-        pos = [0] * len(pdf)
-        fill_out = [0] * len(pdf)
-        cur_pack, cur_fill, cur_pos = 0, 0, 0
-        for i in range(len(pdf)):
-            if i > 0 and cur_fill + int(n[i]) > budget:
-                cur_pack += 1
-                cur_fill = 0
-                cur_pos = 0
-            cur_fill += int(n[i])
-            pack[i], pos[i], fill_out[i] = cur_pack, cur_pos, cur_fill
-            cur_pos += 1
-        return pd.DataFrame(
-            {
-                "shard": pdf["shard"],
-                "conv_id": pdf["conv_id"],
-                "n_tokens": pdf["n_tokens"],
-                "pack_id": pack,
-                "pack_pos": pos,
-                "fill": fill_out,
-                "oversize": pdf["n_tokens"] > budget,
-            }
+    def _next_fit(batch, starts):
+        n = pylist(batch.column("n_tokens"))
+        pack, pos, fill_out = [0] * len(n), [0] * len(n), [0] * len(n)
+        for lo, hi in bounds(starts, len(n)):
+            cur_pack, cur_fill, cur_pos = 0, 0, 0
+            for i in range(lo, hi):
+                if i > lo and cur_fill + n[i] > budget:
+                    cur_pack += 1
+                    cur_fill = 0
+                    cur_pos = 0
+                cur_fill += n[i]
+                pack[i], pos[i], fill_out[i] = cur_pack, cur_pos, cur_fill
+                cur_pos += 1
+        return pa.RecordBatch.from_arrays(
+            [*batch.columns, *(pa.array(c, pa.int64()) for c in (pack, pos, fill_out)),
+             pc.greater(batch.column("n_tokens"), budget)],
+            names=[*batch.schema.names, "pack_id", "pack_pos", "fill", "oversize"],
         )
 
-    return toks.groupBy("shard").applyInPandas(_next_fit, schema)
+    return group_kernel(toks, ["shard"], [F.col("conv_id").asc_nulls_last()], schema, _next_fit)
 
 
 def weighted_sample(

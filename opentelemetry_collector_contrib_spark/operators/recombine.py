@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._groups import arrow_schema, bounds, group_kernel, pylist, rows_to_batch
+
 
 def recombine(
     df: DataFrame,
@@ -119,33 +121,29 @@ def group_by_trace_waited(
     row starts the next group.
 
     The fold is sequential per trace (each group's start depends on the
-    previous group's extent — not a fixed tumbling window), so it runs as
-    an Arrow-batched applyInPandas kernel per trace, the same bounded
-    per-trace contract as group_by_trace. One shuffle on the trace key.
+    previous group's extent — not a fixed tumbling window), so it runs on
+    the grouped Arrow kernel (`_groups.py`): one shuffle on the trace key,
+    then one mapInArrow call per partition folding each trace in turn.
     The streaming twin (streaming/pipeline.py streaming_group_by_trace)
     shares `fold_trace_groups`, so the two cannot diverge."""
     out_schema = (
         f"{trace_col} string, release_us bigint, n_turns bigint, "
         "transcript string, first_ts_us bigint, last_ts_us bigint"
     )
+    schema = arrow_schema(out_schema)
     wait_us = wait_s * 1_000_000
 
-    def kernel(pdf):
-        import pandas as _pd
-
-        trace = pdf[trace_col].iloc[0]
-        rows = sorted(
-            zip(
-                (int(v) for v in pdf["_ts_us"]),
-                (int(v) for v in pdf[order_col]),
-                (str(v) for v in pdf[text_col]),
+    def fold(batch, starts):
+        traces, ts_us, orders, texts = (
+            pylist(batch.column(c)) for c in (trace_col, "_ts_us", order_col, text_col)
+        )
+        out = []
+        for lo, hi in bounds(starts, batch.num_rows):
+            rows = sorted(
+                (int(t), int(o), str(x)) for t, o, x in zip(ts_us[lo:hi], orders[lo:hi], texts[lo:hi])
             )
-        )
-        groups = fold_trace_groups(rows, wait_us)
-        return _pd.DataFrame(
-            [(trace, *g) for g in groups],
-            columns=[trace_col, "release_us", "n_turns", "transcript", "first_ts_us", "last_ts_us"],
-        )
+            out += [(traces[lo], *g) for g in fold_trace_groups(rows, wait_us)]
+        return rows_to_batch(out, schema)
 
     staged = df.select(
         trace_col,
@@ -153,7 +151,7 @@ def group_by_trace_waited(
         text_col,
         F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_ts_us"),
     )
-    return staged.groupBy(trace_col).applyInPandas(kernel, out_schema)
+    return group_kernel(staged, [trace_col], [], out_schema, fold)
 
 
 def fold_trace_groups(

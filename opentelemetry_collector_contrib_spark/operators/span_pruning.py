@@ -11,12 +11,11 @@ analysis (IQR or MAD, outlier.go:37-213) annotates the summary with the
 median and attribute correlations, and can PRESERVE each outlier's whole
 subtree instead of aggregating it (processor.go:415-478).
 
-Spark shape: the algorithm is a per-trace tree walk, so it follows the
-trace_tree.py pattern — ONE hash repartition on trace_id +
-sortWithinPartitions, then a mapInPandas partition kernel (one Arrow batch
-stream per partition, buffering only the trace that straddles a batch
-boundary). Per-trace work is O(spans * tree height); trace size bounds
-memory exactly like groupbytrace. At 100 TB this is a single shuffle keyed
+Spark shape: the algorithm is a per-trace tree walk, so like trace_tree.py
+it runs on the grouped Arrow kernel (`_groups.py`): ONE hash repartition on
+trace_id + sortWithinPartitions, then one mapInArrow call per partition.
+Per-trace work is O(spans * tree height); trace size bounds memory exactly
+like groupbytrace. At 100 TB this is a single shuffle keyed
 on trace_id — the same partitioning the groupbytrace/tailsampling family
 already uses, so span_pruning composes with them shuffle-free.
 
@@ -35,10 +34,13 @@ from __future__ import annotations
 
 import fnmatch
 import hashlib
+import math
 import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ._groups import arrow_schema, bounds, group_kernel, pylist, rows_to_batch
 
 _MAD_SCALE = 1.4826  # outlier.go:156 madScaleFactor
 
@@ -208,9 +210,8 @@ def _prune_trace(cols, cfg):
     names, kinds, statuses = cols["name"], cols["kind"], cols["status"]
     tstates = cols.get("trace_state") or [""] * n
     starts, ends = cols["start_ns"], cols["end_ns"]
-    # Arrow hands MapType to pandas as a list of (k, v) tuples — normalize
-    raw_attrs = cols.get("attrs") or [{}] * n
-    attrs = [dict(a) if a is not None and not isinstance(a, dict) else (a or {}) for a in raw_attrs]
+    # Arrow hands MapType to Python as a list of (k, v) tuples — normalize
+    attrs = [dict(a or ()) for a in cols["attrs"]]
     cols = dict(cols, attrs=attrs)
     trace_id = cols["trace_id"][0]
 
@@ -475,51 +476,16 @@ def _orig_row(cols, i):
     return row
 
 
-def _partition_kernel(cfg):
-    """mapInPandas generator over trace-contiguous partitions (same
-    batch-straddling buffer as trace_tree.py:259)."""
-
-    def run_frame(pdf):
-        import numpy as np
-        import pandas as pd
-
-        tids = pdf["trace_id"].to_numpy()
-        nrows = len(pdf)
-        cols = {c: pdf[c].tolist() for c in pdf.columns}
-        bounds = [0] + (np.flatnonzero(tids[1:] != tids[:-1]) + 1).tolist() + [nrows]
-        rows = []
-        for k in range(len(bounds) - 1):
-            lo, hi = bounds[k], bounds[k + 1]
-            sub = {c: v[lo:hi] for c, v in cols.items()}
-            rows.extend(_prune_trace(sub, cfg))
-        return pd.DataFrame(
-            rows, columns=list(_BASE_COLS) + list(_OUT_DEFAULTS)
-        )
-
-    def gen(batches):
-        import pandas as pd
-
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if len(pdf) == 0:
-                continue
-            tids = pdf["trace_id"].to_numpy()
-            last = tids[-1]
-            i = len(tids)
-            while i > 0 and tids[i - 1] == last:
-                i -= 1
-            if i == 0:
-                buf = pdf
-                continue
-            buf = pdf.iloc[i:].reset_index(drop=True)
-            yield run_frame(pdf.iloc[:i].reset_index(drop=True))
-        if buf is not None and len(buf):
-            yield run_frame(buf)
-
-    return gen
+def _prune_batch(batch, starts, cfg, schema):
+    """Prune each trace of a trace-contiguous batch (the grouped kernel's
+    per-batch step). A NULL start_ns/end_ns reads as NaN, so every
+    comparison with it is false; it leaves as NULL (_groups.rows_to_batch)."""
+    cols = {c: pylist(batch.column(c), math.nan if c in ("start_ns", "end_ns") else None)
+            for c in batch.schema.names}
+    rows = []
+    for lo, hi in bounds(starts, batch.num_rows):
+        rows.extend(_prune_trace({c: v[lo:hi] for c, v in cols.items()}, cfg))
+    return rows_to_batch([tuple(r[c] for c in schema.names) for r in rows], schema)
 
 
 def span_pruning(
@@ -575,5 +541,8 @@ def span_pruning(
         "outlier": ocfg,
         "has_condition": has_condition,
     }
-    shaped = work.repartition(F.col("trace_id")).sortWithinPartitions("trace_id", "start_ns", "span_id")
-    return shaped.mapInPandas(_partition_kernel(cfg), _OUT_SCHEMA)
+    schema = arrow_schema(_OUT_SCHEMA)
+    return group_kernel(
+        work, ["trace_id"], ["start_ns", "span_id"], _OUT_SCHEMA,
+        lambda batch, starts: _prune_batch(batch, starts, cfg, schema),
+    )

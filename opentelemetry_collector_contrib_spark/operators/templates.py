@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._groups import arrow_schema, bounds, group_kernel, pylist, rows_to_batch
+
 # ordered mask rules: (regex, replacement). Applied left to right, all
 # global — mirrors drain's masking config (README masking section).
 DEFAULT_MASKS: list[tuple[str, str]] = [
@@ -204,7 +206,8 @@ def drain_tree_templates(
 
     depth/sim_th mirror the processor's tree_depth / merge_threshold
     config (config.go); depth counts root+length+prefix levels as in
-    drain3, so ``depth-2`` leading tokens route the tree."""
+    drain3, so ``depth-2`` leading tokens route the tree. Each leaf is
+    folded by ``drain_fold`` on the grouped Arrow kernel (`_groups.py`)."""
     if depth < 3:
         raise ValueError("depth must be >= 3 (go-drain3 requirement)")
     prefix_len = depth - 2
@@ -231,20 +234,18 @@ def drain_tree_templates(
         ).alias("_leaf"),
     )
 
-    def kernel(pdf):
-        import pandas as _pd
+    out_schema = "template string, match_count bigint, example string"
+    schema = arrow_schema(out_schema)
 
-        rows = sorted(
-            zip(pdf["_ord"], pdf["_masked"], pdf["_raw"])
-        )  # canonical order within the leaf
-        out = drain_fold([(m, r) for _, m, r in rows], sim_th)
-        return _pd.DataFrame(
-            out, columns=["template", "match_count", "example"]
-        )
+    def kernel(batch, starts):
+        ords, masked_, raws = (pylist(batch.column(c)) for c in ("_ord", "_masked", "_raw"))
+        out = []
+        for lo, hi in bounds(starts, batch.num_rows):
+            rows = sorted(zip(ords[lo:hi], masked_[lo:hi], raws[lo:hi]))  # canonical order within the leaf
+            out += drain_fold([(m, r) for _, m, r in rows], sim_th)
+        return rows_to_batch(out, schema)
 
-    return keyed.groupBy("_leaf").applyInPandas(
-        kernel, "template string, match_count bigint, example string"
-    )
+    return group_kernel(keyed, ["_leaf"], [], out_schema, kernel)
 
 
 # ---------------------------------------------------------------------------

@@ -13,20 +13,23 @@ groups spans by trace id, builds a parent/child tree
   critical-path nanoseconds to each span.
 
 Both are path-dependent tree walks, so they need per-trace imperative logic.
-Spark shape: ONE hash repartition on the trace key + sortWithinPartitions
-(traces contiguous), then `mapInPandas` — one Arrow-batched Python call per
-PARTITION, not per trace. A per-group applyInPandas pays ~0.5 ms of
-call/Arrow overhead per trace, which at 10⁶ small traces per executor is the
-bottleneck; the partition kernel amortizes that to ~zero while streaming
-batches, buffering only the one trace that may straddle an Arrow batch
-boundary. Per-trace work is index-based (integer arrays, no per-span dicts)
-and O(spans·log spans). Trace sizes bound memory exactly like groupbytrace.
+Spark shape: the grouped Arrow kernel (`_groups.group_kernel`) — ONE hash
+repartition on the trace key + sortWithinPartitions (traces contiguous),
+then `mapInArrow`: one Python call per PARTITION, not per trace, holding
+back only the trace that straddles an Arrow batch boundary. Input columns
+pass through as Arrow arrays, so an int64 next to a NULL keeps every digit.
+Per-trace work is index-based (integer arrays, no per-span dicts) and
+O(spans·log spans). Trace sizes bound memory exactly like groupbytrace.
 """
 
 from __future__ import annotations
 
+import math
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ._groups import bounds, group_kernel, pylist
 
 
 # ---------------------------------------------------------------------------
@@ -209,81 +212,44 @@ def _critical_path_trace(ids, parents, starts, ends, on_path, excl_out, incl_out
 
 
 # ---------------------------------------------------------------------------
-# partition kernel: contiguous traces → per-trace slices
+# per-batch step of the grouped kernel: contiguous traces -> per-trace slices
 # ---------------------------------------------------------------------------
 
 
-def _process_frame(pdf, trace_col, features):
-    import numpy as np
-
-    n = len(pdf)
-    tids = pdf[trace_col].to_numpy()
-    ids = pdf["span_id"].tolist()
-    parents = pdf["parent_span_id"].tolist()
-    starts = pdf["start_ns"].tolist()
-    ends = pdf["end_ns"].tolist()
-    do_tx = "transactions" in features
-    do_cp = "critical_path" in features
-    if do_tx:
-        names = pdf["name"].tolist()
-        kinds = pdf["kind"].tolist()
-        tx = np.full(n, None, dtype=object)
-        is_root = np.full(n, None, dtype=object)
-    if do_cp:
-        on_path = np.full(n, None, dtype=object)
-        excl = np.full(n, None, dtype=object)
-        incl = np.full(n, None, dtype=object)
-
-    # contiguous run boundaries (input is sorted by trace within partition)
-    bounds = [0] + (np.flatnonzero(tids[1:] != tids[:-1]) + 1).tolist() + [n]
-    for k in range(len(bounds) - 1):
-        lo, hi = bounds[k], bounds[k + 1]
-        if do_tx:
+def _annotate(batch, group_starts, features):
+    """The input batch plus the feature columns, one trace per group. A
+    NULL start/end reads as NaN, so every comparison with it is false."""
+    n = batch.num_rows
+    ids = pylist(batch.column("span_id"))
+    parents = pylist(batch.column("parent_span_id"))
+    starts = pylist(batch.column("start_ns"), math.nan)
+    extra = {}
+    if "transactions" in features:
+        names = pylist(batch.column("name"))
+        kinds = pylist(batch.column("kind"))
+        tx, is_root = [None] * n, [None] * n
+        for lo, hi in bounds(group_starts, n):
             _transactions_trace(
                 ids[lo:hi], parents[lo:hi], names[lo:hi], kinds[lo:hi],
                 starts[lo:hi], tx, is_root, lo,
             )
-        if do_cp:
+        extra.update(transaction=pa.array(tx, pa.string()), transaction_root=pa.array(is_root, pa.bool_()))
+    if "critical_path" in features:
+        ends = pylist(batch.column("end_ns"), math.nan)
+        on_path, excl, incl = [None] * n, [None] * n, [None] * n
+        for lo, hi in bounds(group_starts, n):
             _critical_path_trace(
                 ids[lo:hi], parents[lo:hi], starts[lo:hi], ends[lo:hi],
                 on_path, excl, incl, lo,
             )
-    out = pdf
-    if do_tx:
-        out = out.assign(transaction=tx, transaction_root=is_root)
-    if do_cp:
-        out = out.assign(on_path=on_path, exclusive_ns=excl, inclusive_ns=incl)
-    return out
-
-
-def _partition_kernel(trace_col, features):
-    """mapInPandas generator: processes complete traces per Arrow batch,
-    buffering the (single) trace that may straddle a batch boundary."""
-
-    def gen(batches):
-        import pandas as pd
-
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if len(pdf) == 0:
-                continue
-            tids = pdf[trace_col].to_numpy()
-            last = tids[-1]
-            i = len(tids)
-            while i > 0 and tids[i - 1] == last:
-                i -= 1
-            if i == 0:
-                buf = pdf  # whole batch is one trace — keep buffering
-                continue
-            buf = pdf.iloc[i:].reset_index(drop=True)
-            yield _process_frame(pdf.iloc[:i].reset_index(drop=True), trace_col, features)
-        if buf is not None and len(buf):
-            yield _process_frame(buf, trace_col, features)
-
-    return gen
+        extra.update(
+            on_path=pa.array(on_path, pa.bool_()),
+            exclusive_ns=pa.array(excl, pa.int64(), from_pandas=True),
+            inclusive_ns=pa.array(incl, pa.int64(), from_pandas=True),
+        )
+    return pa.RecordBatch.from_arrays(
+        [*batch.columns, *extra.values()], names=[*batch.schema.names, *extra]
+    )
 
 
 _TX_COLS = ", transaction string, transaction_root boolean"
@@ -292,8 +258,10 @@ _CP_COLS = ", on_path boolean, exclusive_ns bigint, inclusive_ns bigint"
 
 def _run(df: DataFrame, trace_col: str, features: tuple, extra_schema: str) -> DataFrame:
     schema = ", ".join(f.name + " " + f.dataType.simpleString() for f in df.schema.fields)
-    shaped = df.repartition(F.col(trace_col)).sortWithinPartitions(trace_col)
-    return shaped.mapInPandas(_partition_kernel(trace_col, features), schema + extra_schema)
+    return group_kernel(
+        df, [trace_col], [], schema + extra_schema,
+        lambda batch, starts: _annotate(batch, starts, features),
+    )
 
 
 def transaction_attributes(df: DataFrame, trace_col: str = "trace_id") -> DataFrame:

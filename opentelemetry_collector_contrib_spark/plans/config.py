@@ -128,6 +128,9 @@ def _validate_sections(spec: dict[str, Any]) -> None:
         n = order.get("partitions")
         if n is not None and (isinstance(n, bool) or not isinstance(n, int) or n < 1):
             raise ValueError(f"order.partitions must be a positive int, got {n!r}")
+    parse = spec.get("parse", {})
+    if not isinstance(parse, dict) or parse.get("bank", "native") not in ("native", "vectorized"):
+        raise ValueError(f"parse must be a mapping with bank native|vectorized, got {parse!r}")
     routes = spec.get("routes", {})
     if routes:
         if not isinstance(routes, dict):

@@ -123,7 +123,7 @@ def main() -> None:
         for name, q in [
             ("tool retry chains (one exchange, island agg reuses it)", q_tool_retry_chains),
             ("curation gate (per-conv joins + digest window)", q_transcript_curation_gate),
-            ("conversation packing (agg + per-shard applyInPandas)", q_pack_conversations),
+            ("conversation packing (agg + per-shard grouped mapInArrow kernel)", q_pack_conversations),
         ]:
             print("=" * 30, name, "=" * 30)
             q(spark, sf).explain("formatted")

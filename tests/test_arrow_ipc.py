@@ -45,8 +45,9 @@ def test_group_carry_across_tiny_arrow_batches(spark):
         # one payload per key even though each group spans many 16-row batches
         assert sorted(r["b"] for r in rows) == [0, 1, 2]
         assert sum(r["aip_rows"] for r in rows) == 400
-        total = decode_arrow_ipc(packed, DDL).count()
-        assert total == 400
+        # and each row of each group lands in its payload exactly once
+        got = sorted((r["b"], r["id"]) for r in decode_arrow_ipc(packed, DDL, passthrough=["b"]).collect())
+        assert got == sorted((i % 3, i) for i in range(400))
     finally:
         if old is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -67,3 +68,22 @@ def test_corrupt_and_mismatched_payloads_drop(spark):
     )
     out = decode_arrow_ipc(df, DDL, passthrough=["k"])
     assert out.count() == 0
+
+
+def test_int64_beside_null_round_trips_exact(spark):
+    big = 1_700_000_000_123_457_789  # above 2**53: a float64 would round it
+    df = spark.createDataFrame([("k", 1, big), ("k", 2, None)], "key string, n long, v long")
+    packed = encode_arrow_ipc(df, ["key"], ["n"], ["n", "v"])
+    out = decode_arrow_ipc(packed, "n bigint, v bigint", passthrough=["key"])
+    assert sorted(tuple(r) for r in out.collect()) == [("k", 1, big), ("k", 2, None)]
+
+
+def test_null_keys_form_one_group(spark):
+    df = spark.createDataFrame(
+        [(None, 1, 1), (None, 2, 2), (None, 3, 3), ("k", 4, 4), ("k", 5, 5)],
+        "key string, n long, v long",
+    )
+    packed = encode_arrow_ipc(df, ["key"], ["n"], ["n", "v"])
+    got = sorted(((r["key"], r["aip_rows"]) for r in packed.collect()), key=str)
+    want = sorted(((r["key"], r["count"]) for r in df.groupBy("key").count().collect()), key=str)
+    assert got == want == [("k", 2), (None, 3)]

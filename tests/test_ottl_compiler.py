@@ -197,6 +197,11 @@ def test_config_validation(spark):
     for when in ('pattern_id == == (', 5):
         with pytest.raises(ValueError):
             validate_spec({"source": {"path": "x"}, "dlq": {"rules": [{"reason": "x", "when": when}]}})
+    # parse.bank picks the regex bank: a typo or a non-mapping section fails
+    # at startup instead of running the native bank or raising mid-build
+    for parse in ({"bank": "vectorised"}, "vectorized"):
+        with pytest.raises(ValueError, match="parse"):
+            validate_spec({"source": {"path": "x"}, "parse": parse})
 
 
 def test_order_partitions_validation():

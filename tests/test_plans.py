@@ -288,11 +288,11 @@ def test_metric_agg_attr_value_single_exchange(spark):
 
 def test_span_pruning_single_trace_shuffle(spark):
     """span_pruning is one hash repartition on trace_id feeding the
-    mapInPandas tree kernel — no joins, no second Exchange."""
+    grouped mapInArrow tree kernel — no joins, no second Exchange."""
     plan = plan_of(_query("span_pruning_flat")(spark, SF))
     # the fixture build itself aggregates roots (distinct trace ids): allow
     # its exchanges but the operator itself must add exactly one
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan or "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan
     for node in (*FORBIDDEN, "SortMergeJoin"):
         assert node not in plan, f"span_pruning plan contains {node}"
 

@@ -235,3 +235,18 @@ def test_config_validation(spark):
         span_pruning(df, outlier={"method": "zscore"})
     with pytest.raises(ValueError, match="unknown outlier options"):
         span_pruning(df, outlier={"bogus": 1})
+
+
+def test_int64_beside_null_stays_exact(spark):
+    # start_ns/end_ns above 2**53 next to a NULL end_ns in one Arrow batch:
+    # kept spans and the summary's bounds keep every digit
+    big = 1_700_000_000_123_457_789
+    rows = [_span("t1", "root", "", "handler", big, big + 100_000, kind="Server")]
+    rows += [_span("t1", f"leaf{i}", "root", "db.query", big + i, big + i + 100) for i in range(5)]
+    rows += [_span("t1", "open", "root", "cache.get", big + 7, None)]
+    out = _by_id(_run(spark, rows))
+    assert (out["root"].start_ns, out["root"].end_ns) == (big, big + 100_000)
+    assert (out["open"].start_ns, out["open"].end_ns) == (big + 7, None)
+    (summary,) = [r for r in out.values() if r.is_summary]
+    assert (summary.start_ns, summary.end_ns) == (big, big + 104)
+    assert summary.agg_duration_total_ns == 500

@@ -357,9 +357,30 @@ def test_kernel_buffers_batch_straddling_traces(spark):
         rows += [_span(f"c{i}", 1000 * i, 1000 * i + 800, i, 0, trace="big") for i in range(1, n + 1)]
         rows += [_span("solo", 0, 50, 1, None, trace="tiny")]
         out = critical_path(_df(spark, rows)).collect()
+        # the big trace spans five 5-row batches: every span comes out once
+        big = sorted(r["span_id"] for r in out if r["trace_id"] == "big")
+        assert big == sorted(str(i) for i in range(n + 1))
         got = {(r["trace_id"], r["span_id"]): r["exclusive_ns"] for r in out}
         assert got[("big", "0")] == 1000 + 200 * (n - 1) + 100
         assert got[("big", str(n))] == 800 and got[("big", "1")] == 800
         assert got[("tiny", "1")] == 50
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+BIG = 1_700_000_000_123_457_789  # above 2**53: a float64 would round it
+
+
+def test_int64_beside_null_stays_exact(spark):
+    # one Arrow batch holds end_ns values above 2**53 next to a NULL in the
+    # same column; they must pass through, and feed the walk, digit-exact
+    rows = [
+        _span("root", 1_700_000_000_000_000_000, BIG, 1, None, kind="server"),
+        _span("a", 1_700_000_000_000_000_001, None, 2, 1),
+        _span("b", 1_700_000_000_000_000_002, BIG - 991, 3, 1),
+    ]
+    got = {r["span_id"]: r for r in critical_path(_df(spark, rows)).collect()}
+    assert [got[s]["end_ns"] for s in "123"] == [BIG, None, BIG - 991]
+    assert (got["1"]["exclusive_ns"], got["1"]["inclusive_ns"]) == (993, 123_457_789)
+    assert (got["3"]["exclusive_ns"], got["3"]["inclusive_ns"]) == (123_456_796, 123_456_796)
+    assert got["2"]["on_path"] is None

@@ -2,17 +2,17 @@
 iterative walk — operators/trace_tree.py) must agree exactly with a literal
 port of the reference recursion (critical_path.go:80-198, re-scanning every
 child per return) on randomized span trees, including malformed intervals,
-orphans, and ties. Runs against the pandas kernel directly (no Spark session)
+orphans, and ties. Runs against the kernel's per-batch step directly (no Spark session)
 so hypothesis can afford hundreds of examples.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from opentelemetry_collector_contrib_spark.operators.trace_tree import _process_frame
+from opentelemetry_collector_contrib_spark.operators.trace_tree import _annotate
 
 
 # --- literal port of the Go reference (naive O(n²) walk) -------------------
@@ -136,7 +136,7 @@ def test_kernel_matches_reference_recursion(trace):
     ids, parents, starts, ends = trace
     expected = _naive(ids, list(parents), list(starts), list(ends))
 
-    pdf = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "trace_id": ["t"] * len(ids),
             "span_id": ids,
@@ -147,10 +147,10 @@ def test_kernel_matches_reference_recursion(trace):
             "end_ns": ends,
         }
     )
-    out = _process_frame(pdf, "trace_id", ("critical_path",))
+    out = _annotate(batch, [0], ("critical_path",)).to_pylist()
     got = {
-        r.span_id: (r.on_path, r.exclusive_ns, r.inclusive_ns)
-        for r in out.itertuples()
+        r["span_id"]: (r["on_path"], r["exclusive_ns"], r["inclusive_ns"])
+        for r in out
     }
     assert got == expected
 
@@ -223,7 +223,7 @@ def test_transactions_kernel_matches_reference(trace):
     names = [f"op-{i}" for i in range(len(ids))]
     expected = _naive_transactions(ids, parents, names, kinds, starts)
 
-    pdf = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "trace_id": ["t"] * len(ids),
             "span_id": ids,
@@ -234,6 +234,6 @@ def test_transactions_kernel_matches_reference(trace):
             "end_ns": [s + 1 for s in starts],
         }
     )
-    out = _process_frame(pdf, "trace_id", ("transactions",))
-    got = {r.span_id: (r.transaction, r.transaction_root) for r in out.itertuples()}
+    out = _annotate(batch, [0], ("transactions",)).to_pylist()
+    got = {r["span_id"]: (r["transaction"], r["transaction_root"]) for r in out}
     assert got == expected
