@@ -36,6 +36,8 @@ semantics above, so the unrolled SQL oracle is unchanged.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -108,10 +110,17 @@ def bpe_train(
     e.g. the DuckDB parity oracle)."""
     wd = word_dict(df, text_col, lowercase).select("word", "freq")
     if max_words is not None:
-        wd = wd.orderBy(F.col("freq").desc(), F.col("word").asc()).limit(max_words)
-    words: list[tuple[list[str], int]] = [
-        (list(r["word"]), r["freq"]) for r in wd.collect()
-    ]
+        # one row past the cap tells a truncated dictionary from a full one
+        wd = wd.orderBy(F.col("freq").desc(), F.col("word").asc()).limit(max_words + 1)
+    rows = wd.collect()
+    if max_words is not None and len(rows) > max_words:
+        warnings.warn(
+            f"bpe_train: the word dictionary has more than max_words={max_words} "
+            "distinct words; merges are learned from the most frequent ones only",
+            stacklevel=2,
+        )
+        rows = rows[:max_words]
+    words: list[tuple[list[str], int]] = [(list(r["word"]), r["freq"]) for r in rows]
 
     from collections import defaultdict
 

@@ -10,6 +10,12 @@ local[N]):
     and on a real cluster (where you'd set it to ~2-3x total cores).
   - broadcast threshold generous: all enrich dimensions (tool/role lookups)
     are tiny, mirroring lookupprocessor's in-memory maps.
+  - PySpark's DataFrame debugging off: with it on, every Column function
+    call makes about four extra py4j round trips to record its Python call
+    site. What is lost is that Python file and line in the query context
+    of an error message. Pass
+    ``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` in
+    ``extra_conf`` to get it back.
 """
 
 from __future__ import annotations
@@ -56,6 +62,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -12,15 +12,7 @@ from opentelemetry_collector_contrib_spark.session import get_spark  # noqa: E40
 
 @pytest.fixture(scope="session")
 def spark():
-    # PySpark's DataFrame debugging wraps every Column function call in
-    # about four extra py4j round trips to record the Python call site for
-    # error messages; no test reads that call site, and turning it off cut
-    # the wall time of tests/test_curation.py + tests/test_plans.py by
-    # 8-36% over two interleaved pairs on a 4-core host.
-    s = get_spark(
-        "pytest", master="local[4]", shuffle_partitions=8,
-        extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "false"},
-    )
+    s = get_spark("pytest", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
 

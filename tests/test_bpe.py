@@ -7,6 +7,7 @@ left-to-right sweep, repeat. The distributed trainer must learn the same
 merge list and produce the same tokenization.
 """
 
+import warnings
 from collections import Counter
 
 import pytest
@@ -175,7 +176,19 @@ def test_bpe_train_k256_matches_reference(spark):
 
 
 def test_bpe_train_max_words_bounds_collect(spark):
+    """A cap below the dictionary size warns and learns the merges of the
+    reference trained on the top ``max_words`` words by frequency (ties by
+    word); a cap that keeps every word does not warn."""
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     full = bpe_train(df, 3)
-    capped = bpe_train(df, 3, max_words=3)  # top-3 words by freq only
+    with pytest.warns(UserWarning, match="max_words=3"):
+        capped = bpe_train(df, 3, max_words=3)  # top-3 words by freq only
     assert len(capped) == 3 and capped != full  # trained, but on the capped dict
+    freq = Counter(w for t in CORPUS for w in t.lower().split())
+    top = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
+    want, _ = _ref_train([" ".join([w] * n) for w, n in top], 3)
+    assert [(m["left"], m["right"], m["pair_count"]) for m in capped] == want
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert bpe_train(df, 3, max_words=len(freq)) == full
+    assert not [w for w in caught if "max_words" in str(w.message)]

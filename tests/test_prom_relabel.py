@@ -8,7 +8,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.operators.prom_relabel import labels_csv, relabel
+from opentelemetry_collector_contrib_spark.operators.prom_relabel import _compile, labels_csv, relabel
 from relabel_oracle import assert_matches_oracle
 
 
@@ -18,11 +18,21 @@ def _df(spark, rows):
     )
 
 
-def _out(df):
+def _out(df, labels_col="labels"):
     return {
-        r["id"]: dict(r["labels"] or {})
-        for r in df.select("id", "labels").collect()
+        r["id"]: dict(r[labels_col] or {})
+        for r in df.select("id", labels_col).collect()
     }
+
+
+def _replayed(df, rules):
+    """``relabel`` on a cache hit: a first call compiles the chain and the
+    second, returned, replays it."""
+    relabel(df, rules)
+    hits = _compile.cache_info().hits
+    out = relabel(df, rules)
+    assert _compile.cache_info().hits == hits + 1
+    return out
 
 
 def test_replace_sets_expands_and_deletes(spark):
@@ -175,9 +185,10 @@ def test_labels_csv_is_sorted(spark):
 
 
 def test_plan_stays_native(spark):
-    """The whole chain is Column expressions — no Python stages."""
+    """The whole chain is Column expressions — no Python stages, also
+    when a cache hit replays it."""
     df = _df(spark, [{"a": "x"}])
-    chained = relabel(
+    chained = _replayed(
         df,
         [
             {"action": "replace", "source_labels": ["a"], "regex": "(.+)", "target_label": "b", "replacement": "$1"},
@@ -312,7 +323,7 @@ def test_columnar_engine_hot_path_is_codegen(spark):
     the only higher-order functions allowed are the single extract/reassemble
     pair at the chain boundaries."""
     df = _label_fixture(spark, 10)
-    out = relabel(df, _STATIC_RULES)
+    out = _replayed(df, _STATIC_RULES)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # boundary ops only: one map_entries-based filter + one map_from_entries
@@ -334,7 +345,8 @@ def test_plan_grows_linearly_with_chain_length(spark):
     optimized plan grows linearly with the chain: three copies of the
     scrape chain, and nine-rule chains whose labelmaps target names later
     rules read, stay within 3.5x of the scrape chain's plan. Without the
-    projection the repeated-labelmap chain's plan is about 9x."""
+    projection the repeated-labelmap chain's plan is about 9x. Each plan
+    is read on a cache hit, from the replayed chain."""
     from opentelemetry_collector_contrib_spark.registry.telemetry import _RELABEL_RULES
 
     k8s = [
@@ -353,8 +365,64 @@ def test_plan_grows_linearly_with_chain_length(spark):
     df = _label_fixture(spark, 10)
 
     def plan_len(rules):
-        return len(relabel(df, rules)._jdf.queryExecution().optimizedPlan().toString())
+        return len(_replayed(df, rules)._jdf.queryExecution().optimizedPlan().toString())
 
     base = plan_len(_RELABEL_RULES)
     for rules in (3 * _RELABEL_RULES, k8s, relabel_twice):
         assert plan_len(rules) <= 3.5 * base, rules
+
+
+def _py4j_commands(spark, monkeypatch) -> list:
+    """Record the py4j commands the driver sends from now on. py4j's memory
+    commands, which free earlier objects whenever Python's garbage collector
+    runs, are left out, so the count does not depend on GC timing."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def recording(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", recording)
+    return sent
+
+
+def test_repeated_relabel_replays_the_compiled_chain(spark, monkeypatch):
+    """The chain compiles once per rule set: a second call with equal rules
+    (a fresh copy) on a different frame is a cache hit, makes under 10% of
+    the first call's py4j round trips, and still equals the oracle."""
+    from opentelemetry_collector_contrib_spark.registry.telemetry import _RELABEL_RULES
+
+    # a rule no other test uses, so the first call compiles
+    rules = [*_RELABEL_RULES, {"action": "labeldrop", "regex": "__compiled_once_.*"}]
+    first_df, second_df = _label_fixture(spark, 2000), _label_fixture(spark, 1500)
+    sent = _py4j_commands(spark, monkeypatch)
+    misses = _compile.cache_info().misses
+    relabel(first_df, rules)
+    first = len(sent)
+    assert _compile.cache_info().misses == misses + 1
+    sent.clear()
+    hits = _compile.cache_info().hits
+    relabel(second_df, [dict(r) for r in rules])
+    assert _compile.cache_info().hits == hits + 1
+    assert len(sent) < 0.1 * first, (len(sent), first)
+    monkeypatch.undo()
+    assert_matches_oracle(second_df, rules)
+    assert _compile.cache_info().misses == misses + 1
+
+
+def test_changed_rules_or_labels_col_compile_a_fresh_chain(spark):
+    """The cache key is a snapshot of the rules: a rule list changed in
+    place after the first call compiles anew, as does another labels_col."""
+    rules = [{"action": "replace", "source_labels": ["job"], "regex": "(.+)",
+              "target_label": "env", "replacement": "first_$1"}]
+    df = _df(spark, [{"job": "api"}])
+    assert _out(relabel(df, rules))[0]["env"] == "first_api"
+    misses = _compile.cache_info().misses
+    rules[0]["replacement"] = "second_$1"
+    assert _out(relabel(df, rules))[0]["env"] == "second_api"
+    assert _compile.cache_info().misses == misses + 1
+    other = df.withColumnRenamed("labels", "lbls")
+    assert _out(relabel(other, rules, "lbls"), "lbls")[0] == {"job": "api", "env": "second_api"}
+    assert _compile.cache_info().misses == misses + 2
